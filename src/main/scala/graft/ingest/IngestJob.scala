@@ -1,15 +1,18 @@
 package graft.ingest
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 
 import java.time.OffsetDateTime
 import java.time.format.DateTimeFormatter
 
 import scala.jdk.CollectionConverters._
 
+import graft.sources.JsonDataset
 import graft.validate.{ArchiveMap, ErrorSuppression, FileMetadata, JsonSchemaValidator, SchemaCache}
 
 /** One Bridge record: the ZIP archive plus its S3 object metadata
@@ -57,49 +60,118 @@ object IngestJob {
       datasetMapping: Router.DatasetMapping,
       appId: String = "mobile-toolbox")
 
+  /** Run report: NDJSON lines written per dataset, and quarantine rows
+    * written (one per failing member of an invalid record).
+    */
+  final case class Result(lines: Map[String, Long], quarantined: Long)
+
   private val mapper = new ObjectMapper()
+
+  /** One archive member. Its JSON tree is parsed on first use and then
+    * shared by validation and routing; a member that resolves no schema
+    * and routes nowhere is never parsed.
+    */
+  private final class Member(val path: String, val meta: FileMetadata,
+      bytes: Array[Byte]) {
+    lazy val tree: JsonNode = mapper.readTree(bytes)
+  }
+
+  private def selfRef(meta: JsonNode): Map[String, String] =
+    Option(meta.get("files")).toSeq
+      .flatMap(_.elements.asScala)
+      .flatMap { f =>
+        (Option(f.get("filename")), Option(f.get("jsonSchema"))) match {
+          case (Some(n), Some(s)) => Some(n.asText -> s.asText)
+          case _ => None
+        }
+      }.toMap
 
   /** Self-referencing schemas from metadata.json files[].jsonSchema
     * (s3_to_json_s3.py:29-48).
     */
   def selfRefSchemas(entries: Seq[(String, Array[Byte])]): Map[String, String] =
-    entries.collectFirst { case ("metadata.json", bytes) => bytes } match {
-      case None => Map.empty
-      case Some(bytes) =>
-        val meta = mapper.readTree(bytes)
-        Option(meta.get("files")).toSeq
-          .flatMap(_.elements.asScala)
-          .flatMap { f =>
-            (Option(f.get("filename")), Option(f.get("jsonSchema"))) match {
-              case (Some(n), Some(s)) => Some(n.asText -> s.asText)
-              case _ => None
-            }
-          }.toMap
+    entries.collectFirst { case ("metadata.json", bytes) => bytes }
+      .fold(Map.empty[String, String])(b => selfRef(mapper.readTree(b)))
+
+  /** One record, unzipped once on first use: each member paired with the
+    * schema URL it resolves to, metadata.json's tree reused for the self
+    * references. [[errors]] must run before [[lines]], which injects
+    * fields into the members' trees.
+    */
+  private final class Archive(record: RawRecord, cfg: Config) {
+    private val md = record.metadata
+    private val assessmentId = md("assessmentid")
+    private val revision = md("assessmentrevision")
+
+    private lazy val members: Seq[(Member, Option[String])] = {
+      val ms = ZipSource.entries(record.zipBytes).map { case (path, bytes) =>
+        new Member(path, FileMetadata(
+          assessmentId, revision.toInt, Router.normalizeFileName(path), cfg.appId), bytes)
+      }
+      val self = ms.find(_.path == "metadata.json")
+        .fold(Map.empty[String, String])(m => selfRef(m.tree))
+      ms.map(m => m -> cfg.archiveMap.resolveUrl(m.meta, self))
     }
+
+    def errors: Map[String, Seq[String]] =
+      if (cfg.datasetMapping.contains(assessmentId, revision)) Map.empty
+      else {
+        val errors = members.flatMap { case (m, schemaUrl) =>
+          schemaUrl.flatMap { url =>
+            val errs = JsonSchemaValidator.validate(m.tree, cfg.schemas.get(url))
+            if (errs.nonEmpty) Some(m.path -> errs) else None
+          }
+        }.toMap
+        ErrorSuppression.cap(ErrorSuppression.suppress(
+          errors, cfg.appId, md.getOrElse("clientinfo", "")))
+      }
+
+    def lines: Seq[RoutedLine] = {
+      val recordId = md("recordid")
+      val uploadedOn = OffsetDateTime.parse(
+        md("uploadedon"), DateTimeFormatter.ISO_OFFSET_DATE_TIME)
+      members.flatMap { case (m, schemaUrl) =>
+        val schemaId = schemaUrl
+          .map(url => cfg.schemas.get(url))
+          .flatMap(s => Option(s.get("$id")).map(_.asText))
+        Router.datasetIdentifier(
+            schemaId, cfg.schemaMapping, cfg.datasetMapping, m.meta).toSeq
+          .flatMap { dataset =>
+            val schemaIdent = dataset.split("_").head
+            val root = m.tree
+            val objs: Seq[ObjectNode] =
+              if (root.isArray)
+                root.elements.asScala.collect { case o: ObjectNode => o }.toSeq
+              else root match {
+                case o: ObjectNode => Seq(o)
+                case _ => Nil
+              }
+            objs.map { o =>
+              if (schemaIdent == "ArchiveMetadata" || schemaIdent == "TaskMetadata") {
+                // every metadata field goes into the metadata dataset
+                md.foreach { case (k, v) => o.put(k, v) }
+              }
+              o.put("assessmentid", assessmentId)
+              o.put("year", uploadedOn.getYear)
+              o.put("month", uploadedOn.getMonthValue)
+              o.put("day", uploadedOn.getDayOfMonth)
+              o.put("recordid", recordId)
+              RoutedLine(
+                dataset, assessmentId, uploadedOn.getYear,
+                uploadedOn.getMonthValue, uploadedOn.getDayOfMonth,
+                recordId, mapper.writeValueAsString(o))
+            }
+          }
+      }
+    }
+  }
 
   /** V3+V4 for one record: file → unexpected errors (empty map = valid).
     * Records mapped in the legacy dataset mapping skip validation
     * (validate_data, s3_to_json_s3.py:302-415).
     */
-  def validateRecord(record: RawRecord, cfg: Config): Map[String, Seq[String]] = {
-    val md = record.metadata
-    val assessmentId = md("assessmentid")
-    val revision = md("assessmentrevision")
-    if (cfg.datasetMapping.contains(assessmentId, revision)) return Map.empty
-    val entries = ZipSource.entries(record.zipBytes)
-    val selfRef = selfRefSchemas(entries)
-    val errors = entries.flatMap { case (path, bytes) =>
-      val meta = FileMetadata(
-        assessmentId, revision.toInt, Router.normalizeFileName(path), cfg.appId)
-      cfg.archiveMap.resolveUrl(meta, selfRef).flatMap { url =>
-        val errs = JsonSchemaValidator.validate(
-          mapper.readTree(bytes), cfg.schemas.get(url))
-        if (errs.nonEmpty) Some(path -> errs) else None
-      }
-    }.toMap
-    ErrorSuppression.cap(
-      ErrorSuppression.suppress(errors, cfg.appId, md.getOrElse("clientinfo", "")))
-  }
+  def validateRecord(record: RawRecord, cfg: Config): Map[String, Seq[String]] =
+    new Archive(record, cfg).errors
 
   /** Route every member file of a valid record to its dataset, injecting
     * the partition fields (and, for ArchiveMetadata, every metadata field)
@@ -108,132 +180,60 @@ object IngestJob {
     * classifier). Mirrors process_record + write_file_to_json_dataset
     * (s3_to_json_s3.py:560-730).
     */
-  def routeRecord(record: RawRecord, cfg: Config): Seq[RoutedLine] = {
-    val md = record.metadata
-    val assessmentId = md("assessmentid")
-    val revision = md("assessmentrevision")
-    val recordId = md("recordid")
-    val uploadedOn = OffsetDateTime.parse(
-      md("uploadedon"), DateTimeFormatter.ISO_OFFSET_DATE_TIME)
-    val entries = ZipSource.entries(record.zipBytes)
-    val selfRef = selfRefSchemas(entries)
-    entries.flatMap { case (path, bytes) =>
-      val fileName = Router.normalizeFileName(path)
-      val meta = FileMetadata(assessmentId, revision.toInt, fileName, cfg.appId)
-      val schemaId = cfg.archiveMap.resolveUrl(meta, selfRef)
-        .map(url => cfg.schemas.get(url))
-        .flatMap(s => Option(s.get("$id")).map(_.asText))
-      Router.datasetIdentifier(
-          schemaId, cfg.schemaMapping, cfg.datasetMapping, meta).toSeq
-        .flatMap { dataset =>
-          val schemaIdent = dataset.split("_").head
-          val root = mapper.readTree(bytes)
-          val objs: Seq[ObjectNode] =
-            if (root.isArray)
-              root.elements.asScala.collect { case o: ObjectNode => o }.toSeq
-            else root match {
-              case o: ObjectNode => Seq(o)
-              case _ => Nil
-            }
-          objs.map { o =>
-            if (schemaIdent == "ArchiveMetadata" || schemaIdent == "TaskMetadata") {
-              // every metadata field goes into the metadata dataset
-              md.foreach { case (k, v) => o.put(k, v) }
-            }
-            o.put("assessmentid", assessmentId)
-            o.put("year", uploadedOn.getYear)
-            o.put("month", uploadedOn.getMonthValue)
-            o.put("day", uploadedOn.getDayOfMonth)
-            o.put("recordid", recordId)
-            RoutedLine(
-              dataset, assessmentId, uploadedOn.getYear,
-              uploadedOn.getMonthValue, uploadedOn.getDayOfMonth,
-              recordId, mapper.writeValueAsString(o))
-          }
-        }
-    }
-  }
+  def routeRecord(record: RawRecord, cfg: Config): Seq[RoutedLine] =
+    new Archive(record, cfg).lines
 
-  /** Full stage-1 run over a Dataset of records: validate, split
-    * valid/invalid, write valid lines to partitioned NDJSON datasets and
-    * invalid records to the quarantine sink (S7). Returns the routed lines
-    * for inspection.
+  /** Full stage-1 run over a Dataset of records: each archive is
+    * unzipped, validated and routed in one pass, valid lines go to
+    * partitioned NDJSON datasets under `jsonRoot` and the failing members
+    * of invalid records to the quarantine sink (S7).
     *
-    * Scale design: the unzip+validate flatMap is the expensive stage and
-    * two sinks need its output. Rather than pinning the whole routed
-    * corpus in executor storage (`.cache`) to feed both, the run stages
-    * the union rows ONCE as parquet partitioned by validity. The valid
-    * branch is then a column-pruned scan of `is_valid=true`; the invalid
-    * branch is skipped entirely via a filesystem existence check (no
-    * Spark action); and a failed downstream write restarts from the
-    * staging files instead of re-unzipping the corpus. The staging root
-    * is `_`-prefixed so NDJSON scans, bookmarks and downstream listings
-    * treat it as hidden. Each run stages under its own subdirectory and
-    * keeps the previous run's (the returned frames are lazy scans a
-    * caller may still be consuming); older generations are reclaimed at
-    * the start of the next run. One writer per jsonRoot at a time — the
-    * reference's one-Glue-job-per-dataset assumption.
-    *
-    * Storage envelope: by default up to TWO staged generations exist on
-    * disk during a run (this run's plus the previous one) — at 100 TB
-    * that doubles stage-1 storage. `spark.graft.ingest.staging.ttlSeconds`
-    * is the reclaim valve: a previous generation older than the TTL is
-    * deleted at run start even though it is the newest; `0` reclaims the
-    * previous generation immediately (envelope = 1 generation, for
-    * callers that consume the returned frames before the next run).
+    * The routed rows are persisted so that the counts, the NDJSON write
+    * and the quarantine write all read one computation of them. The
+    * NDJSON write is clustered by its partition columns (as
+    * [[graft.sources.ParquetDataset.write]] is), so each partition value
+    * gets one file per run rather than one per task. The quarantine sink
+    * is written only when some record is invalid, so an all-valid run
+    * creates no quarantine directory. One writer per jsonRoot at a time —
+    * the reference's one-Glue-job-per-dataset assumption.
     */
   def run(
       spark: SparkSession,
       records: Dataset[RawRecord],
       cfg: Config,
       jsonRoot: String,
-      quarantinePath: String): (DataFrame, DataFrame) = {
+      quarantinePath: String): Result = {
     import spark.implicits._
+    // validateRecord then, if valid, routeRecord, over one unzip and at
+    // most one parse per member
     val routed = records.flatMap { r =>
-      val errs = validateRecord(r, cfg)
-      if (errs.isEmpty) routeRecord(r, cfg).map(l => IngestOut(Some(l), None))
+      val archive = new Archive(r, cfg)
+      val errs = archive.errors
+      if (errs.isEmpty) archive.lines.map(l => IngestOut(Some(l), None))
       else errs.toSeq.map { case (f, es) =>
         IngestOut(None, Some(InvalidRecord(r.metadata("recordid"),
           r.metadata("assessmentid"), f, es)))
       }
-    }
-    val stagingRoot = new org.apache.hadoop.fs.Path(s"$jsonRoot/_staging")
-    val stagingFs = stagingRoot.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // retention: this run + the immediately previous one stay readable;
-    // anything older is reclaimed now. With the TTL conf set, the
-    // previous generation is also reclaimed once expired (see scaladoc)
-    val ttlMs = spark.conf.getOption("spark.graft.ingest.staging.ttlSeconds")
-      .map(_.toLong * 1000L)
-    if (stagingFs.exists(stagingRoot)) {
-      val gens = stagingFs.listStatus(stagingRoot).filter(_.isDirectory)
-        .sortBy(_.getModificationTime)
-      gens.dropRight(1).foreach(d => stagingFs.delete(d.getPath, true))
-      val now = System.currentTimeMillis()
-      gens.takeRight(1)
-        .filter(d => ttlMs.exists(t => now - d.getModificationTime >= t))
-        .foreach(d => stagingFs.delete(d.getPath, true))
-    }
-    val staging =
-      s"$stagingRoot/run-${java.util.UUID.randomUUID().toString.take(8)}"
-    val tagged = routed.withColumn("is_valid", $"valid".isNotNull)
-    tagged.write.mode("overwrite").partitionBy("is_valid").parquet(staging)
-    // explicit schema: a run with zero records writes no part files, and
-    // schema inference would fail on the empty directory
-    val staged = spark.read.schema(tagged.schema).parquet(staging)
-    val valid = staged.where($"is_valid").select($"valid.*")
-    val invalid = staged.where(!$"is_valid").select($"invalid.*")
-    // text sink: one data column (the pre-serialized NDJSON line) + the
-    // Hive partition columns — the reference's per-file S3 put loop
-    // becomes a single distributed partitioned write
-    valid.select("line", "dataset", "assessmentid", "year", "month", "day")
-      .write.mode("append")
-      .partitionBy("dataset", "assessmentid", "year", "month", "day")
-      .text(jsonRoot)
-    val invalidDir = new org.apache.hadoop.fs.Path(staging, "is_valid=false")
-    val fs = invalidDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(invalidDir))
-      invalid.write.mode("append").json(quarantinePath)
-    (valid, invalid)
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // one aggregate; the null dataset key counts the invalid rows
+      val counts = routed.groupBy($"valid.dataset").count().as[(Option[String], Long)]
+        .collect().toMap
+      val quarantined = counts.getOrElse(None, 0L)
+      val partitionCols = "dataset" +: JsonDataset.PartitionCols
+      // text sink: one data column (the pre-serialized NDJSON line) + the
+      // Hive partition columns — the reference's per-file S3 put loop
+      // becomes a single distributed partitioned write
+      routed.where($"valid".isNotNull).select($"valid.*")
+        .select("line", partitionCols: _*)
+        .repartition(partitionCols.map(col): _*)
+        .write.mode("append")
+        .partitionBy(partitionCols: _*)
+        .text(jsonRoot)
+      if (quarantined > 0)
+        routed.where($"invalid".isNotNull).select($"invalid.*")
+          .write.mode("append").json(quarantinePath)
+      Result(counts.collect { case (Some(ds), n) => ds -> n }, quarantined)
+    } finally routed.unpersist()
   }
 }

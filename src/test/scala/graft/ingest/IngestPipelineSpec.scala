@@ -4,20 +4,17 @@ import graft.SparkSpec
 import graft.relationalize.Relationalize
 import graft.schema.TableCatalog
 import graft.sources.{JsonDataset, ParquetDataset}
-import graft.validate.{ArchiveMap, SchemaCache}
+import graft.validate.{ArchiveMap, SchemaCache, SchemaRef}
 
 import java.nio.file.{Files, Paths}
 
-/** End-to-end stage-1 + stage-2 slice over the reference fixture archive
-  * (tests/data/OCJByUtSrVTYtqObYp7XZV_J-mtbSpelling.zip): ZIP → validate →
-  * route → partitioned NDJSON → schema-applied read → relationalize →
-  * partitioned Parquet, with count/FK parity (SURVEY §7 minimum slice).
+/** End-to-end stage-1 + stage-2 slice over the spelling fixture archive
+  * ([[SpellingArchive]]): ZIP → validate → route → partitioned NDJSON →
+  * schema-applied read → relationalize → partitioned Parquet, with
+  * count/FK parity (SURVEY §7 minimum slice).
   */
 class IngestPipelineSpec extends SparkSpec {
   import spark.implicits._
-
-  private val fixtureZip =
-    "/root/reference/tests/data/OCJByUtSrVTYtqObYp7XZV_J-mtbSpelling.zip"
 
   private def record = RawRecord(
     metadata = Map(
@@ -27,13 +24,49 @@ class IngestPipelineSpec extends SparkSpec {
       "uploadedon" -> "2022-02-15T20:47:36.270Z",
       "clientinfo" -> "{osName:'iOS'}",
       "healthcode" -> "health-1"),
-    zipBytes = Files.readAllBytes(Paths.get(fixtureZip)))
+    zipBytes = SpellingArchive.zip())
 
   private def cfg = IngestJob.Config(
     archiveMap = ArchiveMap(Nil, Nil, Nil),
     schemas = new SchemaCache(_ => "{}"),
     schemaMapping = Router.defaultSchemaMapping,
     datasetMapping = Router.defaultDatasetMapping)
+
+  // spelling rev 6 is outside the legacy dataset mapping: its members
+  // validate against these schemas and route by their `$id`
+  private val Base = SpellingArchive.SchemaBase
+  private val schemaDocs = Map(
+    s"${Base}ArchiveMetadata.json" -> (s"""{"$$id":"${Base}ArchiveMetadata.json",""" +
+      """"type":"object","required":["appName","files"]}"""),
+    s"${Base}sharedSchema.json" -> """{"$id":"sharedSchema","type":"object"}""",
+    s"${Base}MotionRecord.json" -> (s"""{"$$id":"${Base}MotionRecord.json","type":"array",""" +
+      """"items":{"type":"object","properties":{"x":{"type":"number"}}}}"""),
+    s"${Base}AudioLevelRecord.json" ->
+      s"""{"$$id":"${Base}AudioLevelRecord.json","type":"array"}""",
+    s"${Base}WeatherResult.json" ->
+      s"""{"$$id":"${Base}WeatherResult.json","type":"object","required":["type"]}""")
+
+  private def validatedCfg = IngestJob.Config(
+    archiveMap = ArchiveMap(
+      Seq(SchemaRef("metadata.json", Some(s"${Base}ArchiveMetadata.json"))), Nil, Nil),
+    schemas = new SchemaCache(schemaDocs),
+    schemaMapping = Router.defaultSchemaMapping,
+    datasetMapping = Router.defaultDatasetMapping)
+
+  private def validated(recordId: String,
+      members: Seq[(String, String)] = SpellingArchive.members) = RawRecord(
+    record.metadata ++ Map("recordid" -> recordId, "assessmentrevision" -> "6"),
+    SpellingArchive.zip(members))
+
+  /** Two failing members: a string `x` in motion.json and a weather.json
+    * without its required top-level `type`.
+    */
+  private def invalid(recordId: String) = validated(recordId,
+    SpellingArchive.members.map {
+      case ("motion.json", c) => "motion.json" -> c.replace("\"x\":0.1,", "\"x\":\"n/a\",")
+      case ("weather.json", c) => "weather.json" -> ("{" + c.stripPrefix("{\"type\":\"weather\","))
+      case m => m
+    })
 
   test("legacy-mapped assessments skip validation (validate_data)") {
     assert(IngestJob.validateRecord(record, cfg).isEmpty)
@@ -65,14 +98,16 @@ class IngestPipelineSpec extends SparkSpec {
     val jsonRoot = s"$tmp/raw_json"
     val parquetRoot = s"$tmp/parquet"
     val records = spark.createDataset(Seq(record))
-    val (valid, invalid) = IngestJob.run(
+    val result = IngestJob.run(
       spark, records, cfg, jsonRoot, s"$tmp/quarantine")
-    assert(invalid.isEmpty)
+    assert(result.quarantined == 0)
+    // an all-valid run leaves no quarantine directory behind
+    assert(!Files.exists(Paths.get(tmp, "quarantine")))
     // 4 datasets; motion.json is a 4-element top-level array normalized to
     // one NDJSON line per element (the array_of_records `$[*]` classifier
     // behavior) → 1 + 1 + 1 + 4 = 7 lines
-    assert(valid.count() == 7)
-    assert(valid.where($"dataset" === "MotionRecord_v1").count() == 4)
+    assert(result.lines.values.sum == 7)
+    assert(result.lines("MotionRecord_v1") == 4)
 
     // exact layout (s3_to_json_s3.py:628-639)
     assert(Files.isDirectory(Paths.get(jsonRoot,
@@ -103,37 +138,47 @@ class IngestPipelineSpec extends SparkSpec {
     assert(jsonIds == pqIds)
   }
 
-  test("staging retention: previous generation survives by default, " +
-      "is reclaimed under the TTL valve, older ones always go") {
-    val tmp = graft.EntryKit.scratchTracked("graft_stage").toString
+  test("S7 quarantine: each failing member of an invalid record becomes " +
+      "one quarantine row, and the record writes no NDJSON line") {
+    val tmp = graft.EntryKit.scratchTracked("graft_quarantine").toString
     val jsonRoot = s"$tmp/raw_json"
-    def stagingDirs(): Seq[String] = {
-      val f = new java.io.File(s"$jsonRoot/_staging")
-      if (!f.isDirectory) Nil
-      else f.listFiles().filter(_.isDirectory).map(_.getName).toSeq
-    }
-    def run() = IngestJob.run(spark, spark.createDataset(Seq(record)), cfg,
-      jsonRoot, s"$tmp/quarantine")._1.count()
+    val quarantine = s"$tmp/quarantine"
+    val (ok, bad) = (validated("valid-1"), invalid("invalid-1"))
+    val result = IngestJob.run(spark, spark.createDataset(Seq(ok, bad)),
+      validatedCfg, jsonRoot, quarantine)
+    assert(result.quarantined == 2)
+    val rows = spark.read.json(quarantine)
+      .select("recordid", "fileName", "errors").as[(String, String, Seq[String])]
+      .collect().sortBy(_._2).toSeq
+    assert(rows.map(r => r._1 -> r._2) ==
+      Seq("invalid-1" -> "motion.json", "invalid-1" -> "weather.json"))
+    assert(rows.map(r => r._2 -> r._3).toMap ==
+      IngestJob.validateRecord(bad, validatedCfg))
+    val written = spark.read.text(jsonRoot).select("value").as[String].collect()
+    assert(written.nonEmpty)
+    assert(!written.exists(_.contains("invalid-1")))
+  }
 
-    run()
-    assert(stagingDirs().size == 1)
-    // default: the previous generation stays readable through the next run
-    run()
-    assert(stagingDirs().size == 2)
-    // and the one before THAT is always reclaimed
-    run()
-    assert(stagingDirs().size == 2)
-    // TTL valve: 0 seconds — the previous generation is reclaimed
-    // immediately, bounding the envelope to one generation
-    try {
-      spark.conf.set("spark.graft.ingest.staging.ttlSeconds", "0")
-      run()
-      assert(stagingDirs().size == 1)
-      // a generous TTL keeps the previous generation (not yet expired)
-      spark.conf.set("spark.graft.ingest.staging.ttlSeconds", "3600")
-      run()
-      assert(stagingDirs().size == 2)
-    } finally spark.conf.unset("spark.graft.ingest.staging.ttlSeconds")
+  test("one pass: run writes exactly the lines routeRecord gives, and a " +
+      "member that resolves no schema and routes nowhere is never parsed") {
+    val tmp = graft.EntryKit.scratchTracked("graft_onepass").toString
+    val jsonRoot = s"$tmp/raw_json"
+    val r = validated("valid-2", SpellingArchive.members.map {
+      case ("taskData", _) => "taskData" -> "\u0000 not JSON"
+      case m => m
+    })
+    assert(IngestJob.validateRecord(r, validatedCfg).isEmpty)
+    val expected = IngestJob.routeRecord(r, validatedCfg)
+    assert(expected.map(_.dataset).toSet == Set("ArchiveMetadata_v1",
+      "sharedSchema_v1", "MotionRecord_v1", "AudioLevelRecord_v1",
+      "WeatherResult_v1"))
+    val result = IngestJob.run(spark, spark.createDataset(Seq(r)),
+      validatedCfg, jsonRoot, s"$tmp/quarantine")
+    assert(result == IngestJob.Result(
+      expected.groupBy(_.dataset).map { case (d, ls) => d -> ls.size.toLong }, 0L))
+    val written = spark.read.text(jsonRoot).select("dataset", "value")
+      .as[(String, String)].collect().sorted.toSeq
+    assert(written == expected.map(l => l.dataset -> l.line).sorted)
   }
 
   test("S8: file listing enumerates the written NDJSON dataset") {
@@ -149,7 +194,7 @@ class IngestPipelineSpec extends SparkSpec {
 
   test("S1: ZipSource enumerates fixture members distributively") {
     val tmp = graft.EntryKit.scratchTracked("graft_zip").toString
-    Files.copy(Paths.get(fixtureZip), Paths.get(tmp, "a.zip"))
+    Files.write(Paths.get(tmp, "a.zip"), SpellingArchive.zip())
     val entries = ZipSource.read(spark, s"$tmp/*.zip").collect()
     assert(entries.length == 9)
     assert(entries.map(_.entryName).toSet.contains("weather.json"))

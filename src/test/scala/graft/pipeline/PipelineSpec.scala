@@ -1,21 +1,16 @@
 package graft.pipeline
 
 import graft.SparkSpec
-import graft.ingest.{IngestJob, RawRecord, Router}
+import graft.ingest.{IngestJob, RawRecord, Router, SpellingArchive}
 import graft.schema.TableCatalog
 import graft.sources.ParquetDataset
 import graft.validate.{ArchiveMap, SchemaCache}
 
-import java.nio.file.{Files, Paths}
-
-/** Stage-2 orchestration (E2) + bootstrap driver (E3) over the reference
+/** Stage-2 orchestration (E2) + bootstrap driver (E3) over the spelling
   * fixture flow.
   */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
-
-  private val fixtureZip =
-    "/root/reference/tests/data/OCJByUtSrVTYtqObYp7XZV_J-mtbSpelling.zip"
 
   private def record(rid: String) = RawRecord(
     metadata = Map(
@@ -24,7 +19,7 @@ class PipelineSpec extends SparkSpec {
       "assessmentrevision" -> "4",
       "uploadedon" -> "2022-02-15T20:47:36.270Z",
       "clientinfo" -> "{osName:'iOS'}"),
-    zipBytes = Files.readAllBytes(Paths.get(fixtureZip)))
+    zipBytes = SpellingArchive.zip())
 
   private def cfg = IngestJob.Config(
     archiveMap = ArchiveMap(Nil, Nil, Nil),
