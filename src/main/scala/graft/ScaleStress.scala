@@ -792,30 +792,34 @@ object ScaleStress {
     val effectOps: Seq[(String, Int => (() => Unit, () => Long))] = Seq(
       "ann_write_hot_cluster" -> (f => {
         // HOT-CLUSTER write-path rung (r21): half the corpus lands in
-        // ONE cluster, the rest spreads over 10·f replica-qualified
-        // clusters. Ann.sizedByCluster's REBALANCE(cluster) hint must
-        // skew-SPLIT the hot cluster across tasks (the reason it was
-        // chosen over repartition(cluster), which would serialize the
-        // hot cluster through one task and bend this rung
+        // ONE cluster, the rest spreads over 5·f replica-qualified
+        // clusters (odd ids take the 5 odd residues of pmod(vec_id,
+        // 10), each +1). Ann.sizedByCluster's REBALANCE(cluster) hint
+        // must skew-SPLIT the hot cluster across tasks (the reason it
+        // was chosen over repartition(cluster), which would serialize
+        // the hot cluster through one task and bend this rung
         // superlinear). The fixture's bytes are far below the
-        // production advisory target, so the rung scales the advisory
-        // down (setup, untimed; restored after the census) to make
-        // the splitter exercise at fixture scale; the census prints
-        // the hot cluster's file count — >1 IS the skew-split proof.
+        // production advisory target, so the timed write scales the
+        // advisory down to make the splitter exercise at fixture scale,
+        // and restores it in a finally so a failed write cannot leak it
+        // into later rungs; the census prints the hot cluster's file
+        // count — >1 IS the skew-split proof.
         val dir = s"$workDir/f$f/hotwrite"
         val adv = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-        val advPrev = spark.conf.get(adv)
         val skewed = embP(f).select(col("vec_id"), col("embedding"),
             when(pmod(col("vec_id"), lit(2)) === 0, lit(0L))
               .otherwise((pmod(col("vec_id"), lit(10)) + lit(1) +
                 lit(10) * floor(col("vec_id") / Offset)).cast("long"))
               .as("cl"))
           .localCheckpoint()
-        spark.conf.set(adv, "262144") // 256 KB: hot cluster >> advisory
-        (() => graft.ann.Ann.sizedByCluster(skewed, "cl")
-            .write.mode("overwrite").partitionBy("cl").parquet(dir),
+        (() => {
+            val advPrev = spark.conf.get(adv)
+            spark.conf.set(adv, "262144") // 256 KB: hot cluster >> advisory
+            try graft.ann.Ann.sizedByCluster(skewed, "cl")
+              .write.mode("overwrite").partitionBy("cl").parquet(dir)
+            finally spark.conf.set(adv, advPrev)
+          },
           () => {
-            spark.conf.set(adv, advPrev)
             val hotFiles = Option(new java.io.File(s"$dir/cl=0")
               .listFiles((_, n) => n.endsWith(".parquet")))
               .fold(0)(_.length)

@@ -2425,7 +2425,7 @@ object Ann {
     // checkpoint job + guard-collect job. The collected rows become a
     // LocalRelation whose broadcast build is driver-side (no job).
     val flagRows = flagsPlan.collect()
-    val badIds = flagRows.filter(_.getBoolean(3)).take(5).map(_.get(0))
+    val badIds = reusedIds(flagRows)
     if (badIds.nonEmpty) throw new IllegalStateException(
       s"id(s) ${badIds.mkString(", ")} arrived again with a DIFFERENT " +
         "embedding landing in the same cluster — not redelivery (the " +
@@ -2444,6 +2444,15 @@ object Ann {
         not(coalesce(col("w"), lit(false))).as("keep"),
         col("__v"), col("__n"))
   }
+
+  /** Up to 5 ids whose aggregated `bad` flag (field 3 of a
+    * [[semanticDedupJoint]] flag row) is set. A null flag is not set: it
+    * is non-null today only by construction of the flag expressions.
+    */
+  private[ann] def reusedIds(
+      flagRows: Array[org.apache.spark.sql.Row]): Array[Any] =
+    flagRows.filter(r => !r.isNullAt(3) && r.getBoolean(3)).take(5)
+      .map(_.get(0))
 
   /** Deterministic Rademacher hyperplanes: component (j, d) is ±1 from a
     * seeded hash — reproducible across runs with no RNG state.

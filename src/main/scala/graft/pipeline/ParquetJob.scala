@@ -16,7 +16,9 @@ import graft.streaming.Bookmark
   *  - relationalize carries the partition columns into children directly
   *    (R2) instead of a distinct+join per child
   *  - incremental state is an explicit file manifest (Bookmark) instead of
-  *    an opaque Glue job bookmark; reset = delete the manifest
+  *    an opaque Glue job bookmark; reset = delete the manifest. Like the
+  *    Glue bookmark, it drops already-processed files before anything is
+  *    read
   *  - the per-dataset fan-out is a plain loop/Par collection over dataset
   *    names in one SparkSession instead of one Glue job per table
   */
@@ -30,18 +32,24 @@ object ParquetJob {
   val CarryCols: Seq[String] =
     Seq("recordid", "assessmentid", "year", "month", "day")
 
-  /** Run one dataset: read new NDJSON files (bookmark-filtered) with the
-    * declared schema, relationalize if nested, append every produced
-    * table to its partitioned Parquet dataset, then advance the bookmark.
-    * Returns per-table appended row counts.
+  /** Run one dataset. The batch is decided on the driver before any
+    * scan ([[Bookmark.batch]]: list the dataset, collect the manifest
+    * once, diff), so a run with nothing new returns an empty result after
+    * that one manifest-read job. Otherwise only the batch's files are
+    * read with the declared schema, relationalized if nested, every
+    * produced table is appended to its partitioned Parquet dataset, and
+    * the manifest advances by exactly the files read — a file landing
+    * mid-run is left for the next run. Returns per-table appended row
+    * counts (a batch of files holding no rows reports zero-row tables).
     *
     * @param outName output table name + bookmark identity when it differs
     *                from the source dataset — the schema-versioning case
     *                ([[SchemaEvolution]]): a `docs_v2` table draining the
     *                `docs_v1` JSON layout under its own manifest
-    * @param newFiles pre-computed new-file list (Bookmark.newFiles) to
-    *                pin the exact batch, e.g. the files schema inference
-    *                just examined; None re-derives from the manifest
+    * @param newFiles normalized paths pinning the exact batch
+    *                ([[Bookmark.newFiles]]), e.g. the files schema
+    *                inference just examined; the run reads and commits
+    *                exactly those. None diffs against the manifest
     */
   def run(
       spark: SparkSession,
@@ -53,11 +61,11 @@ object ParquetJob {
       outName: Option[String] = None,
       newFiles: Option[Seq[String]] = None): Result = {
     val table = outName.getOrElse(dataset)
-    val dataPath = s"$jsonRoot/dataset=$dataset"
-    val manifestPath = s"$manifestRoot/$table"
-    val raw = JsonDataset.read(spark, jsonRoot, dataset, spec.schema)
-    val fresh = Bookmark.newDataFrom(spark, raw, dataPath, manifestPath, newFiles)
-    if (fresh.isEmpty) return Result(Map.empty)
+    val batch = Bookmark.batch(spark, s"$jsonRoot/dataset=$dataset",
+      s"$manifestRoot/$table", newFiles)
+    if (batch.isEmpty) return Result(Map.empty)
+    val fresh =
+      JsonDataset.readFiles(spark, jsonRoot, dataset, spec.schema, batch.files)
 
     val tables: Map[String, DataFrame] =
       if (Relationalize.hasNestedFields(fresh.schema))
@@ -82,10 +90,7 @@ object ParquetJob {
       // empty map — that absence IS the zero count
       name -> obs.get.getOrElse("rows", 0L).asInstanceOf[Long]
     }
-    newFiles match {
-      case Some(ps) => Bookmark.commitFiles(spark, manifestPath, ps)
-      case None => Bookmark.commit(spark, dataPath, manifestPath)
-    }
+    Bookmark.commit(spark, batch)
     Result(counts)
   }
 }

@@ -60,15 +60,16 @@ object SchemaEvolution {
     val table = declared.name
     val dataPath = s"$jsonRoot/dataset=$dataset"
     val manifestPath = s"$manifestRoot/$table"
-    val newPaths = Bookmark.newFiles(spark, dataPath, manifestPath)
-    if (newPaths.isEmpty)
+    val batch = Bookmark.batch(spark, dataPath, manifestPath)
+    if (batch.isEmpty)
       return Outcome(declared, table, versioned = false, Nil,
         ParquetJob.Result(Map.empty))
+    val newPaths = batch.paths
 
     // crawl ONLY the new files; partition-layout columns are directory
     // metadata, not data, and never participate in the merge
     val inferredAll =
-      spark.read.option("basePath", dataPath).json(newPaths: _*).schema
+      spark.read.option("basePath", dataPath).json(batch.files: _*).schema
     val inferred = StructType(inferredAll.fields.filterNot(f =>
       JsonDataset.PartitionCols.contains(f.name)))
 

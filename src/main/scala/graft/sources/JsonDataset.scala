@@ -146,10 +146,19 @@ object JsonDataset {
     * from the directory layout, data columns from the declared schema.
     */
   def read(spark: SparkSession, root: String, dataset: String, schema: StructType): DataFrame =
+    readFiles(spark, root, dataset, schema, Seq(s"$root/dataset=$dataset"))
+
+  /** [[read]] over only `files` of the dataset (e.g. a bookmark batch):
+    * the same schema-applied scan, partition columns still resolved from
+    * the directory layout below the dataset root.
+    */
+  def readFiles(
+      spark: SparkSession, root: String, dataset: String, schema: StructType,
+      files: Seq[String]): DataFrame =
     spark.read
       .option("basePath", s"$root/dataset=$dataset")
       .schema(schema)
-      .json(s"$root/dataset=$dataset")
+      .json(files: _*)
 
   /** Default name for the corrupt-record column of [[readAccounted]]. */
   val CorruptCol = "_graft_corrupt"

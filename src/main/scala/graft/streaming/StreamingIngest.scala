@@ -940,12 +940,24 @@ object StreamingIngest {
   /** The drained [[semanticDedupDrain]] verdicts: (id, cluster, keep),
     * one row per drained input row — the combined state rows with the
     * vector payload and batch bookkeeping projected away (column
-    * pruning keeps the vectors unread at the scan).
+    * pruning keeps the vectors unread at the scan). FAILS FAST on a
+    * legacy state layout, whose `seen/` holds internal-named state rows
+    * (`__id`, `cl`) and no verdicts: it cannot be read as verdicts, and
+    * returning its rows would silently change the schema.
     */
   def loadSemanticDedup(
-      spark: SparkSession, statePath: String): DataFrame =
-    spark.read.parquet(s"$statePath/seen")
+      spark: SparkSession, statePath: String): DataFrame = {
+    val out = spark.read.parquet(s"$statePath/seen")
       .drop("batch", "__v", "__n")
+    val idCols = out.columns.filterNot(Set("cluster", "keep"))
+    if (out.columns.length != 3 || idCols.length != 1 || idCols(0) == "__id")
+      throw new IllegalStateException(
+        s"$statePath/seen holds columns ${out.columns.mkString(", ")}, " +
+          "not the published (id, cluster, keep) verdicts — a state path " +
+          "written by an earlier drain layout; re-drain it to a fresh " +
+          "statePath")
+    out
+  }
 
   /** Publish a staged micro-batch written at `stream/.batch_tmp_<id>`:
     * re-check the retrain lock AND the model epoch INSIDE the batch

@@ -935,4 +935,13 @@ class AnnSpec extends SparkSpec {
       small.where($"vec_id" < 2), "vec_id", "embedding", cb, k = 1)
     assert(ok.count() == 2)
   }
+
+  test("reusedIds: the id-reuse guard reads a null bad flag as not set") {
+    import org.apache.spark.sql.Row
+    val rows = Array(
+      Row(1L, true, false, null),
+      Row(2L, false, true, false),
+      Row(3L, false, true, true))
+    assert(Ann.reusedIds(rows).toSeq == Seq(3L))
+  }
 }

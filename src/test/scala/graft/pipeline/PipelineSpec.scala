@@ -52,17 +52,7 @@ class PipelineSpec extends SparkSpec {
     }
     // QueryExecutionListener callbacks ride the async listener bus; drain
     // it deterministically (a fixed sleep can green-light the regression
-    // on a loaded machine). LiveListenerBus.waitUntilEmpty is
-    // private[spark] — bytecode-public, reached via reflection.
-    def drainListenerBus(): Unit = {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      val m = bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount <= 1)
-        .get
-      if (m.getParameterCount == 0) m.invoke(bus)
-      else m.invoke(bus, java.lang.Long.valueOf(30000L))
-    }
+    // on a loaded machine)
     spark.listenerManager.register(listener)
     val first =
       try {
@@ -97,6 +87,121 @@ class PipelineSpec extends SparkSpec {
     assert(second.tables("WeatherResult_v1") == 1)
     val all = ParquetDataset.read(spark, s"$tmp/parquet/WeatherResult_v1")
     assert(all.select("recordid").distinct().count() == 2)
+  }
+
+  /** Drains the async listener bus, so every event of the jobs run so
+    * far has reached its listeners. LiveListenerBus.waitUntilEmpty is
+    * private[spark] — bytecode-public, reached via reflection.
+    */
+  private def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    val m = bus.getClass.getMethods
+      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount <= 1)
+      .get
+    if (m.getParameterCount == 0) m.invoke(bus)
+    else m.invoke(bus, java.lang.Long.valueOf(30000L))
+  }
+
+  test("E2 zero-work rerun: one Spark job per dataset (the manifest " +
+      "read) and no JSON scan") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val tmp = graft.EntryKit.scratchTracked("graft_e2_zero").toString
+    val jsonRoot = s"$tmp/raw_json"
+    IngestJob.run(spark, spark.createDataset(Seq(record("rec1"))), cfg,
+      jsonRoot, s"$tmp/quarantine")
+    val datasets = Seq("WeatherResult_v1", "sharedSchema_v1")
+    def stage2() = datasets.map(ds => ParquetJob.run(spark, jsonRoot, ds,
+      TableCatalog.default(ds), s"$tmp/parquet", s"$tmp/manifests"))
+
+    class Census extends SparkListener {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val scans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      private def walk(p: SparkPlanInfo): Unit = {
+        if (p.nodeName.startsWith("Scan ")) scans.add(p.nodeName.trim)
+        p.children.foreach(walk)
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => walk(s.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    def census(body: => Seq[ParquetJob.Result]) = {
+      val c = new Census
+      drainListenerBus()
+      spark.sparkContext.addSparkListener(c)
+      try {
+        val r = body
+        drainListenerBus()
+        (r, c)
+      } finally spark.sparkContext.removeSparkListener(c)
+    }
+    val (first, c1) = census(stage2())
+    assert(first.forall(_.tables.nonEmpty))
+    // the census sees a JSON scan when there is one
+    assert(c1.scans.toArray.contains("Scan json"), c1.scans.toString)
+
+    val (rerun, c2) = census(stage2())
+    assert(rerun.forall(_.tables.isEmpty))
+    assert(c2.jobs.get() == datasets.size,
+      s"zero-work rerun ran ${c2.jobs.get()} jobs for ${datasets.size} datasets")
+    assert(!c2.scans.toArray.contains("Scan json"), c2.scans.toString)
+  }
+
+  test("E2 bookmark: a file landing while the tables are written is " +
+      "converted by the next run, not recorded unread") {
+    import java.nio.file.{Files, Paths}
+    val tmp = graft.EntryKit.scratchTracked("graft_e2_land").toString
+    val jsonRoot = s"$tmp/raw_json"
+    val ds = "WeatherResult_v1"
+    IngestJob.run(spark, spark.createDataset(Seq(record("rec1"))), cfg,
+      jsonRoot, s"$tmp/quarantine")
+    // rec2's NDJSON files, written aside; the hook copies them into the
+    // dataset when the first table write is set up
+    val aside = s"$tmp/aside"
+    IngestJob.run(spark, spark.createDataset(Seq(record("rec2"))), cfg,
+      aside, s"$tmp/quarantine2")
+    val from = Paths.get(s"$aside/dataset=$ds")
+    val to = Paths.get(s"$jsonRoot/dataset=$ds")
+    def land(): Unit = {
+      import scala.jdk.CollectionConverters._
+      val files = Files.walk(from).iterator().asScala.toList.filter(p =>
+        Files.isRegularFile(p) && !p.getFileName.toString.matches("[_.].*"))
+      assert(files.nonEmpty)
+      files.foreach { p =>
+        val dst = to.resolve(from.relativize(p))
+        Files.createDirectories(dst.getParent)
+        Files.copy(p, dst)
+      }
+    }
+    def runJob() = ParquetJob.run(spark, jsonRoot, ds,
+      TableCatalog.default(ds), s"$tmp/parquet", s"$tmp/manifests")
+
+    val protocol = "spark.sql.sources.commitProtocolClass"
+    val landed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    WriteStartHook.action.set(() => { land(); landed.set(true) })
+    spark.conf.set(protocol, classOf[WriteStartHook].getName)
+    val first =
+      try runJob()
+      finally {
+        spark.conf.unset(protocol)
+        WriteStartHook.action.set(null)
+      }
+    assert(landed.get())
+    assert(first.tables(ds) == 1)
+
+    val second = runJob()
+    assert(second.tables.get(ds).contains(1L),
+      s"the file landed mid-run was never converted: $second")
+    val out = ParquetDataset.read(spark, s"$tmp/parquet/$ds")
+    assert(out.select("recordid").as[String].collect().sorted.toSeq ==
+      Seq("rec1", "rec2"))
+    assert(runJob().tables.isEmpty)
   }
 
   test("schema evolution: incompatible change versions the dataset and " +
@@ -222,4 +327,22 @@ class PipelineSpec extends SparkSpec {
     assert(BootstrapDriver.nextArchiveVersion(spark, archive, "other_v1") == 1L)
     assert(BootstrapDriver.nextArchiveVersion(spark, archive, "dataset_v1") == 3L)
   }
+}
+
+/** A file-format commit protocol that runs [[WriteStartHook.action]]
+  * (once) when a write job is set up — on the driver, before any of the
+  * write's tasks, so a test can land a file at a fixed point of a run.
+  */
+class WriteStartHook(jobId: String, path: String,
+    dynamicPartitionOverwrite: Boolean)
+    extends org.apache.spark.sql.execution.datasources
+      .SQLHadoopMapReduceCommitProtocol(jobId, path, dynamicPartitionOverwrite) {
+  override def setupJob(job: org.apache.hadoop.mapreduce.JobContext): Unit = {
+    Option(WriteStartHook.action.getAndSet(null)).foreach(_())
+    super.setupJob(job)
+  }
+}
+
+object WriteStartHook {
+  val action = new java.util.concurrent.atomic.AtomicReference[() => Unit]()
 }

@@ -65,7 +65,37 @@ class BookmarkSpec extends SparkSpec {
     val after = Bookmark.newFiles(spark, data, manifest)
     assert(after == fresh.drop(1))
     // round-trip: committing the rest drains the delta
-    Bookmark.commitFiles(spark, manifest, after)
+    Bookmark.commitFilesDF(spark, manifest, after.toDF("path"))
     assert(Bookmark.newFiles(spark, data, manifest).isEmpty)
+  }
+
+  test("batch: the driver-side diff equals the distributed delta, reads " +
+      "raw listed paths, and its commit records only its own files") {
+    val tmp = graft.EntryKit.scratchTracked("graft_bmbatch").toString
+    val data = s"$tmp/data"
+    val manifest = s"$tmp/manifest"
+    Seq(1).toDF("x").coalesce(1).write.mode("append").parquet(data)
+    val b1 = Bookmark.batch(spark, data, manifest)
+    assert(b1.committed.isEmpty && b1.paths.size == 1)
+    assert(b1.paths ==
+      Bookmark.newFilesDF(spark, data, manifest).as[String].collect().toSeq)
+    // read paths keep their scheme; the manifest form drops it
+    assert(b1.files.head.startsWith("file:") &&
+      b1.paths.head == b1.files.head.stripPrefix("file:"))
+    // a file landing after the batch was decided stays new
+    Seq(2).toDF("x").coalesce(1).write.mode("append").parquet(data)
+    Bookmark.commit(spark, b1)
+    val b2 = Bookmark.batch(spark, data, manifest)
+    assert(b2.committed == b1.paths.toSet && b2.paths.size == 1)
+    assert(!b1.paths.contains(b2.paths.head))
+    // pinned: exactly the listed pins, committed or not
+    assert(Bookmark.batch(spark, data, manifest, pinned = Some(b1.paths))
+      .paths == b1.paths)
+    assert(Bookmark.batch(spark, data, manifest,
+      pinned = Some(Seq(s"$tmp/absent.parquet"))).isEmpty)
+    Bookmark.commit(spark, b2)
+    assert(Bookmark.batch(spark, data, manifest).isEmpty)
+    assert(spark.read.parquet(manifest).as[String].collect().sorted.toSeq ==
+      (b1.paths ++ b2.paths).sorted)
   }
 }

@@ -2293,6 +2293,24 @@ class StreamingIngestSpec extends SparkSpec {
       .mkString.trim == "0")
   }
 
+  test("loadSemanticDedup fails loudly on a legacy seen/ layout (state " +
+      "rows, no published id/cluster/keep verdicts)") {
+    val st = graft.EntryKit.scratchTracked("graft_semlegacy").toString
+    Seq((0L, 0, Seq(1.0, 0.0), 1.0)).toDF("__id", "cl", "__v", "__n")
+      .write.parquet(s"$st/seen/batch=0")
+    val e = intercept[IllegalStateException] {
+      StreamingIngest.loadSemanticDedup(spark, st)
+    }
+    assert(e.getMessage.contains("(id, cluster, keep)"), e.getMessage)
+    // the published layout loads as (id, cluster, keep)
+    val ok = graft.EntryKit.scratchTracked("graft_semlayout").toString
+    Seq((0L, 0, true, Seq(1.0, 0.0), 1.0))
+      .toDF("vec_id", "cluster", "keep", "__v", "__n")
+      .write.parquet(s"$ok/seen/batch=0")
+    assert(StreamingIngest.loadSemanticDedup(spark, ok).columns.toSeq ==
+      Seq("vec_id", "cluster", "keep"))
+  }
+
   test("semanticDedupDrain redelivery: a row delivered again — mixed " +
       "into a later batch with fresh rows, or duplicated within one " +
       "batch — keeps its first verdict, with exactly one verdict row " +
