@@ -625,15 +625,6 @@ private[graft] object EntriesSources {
       d
     })
 
-  /** §2.8-streaming — streaming monoid-state maintenance
-    * ([[graft.streaming.StreamingIngest.monoidStateDrain]]): the events
-    * table arrives as FOUR micro-batches (maxFilesPerTrigger = 1 over a
-    * 4-file source), each folding its per-key partials into persisted
-    * cnt/sum/min/max state through the checkpointed foreachBatch merge.
-    * The finalized state must equal the one-shot aggregate over
-    * everything — the same incremental ≡ full proof as `inc_agg_merge`,
-    * now across real micro-batch boundaries.
-    */
   /** §2.8-streaming — streaming distinct-count sketch state
     * ([[graft.streaming.StreamingIngest.sketchStateDrain]]): per-key
     * HLL sketches maintained across micro-batches by hll_union_agg —
@@ -655,7 +646,7 @@ private[graft] object EntriesSources {
         stream, s"$tmp/state", s"$tmp/ck",
         keys = Seq("event_type"), valueCol = "user_id")
         .awaitTermination()
-      s.read.parquet(s"$tmp/state")
+      graft.streaming.StreamingIngest.loadState(s, s"$tmp/state")
         .select(col("event_type"),
           hll_sketch_estimate(col("sk")).cast("long").as("n_users"))
     },
@@ -695,6 +686,15 @@ private[graft] object EntriesSources {
     },
     Some("SELECT doc_id, text FROM documents"))
 
+  /** §2.8-streaming — streaming monoid-state maintenance
+    * ([[graft.streaming.StreamingIngest.monoidStateDrain]]): the events
+    * table arrives as FOUR micro-batches (maxFilesPerTrigger = 1 over a
+    * 4-file source), each folding its per-key partials into persisted
+    * cnt/sum/min/max state through the checkpointed foreachBatch merge.
+    * The finalized state must equal the one-shot aggregate over
+    * everything — the same incremental ≡ full proof as `inc_agg_merge`,
+    * now across real micro-batch boundaries.
+    */
   val stMonoidState = Q(
     (s, dir) => {
       val tmp = scratchPath("graft_stms").toString
@@ -712,7 +712,7 @@ private[graft] object EntriesSources {
         keys = Seq("user_id", "event_type"), valueCol = "v100")
         .awaitTermination()
       graft.operators.IncrementalAgg.finalizeState(
-        s.read.parquet(s"$tmp/state"))
+        graft.streaming.StreamingIngest.loadState(s, s"$tmp/state"))
         .select(col("user_id"), col("event_type"), col("cnt"),
           col("vsum"), col("vmin"), col("vmax"), col("vavg"))
     },
@@ -739,8 +739,8 @@ private[graft] object EntriesSources {
         stream, s"$tmp/state", s"$tmp/ck", "doc_id", "n_chars",
         k = 100, seed = "es1").awaitTermination()
       graft.operators.Mixture.weightedSample(
-        s.read.parquet(s"$tmp/state"), "doc_id", "n_chars",
-        k = 100, seed = "es1")
+        graft.streaming.StreamingIngest.loadState(s, s"$tmp/state"),
+        "doc_id", "n_chars", k = 100, seed = "es1")
     },
     Some("WITH b AS (SELECT doc_id, n_chars AS weight, round(pow(CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':es1'), 1, 8) AS BIGINT) AS DOUBLE) / 4294967296.0, 1.0 / n_chars), 9) AS es_key FROM documents WHERE n_chars > 0), " +
       "r AS (SELECT doc_id, weight, es_key, row_number() OVER (ORDER BY es_key DESC, doc_id) AS rk FROM b) " +

@@ -173,41 +173,23 @@ object StreamingIngest {
     * so this reuses the exact batch relationalize — streaming and batch
     * E2 can never drift apart.
     *
-    * foreachBatch is AT-LEAST-ONCE: a failure after some tables are
-    * written, followed by a batch retry, would re-append to the
-    * already-written tables. Each table's append therefore commits a
-    * marker after it lands: a retry skips every (table, batchId) whose
-    * marker exists and re-runs only the tables that never committed
-    * (within one table, Spark's file commit protocol already makes the
-    * append all-or-nothing). This shrinks the duplicate window from
-    * "every table written before the failure" to the single table whose
-    * append committed but whose marker write didn't — true exactly-once
-    * across multiple plain parquet sinks needs a transactional table
-    * format. Markers ride inside the table directory (`_`-prefixed, so
-    * every reader treats them as hidden) and are NAMESPACED BY
-    * CHECKPOINT: batchIds restart at 0 when a checkpoint is discarded,
-    * and a stale same-id marker from an earlier incarnation must never
-    * silently swallow the new run's batch (discarding a checkpoint while
-    * keeping the output means reprocessing — duplicates are that
-    * contract, dropped batches are not). Each marker supersedes its
-    * predecessor, which is deleted once the new one lands (batches are
-    * sequential per query, so only the newest can ever be retried).
+    * Commits through the marker half of [[DrainState]]: each table's
+    * append commits a `(table, batchId)` marker after it lands, and a
+    * replayed batch re-runs only the tables without one (within one
+    * table, Spark's file commit protocol makes the append
+    * all-or-nothing). The duplicate window is the single table whose
+    * append committed and whose marker did not; exactly-once across
+    * several plain parquet sinks needs a transactional table format.
+    * Discarding the checkpoint while keeping the output reprocesses
+    * every file (duplicates), never drops a batch.
     */
   def relationalizeDrain(
       spark: SparkSession, jsonRoot: String, dataset: String,
       schema: StructType, parquetRoot: String,
       checkpoint: String): StreamingQuery = {
-    import org.apache.spark.sql.functions.col
     import graft.relationalize.Relationalize
     import graft.sources.{JsonDataset, ParquetDataset}
-    import org.apache.hadoop.fs.Path
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    // checkpoint identity, not path chars: same checkpoint → same prefix
-    // across restarts; a different checkpoint can never collide
-    val ckptTag = java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpoint.getBytes("UTF-8"))
-      .take(4).map("%02x".format(_)).mkString
-    val prefix = s"_graft_batch_${ckptTag}_"
+    val markers = new DrainState.Markers(spark, checkpoint)
     readJsonStream(spark, jsonRoot, dataset, schema).writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
@@ -219,23 +201,13 @@ object StreamingIngest {
               carryCols = graft.pipeline.ParquetJob.CarryCols)
           else Map(dataset -> batch.toDF())
         tables.foreach { case (name, df) =>
-          val tableDir = new Path(s"$parquetRoot/$name")
-          val marker = new Path(tableDir, s"$prefix$batchId")
-          val fs = marker.getFileSystem(hadoopConf)
-          if (!fs.exists(marker)) {
+          val tableDir = s"$parquetRoot/$name"
+          if (!markers.committed(tableDir, batchId)) {
             val out = df.select(
               (df.columns.filterNot(JsonDataset.PartitionCols.contains) ++
                 JsonDataset.PartitionCols).map(col).toIndexedSeq: _*)
-            ParquetDataset.write(out, tableDir.toString)
-            fs.create(marker, true).close()
-            // retire superseded markers of THIS checkpoint: earlier
-            // batches can no longer be retried once this one committed
-            if (fs.exists(tableDir)) fs.listStatus(tableDir).foreach { st =>
-              val n = st.getPath.getName
-              if (n.startsWith(prefix) &&
-                  n.stripPrefix(prefix).toLong < batchId)
-                fs.delete(st.getPath, false)
-            }
+            ParquetDataset.write(out, tableDir)
+            markers.commit(tableDir, batchId)
           }
         }
       }
@@ -313,39 +285,25 @@ object StreamingIngest {
   }
 
   /** Streaming monoid-state maintenance: each micro-batch's per-key
-    * partials ([[graft.operators.IncrementalAgg.partials]]) fold into a
-    * persisted parquet state table via the monoid merge — the streaming
-    * arrival path of the incremental-aggregate discipline
-    * (`inc_agg_merge` proves merge ≡ full recompute; this wires the
-    * same merge behind a checkpointed AvailableNow drain, so restarts
-    * resume from the last committed batch instead of double-merging).
-    * State grows with KEYS, not stream; the whole-state rewrite per
-    * batch is the simple-and-correct tier — partition the state and
-    * upsert (as [[upsertDrain]] does) when the key space outgrows it.
+    * partials ([[graft.operators.IncrementalAgg.partials]]) fold into
+    * the persisted cnt/sum/min/max state via the monoid merge — the
+    * streaming arrival path of the incremental-aggregate discipline
+    * (`inc_agg_merge` proves merge ≡ full recompute). Sums are not
+    * idempotent, so a replayed batch must not fold twice: the state is
+    * versioned by the snapshot half of [[DrainState]], and a replay
+    * re-merges onto the same seed. Read it with [[loadState]]. State
+    * grows with KEYS, not stream; the whole-state rewrite per batch is
+    * the simple-and-correct tier — partition the state and upsert (as
+    * [[upsertDrain]] does) when the key space outgrows it.
     */
   def monoidStateDrain(
       stream: DataFrame, statePath: String, checkpoint: String,
       keys: Seq[String], valueCol: String): StreamingQuery = {
     import graft.operators.IncrementalAgg
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val delta = IncrementalAgg.partials(batch.toDF(), keys, valueCol)
-        if (!delta.isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(statePath)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val merged =
-            if (fs.exists(p) && fs.listStatus(p).nonEmpty)
-              IncrementalAgg.merge(spark.read.parquet(statePath), delta, keys)
-            else delta
-          // localCheckpoint cuts the self-referential lineage (the new
-          // state reads the files it is about to replace)
-          merged.localCheckpoint().write.mode("overwrite").parquet(statePath)
-        }
-      }
-      .start()
+    DrainState.foldDrain(stream, statePath, checkpoint)(
+        IncrementalAgg.partials(_, keys, valueCol)) { (seed, delta) =>
+      seed.fold(delta)(IncrementalAgg.merge(_, delta, keys))
+    }
   }
 
   /** Streaming Efraimidis–Spirakis weighted sampling — the
@@ -359,6 +317,9 @@ object StreamingIngest {
     * sampling without the reservoir's RNG: retry-replayed rows
     * collapse in the pre-sample distinct (same id → same key → same
     * rank), making the drain idempotent under at-least-once delivery.
+    * The state commits through the snapshot half of [[DrainState]], so
+    * a crash mid-write re-samples from the previous snapshot instead of
+    * losing it. Read it with [[loadState]].
     *
     * State is ≤k (id, weight) rows regardless of stream length; each
     * batch does one k-row union + the batch's own TakeOrdered.
@@ -367,35 +328,27 @@ object StreamingIngest {
       stream: DataFrame, statePath: String, checkpoint: String,
       idCol: String, weightCol: String, k: Int, seed: String)
       : StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val cand = batch.toDF().select(col(idCol), col(weightCol))
-        if (!cand.isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(statePath)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val pool =
-            if (fs.exists(p) && fs.listStatus(p).nonEmpty)
-              spark.read.parquet(statePath).unionByName(cand)
-            else cand
-          val top = graft.operators.Mixture.weightedSample(
-              pool.distinct(), idCol, weightCol, k, seed)
-            .select(col(idCol), col("weight").as(weightCol))
-          top.localCheckpoint().write.mode("overwrite").parquet(statePath)
-        }
-      }
-      .start()
+    DrainState.foldDrain(stream, statePath, checkpoint)(
+        _.select(col(idCol), col(weightCol))) { (state, cand) =>
+      graft.operators.Mixture.weightedSample(
+          state.fold(cand)(_.unionByName(cand)).distinct(),
+          idCol, weightCol, k, seed)
+        .select(col(idCol), col("weight").as(weightCol))
+    }
 
   /** Streaming forward-fill: the arrival-path twin of the batch
     * `w3_gap_fill` window — each micro-batch fills its nulls from the
     * key's last observed value, seeding each key's leading nulls from
     * persisted per-key carry state, then advances the state to the
     * batch's last filled value. Filled rows append to `outPath`; state
-    * is one row per key regardless of stream length, versioned by
-    * batchId so a crash-retry re-derives identical output (at-least-
-    * once: duplicates possible, but always byte-identical).
+    * is one row per key regardless of stream length.
+    *
+    * Commits through both halves of [[DrainState]], in this order: the
+    * carry snapshot, the output append, the `outPath` marker. A replay
+    * whose marker exists is skipped before any Spark job; any other
+    * replay re-derives from the same seed, so a crash anywhere before
+    * the append leaves no trace in the output. A crash between the
+    * append and its marker appends the batch's rows twice, identical.
     *
     * Ordering contract: like every forward fill, correctness needs
     * per-key event-time order ACROSS batches (the file source's
@@ -409,59 +362,26 @@ object StreamingIngest {
       outPath: String, key: String, orderCols: Seq[String],
       valueCol: String): StreamingQuery = {
     import org.apache.spark.sql.expressions.Window
-    // replay guard (the relationalizeDrain marker discipline): a batch
-    // retried after a mid-commit crash must not append its rows twice
-    // or advance the carry state twice
-    val ckptTag = java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpoint.getBytes("UTF-8"))
-      .take(4).map("%02x".format(_)).mkString
-    val prefix = s"_graft_batch_${ckptTag}_"
+    val markers = new DrainState.Markers(stream.sparkSession, checkpoint)
     stream.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val outDir = new org.apache.hadoop.fs.Path(outPath)
-        val marker = new org.apache.hadoop.fs.Path(outDir, s"$prefix$batchId")
-        val mfs = marker.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        if (!batch.isEmpty && !mfs.exists(marker)) {
+        if (!markers.committed(outPath, batchId) && !batch.isEmpty) {
           val w = Window.partitionBy(col(key))
             .orderBy(orderCols.map(col): _*)
             .rowsBetween(Window.unboundedPreceding, 0)
           val local = batch.toDF()
             .withColumn("__f", last(col(valueCol), ignoreNulls = true).over(w))
-          // carry state is VERSIONED by batchId (snapshot dirs
-          // batch_<id> under statePath): a batch seeds from the newest
-          // snapshot with id < its own, so a retry that crashed after
-          // writing its snapshot but before the marker re-derives from
-          // the SAME seed and appends byte-identical duplicates —
-          // unversioned overwrite state would make the retry seed from
-          // the already-advanced carry, so the duplicated rows could
-          // carry DIFFERENT filled values. Old snapshots retire only
-          // AFTER the marker commits.
-          val p = new org.apache.hadoop.fs.Path(statePath)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val snapIds =
-            if (fs.exists(p))
-              fs.listStatus(p).map(_.getPath.getName)
-                .filter(_.startsWith("batch_"))
-                .map(_.stripPrefix("batch_").toLong)
-                .filter(_ < batchId)
-            else Array.empty[Long]
-          val seedPath = snapIds.sorted.lastOption
-            .map(id => s"$statePath/batch_$id")
-          val seeded = seedPath match {
-            case Some(sp) =>
-              local.join(spark.read.parquet(sp), Seq(key), "left")
+          val state = new DrainState.Snapshots(
+            batch.sparkSession, statePath, batchId)
+          val seeded = state.seed match {
+            case Some(carry) =>
+              local.join(carry, Seq(key), "left")
                 .withColumn("__f", coalesce(col("__f"), col("__carry")))
             case None => local.withColumn("__carry",
               lit(null).cast(local.schema(valueCol).dataType))
           }
-          seeded
-            .select(batch.columns.map(col) :+
-              col("__f").as(s"${valueCol}_filled"): _*)
-            .write.mode("append").parquet(outPath)
           // next carry: the batch's last filled value per key (falls
           // back to the old carry when the batch was all-null); keys
           // not in this batch keep their row via the outer merge
@@ -469,26 +389,14 @@ object StreamingIngest {
             .agg(coalesce(
               max_by(col("__f"), struct(orderCols.map(col): _*)),
               first(col("__carry"))).as("__carry"))
-          val merged = seedPath match {
-            case Some(sp) =>
-              spark.read.parquet(sp)
-                .join(advanced.select(col(key)), Seq(key), "left_anti")
-                .unionByName(advanced)
-            case None => advanced
-          }
-          // reads batch_<seed>, writes batch_<batchId> — distinct paths,
-          // so no self-referential lineage and no checkpoint needed
-          merged.write.mode("overwrite")
-            .parquet(s"$statePath/batch_$batchId")
-          mfs.create(marker, true).close()
-          snapIds.foreach(id =>
-            fs.delete(new org.apache.hadoop.fs.Path(p, s"batch_$id"), true))
-          // retire superseded markers of this checkpoint
-          mfs.listStatus(outDir).foreach { st =>
-            val n = st.getPath.getName
-            if (n.startsWith(prefix) && n.stripPrefix(prefix).toLong < batchId)
-              mfs.delete(st.getPath, false)
-          }
+          state.write(state.seed.fold(advanced)(
+            _.join(advanced.select(col(key)), Seq(key), "left_anti")
+              .unionByName(advanced)))
+          seeded
+            .select(batch.columns.map(col) :+
+              col("__f").as(s"${valueCol}_filled"): _*)
+            .write.mode("append").parquet(outPath)
+          markers.commit(outPath, batchId)
         }
       }
       .start()
@@ -501,33 +409,29 @@ object StreamingIngest {
     * by `hll_union_agg` — sketches are the textbook re-mergeable
     * aggregate, so state stays one ~KB blob per key no matter how many
     * batches or how large the stream (an exact distinct would hold the
-    * value SET per key — unbounded). Same checkpoint/restart discipline
-    * as the monoid drain. Read the estimate off the state table with
-    * `hll_sketch_estimate`.
+    * value SET per key — unbounded). The same snapshot commit
+    * ([[DrainState]]) as the monoid drain. Read the state with
+    * [[loadState]] and the estimate off it with `hll_sketch_estimate`.
     */
   def sketchStateDrain(
       stream: DataFrame, statePath: String, checkpoint: String,
       keys: Seq[String], valueCol: String): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val delta = batch.toDF().groupBy(keys.map(col): _*)
-          .agg(hll_sketch_agg(col(valueCol)).as("sk"))
-        if (!delta.isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(statePath)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val merged =
-            if (fs.exists(p) && fs.listStatus(p).nonEmpty)
-              spark.read.parquet(statePath).unionByName(delta)
-                .groupBy(keys.map(col): _*)
-                .agg(hll_union_agg(col("sk")).as("sk"))
-            else delta
-          merged.localCheckpoint().write.mode("overwrite").parquet(statePath)
-        }
-      }
-      .start()
+    DrainState.foldDrain(stream, statePath, checkpoint)(
+        _.groupBy(keys.map(col): _*)
+          .agg(hll_sketch_agg(col(valueCol)).as("sk"))) { (seed, delta) =>
+      seed.fold(delta)(_.unionByName(delta)
+        .groupBy(keys.map(col): _*)
+        .agg(hll_union_agg(col("sk")).as("sk")))
+    }
+
+  /** The state a fold-state drain ([[monoidStateDrain]],
+    * [[weightedSampleDrain]], [[sketchStateDrain]], [[gapFillDrain]])
+    * committed under `statePath`: its newest complete snapshot. Throws
+    * `IllegalStateException` when `statePath` holds no complete snapshot
+    * or holds state in the earlier in-place layout.
+    */
+  def loadState(spark: SparkSession, statePath: String): DataFrame =
+    DrainState.load(spark, statePath)
 
   /** Stream-stream interval join: two event streams joined on a key
     * within an event-time window — the streaming twin of the

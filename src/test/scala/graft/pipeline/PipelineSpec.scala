@@ -89,20 +89,6 @@ class PipelineSpec extends SparkSpec {
     assert(all.select("recordid").distinct().count() == 2)
   }
 
-  /** Drains the async listener bus, so every event of the jobs run so
-    * far has reached its listeners. LiveListenerBus.waitUntilEmpty is
-    * private[spark] — bytecode-public, reached via reflection.
-    */
-  private def drainListenerBus(): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    val m = bus.getClass.getMethods
-      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount <= 1)
-      .get
-    if (m.getParameterCount == 0) m.invoke(bus)
-    else m.invoke(bus, java.lang.Long.valueOf(30000L))
-  }
-
   test("E2 zero-work rerun: one Spark job per dataset (the manifest " +
       "read) and no JSON scan") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,

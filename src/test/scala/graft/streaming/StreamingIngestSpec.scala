@@ -450,7 +450,7 @@ class StreamingIngestSpec extends SparkSpec {
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in"),
       s"$tmp/state", s"$tmp/ck", Seq("k"), "v").awaitTermination()
     def state(): Map[String, (Long, Long, Long, Long)] =
-      spark.read.parquet(s"$tmp/state").collect()
+      StreamingIngest.loadState(spark, s"$tmp/state").collect()
         .map(r => r.getString(0) ->
           (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     // wave 1: two files -> two micro-batches
@@ -485,7 +485,8 @@ class StreamingIngestSpec extends SparkSpec {
       .awaitTermination()
     def draw(): Seq[(Long, Long, Double, Int)] =
       graft.operators.Mixture.weightedSample(
-          spark.read.parquet(s"$tmp/state"), "id", "w", k = 8, seed = "z")
+          StreamingIngest.loadState(spark, s"$tmp/state"),
+          "id", "w", k = 8, seed = "z")
         .as[(Long, Long, Double, Int)].collect().sortBy(_._4).toSeq
     // three waves -> three micro-batches, one doubling as a replay
     all.take(20).toDF("id", "w")
@@ -514,7 +515,7 @@ class StreamingIngestSpec extends SparkSpec {
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in"),
       s"$tmp/state", s"$tmp/ck", Seq("k"), "v").awaitTermination()
     def counts(): Map[String, Long] =
-      spark.read.parquet(s"$tmp/state")
+      StreamingIngest.loadState(spark, s"$tmp/state")
         .select($"k", hll_sketch_estimate($"sk").cast("long"))
         .as[(String, Long)].collect().toMap
     // v=2 appears in BOTH files: the union must not double-count it
