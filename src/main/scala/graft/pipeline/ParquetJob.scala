@@ -1,5 +1,9 @@
 package graft.pipeline
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import scala.util.{Failure, Try}
+
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 
@@ -19,8 +23,12 @@ import graft.streaming.Bookmark
   *    an opaque Glue job bookmark; reset = delete the manifest. Like the
   *    Glue bookmark, it drops already-processed files before anything is
   *    read
-  *  - the per-dataset fan-out is a plain loop/Par collection over dataset
-  *    names in one SparkSession instead of one Glue job per table
+  *  - instead of one Glue job per table, one run writes all of a batch's
+  *    tables at once from one driver thread each ([[appendTables]]), so
+  *    the small per-table Spark jobs overlap rather than queue. A failed
+  *    write is rethrown only after every other write of the run has
+  *    finished, and the bookmark does not advance: the next run re-reads
+  *    the batch (at-least-once, as a failed Glue job re-runs)
   */
 object ParquetJob {
 
@@ -37,10 +45,12 @@ object ParquetJob {
     * once, diff), so a run with nothing new returns an empty result after
     * that one manifest-read job. Otherwise only the batch's files are
     * read with the declared schema, relationalized if nested, every
-    * produced table is appended to its partitioned Parquet dataset, and
-    * the manifest advances by exactly the files read — a file landing
-    * mid-run is left for the next run. Returns per-table appended row
-    * counts (a batch of files holding no rows reports zero-row tables).
+    * produced table is appended to its partitioned Parquet dataset
+    * (all tables at once, [[appendTables]]), and the manifest advances
+    * by exactly the files read — a file landing mid-run is left for the
+    * next run, and a failed table write leaves the manifest where it was.
+    * Returns per-table appended row counts (a batch of files holding no
+    * rows reports zero-row tables).
     *
     * @param outName output table name + bookmark identity when it differs
     *                from the source dataset — the schema-versioning case
@@ -73,24 +83,64 @@ object ParquetJob {
           fresh, table, keyCols = Seq("recordid"), carryCols = CarryCols)
       else Map(table -> fresh)
 
-    val counts = tables.map { case (name, df) =>
-      // partition columns must be last for partitionBy; ensure presence
-      val out = df.select(
-        (df.columns.filterNot(JsonDataset.PartitionCols.contains) ++
-          JsonDataset.PartitionCols).map(col).toIndexedSeq: _*)
-      // The reported row count rides the write action as an observed
-      // metric (a CollectMetrics node under the writer), so each table's
-      // plan executes exactly once; a separate count() would recompute
-      // the whole table from the NDJSON source just to report a number.
-      val obs = Observation()
-      ParquetDataset.write(
-        out.observe(obs, count(lit(1)).as("rows")), s"$parquetRoot/$name")
-      // a table with zero rows schedules zero tasks, so CollectMetricsExec
-      // never updates its accumulator and the observation resolves to an
-      // empty map — that absence IS the zero count
-      name -> obs.get.getOrElse("rows", 0L).asInstanceOf[Long]
-    }
+    val counts = appendTables(tables, parquetRoot)((_, append) => append())
     Bookmark.commit(spark, batch)
     Result(counts)
+  }
+
+  /** Appends every table to `parquetRoot/<name>` at once: one driver
+    * thread per table calls `each(dir, append)`, and `append()` writes the
+    * table and returns its row count; `each` may skip it or wrap it (the
+    * streaming drain's per-table markers). Each write is the same plan as
+    * a lone one, so files and bytes do not change; only the waits between
+    * the tables' small Spark jobs overlap.
+    *
+    * The pool is made per call, on the caller's thread, so its threads
+    * inherit the caller's Spark local properties (job group, scheduler
+    * pool, trace span). If any table fails, every other table's write
+    * still runs to its end before the first failure (in table order) is
+    * rethrown with the rest suppressed: no Spark job of the call outlives
+    * it.
+    */
+  private[graft] def appendTables[A](
+      tables: Map[String, DataFrame], parquetRoot: String)(
+      each: (String, () => Long) => A): Map[String, A] = {
+    val pool = Executors.newFixedThreadPool(tables.size)
+    try {
+      val pending = tables.toSeq.map { case (name, df) =>
+        val dir = s"$parquetRoot/$name"
+        name -> pool.submit(new Callable[A] {
+          def call(): A = each(dir, () => append(df, dir))
+        })
+      }
+      val settled = pending.map { case (name, f) =>
+        name -> Try(f.get()).recoverWith {
+          case e: ExecutionException => Failure(e.getCause)
+        }
+      }
+      settled.collect { case (_, Failure(e)) => e } match {
+        case first +: rest =>
+          rest.foreach(first.addSuppressed)
+          throw first
+        case _ => settled.map { case (name, r) => name -> r.get }.toMap
+      }
+    } finally pool.shutdown()
+  }
+
+  private def append(df: DataFrame, dir: String): Long = {
+    // partition columns must be last for partitionBy; ensure presence
+    val out = df.select(
+      (df.columns.filterNot(JsonDataset.PartitionCols.contains) ++
+        JsonDataset.PartitionCols).map(col).toIndexedSeq: _*)
+    // The reported row count rides the write action as an observed
+    // metric (a CollectMetrics node under the writer), so each table's
+    // plan executes exactly once; a separate count() would recompute
+    // the whole table from the NDJSON source just to report a number.
+    val obs = Observation()
+    ParquetDataset.write(out.observe(obs, count(lit(1)).as("rows")), dir)
+    // a table with zero rows schedules zero tasks, so CollectMetricsExec
+    // never updates its accumulator and the observation resolves to an
+    // empty map — that absence IS the zero count
+    obs.get.getOrElse("rows", 0L).asInstanceOf[Long]
   }
 }

@@ -19,7 +19,8 @@ import scala.collection.mutable
   *    json_s3_to_parquet.py:172-174)
   *  - every array field is split into a child table named
   *    `{parent}_{field}` (the reference's `{root}_{field}.val.{sub}` keys
-  *    collapse to the same names after its `.val.` → `_` cleanup)
+  *    collapse to the same names after its `.val.` → `_` cleanup); two
+  *    array paths that clean to one name are rejected, not merged
   *  - the parent's array column is replaced by a synthetic FK `id`; child
   *    rows carry `id`, `index` (0-based array position), the exploded
   *    element (struct elements flattened in place; a scalar element becomes
@@ -96,14 +97,25 @@ object Relationalize {
       carryCols: Seq[String] = Nil): Map[String, DataFrame] = {
     require(keyCols.nonEmpty, "keyCols must uniquely identify a row")
     val out = mutable.LinkedHashMap[String, DataFrame]()
+    // child table name -> the array path it came from (`a[].b` is array
+    // `b` inside the elements of array `a`)
+    val sources = mutable.Map[String, String]()
 
-    def process(raw: DataFrame, name: String, keys: Seq[String]): Unit = {
+    def process(raw: DataFrame, name: String, keys: Seq[String],
+        path: String): Unit = {
       var cur = flattenStructs(raw)
       val arrayFields = cur.schema.fields.collect {
         case StructField(n, at: ArrayType, _, _) => (n, at)
       }
       arrayFields.foreach { case (fname, at) =>
         val childName = s"${name}_${fname.replace(".", "_")}"
+        val source = if (path.isEmpty) fname else s"$path[].$fname"
+        // two arrays whose paths clean to one name would share the table
+        // and the FK seed; the second would silently replace the first
+        require(!sources.contains(childName), s"relationalize: arrays " +
+          s"`${sources(childName)}` and `$source` both map to child table " +
+          childName)
+        sources(childName) = source
         val fk = when(
           bt(fname).isNotNull,
           xxhash64(keys.map(bt) :+ lit(childName): _*))
@@ -127,13 +139,13 @@ object Relationalize {
           (col("id") +: col("index") +: elemCols) ++ carryCols.map(bt): _*)
         // Depth-first recursion: the child's own structs/arrays split next,
         // keyed by its (id, index) pair.
-        process(child, childName, Seq("id", "index"))
+        process(child, childName, Seq("id", "index"), source)
         cur = cur.withColumn(fname, fk)
       }
       out(name) = cur
     }
 
-    process(df, rootName, keyCols)
+    process(df, rootName, keyCols, "")
     out.toMap
   }
 

@@ -173,13 +173,14 @@ object StreamingIngest {
     * so this reuses the exact batch relationalize — streaming and batch
     * E2 can never drift apart.
     *
-    * Commits through the marker half of [[DrainState]]: each table's
-    * append commits a `(table, batchId)` marker after it lands, and a
+    * Commits through the marker half of [[DrainState]]: the batch's
+    * tables append at once ([[graft.pipeline.ParquetJob.appendTables]]),
+    * each commits a `(table, batchId)` marker after it lands, and a
     * replayed batch re-runs only the tables without one (within one
     * table, Spark's file commit protocol makes the append
-    * all-or-nothing). The duplicate window is the single table whose
-    * append committed and whose marker did not; exactly-once across
-    * several plain parquet sinks needs a transactional table format.
+    * all-or-nothing). The duplicate window is any table whose append
+    * committed and whose marker did not; exactly-once across several
+    * plain parquet sinks needs a transactional table format.
     * Discarding the checkpoint while keeping the output reprocesses
     * every file (duplicates), never drops a batch.
     */
@@ -187,8 +188,8 @@ object StreamingIngest {
       spark: SparkSession, jsonRoot: String, dataset: String,
       schema: StructType, parquetRoot: String,
       checkpoint: String): StreamingQuery = {
+    import graft.pipeline.ParquetJob
     import graft.relationalize.Relationalize
-    import graft.sources.{JsonDataset, ParquetDataset}
     val markers = new DrainState.Markers(spark, checkpoint)
     readJsonStream(spark, jsonRoot, dataset, schema).writeStream
       .trigger(Trigger.AvailableNow())
@@ -198,18 +199,15 @@ object StreamingIngest {
           if (Relationalize.hasNestedFields(batch.schema))
             Relationalize.relationalize(batch.toDF(), dataset,
               keyCols = Seq("recordid"),
-              carryCols = graft.pipeline.ParquetJob.CarryCols)
+              carryCols = ParquetJob.CarryCols)
           else Map(dataset -> batch.toDF())
-        tables.foreach { case (name, df) =>
-          val tableDir = s"$parquetRoot/$name"
+        ParquetJob.appendTables(tables, parquetRoot) { (tableDir, append) =>
           if (!markers.committed(tableDir, batchId)) {
-            val out = df.select(
-              (df.columns.filterNot(JsonDataset.PartitionCols.contains) ++
-                JsonDataset.PartitionCols).map(col).toIndexedSeq: _*)
-            ParquetDataset.write(out, tableDir)
+            append()
             markers.commit(tableDir, batchId)
           }
         }
+        ()
       }
       .start()
   }

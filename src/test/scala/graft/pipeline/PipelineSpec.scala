@@ -190,6 +190,75 @@ class PipelineSpec extends SparkSpec {
     assert(runJob().tables.isEmpty)
   }
 
+  test("E2 concurrent tables: one run's table writes overlap") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    val tmp = graft.EntryKit.scratchTracked("graft_e2_overlap").toString
+    val jsonRoot = s"$tmp/raw_json"
+    IngestJob.run(spark, spark.createDataset(Seq(record("rec1"))), cfg,
+      jsonRoot, s"$tmp/quarantine")
+    // job start/end events reach a listener in the scheduler's order, so
+    // a running count over them is the number of jobs running at once
+    val running = new java.util.concurrent.atomic.AtomicInteger(0)
+    val peak = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        peak.accumulateAndGet(running.incrementAndGet(), math.max)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        running.decrementAndGet()
+    }
+    drainListenerBus()
+    spark.sparkContext.addSparkListener(listener)
+    val r =
+      try {
+        val r = ParquetJob.run(spark, jsonRoot, "sharedSchema_v1",
+          TableCatalog.default("sharedSchema_v1"), s"$tmp/parquet",
+          s"$tmp/manifests")
+        drainListenerBus()
+        r
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(r.tables.size > 2, r.toString)
+    assert(peak.get() >= 2, s"at most ${peak.get()} job ran at once")
+  }
+
+  test("E2 a failed table write: run throws once every write has " +
+      "finished, the manifest holds, and the next run converts the batch") {
+    import java.nio.file.{Files, Paths}
+    val tmp = graft.EntryKit.scratchTracked("graft_e2_fail").toString
+    val jsonRoot = s"$tmp/raw_json"
+    val ds = "sharedSchema_v1"
+    IngestJob.run(spark, spark.createDataset(Seq(record("rec1"))), cfg,
+      jsonRoot, s"$tmp/quarantine")
+    def runJob(out: String) = ParquetJob.run(spark, jsonRoot, ds,
+      TableCatalog.default(ds), s"$tmp/$out", s"$tmp/${out}_manifests")
+    // the tables this batch produces, from a run into another root
+    val probe = runJob("probe").tables
+    val tables = probe.keySet
+    val child = probe.collect { case (t, n) if t != ds && n > 0 => t }.min
+    // a regular file where the child's dataset directory belongs
+    val blocker = Paths.get(s"$tmp/parquet/$child")
+    Files.createDirectories(blocker.getParent)
+    Files.write(blocker, Array[Byte](1))
+    // the other tables' write tasks linger, so a run that threw as soon as
+    // the blocked write failed would leave their jobs running
+    val protocol = "spark.sql.sources.commitProtocolClass"
+    spark.conf.set(protocol, classOf[SlowWriteTasks].getName)
+    try intercept[Exception](runJob("parquet"))
+    finally spark.conf.unset(protocol)
+    drainListenerBus()
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+      "a table write was still running when the run threw")
+    assert(!graft.streaming.Bookmark.manifestExists(
+      spark, s"$tmp/parquet_manifests/$ds"))
+
+    Files.delete(blocker)
+    val retry = runJob("parquet")
+    assert(retry.tables.keySet == tables)
+    assert(retry.tables(ds) == 1)
+    assert(ParquetDataset.read(spark, s"$tmp/parquet/$child").count() ==
+      retry.tables(child))
+  }
+
   test("schema evolution: incompatible change versions the dataset and " +
       "leaves the current table untouched (schema_change_protocol)") {
     import org.apache.spark.sql.functions.{col, lit}
@@ -331,4 +400,19 @@ class WriteStartHook(jobId: String, path: String,
 
 object WriteStartHook {
   val action = new java.util.concurrent.atomic.AtomicReference[() => Unit]()
+}
+
+/** A file-format commit protocol whose write tasks each wait half a
+  * second before they start, so the write jobs of a run stay running
+  * long enough for a test to see them.
+  */
+class SlowWriteTasks(jobId: String, path: String,
+    dynamicPartitionOverwrite: Boolean)
+    extends org.apache.spark.sql.execution.datasources
+      .SQLHadoopMapReduceCommitProtocol(jobId, path, dynamicPartitionOverwrite) {
+  override def setupTask(
+      task: org.apache.hadoop.mapreduce.TaskAttemptContext): Unit = {
+    Thread.sleep(500)
+    super.setupTask(task)
+  }
 }

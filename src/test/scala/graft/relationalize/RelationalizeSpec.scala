@@ -151,6 +151,56 @@ class RelationalizeSpec extends SparkSpec {
     assert(r.getAs[String]("a.b") == "nested")
   }
 
+  test("child-name collision: two array paths cleaning to one child " +
+      "table name are rejected, at one level and across levels") {
+    def rejects(schema: StructType, paths: String*): Unit = {
+      val df = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row], schema)
+      val e = intercept[IllegalArgumentException](
+        Relationalize.relationalize(df, "root", Seq("recordid")))
+      assert(e.getMessage.contains("root_a_b"), e.getMessage)
+      paths.foreach(p => assert(e.getMessage.contains(s"`$p`"), e.getMessage))
+    }
+    val longs = ArrayType(LongType)
+    // struct a's array b loses the flatten collision to the top-level
+    // array a_b and keeps `a.b`, which cleans back to root_a_b
+    rejects(StructType(Seq(
+      StructField("recordid", StringType),
+      StructField("a_b", longs),
+      StructField("a", StructType(Seq(StructField("b", longs)))))),
+      "a_b", "a.b")
+    // array b inside the elements of array a is child root_a's child
+    // root_a_b, the name of the top-level array a_b's table
+    rejects(StructType(Seq(
+      StructField("recordid", StringType),
+      StructField("a_b", longs),
+      StructField("a", ArrayType(StructType(Seq(StructField("b", longs))))))),
+      "a_b", "a[].b")
+  }
+
+  test("every catalog table relationalizes into flat tables with no " +
+      "child-name collision") {
+    graft.schema.TableCatalog.default.foreach { case (name, spec) =>
+      // the declared columns plus the carried ones relationalize keys and
+      // copies; four catalog tables do not declare recordid, so it is
+      // supplied here: this case is about the child tables only
+      val carried = graft.pipeline.ParquetJob.CarryCols
+        .filterNot(spec.schema.fieldNames.contains)
+        .map(StructField(_, StringType))
+      val df = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row], StructType(spec.schema ++ carried))
+      val tables =
+        if (Relationalize.hasNestedFields(df.schema))
+          Relationalize.relationalize(df, name, Seq("recordid"),
+            carryCols = graft.pipeline.ParquetJob.CarryCols)
+        else Map(name -> df)
+      assert(tables.contains(name))
+      tables.foreach { case (t, out) =>
+        assert(!Relationalize.hasNestedFields(out.schema), s"$name: $t")
+      }
+    }
+  }
+
   test("null arrays produce null FK and no child rows") {
     val schema = StructType(Seq(
       StructField("recordid", StringType),
