@@ -6,6 +6,7 @@ import scala.util.{Failure, Try}
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.types.StringType
 
 import graft.relationalize.Relationalize
 import graft.schema.TableSpec
@@ -44,7 +45,8 @@ object ParquetJob {
     * scan ([[Bookmark.batch]]: list the dataset, collect the manifest
     * once, diff), so a run with nothing new returns an empty result after
     * that one manifest-read job. Otherwise only the batch's files are
-    * read with the declared schema, relationalized if nested, every
+    * read with the declared schema (plus `recordid` when the spec lacks
+    * it), relationalized if nested ([[tablesOf]]), every
     * produced table is appended to its partitioned Parquet dataset
     * (all tables at once, [[appendTables]]), and the manifest advances
     * by exactly the files read — a file landing mid-run is left for the
@@ -74,19 +76,29 @@ object ParquetJob {
     val batch = Bookmark.batch(spark, s"$jsonRoot/dataset=$dataset",
       s"$manifestRoot/$table", newFiles)
     if (batch.isEmpty) return Result(Map.empty)
+    // stage 1 writes recordid into every line; a catalog table that does
+    // not declare it would drop relationalize's key column at the scan
+    val schema =
+      if (spec.schema.fieldNames.contains("recordid")) spec.schema
+      else spec.schema.add("recordid", StringType)
     val fresh =
-      JsonDataset.readFiles(spark, jsonRoot, dataset, spec.schema, batch.files)
-
-    val tables: Map[String, DataFrame] =
-      if (Relationalize.hasNestedFields(fresh.schema))
-        Relationalize.relationalize(
-          fresh, table, keyCols = Seq("recordid"), carryCols = CarryCols)
-      else Map(table -> fresh)
-
-    val counts = appendTables(tables, parquetRoot)((_, append) => append())
+      JsonDataset.readFiles(spark, jsonRoot, dataset, schema, batch.files)
+    val counts = appendTables(tablesOf(fresh, table), parquetRoot)(
+      (_, append) => append())
     Bookmark.commit(spark, batch)
     Result(counts)
   }
+
+  /** The tables one batch writes: relationalized on `recordid`,
+    * carrying [[CarryCols]], if `df` has nested fields; else `df` is the
+    * one table `name`.
+    */
+  private[graft] def tablesOf(
+      df: DataFrame, name: String): Map[String, DataFrame] =
+    if (Relationalize.hasNestedFields(df.schema))
+      Relationalize.relationalize(
+        df, name, keyCols = Seq("recordid"), carryCols = CarryCols)
+    else Map(name -> df)
 
   /** Appends every table to `parquetRoot/<name>` at once: one driver
     * thread per table calls `each(dir, append)`, and `append()` writes the

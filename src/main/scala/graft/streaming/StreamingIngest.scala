@@ -189,18 +189,12 @@ object StreamingIngest {
       schema: StructType, parquetRoot: String,
       checkpoint: String): StreamingQuery = {
     import graft.pipeline.ParquetJob
-    import graft.relationalize.Relationalize
     val markers = new DrainState.Markers(spark, checkpoint)
     readJsonStream(spark, jsonRoot, dataset, schema).writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val tables =
-          if (Relationalize.hasNestedFields(batch.schema))
-            Relationalize.relationalize(batch.toDF(), dataset,
-              keyCols = Seq("recordid"),
-              carryCols = ParquetJob.CarryCols)
-          else Map(dataset -> batch.toDF())
+        val tables = ParquetJob.tablesOf(batch.toDF(), dataset)
         ParquetJob.appendTables(tables, parquetRoot) { (tableDir, append) =>
           if (!markers.committed(tableDir, batchId)) {
             append()
@@ -613,7 +607,7 @@ object StreamingIngest {
     // the caller's base coarse table materializes ONCE per drain (on
     // first use — a drain against an already-retrained index never
     // evaluates it): it is constant until a retrain publishes
-    // `_centroids`, at which point versionedModels supersedes it. When
+    // `_centroids`, at which point Generation.models supersedes it. When
     // it derives from the corpus (pivotCentroids), per-batch
     // re-evaluation is work ∝ corpus on EVERY micro-batch — the
     // genuine scale-killer at production batch rates.
@@ -636,8 +630,8 @@ object StreamingIngest {
         val spark = batch.sparkSession
         // high-water check FIRST: a doomed fresh checkpoint must not
         // claim the staging area on its way to failing
-        val ver = resolveVersion(spark, indexPath)
-        val hw = ver.map(_._2).getOrElse(-1L)
+        val gen = readGeneration(spark, indexPath)
+        val hw = gen.folded
         if (batchId <= hw) throw new IllegalStateException(
           s"staging batch id $batchId is at-or-below the published folded " +
             s"high-water $hw of $indexPath — a fresh checkpoint against a " +
@@ -661,17 +655,17 @@ object StreamingIngest {
         // route with the NEW codebook/centroids (their codes would be
         // meaningless against the generation that serves them) — but
         // between publications the models are immutable, so per-batch
-        // resolution is the version listing already paid above plus one
-        // epoch read; the parquet reads happen only when the key moves
-        val genPath = ver.map(_._1)
-        val epoch = modelEpochAt(spark, indexPath, genPath)
+        // resolution is the generation read already paid above (one
+        // listing, one epoch read); the parquet reads happen only when
+        // the key moves
+        val genPath = gen.path
+        val epoch = gen.modelEpoch
         val (cb, centsV) = graft.PhaseTimer.phase("drain_models") {
           modelCache match {
             case Some((p, e, ccb, cc)) if p == genPath && e == epoch =>
               (ccb, cc)
             case _ =>
-              val (mcb, mcents) =
-                versionedModelsAt(spark, indexPath, genPath)
+              val (mcb, mcents) = gen.models(spark)
               // published centroids pin once per generation too — they
               // are generation-immutable and coarse-model-sized.
               // Retention is bounded, not monotone: replacing the
@@ -766,15 +760,8 @@ object StreamingIngest {
         // covers what a path claim cannot — the same path deleted and
         // recreated
         claimRunAt(spark, statePath, checkpoint)
-        val fs = hfs(spark, statePath)
-        def batchIdsUnder(sub: String): Seq[Long] = {
-          val root = new org.apache.hadoop.fs.Path(s"$statePath/$sub")
-          if (!fs.exists(root)) Seq.empty
-          else listIndexDir(fs, root).toSeq.map(_.getPath.getName)
-            .flatMap(n =>
-              if (n.startsWith("batch=")) n.drop("batch=".length).toLongOption
-              else None)
-        }
+        def batchIdsUnder(sub: String): Seq[Long] =
+          listIds(spark, s"$statePath/$sub", "batch=")
         val seenIds = batchIdsUnder("seen")
         // the path-keyed claim cannot see a checkpoint DELETED and
         // recreated at the same path — batch ids restart at 0, pass
@@ -909,29 +896,13 @@ object StreamingIngest {
     * [[retrainStreamedIndex]] and carried forward by every compaction
     * like the models themselves). 0 before any retrain — the base
     * codebook era. The drain captures it at model resolution and
-    * [[commitStagedBatch]] requires it unmoved at publish.
+    * [[commitStagedBatch]] requires it unmoved at publish. Read fresh
+    * (one listing of the index root): the fences compare it against
+    * the epoch of an earlier [[readGeneration]].
     */
   private[streaming] def modelEpoch(
       spark: SparkSession, indexPath: String): Long =
-    modelEpochAt(spark, indexPath,
-      resolveVersion(spark, indexPath).map(_._1))
-
-  /** [[modelEpoch]] with the version listing already paid: `genPath`
-    * is the newest complete generation (None = base-only, epoch 0).
-    */
-  private def modelEpochAt(
-      spark: SparkSession, indexPath: String,
-      genPath: Option[String]): Long = {
-    val fs = hfs(spark, indexPath)
-    genPath match {
-      case Some(p) if fs.exists(
-          new org.apache.hadoop.fs.Path(s"$p/_model_epoch")) =>
-        val in = fs.open(new org.apache.hadoop.fs.Path(s"$p/_model_epoch"))
-        try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-        finally in.close()
-      case _ => 0L
-    }
-  }
+    readGeneration(spark, indexPath).modelEpoch
 
   /** Pin `indexPath`'s staging area to `checkpoint` via the
     * `stream/_run` marker (create-exclusive, so a concurrent first
@@ -964,12 +935,6 @@ object StreamingIngest {
       spark: SparkSession, indexPath: String, checkpoint: String): Unit =
     claimRunAt(spark, s"$indexPath/stream", checkpoint)
 
-  /** [[claimRun]] for any drain-owned state root: the `_run` marker
-    * pins `root` to one checkpoint for its lifetime (the
-    * [[semanticDedupDrain]] state tree has the same
-    * fresh-checkpoint-restarts-batch-ids hazard as the index staging
-    * area).
-    */
   /** The checkpoint's INSTANCE token — the streaming query id Spark
     * writes into `<checkpoint>/metadata` when the checkpoint is
     * created, stable across restarts FROM that checkpoint but fresh
@@ -1000,6 +965,12 @@ object StreamingIngest {
       }
     } catch { case _: java.io.IOException => "" }
 
+  /** [[claimRun]] for any drain-owned state root: the `_run` marker
+    * pins `root` to one checkpoint for its lifetime (the
+    * [[semanticDedupDrain]] state tree has the same
+    * fresh-checkpoint-restarts-batch-ids hazard as the index staging
+    * area).
+    */
   private def claimRunAt(
       spark: SparkSession, root: String, checkpoint: String): Unit = {
     val fs = hfs(spark, root)
@@ -1101,7 +1072,8 @@ object StreamingIngest {
     * listings (every `listStatus` the streamed-index machinery
     * performs routes through [[listIndexDir]]). The serve-handle spec
     * counts these to prove a warm re-serve pays at most ONE listing —
-    * the object-storage tax the handle exists to amortize.
+    * the object-storage tax the handle exists to amortize — and
+    * `IndexCensusSpec` pins each verb's count.
     */
   private[streaming] val indexListings =
     new java.util.concurrent.atomic.AtomicLong()
@@ -1114,34 +1086,165 @@ object StreamingIngest {
     fs.listStatus(p)
   }
 
-  /** The highest COMPLETE compacted version under `indexPath` and its
-    * folded high-water batch id: a `codes_v<n>` is visible to readers
-    * only once its `_folded` marker exists (written last, via tmp +
-    * rename, so a half-written version is invisible). None = no
-    * compaction has completed; the base `codes` table is the view.
+  /** The `<prefix><n>` ids among the children of `dir` (`batch=`
+    * staging dirs, `tomb=` tombstone dirs, `codes_v` generations);
+    * empty if `dir` does not exist. One listing.
     */
-  private def resolveVersion(
-      spark: SparkSession, indexPath: String): Option[(String, Long)] = {
-    val fs = hfs(spark, indexPath)
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    if (!fs.exists(root)) return None
-    val versions = listIndexDir(fs, root).toSeq
-      .map(_.getPath.getName)
-      .flatMap { n =>
-        if (!n.startsWith("codes_v")) None
-        else n.drop("codes_v".length).toLongOption
-      }
-      .filter(v => fs.exists(new org.apache.hadoop.fs.Path(
-        s"$indexPath/codes_v$v/_folded")))
-    if (versions.isEmpty) None
+  private def listIds(
+      spark: SparkSession, dir: String, prefix: String): Seq[Long] = {
+    val fs = hfs(spark, dir)
+    val p = new org.apache.hadoop.fs.Path(dir)
+    if (!fs.exists(p)) Seq.empty
+    else listIndexDir(fs, p).toSeq.map(_.getPath.getName).flatMap(n =>
+      if (n.startsWith(prefix)) n.drop(prefix.length).toLongOption
+      else None)
+  }
+
+  /** A one-number marker file (`_folded`, `_tombs_applied`,
+    * `_model_epoch`); None if absent.
+    */
+  private def readLong(spark: SparkSession, path: String): Option[Long] = {
+    val fs = hfs(spark, path)
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!fs.exists(p)) None
     else {
-      val v = versions.max
-      val in = fs.open(new org.apache.hadoop.fs.Path(
-        s"$indexPath/codes_v$v/_folded"))
-      val hw = try scala.io.Source.fromInputStream(in).mkString.trim.toLong
+      val in = fs.open(p)
+      try Some(scala.io.Source.fromInputStream(in).mkString.trim.toLong)
       finally in.close()
-      Some((s"$indexPath/codes_v$v", hw))
     }
+  }
+
+  private def writeLong(spark: SparkSession, path: String, v: Long): Unit = {
+    val out = hfs(spark, path).create(new org.apache.hadoop.fs.Path(path), true)
+    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Suffixes of COMPLETE compacted versions: a `codes_v<n>` is visible
+    * to readers only once its `_folded` marker exists (written last, via
+    * tmp + rename, so a half-written version is invisible).
+    */
+  private def completeVersions(
+      spark: SparkSession, indexPath: String): Seq[Long] = {
+    val fs = hfs(spark, indexPath)
+    listIds(spark, indexPath, "codes_v").filter(v => fs.exists(
+      new org.apache.hadoop.fs.Path(s"$indexPath/codes_v$v/_folded")))
+  }
+
+  /** The newest complete generation of an index, as its markers
+    * describe it: `path` is the newest complete `codes_v<n>` (None = no
+    * compaction has completed; the base `codes` table is the view),
+    * `folded` its folded high-water batch id, `tombsApplied` the
+    * tombstone seq high-water it physically applied (`_tombs_applied`,
+    * written before `_folded` so it publishes with the data; -1 before
+    * any fold consumed one, and for the base `codes`, which never
+    * mutates) and `modelEpoch` its [[modelEpoch]]. `versions` lists
+    * every complete generation, for GC.
+    */
+  private final case class Generation(
+      indexPath: String, versions: Seq[Long], folded: Long,
+      tombsApplied: Long, modelEpoch: Long) {
+    val path: Option[String] =
+      versions.maxOption.map(v => s"$indexPath/codes_v$v")
+    def codes: String = path.getOrElse(s"$indexPath/codes")
+
+    /** The models that encoded this generation: its embedded
+      * `_codebook` (+ `_centroids`) when a retrain published them
+      * ([[retrainStreamedIndex]]), else the base `codebook`
+      * [[graft.ann.Ann.saveIndex]] wrote (compaction-only generations
+      * re-fold codes the base codebook encoded, so the base model stays
+      * correct for them). The underscore prefix keeps the model tables
+      * invisible to the generation's codes scan (Spark's file index
+      * skips `_`/`.` names) — which is also what makes it safe to embed
+      * them INSIDE the version dir, giving codes + models one atomic
+      * `_folded` publication.
+      */
+    def models(spark: SparkSession)
+        : (graft.ann.Ann.PqCodebook, Option[DataFrame]) =
+      path.filter(p => hfs(spark, p).exists(
+          new org.apache.hadoop.fs.Path(s"$p/_codebook"))) match {
+        case Some(p) =>
+          (graft.ann.Ann.readCodebook(spark, s"$p/_codebook"), cents(spark))
+        case None =>
+          (graft.ann.Ann.readCodebook(spark, s"$indexPath/codebook"), None)
+      }
+
+    /** The centroid half of [[models]] alone — the drift probe needs
+      * only the serving centroid table, and a codebook read would be a
+      * throwaway collect per tick there. Centroids count only when the
+      * generation carries its `_codebook` too (a `_centroids` without
+      * it is a mid-crash partial).
+      */
+    def cents(spark: SparkSession): Option[DataFrame] = {
+      val fs = hfs(spark, indexPath)
+      path.filter(p =>
+          fs.exists(new org.apache.hadoop.fs.Path(s"$p/_codebook")) &&
+            fs.exists(new org.apache.hadoop.fs.Path(s"$p/_centroids")))
+        .map(p => spark.read.parquet(s"$p/_centroids"))
+    }
+  }
+
+  /** Read the newest [[Generation]]: one listing of the index root plus
+    * its marker files.
+    */
+  private def readGeneration(
+      spark: SparkSession, indexPath: String): Generation = {
+    val versions = completeVersions(spark, indexPath)
+    val codes = versions.maxOption
+      .fold(s"$indexPath/codes")(v => s"$indexPath/codes_v$v")
+    def mark(name: String, absent: Long) =
+      readLong(spark, s"$codes/$name").getOrElse(absent)
+    Generation(indexPath, versions, folded = mark("_folded", -1L),
+      tombsApplied = mark("_tombs_applied", -1L),
+      modelEpoch = mark("_model_epoch", 0L))
+  }
+
+  /** The state of a streamed index, read ONCE per verb by
+    * [[readIndexState]]: the staged batch ids, the newest complete
+    * [[Generation]] (its folded high-water, applied-tombstone mark and
+    * model epoch) and the tombstone seqs. Every snapshot read plans from
+    * one value: the serving view ([[loadStreamedCodes]],
+    * [[openServeHandle]], [[loadStreamedIndex]] — codes and models from
+    * the same generation by construction), [[deleteStreamed]],
+    * [[indexStatus]], the folds ([[FoldPlan]]), the retrain and
+    * [[gcStreamedIndex]]. Reads that must be late stay out of it: the
+    * serve fingerprint (taken first), the fences' fresh [[modelEpoch]],
+    * the version suffix read right before a write, the delete's seq
+    * allocation and the retrain's mid-stage checks.
+    *
+    * The listing order is the folds': staging, then the root, then the
+    * tombstones. The folds need staging before tombstones (see the
+    * DELETES section). The same order is safe for the other readers:
+    *  - serve: a batch in the staging listing is either above the
+    *    generation's folded mark (served from staging) or was folded
+    *    before the root listing (served from the generation), never
+    *    both and never neither; a batch staged after the staging
+    *    listing is later than the snapshot. Tombstones are listed after
+    *    the root, so every tombstone the generation has not applied is
+    *    there (grace GC deletes only seqs the generation before the
+    *    newest applied), and a consumed one is filtered by the
+    *    generation's own mark, never applied twice.
+    *  - delete: the as-of is the max of the staged ids and the folded
+    *    mark; a fold landing between the staging and root listings
+    *    raises the folded mark past every batch it consumed, so the
+    *    as-of still covers every row the membership probe can see.
+    *  - status: a report, not a plan; the order only decides whether a
+    *    racing batch or fold shows in this report or the next.
+    */
+  private final case class IndexState(
+      staged: Seq[Long], gen: Generation, tombs: Seq[Long]) {
+    def indexPath: String = gen.indexPath
+    /** Tombstone seqs the generation has not applied: the live kills. */
+    def pendingTombs: Seq[Long] = tombs.filter(_ > gen.tombsApplied)
+  }
+
+  /** Read an [[IndexState]]: one listing each of `stream/`, the root
+    * and `tombs/`, in that order (a directory not yet made costs none).
+    */
+  private def readIndexState(
+      spark: SparkSession, indexPath: String): IndexState = {
+    val staged = listIds(spark, s"$indexPath/stream", "batch=")
+    val gen = readGeneration(spark, indexPath)
+    IndexState(staged, gen, listIds(spark, s"$indexPath/tombs", "tomb="))
   }
 
   /** Cluster partition values (dir-name encoding) present under a
@@ -1219,28 +1322,32 @@ object StreamingIngest {
     else {
       val entries = manifestEntries(spark, versionPath, budget)
       require(entries.nonEmpty, s"empty manifest at $versionPath")
-      entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (root, es) =>
-        spark.read.option("basePath", root)
-          .parquet(es.map(e => s"$root/$cluster=${e._1}").sorted: _*)
-          .select(col(id), col("codes"), col(cluster))
-      }.reduce(_ unionByName _)
+      readRoots(spark, entries, id, cluster)
     }
   }
 
-  /** Batch ids currently staged under `stream/` (directory names are
-    * `batch=<id>`); empty if the staging dir does not exist.
+  /** Manifest entries (cluster value → materialized root) read as one
+    * pruned scan per root, each given the explicit cluster dirs it owns.
     */
-  private def stagedBatches(
-      spark: SparkSession, indexPath: String): Seq[Long] = {
-    val fs = hfs(spark, indexPath)
-    val stream = new org.apache.hadoop.fs.Path(s"$indexPath/stream")
-    if (!fs.exists(stream)) Seq.empty
-    else listIndexDir(fs, stream).toSeq
-      .map(_.getPath.getName)
-      .flatMap(n =>
-        if (n.startsWith("batch=")) n.drop("batch=".length).toLongOption
-        else None)
-  }
+  private def readRoots(
+      spark: SparkSession, entries: Iterable[(String, String)],
+      id: String, cluster: String): DataFrame =
+    entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (root, es) =>
+      spark.read.option("basePath", root)
+        .parquet(es.map(e => s"$root/$cluster=${e._1}").toSeq.sorted: _*)
+        .select(col(id), col("codes"), col(cluster))
+    }.reduce(_ unionByName _)
+
+  /** The staged rows of batches in (`above`, `upTo`], carrying their
+    * batch id as `__b` for the tombstone kill rule.
+    */
+  private def stagingLeg(
+      spark: SparkSession, indexPath: String, id: String, cluster: String,
+      above: Long, upTo: Long): DataFrame =
+    spark.read.parquet(s"$indexPath/stream")
+      .where(col("batch") > above && col("batch") <= upTo)
+      .select(col(id), col("codes"), col(cluster),
+        col("batch").cast("long").as("__b"))
 
   // --------------------------------------------------------------------
   // DELETES — tombstones over the streamed index.
@@ -1273,40 +1380,10 @@ object StreamingIngest {
   // single-maintainer assumption as the folds.
   // --------------------------------------------------------------------
 
-  /** Tombstone batch seqs currently staged under `tombs/`. */
-  private def tombSeqs(
-      spark: SparkSession, indexPath: String): Seq[Long] = {
-    val fs = hfs(spark, indexPath)
-    val tombs = new org.apache.hadoop.fs.Path(s"$indexPath/tombs")
-    if (!fs.exists(tombs)) Seq.empty
-    else listIndexDir(fs, tombs).toSeq
-      .map(_.getPath.getName)
-      .flatMap(n =>
-        if (n.startsWith("tomb=")) n.drop("tomb=".length).toLongOption
-        else None)
-  }
-
-  /** The tombstone seq high-water a generation has physically applied
-    * (`_tombs_applied`, written before `_folded` so it publishes
-    * atomically with the data). -1 before any fold consumed one — and
-    * for the base `codes` table, which never mutates.
-    */
-  private[streaming] def tombsApplied(
-      spark: SparkSession, versionPath: String): Long = {
-    val fs = hfs(spark, versionPath)
-    val p = new org.apache.hadoop.fs.Path(s"$versionPath/_tombs_applied")
-    if (!fs.exists(p)) -1L
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-      finally in.close()
-    }
-  }
-
-  /** Tombstone seqs NOT yet applied by the generation that reads them. */
-  private def pendingTombSeqs(
-      spark: SparkSession, indexPath: String, applied: Long): Seq[Long] =
-    tombSeqs(spark, indexPath).filter(_ > applied)
+  /** The rows of tombstone batches `seqs`: (id, cluster, asof). */
+  private def readTombs(
+      spark: SparkSession, indexPath: String, seqs: Seq[Long]): DataFrame =
+    spark.read.parquet(seqs.sorted.map(s => s"$indexPath/tombs/tomb=$s"): _*)
 
   /** Kill tombstoned rows: view rows (carrying `__b` — the staging
     * batch id, or -1 for folded base rows) anti-joined against the
@@ -1322,22 +1399,13 @@ object StreamingIngest {
       id: String, live: Seq[Long]): DataFrame =
     if (live.isEmpty) view.drop("__b")
     else {
-      val kills = spark.read
-        .parquet(live.sorted.map(s => s"$indexPath/tombs/tomb=$s"): _*)
+      val kills = readTombs(spark, indexPath, live)
         .select(col(id).as("__del_id"), col("asof").as("__del_asof"))
       view.join(broadcast(kills),
           view(id) === col("__del_id") && col("__b") <= col("__del_asof"),
           "left_anti")
         .drop("__b")
     }
-
-  private def writeTombsApplied(
-      spark: SparkSession, versionPath: String, seq: Long): Unit = {
-    val fs = hfs(spark, versionPath)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$versionPath/_tombs_applied"), true)
-    try out.write(seq.toString.getBytes("UTF-8")) finally out.close()
-  }
 
   /** Stage a delete: every index row whose `id` is in `ids` and was
     * visible at call time is removed from the serving view immediately
@@ -1372,12 +1440,9 @@ object StreamingIngest {
         s"retrain in progress on $indexPath (_retrain_lock present); " +
           "retry the delete after it completes (and ensure the retrain " +
           "corpus reflects it)")
-    val epoch = modelEpoch(spark, indexPath)
-    val staged = stagedBatches(spark, indexPath)
-    val (basePath, hwFolded) = resolveVersion(spark, indexPath)
-      .getOrElse((s"$indexPath/codes", -1L))
-    val asof = (staged :+ hwFolded).max
-    val hits = loadStreamedCodes(spark, indexPath, id, cluster)
+    val state = readIndexState(spark, indexPath)
+    val asof = (state.staged :+ state.gen.folded).max
+    val hits = servingView(spark, state, id, cluster, state.pendingTombs)
       .join(broadcast(ids.select(col(id)).distinct()), Seq(id), "left_semi")
       .select(col(id), col(cluster)).distinct()
       .withColumn("asof", lit(asof))
@@ -1385,7 +1450,7 @@ object StreamingIngest {
     hits.repartition(1).write.mode("overwrite").parquet(tmp)
     val abortRetrain =
       fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/_retrain_lock")) ||
-        modelEpoch(spark, indexPath) != epoch
+        modelEpoch(spark, indexPath) != state.gen.modelEpoch
     if (abortRetrain) {
       fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
       throw new IllegalStateException(
@@ -1396,8 +1461,8 @@ object StreamingIngest {
     val empty = spark.read.parquet(tmp).isEmpty
     if (empty) { fs.delete(new org.apache.hadoop.fs.Path(tmp), true); -1L }
     else {
-      var seq = (tombSeqs(spark, indexPath) :+
-        tombsApplied(spark, basePath) :+ -1L).max + 1
+      var seq = (listIds(spark, s"$indexPath/tombs", "tomb=") :+
+        state.gen.tombsApplied :+ -1L).max + 1
       var attempts = 0
       var placed = false
       while (!placed && attempts < 64) {
@@ -1435,28 +1500,33 @@ object StreamingIngest {
       maxBatch: Long = Long.MaxValue,
       manifestBudget: Int = DefaultManifestBudget,
       maxTomb: Long = Long.MaxValue): DataFrame = {
-    val (basePath, hw) = resolveVersion(spark, indexPath)
-      .getOrElse((s"$indexPath/codes", -1L))
-    val live = pendingTombSeqs(spark, indexPath,
-      tombsApplied(spark, basePath)).filter(_ <= maxTomb)
+    val state = readIndexState(spark, indexPath)
+    servingView(spark, state, id, cluster,
+      state.pendingTombs.filter(_ <= maxTomb), manifestBudget, maxBatch)
+  }
+
+  /** [[loadStreamedCodes]] over an [[IndexState]] already read: the
+    * generation's rows, the staging leg when a staged batch in
+    * (folded, `maxBatch`] exists, and the `live` tombstones' kills.
+    */
+  private def servingView(
+      spark: SparkSession, state: IndexState, id: String, cluster: String,
+      live: Seq[Long], manifestBudget: Int = DefaultManifestBudget,
+      maxBatch: Long = Long.MaxValue): DataFrame = {
+    val hw = state.gen.folded
     // the staging leg carries its batch id into the kill rule (a
     // re-insert staged ABOVE a tombstone's as-of point survives it);
     // base rows are provably all from batches <= every live
     // tombstone's as-of (folds list staging BEFORE tombstones, so a
     // generation folding past an as-of has consumed that tombstone),
     // hence kill on bare id match (__b = -1 <= any as-of)
-    val base = readVersion(spark, basePath, id, cluster, manifestBudget)
+    val base = readVersion(spark, state.gen.codes, id, cluster, manifestBudget)
       .withColumn("__b", lit(-1L))
-    val unfolded = stagedBatches(spark, indexPath)
-      .exists(b => b > hw && b <= maxBatch)
     val view =
-      if (!unfolded) base
+      if (!state.staged.exists(b => b > hw && b <= maxBatch)) base
       else base.unionByName(
-        spark.read.parquet(s"$indexPath/stream")
-          .where(col("batch") > hw && col("batch") <= maxBatch)
-          .select(col(id), col("codes"), col(cluster),
-            col("batch").cast("long").as("__b")))
-    applyTombstones(spark, indexPath, view, id, live)
+        stagingLeg(spark, state.indexPath, id, cluster, hw, maxBatch))
+    applyTombstones(spark, state.indexPath, view, id, live)
   }
 
   /** Fold the staged micro-batch partitions into a compacted codes
@@ -1470,9 +1540,9 @@ object StreamingIngest {
     * Crash-safe by monotone publication — no live directory is ever
     * renamed or rewritten (an earlier design swapped `codes` via two
     * renames, which leaves a window with NO live index at all):
-    * (1) snapshot the staged batch ids and take their max as the fold's
-    * high-water `hw`, (2) write the serving view BOUNDED AT `hw` to a
-    * fresh `codes_v<n>` (n = highest existing suffix + 1; a
+    * (1) snapshot the staged batch ids ([[FoldPlan]]) and take their
+    * max as the fold's high-water `hw`, (2) write the serving view
+    * BOUNDED AT `hw` to a fresh `codes_v<n>` (n = highest existing suffix + 1; a
     * half-written dir from a crash is invisible and simply superseded)
     * — the bound matters: a micro-batch landing between the snapshot
     * and the fold's scan would otherwise be folded in while sitting
@@ -1500,63 +1570,15 @@ object StreamingIngest {
     * already staged is observationally identical to a batch landing
     * after the snapshot.
     */
-  /** Refuse to fold while a retrain holds the index: both publish the
-    * next `codes_v<n>` generation, so a fold racing a live retrain can
-    * allocate the SAME version suffix and interleave its files with
-    * the retrain's — the one write collision the monotone-publication
-    * design cannot absorb. The delete verb refuses for the same
-    * reason; the policy tick maps this refusal to `Blocked`.
-    */
-  private def refuseFoldDuringRetrain(
-      spark: SparkSession, indexPath: String): Unit =
-    if (hfs(spark, indexPath).exists(
-        new org.apache.hadoop.fs.Path(s"$indexPath/_retrain_lock")))
-      throw new IllegalStateException(
-        s"retrain in progress on $indexPath (_retrain_lock present); " +
-          "retry the fold after it completes — the retrain consumes " +
-          "the staging window this fold would publish")
-
   def compactStreamedIndex(
       spark: SparkSession, indexPath: String,
       id: String, cluster: String,
       upTo: Option[Long] = None,
       manifestBudget: Int = DefaultManifestBudget,
       upToTomb: Option[Long] = None): Unit = {
-    refuseFoldDuringRetrain(spark, indexPath)
-    val bound = upTo.getOrElse(Long.MaxValue)
-    val staged = stagedBatches(spark, indexPath).filter(_ <= bound)
-    val prior = resolveVersion(spark, indexPath)
-    val hwPrior = prior.map(_._2).getOrElse(-1L)
-    // tombstones listed AFTER staging — the ordering the serve rule's
-    // base-leg kill depends on (see the DELETES section)
-    val appliedPrior = tombsApplied(
-      spark, prior.map(_._1).getOrElse(s"$indexPath/codes"))
-    val pendingTombs = pendingTombSeqs(spark, indexPath, appliedPrior)
-      .filter(_ <= upToTomb.getOrElse(Long.MaxValue))
-    if (!staged.exists(_ > hwPrior) && pendingTombs.isEmpty)
-      return // nothing unfolded, nothing to reclaim
-    val hw = (staged :+ hwPrior).max
-    val tombHw = (pendingTombs :+ appliedPrior).max
-    val n = completeOrPartialVersionMax(spark, indexPath) + 1
-    val next = s"$indexPath/codes_v$n"
-    graft.ann.Ann.sizedByCluster(
-        loadStreamedCodes(spark, indexPath, id, cluster, maxBatch = hw,
-          manifestBudget = manifestBudget, maxTomb = tombHw), cluster)
-      .write.mode("overwrite").partitionBy(cluster).parquet(next)
-    // a fold whose every row the consumed tombstones killed would
-    // publish a file-less generation no reader can infer a schema
-    // from — abandon it and stay in the logical-delete regime (the
-    // serve keeps applying the kills; the next fold with surviving
-    // rows reclaims)
-    if (clusterValues(spark, next, cluster).isEmpty) {
-      hfs(spark, indexPath).delete(
-        new org.apache.hadoop.fs.Path(next), true)
-      return
-    }
-    carryModels(spark, indexPath, prior.map(_._1), next)
-    writeTombsApplied(spark, next, tombHw)
-    publishFolded(spark, next, hw)
-    graceGc(spark, indexPath, staged, prior)
+    val plan = planFold(spark, indexPath, cluster, upTo, upToTomb,
+      manifestBudget)
+    if (!plan.isEmpty) foldFull(spark, plan, id, cluster)
   }
 
   /** Incremental compaction: fold ONLY the clusters the unfolded
@@ -1586,100 +1608,9 @@ object StreamingIngest {
       upTo: Option[Long] = None,
       manifestBudget: Int = DefaultManifestBudget,
       upToTomb: Option[Long] = None): Unit = {
-    refuseFoldDuringRetrain(spark, indexPath)
-    val fs = hfs(spark, indexPath)
-    val bound = upTo.getOrElse(Long.MaxValue)
-    val staged = stagedBatches(spark, indexPath).filter(_ <= bound)
-    val prior = resolveVersion(spark, indexPath)
-    val hwPrior = prior.map(_._2).getOrElse(-1L)
-    val priorPath = prior.map(_._1).getOrElse(s"$indexPath/codes")
-    // tombstones listed AFTER staging (the serve rule's ordering
-    // dependency); a tombstone makes every cluster it recorded at
-    // delete time TOUCHED — killable rows live only there, so the
-    // untouched-clusters-by-reference invariant survives deletes
-    val appliedPrior = tombsApplied(spark, priorPath)
-    val pendingTombs = pendingTombSeqs(spark, indexPath, appliedPrior)
-      .filter(_ <= upToTomb.getOrElse(Long.MaxValue))
-    if (!staged.exists(_ > hwPrior) && pendingTombs.isEmpty)
-      return // nothing unfolded, nothing to reclaim
-    val hw = (staged :+ hwPrior).max
-    val tombHw = (pendingTombs :+ appliedPrior).max
-    val tombs =
-      if (pendingTombs.isEmpty) None
-      else Some(spark.read.parquet(
-        pendingTombs.sorted.map(s => s"$indexPath/tombs/tomb=$s"): _*))
-    // prior generation as (cluster value → materialized root),
-    // budget-guarded like every driver-held manifest
-    val priorEntries: Map[String, String] =
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$priorPath/_manifest")))
-        manifestEntries(spark, priorPath, manifestBudget).toMap
-      else if (fs.exists(new org.apache.hadoop.fs.Path(priorPath)))
-        clusterValues(spark, priorPath, cluster).map(_ -> priorPath).toMap
-      else Map.empty
-    val window = staged.filter(b => b > hwPrior && b <= hw)
-    val tombClusters = tombs.map(
-        _.select(col(cluster).cast("string")).distinct()
-          .collect().map(_.getString(0)).toSet)
-      .getOrElse(Set.empty[String])
-    val touched = window
-      .flatMap(b => clusterValues(
-        spark, s"$indexPath/stream/batch=$b", cluster))
-      .toSet ++ tombClusters
-    val n = completeOrPartialVersionMax(spark, indexPath) + 1
-    val next = s"$indexPath/codes_v$n"
-    // fold = prior rows of the touched clusters ∪ the staging window —
-    // untouched clusters are never read, never rewritten; both legs
-    // drop rows the consumed tombstones kill (base: bare id match,
-    // staging: batch <= the tombstone's as-of)
-    def killed(df: DataFrame): DataFrame =
-      applyTombstones(spark, indexPath, df, id, pendingTombs)
-    val priorTouched = priorEntries.filter { case (v, _) => touched(v) }
-    val priorLeg =
-      if (priorTouched.isEmpty) None
-      else Some(killed(priorTouched.groupBy(_._2).toSeq.sortBy(_._1)
-        .map { case (root, es) =>
-          spark.read.option("basePath", root)
-            .parquet(es.map(e => s"$root/$cluster=${e._1}").toSeq.sorted: _*)
-            .select(col(id), col("codes"), col(cluster))
-        }.reduce(_ unionByName _).withColumn("__b", lit(-1L))))
-    // a tombs-only fold can reach here with NOTHING staged (the guard
-    // proceeds on pendingTombs alone — e.g. deleteStreamed on a
-    // base-only index that never drained a batch), where reading the
-    // absent stream dir would throw; build the leg only when the
-    // staging window is non-empty
-    val stagedLeg =
-      if (window.isEmpty) None
-      else Some(killed(spark.read.parquet(s"$indexPath/stream")
-        .where(col("batch") > hwPrior && col("batch") <= hw)
-        .select(col(id), col("codes"), col(cluster),
-          col("batch").cast("long").as("__b"))))
-    val foldSrc = (priorLeg ++ stagedLeg).reduceOption(_ unionByName _)
-      .getOrElse {
-        // both legs absent: the pending tombstones' recorded clusters
-        // resolve to nothing materialized — stay in the logical-delete
-        // regime (the serve keeps applying the kills) rather than
-        // publish a file-less generation
-        return
-      }
-    graft.ann.Ann.sizedByCluster(foldSrc, cluster)
-      .write.mode("overwrite").partitionBy(cluster).parquet(s"$next/data")
-    // manifest the touched clusters the fold actually WROTE: a cluster
-    // whose every row a tombstone killed has no partition dir, and an
-    // entry pointing at it would fail the manifest read
-    val written = clusterValues(spark, s"$next/data", cluster).toSet
-    val entries = (priorEntries.filterNot { case (v, _) => touched(v) } ++
-      (touched & written).map(_ -> s"$next/data")).toSeq.sorted
-    if (entries.isEmpty) { // every row killed: see the full fold's guard
-      fs.delete(new org.apache.hadoop.fs.Path(next), true)
-      return
-    }
-    import spark.implicits._
-    entries.toDF("value", "root").repartition(1)
-      .write.mode("overwrite").parquet(s"$next/_manifest")
-    carryModels(spark, indexPath, prior.map(_._1), next)
-    writeTombsApplied(spark, next, tombHw)
-    publishFolded(spark, next, hw)
-    graceGc(spark, indexPath, staged, prior)
+    val plan = planFold(spark, indexPath, cluster, upTo, upToTomb,
+      manifestBudget)
+    if (!plan.isEmpty) foldIncremental(spark, plan, id, cluster)
   }
 
   /** The fold-or-promote POLICY the incremental doc defers to the
@@ -1700,9 +1631,10 @@ object StreamingIngest {
     *    history reclaimable.
     *
     * Cost shape: the decision reads only listings and the
-    * budget-guarded prior manifest — no data files — and then
-    * dispatches to exactly one of the two proven folds, so serving
-    * stays invariant by their shared contract. The chain-depth stress
+    * budget-guarded prior manifest — no data files — and the chosen
+    * fold writes from the same [[FoldPlan]] (no second listing), so
+    * the policy costs what the fold it chose costs alone, and serving
+    * stays invariant by the folds' shared contract. The chain-depth stress
     * rung measures the read-cost-vs-roots slope that makes `maxRoots`
     * a real bound, not prose. Returns WHICH fold it dispatched
     * ([[FoldDispatch]]) so a policy caller
@@ -1717,65 +1649,31 @@ object StreamingIngest {
     require(maxRoots >= 1, s"maxRoots must be >= 1, got $maxRoots")
     require(maxTouchedFrac > 0.0 && maxTouchedFrac <= 1.0,
       s"maxTouchedFrac must be in (0, 1], got $maxTouchedFrac")
-    // refuse BEFORE the decision too: a retrain racing this fold is
-    // consuming the very staging window the decision is about to
-    // read — the NothingToFold early return must not let a policy
-    // tick log "folded_nothing" while a retrain held the index (the
-    // dispatched inner folds re-check behind their own listing)
-    refuseFoldDuringRetrain(spark, indexPath)
-    val fs = hfs(spark, indexPath)
-    val bound = upTo.getOrElse(Long.MaxValue)
-    val staged = stagedBatches(spark, indexPath).filter(_ <= bound)
-    val prior = resolveVersion(spark, indexPath)
-    val hwPrior = prior.map(_._2).getOrElse(-1L)
-    val priorPath = prior.map(_._1).getOrElse(s"$indexPath/codes")
-    // tombstones after staging (ordering, see the DELETES section);
-    // their recorded clusters count as touched for BOTH triggers —
-    // the dispatched fold will rewrite them
-    val appliedPrior = tombsApplied(spark, priorPath)
-    val pendingTombs = pendingTombSeqs(spark, indexPath, appliedPrior)
-    if (!staged.exists(_ > hwPrior) && pendingTombs.isEmpty)
-      return FoldDispatch.NothingToFold // nothing unfolded or to reclaim
-    val hw = (staged :+ hwPrior).max
-    val tombHw = (pendingTombs :+ appliedPrior).max
-    val priorEntries: Map[String, String] =
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$priorPath/_manifest")))
-        manifestEntries(spark, priorPath, manifestBudget).toMap
-      else if (fs.exists(new org.apache.hadoop.fs.Path(priorPath)))
-        clusterValues(spark, priorPath, cluster).map(_ -> priorPath).toMap
-      else Map.empty
-    val tombClusters =
-      if (pendingTombs.isEmpty) Set.empty[String]
-      else spark.read.parquet(
-          pendingTombs.sorted.map(s => s"$indexPath/tombs/tomb=$s"): _*)
-        .select(col(cluster).cast("string")).distinct()
-        .collect().map(_.getString(0)).toSet
-    val touched = staged.filter(b => b > hwPrior && b <= hw)
-      .flatMap(b => clusterValues(
-        spark, s"$indexPath/stream/batch=$b", cluster))
-      .toSet ++ tombClusters
-    val untouchedRoots = priorEntries.collect {
+    // the plan refuses BEFORE the decision: a retrain racing this fold
+    // is consuming the very staging window the decision is about to
+    // read — the NothingToFold early return must not let a policy tick
+    // log "folded_nothing" while a retrain held the index
+    val plan = planFold(spark, indexPath, cluster, upTo, None, manifestBudget)
+    if (plan.isEmpty) return FoldDispatch.NothingToFold
+    // pending tombstones' recorded clusters are in `touched`, so they
+    // count for BOTH triggers — the chosen fold rewrites them
+    val touched = plan.touched
+    val untouchedRoots = plan.priorEntries.collect {
       case (v, root) if !touched(v) => root
     }.toSet
     val prospectiveRoots =
       untouchedRoots.size + (if (touched.nonEmpty) 1 else 0)
-    val allClusters = (priorEntries.keySet ++ touched).size
+    val allClusters = (plan.priorEntries.keySet ++ touched).size
     val touchedFrac =
       if (allClusters == 0) 1.0
       else touched.size.toDouble / allClusters
-    // dispatch bounded AT THE DECISION'S OWN HIGH-WATER, not the
-    // caller's raw upTo: a batch staged between this listing and the
-    // dispatched fold's re-snapshot would otherwise be folded under
-    // thresholds it was never evaluated against — the fold must cover
-    // exactly the window the policy costed (it stays correct either
-    // way by each fold's own contract; the late batch folds next cycle)
+    // the chosen fold writes exactly the window the policy costed; a
+    // batch staged after the plan's listing folds next cycle
     if (prospectiveRoots > maxRoots || touchedFrac >= maxTouchedFrac) {
-      compactStreamedIndex(spark, indexPath, id, cluster, Some(hw),
-        manifestBudget, upToTomb = Some(tombHw))
+      foldFull(spark, plan, id, cluster)
       FoldDispatch.Full
     } else {
-      compactStreamedIncremental(spark, indexPath, id, cluster, Some(hw),
-        manifestBudget, upToTomb = Some(tombHw))
+      foldIncremental(spark, plan, id, cluster)
       FoldDispatch.Incremental
     }
   }
@@ -1791,6 +1689,174 @@ object StreamingIngest {
     case object Incremental extends FoldDispatch
     /** Promoted to a full fold (chain width or touched fraction). */
     case object Full extends FoldDispatch
+  }
+
+  /** Refuse to fold while a retrain holds the index: both publish the
+    * next `codes_v<n>` generation, so a fold racing a live retrain can
+    * allocate the SAME version suffix and interleave its files with
+    * the retrain's — the one write collision the monotone-publication
+    * design cannot absorb. The delete verb refuses for the same
+    * reason; the policy tick maps this refusal to `Blocked`.
+    */
+  private def refuseFoldDuringRetrain(
+      spark: SparkSession, indexPath: String): Unit =
+    if (hfs(spark, indexPath).exists(
+        new org.apache.hadoop.fs.Path(s"$indexPath/_retrain_lock")))
+      throw new IllegalStateException(
+        s"retrain in progress on $indexPath (_retrain_lock present); " +
+          "retry the fold after it completes — the retrain consumes " +
+          "the staging window this fold would publish")
+
+  /** One fold's plan, decided from ONE [[IndexState]] before anything
+    * is written, and shared by both folds and [[compactStreamedAuto]]'s
+    * decision: the staged batches up to `upTo` and their high-water
+    * `hw`, the pending tombstones up to `upToTomb` and their high-water
+    * `tombHw`, and — read only when first needed — the prior
+    * generation's manifest entries and the clusters the fold touches.
+    */
+  private final class FoldPlan(
+      spark: SparkSession, val state: IndexState, cluster: String,
+      val manifestBudget: Int, upTo: Option[Long], upToTomb: Option[Long]) {
+    def indexPath: String = state.indexPath
+    def prior: Generation = state.gen
+    private val staged =
+      state.staged.filter(_ <= upTo.getOrElse(Long.MaxValue))
+    /** The unfolded staging window. */
+    val window: Seq[Long] = staged.filter(_ > prior.folded)
+    /** The tombstones this fold consumes. */
+    val tombs: Seq[Long] =
+      state.pendingTombs.filter(_ <= upToTomb.getOrElse(Long.MaxValue))
+    val hw: Long = (staged :+ prior.folded).max
+    val tombHw: Long = (tombs :+ prior.tombsApplied).max
+    /** Nothing unfolded, nothing to reclaim. */
+    def isEmpty: Boolean = window.isEmpty && tombs.isEmpty
+
+    /** The prior generation as (cluster value → materialized root),
+      * budget-guarded like every driver-held manifest.
+      */
+    lazy val priorEntries: Map[String, String] = {
+      val p = prior.codes
+      if (hfs(spark, p).exists(new org.apache.hadoop.fs.Path(s"$p/_manifest")))
+        manifestEntries(spark, p, manifestBudget).toMap
+      else clusterValues(spark, p, cluster).map(_ -> p).toMap
+    }
+
+    /** The clusters the window staged into, plus every cluster a
+      * consumed tombstone recorded at delete time — killable rows live
+      * only there, so the untouched-clusters-by-reference invariant
+      * survives deletes.
+      */
+    lazy val touched: Set[String] = {
+      val tombClusters =
+        if (tombs.isEmpty) Set.empty[String]
+        else readTombs(spark, indexPath, tombs)
+          .select(col(cluster).cast("string")).distinct()
+          .collect().map(_.getString(0)).toSet
+      window.flatMap(b => clusterValues(
+          spark, s"$indexPath/stream/batch=$b", cluster))
+        .toSet ++ tombClusters
+    }
+  }
+
+  /** Read the index state and plan a fold over it; refuses while a
+    * retrain holds the index.
+    */
+  private def planFold(
+      spark: SparkSession, indexPath: String, cluster: String,
+      upTo: Option[Long], upToTomb: Option[Long],
+      manifestBudget: Int): FoldPlan = {
+    refuseFoldDuringRetrain(spark, indexPath)
+    new FoldPlan(spark, readIndexState(spark, indexPath), cluster,
+      manifestBudget, upTo, upToTomb)
+  }
+
+  /** [[compactStreamedIndex]]'s write: the serving view bounded at the
+    * plan's high-waters, rewritten whole.
+    */
+  private def foldFull(
+      spark: SparkSession, plan: FoldPlan, id: String, cluster: String)
+      : Unit = {
+    val next = nextVersion(spark, plan.indexPath)
+    graft.ann.Ann.sizedByCluster(
+        servingView(spark, plan.state, id, cluster, plan.tombs,
+          plan.manifestBudget, maxBatch = plan.hw), cluster)
+      .write.mode("overwrite").partitionBy(cluster).parquet(next)
+    // a fold whose every row the consumed tombstones killed would
+    // publish a file-less generation no reader can infer a schema
+    // from — abandon it and stay in the logical-delete regime (the
+    // serve keeps applying the kills; the next fold with surviving
+    // rows reclaims)
+    if (clusterValues(spark, next, cluster).isEmpty)
+      hfs(spark, next).delete(new org.apache.hadoop.fs.Path(next), true)
+    else publishFold(spark, plan, next)
+    ()
+  }
+
+  /** [[compactStreamedIncremental]]'s write: the touched clusters'
+    * prior rows and the staging window, plus a manifest pointing the
+    * untouched clusters at their prior roots.
+    */
+  private def foldIncremental(
+      spark: SparkSession, plan: FoldPlan, id: String, cluster: String)
+      : Unit = {
+    val indexPath = plan.indexPath
+    // fold = prior rows of the touched clusters ∪ the staging window —
+    // untouched clusters are never read, never rewritten; both legs
+    // drop rows the consumed tombstones kill (base: bare id match,
+    // staging: batch <= the tombstone's as-of)
+    def killed(df: DataFrame): DataFrame =
+      applyTombstones(spark, indexPath, df, id, plan.tombs)
+    val priorTouched = plan.priorEntries.filter { case (v, _) =>
+      plan.touched(v)
+    }
+    val priorLeg =
+      if (priorTouched.isEmpty) None
+      else Some(killed(readRoots(spark, priorTouched, id, cluster)
+        .withColumn("__b", lit(-1L))))
+    // a tombs-only fold can reach here with NOTHING staged (e.g.
+    // deleteStreamed on a base-only index that never drained a batch),
+    // where reading the absent stream dir would throw; build the leg
+    // only when the staging window is non-empty
+    val stagedLeg =
+      if (plan.window.isEmpty) None
+      else Some(killed(stagingLeg(
+        spark, indexPath, id, cluster, plan.prior.folded, plan.hw)))
+    // both legs absent: the pending tombstones' recorded clusters
+    // resolve to nothing materialized — stay in the logical-delete
+    // regime (the serve keeps applying the kills) rather than publish
+    // a file-less generation
+    (priorLeg ++ stagedLeg).reduceOption(_ unionByName _).foreach { src =>
+      val next = nextVersion(spark, indexPath)
+      graft.ann.Ann.sizedByCluster(src, cluster)
+        .write.mode("overwrite").partitionBy(cluster).parquet(s"$next/data")
+      // manifest the touched clusters the fold actually WROTE: a cluster
+      // whose every row a tombstone killed has no partition dir, and an
+      // entry pointing at it would fail the manifest read
+      val written = clusterValues(spark, s"$next/data", cluster).toSet
+      val entries =
+        (plan.priorEntries.filterNot { case (v, _) => plan.touched(v) } ++
+          (plan.touched & written).map(_ -> s"$next/data")).toSeq.sorted
+      if (entries.isEmpty) // every row killed: see foldFull's guard
+        hfs(spark, next).delete(new org.apache.hadoop.fs.Path(next), true)
+      else {
+        import spark.implicits._
+        entries.toDF("value", "root").repartition(1)
+          .write.mode("overwrite").parquet(s"$next/_manifest")
+        publishFold(spark, plan, next)
+      }
+    }
+  }
+
+  /** Publish a fold's generation `next` once its data (and manifest)
+    * landed: carry the prior models, write the consumed-tombstone mark,
+    * then the `_folded` marker, and only then grace-GC.
+    */
+  private def publishFold(
+      spark: SparkSession, plan: FoldPlan, next: String): Unit = {
+    carryModels(spark, plan.prior.path, next)
+    writeLong(spark, s"$next/_tombs_applied", plan.tombHw)
+    publishFolded(spark, next, plan.hw)
+    graceGc(spark, plan.state)
   }
 
   /** Write the `_folded` high-water marker via tmp + atomic
@@ -1810,15 +1876,14 @@ object StreamingIngest {
 
   /** Carry the prior generation's embedded model tables (`_codebook`,
     * `_centroids` — present once a retrain has published them) into a
-    * new compaction generation: [[versionedModels]] resolves models
+    * new compaction generation: [[Generation.models]] resolves models
     * from the NEWEST generation only, so a compaction that failed to
     * carry them would silently fall back to the BASE codebook —
     * pairing post-retrain codes with pre-retrain centroids.
     */
   private def carryModels(
-      spark: SparkSession, indexPath: String,
-      priorPath: Option[String], next: String): Unit = {
-    val fs = hfs(spark, indexPath)
+      spark: SparkSession, priorPath: Option[String], next: String): Unit = {
+    val fs = hfs(spark, next)
     val conf = spark.sparkContext.hadoopConfiguration
     priorPath.foreach { p =>
       Seq("_codebook", "_centroids", "_model_epoch").foreach { m =>
@@ -1837,29 +1902,27 @@ object StreamingIngest {
     * ([[referencedRoots]] of the newest two generations) — and staged
     * batches the prior generation had already folded.
     */
-  private def graceGc(
-      spark: SparkSession, indexPath: String,
-      staged: Seq[Long], prior: Option[(String, Long)]): Unit = {
+  private def graceGc(spark: SparkSession, prior: IndexState): Unit = {
+    val indexPath = prior.indexPath
     val fs = hfs(spark, indexPath)
-    prior.foreach { case (priorPath, hwPrior) =>
-      val priorV = new org.apache.hadoop.fs.Path(priorPath)
-        .getName.drop("codes_v".length).toLong
-      val refs = referencedRoots(spark, indexPath, keep = 2)
-      completeVersions(spark, indexPath)
+    prior.gen.versions.maxOption.foreach { priorV =>
+      // listed after the publication: the generation just published is
+      // one of the two whose manifests keep roots alive
+      val versions = completeVersions(spark, indexPath)
+      val refs = referencedRoots(spark, indexPath, versions, keep = 2)
+      versions
         .filter(v => v < priorV && !ownsReferencedRoot(indexPath, v, refs))
         .foreach(v => fs.delete(
           new org.apache.hadoop.fs.Path(s"$indexPath/codes_v$v"), true))
-      staged.filter(_ <= hwPrior).foreach(b => fs.delete(
+      prior.staged.filter(_ <= prior.gen.folded).foreach(b => fs.delete(
         new org.apache.hadoop.fs.Path(s"$indexPath/stream/batch=$b"), true))
       // tombstones the PRIOR generation had already applied: same
       // one-generation grace as staged batches (a reader still on the
       // prior generation needs only seqs above ITS applied mark)
-      val appliedPrior = tombsApplied(spark, priorPath)
-      tombSeqs(spark, indexPath).filter(_ <= appliedPrior).foreach(s =>
+      prior.tombs.filter(_ <= prior.gen.tombsApplied).foreach(s =>
         fs.delete(
           new org.apache.hadoop.fs.Path(s"$indexPath/tombs/tomb=$s"), true))
     }
-    ()
   }
 
   /** Materialized roots still referenced by the manifests of the
@@ -1869,9 +1932,10 @@ object StreamingIngest {
     * generation references itself.
     */
   private def referencedRoots(
-      spark: SparkSession, indexPath: String, keep: Int): Set[String] = {
+      spark: SparkSession, indexPath: String, versions: Seq[Long],
+      keep: Int): Set[String] = {
     val fs = hfs(spark, indexPath)
-    completeVersions(spark, indexPath).sorted.reverse.take(keep).flatMap { v =>
+    versions.sorted.reverse.take(keep).flatMap { v =>
       val p = s"$indexPath/codes_v$v"
       if (fs.exists(new org.apache.hadoop.fs.Path(s"$p/_manifest"))) {
         // distinct roots = referenced generations (chain width), which
@@ -1896,79 +1960,10 @@ object StreamingIngest {
     roots.exists(r => r == dir || r.startsWith(s"$dir/"))
   }
 
-  /** Suffixes of COMPLETE (`_folded`-published) compacted versions. */
-  private def completeVersions(
-      spark: SparkSession, indexPath: String): Seq[Long] = {
-    val fs = hfs(spark, indexPath)
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    if (!fs.exists(root)) Seq.empty
-    else listIndexDir(fs, root).toSeq.map(_.getPath.getName)
-      .flatMap(nm =>
-        if (nm.startsWith("codes_v")) nm.drop("codes_v".length).toLongOption
-        else None)
-      .filter(v => fs.exists(new org.apache.hadoop.fs.Path(
-        s"$indexPath/codes_v$v/_folded")))
-  }
-
-  /** The model state paired with the newest published generation: its
-    * embedded `_codebook` (+ `_centroids`) when the generation carries
-    * them (written by [[retrainStreamedIndex]]), else the base
-    * `codebook` [[graft.ann.Ann.saveIndex]] wrote (compaction-only
-    * generations re-fold codes the base codebook encoded, so the base
-    * model stays correct for them). The underscore prefix keeps the
-    * model tables invisible to the generation's codes scan (Spark's
-    * file index skips `_`/`.` names) — which is also what makes it
-    * safe to embed them INSIDE the version dir, giving codes + models
-    * one atomic `_folded` publication.
-    */
-  private def versionedModels(
-      spark: SparkSession, indexPath: String)
-      : (graft.ann.Ann.PqCodebook, Option[DataFrame]) =
-    versionedModelsAt(spark, indexPath,
-      resolveVersion(spark, indexPath).map(_._1))
-
-  /** [[versionedModels]]'s centroid half ALONE — the drift probe needs
-    * only the serving centroid table, and the full form's codebook
-    * read (a per-tick collect job) was a pure throwaway there. Same
-    * publication rule as [[versionedModelsAt]]: centroids count only
-    * when the generation carries its `_codebook` too (a `_centroids`
-    * without it is a mid-crash partial the full form also ignores).
-    */
-  private def versionedCents(
-      spark: SparkSession, indexPath: String): Option[DataFrame] = {
-    val fs = hfs(spark, indexPath)
-    resolveVersion(spark, indexPath).map(_._1)
-      .filter(p =>
-        fs.exists(new org.apache.hadoop.fs.Path(s"$p/_codebook")) &&
-          fs.exists(new org.apache.hadoop.fs.Path(s"$p/_centroids")))
-      .map(p => spark.read.parquet(s"$p/_centroids"))
-  }
-
-  /** [[versionedModels]] with the version listing already paid:
-    * `genPath` is the newest complete generation (None = base-only).
-    */
-  private def versionedModelsAt(
-      spark: SparkSession, indexPath: String,
-      genPath: Option[String])
-      : (graft.ann.Ann.PqCodebook, Option[DataFrame]) = {
-    val fs = hfs(spark, indexPath)
-    val verCb = genPath
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(s"$p/_codebook")))
-    verCb match {
-      case Some(p) =>
-        val cents =
-          if (fs.exists(new org.apache.hadoop.fs.Path(s"$p/_centroids")))
-            Some(spark.read.parquet(s"$p/_centroids"))
-          else None
-        (graft.ann.Ann.readCodebook(spark, s"$p/_codebook"), cents)
-      case None =>
-        (graft.ann.Ann.readCodebook(spark, s"$indexPath/codebook"), None)
-    }
-  }
-
   /** Load a streamed-into index as a coherent (codes, codebook,
     * centroids) triple: the serving view ([[loadStreamedCodes]]) plus
-    * the model generation that ENCODED it ([[versionedModels]]).
+    * the model generation that ENCODED it ([[Generation.models]]),
+    * both from one [[readIndexState]].
     * Centroids are present only once a retrain has published them;
     * before that the coarse table is whatever the caller built the
     * base index with (it was never persisted by [[graft.ann.Ann
@@ -1978,17 +1973,19 @@ object StreamingIngest {
       spark: SparkSession, indexPath: String,
       id: String, cluster: String)
       : (DataFrame, graft.ann.Ann.PqCodebook, Option[DataFrame]) = {
-    val (cb, cents) = versionedModels(spark, indexPath)
-    (loadStreamedCodes(spark, indexPath, id, cluster), cb, cents)
+    val state = readIndexState(spark, indexPath)
+    val (cb, cents) = state.gen.models(spark)
+    (servingView(spark, state, id, cluster, state.pendingTombs), cb, cents)
   }
 
   /** A resolved serve snapshot of a streamed-into index: the serving
     * view ([[loadStreamedCodes]]) plus the generation's models
     * ([[loadStreamedIndex]]) plus the directory fingerprint they were
     * resolved under. Serving repeatedly through a handle re-pays NONE
-    * of the 3–4 lifecycle listings resolution costs ([[refresh]]
-    * checks staleness with exactly ONE listing of the index root) —
-    * the object-storage tax at production serve rates. Snapshot
+    * of the lifecycle listings resolution costs — 3, or 4 once a
+    * delete has made `tombs/` (the fingerprint plus [[readIndexState]])
+    * — and [[refresh]] checks staleness with exactly ONE listing of the
+    * index root: the object-storage tax at production serve rates. Snapshot
     * semantics are the generation protocol's own MVCC contract: a
     * handle serves the state it resolved, and a concurrent fold keeps
     * that state readable one generation behind.
@@ -2036,9 +2033,10 @@ object StreamingIngest {
     // only cause extra re-opens, never hide a colliding mutation
     val t0 = System.currentTimeMillis()
     val fp = serveFingerprint(spark, indexPath)
-    val (cb, cents) = versionedModels(spark, indexPath)
-    val codes = loadStreamedCodes(spark, indexPath, id, cluster,
-      manifestBudget = manifestBudget)
+    val state = readIndexState(spark, indexPath)
+    val (cb, cents) = state.gen.models(spark)
+    val codes = servingView(spark, state, id, cluster, state.pendingTombs,
+      manifestBudget)
     ServeHandle(indexPath, id, cluster, manifestBudget, fp, t0,
       codes, cb, cents)
   }
@@ -2141,18 +2139,14 @@ object StreamingIngest {
   /** Resolve an [[IndexStatus]] snapshot (see the case class doc). */
   def indexStatus(spark: SparkSession, indexPath: String): IndexStatus = {
     val fs = hfs(spark, indexPath)
-    val ver = resolveVersion(spark, indexPath)
-    val genPath = ver.map(_._1)
-    val applied = tombsApplied(
-      spark, genPath.getOrElse(s"$indexPath/codes"))
+    val state = readIndexState(spark, indexPath)
     IndexStatus(
-      generation = genPath.map(generationNum(indexPath, _)),
-      foldedHighWater = ver.map(_._2).getOrElse(-1L),
-      stagedBatches = stagedBatches(spark, indexPath).sorted,
-      pendingTombstones =
-        pendingTombSeqs(spark, indexPath, applied).sorted,
-      modelEpoch = modelEpochAt(spark, indexPath, genPath),
-      hasVersionedModels = genPath.exists(p => fs.exists(
+      generation = state.gen.versions.maxOption,
+      foldedHighWater = state.gen.folded,
+      stagedBatches = state.staged.sorted,
+      pendingTombstones = state.pendingTombs.sorted,
+      modelEpoch = state.gen.modelEpoch,
+      hasVersionedModels = state.gen.path.exists(p => fs.exists(
         new org.apache.hadoop.fs.Path(s"$p/_codebook"))),
       retrainInProgress = fs.exists(
         new org.apache.hadoop.fs.Path(s"$indexPath/_retrain_lock")))
@@ -2197,21 +2191,21 @@ object StreamingIngest {
         s"retrain in progress on $srcPath (_retrain_lock present); " +
           "clone after it completes — the serving models are being " +
           "superseded")
-    // generation/epoch fence: models (versionedModels) and view
-    // (loadStreamedCodes) are resolved in two unfenced driver-side
-    // steps — a retrain publishing BETWEEN them (lock taken and
-    // released inside the window, so the lock check above never sees
-    // it) would clone codes and codebook from different generations.
-    // Capture the coordinates before resolution and require them
+    // generation/epoch fence: models and view come from one state
+    // read, so they name the same generation, but the view's staging
+    // leg is scanned only when the codes are written — a retrain
+    // publishing in between (lock taken and released inside the
+    // window, so the lock check above never sees it) lets batches
+    // encoded with its NEW codebook land above the captured folded
+    // mark and into the clone. Require the captured coordinates
     // unmoved after the codes land (commitStagedBatch's fence,
     // mirrored); a retrain after the re-read is harmless — the clone
     // is then a coherent snapshot of the captured generation.
-    val gen0 = resolveVersion(spark, srcPath).map(_._1)
-    val epoch0 = modelEpochAt(spark, srcPath, gen0)
-    val (cb, cents) = versionedModels(spark, srcPath)
+    val state = readIndexState(spark, srcPath)
+    val (cb, cents) = state.gen.models(spark)
     graft.ann.Ann.sizedByCluster(
-        loadStreamedCodes(spark, srcPath, id, cluster,
-          manifestBudget = manifestBudget), cluster)
+        servingView(spark, state, id, cluster, state.pendingTombs,
+          manifestBudget), cluster)
       .write.partitionBy(cluster).parquet(s"$dstPath/codes")
     // a fully-killed serving view writes a FILE-LESS codes dir no
     // reader can infer a schema from (the fold guards' empty-fold
@@ -2223,7 +2217,8 @@ object StreamingIngest {
         s"serving view of $srcPath is empty (every row deleted) — " +
           "nothing to clone; fold or retrain the source first")
     }
-    cloneGenerationFence(spark, srcPath, dstPath, gen0, epoch0)
+    cloneGenerationFence(spark, srcPath, dstPath, state.gen.path,
+      state.gen.modelEpoch)
     cents.foreach(_.select(col(cluster), col("centroid"))
       .repartition(1).write.parquet(s"$dstPath/centroids"))
     graft.ann.Ann.writeCodebook(spark, cb, s"$dstPath/codebook")
@@ -2238,8 +2233,8 @@ object StreamingIngest {
   private[streaming] def cloneGenerationFence(
       spark: SparkSession, srcPath: String, dstPath: String,
       gen0: Option[String], epoch0: Long): Unit = {
-    val gen1 = resolveVersion(spark, srcPath).map(_._1)
-    if (gen1 != gen0 || modelEpochAt(spark, srcPath, gen1) != epoch0) {
+    val gen1 = readGeneration(spark, srcPath)
+    if (gen1.path != gen0 || gen1.modelEpoch != epoch0) {
       hfs(spark, dstPath)
         .delete(new org.apache.hadoop.fs.Path(dstPath), true)
       throw new IllegalStateException(
@@ -2408,7 +2403,8 @@ object StreamingIngest {
       probeFraction: Double): DataFrame = {
     require(probeFraction > 0.0 && probeFraction <= 1.0,
       s"probeFraction must be in (0, 1], got $probeFraction")
-    val serving = versionedCents(spark, indexPath).getOrElse(baseCents)
+    val serving =
+      readGeneration(spark, indexPath).cents(spark).getOrElse(baseCents)
     val probe =
       if (probeFraction >= 1.0) corpus
       else corpus.where(pmod(xxhash64(col(id)), lit(10000L)) <
@@ -2730,9 +2726,9 @@ object StreamingIngest {
     val staged = unfolded >= policy.foldMinStaged
     val tombs = status.pendingTombstones.size >= policy.foldMinTombstones
     if (staged || tombs) {
-      // the fold re-snapshots under its own listing (compactStreamed
-      // Auto's bounded-at-decision-high-water discipline) — a batch
-      // staged since indexStatus folds next tick
+      // the status only decides that a fold is due: compactStreamedAuto
+      // reads the index state again and folds what that read lists, so
+      // a batch staged since indexStatus folds in this tick too
       val trig =
         if (staged && tombs) "staged+tombstones"
         else if (staged) "staged" else "tombstones"
@@ -2748,20 +2744,13 @@ object StreamingIngest {
 
   /** Append the audit row for one decided tick ([[appendMaintenance
     * Log]]): generation-after re-resolves AFTER the dispatch (one
-    * listing), so the row records the transition the decision caused.
+    * listing), so the row records the transition the decision caused
+    * (-1 = the unversioned base `codes`).
     */
-  /** Generation number of a resolved `codes_v<n>` path — ONE
-    * definition of the suffix parse, shared by the status snapshot
-    * and the audit log (-1 = the unversioned base `codes`).
-    */
-  private def generationNum(indexPath: String, versionPath: String): Long =
-    versionPath.drop(s"$indexPath/codes_v".length).toLong
-
   private def logTick(
       spark: SparkSession, indexPath: String, status: IndexStatus,
       action: MaintenanceAction, trigger: String): Unit = {
-    val genAfter = resolveVersion(spark, indexPath)
-      .map(v => generationNum(indexPath, v._1)).getOrElse(-1L)
+    val genAfter = completeVersions(spark, indexPath).maxOption.getOrElse(-1L)
     appendMaintenanceLog(spark, indexPath,
       decision = actionLabel(action), trigger = trigger,
       genBefore = status.generation.getOrElse(-1L),
@@ -2962,9 +2951,8 @@ object StreamingIngest {
         s"(${midTomb.mkString(", ")}) — retry after they settle; a " +
         "stale tmp from a crashed delete can be removed after " +
         "verifying none is live")
-    val staged = stagedBatches(spark, indexPath)
-    val prior = resolveVersion(spark, indexPath)
-    val hw = (staged :+ prior.map(_._2).getOrElse(-1L)).max
+    val state = readIndexState(spark, indexPath)
+    val hw = (state.staged :+ state.gen.folded).max
     // ENFORCE the membership contract instead of trusting it: the
     // retrain marks every pending tombstone consumed without replaying
     // its kill, on the premise that the caller's corpus already
@@ -2977,15 +2965,13 @@ object StreamingIngest {
     // twice (serve semi-join, corpus anti-join), one column-pruned
     // serve scan — the deleteStreamed membership-probe cost class,
     // paid once per retrain.
-    val pendingT = pendingTombSeqs(spark, indexPath, tombsApplied(
-      spark, prior.map(_._1).getOrElse(s"$indexPath/codes")))
+    val pendingT = state.pendingTombs
     val corpusClean =
       if (pendingT.isEmpty) corpus
       else {
-        val tombIds = spark.read.parquet(
-            pendingT.sorted.map(s => s"$indexPath/tombs/tomb=$s"): _*)
+        val tombIds = readTombs(spark, indexPath, pendingT)
           .select(col(id)).distinct()
-        val live = loadStreamedCodes(spark, indexPath, id, cluster)
+        val live = servingView(spark, state, id, cluster, pendingT)
           .join(broadcast(tombIds), Seq(id), "left_semi")
           .select(col(id)).distinct()
         val dead = tombIds.join(live, Seq(id), "left_anti")
@@ -3023,32 +3009,24 @@ object StreamingIngest {
     // new models ⇒ new epoch (the version number is monotone across
     // publications, so it serves as the counter); inside the dir, so
     // it publishes atomically with the models under _folded
-    val eOut = fs.create(
-      new org.apache.hadoop.fs.Path(s"$next/_model_epoch"), true)
-    try eOut.write(n.toString.getBytes("UTF-8")) finally eOut.close()
+    writeLong(spark, s"$next/_model_epoch", n)
     // every tombstone pending at this snapshot is marked consumed: its
     // kill was enforced above (dead ids anti-joined out of the corpus,
     // re-inserts spared), so the new generation honors it even against
-    // a stale corpus. A tombstone staged after this listing stays live
-    // and applies to the new generation at serve — its as-of equals
-    // this snapshot's high-water, so the base-leg id-match kill stays
-    // sound.
-    writeTombsApplied(spark, next,
-      (tombSeqs(spark, indexPath) :+
-        tombsApplied(spark, prior.map(_._1)
-          .getOrElse(s"$indexPath/codes"))).max)
-    val tmp = new org.apache.hadoop.fs.Path(s"$next/_folded_tmp")
-    val out = fs.create(tmp, true)
-    try out.write(hw.toString.getBytes("UTF-8")) finally out.close()
-    require(fs.rename(tmp, new org.apache.hadoop.fs.Path(s"$next/_folded")),
-      s"could not publish $next")
+    // a stale corpus. A tombstone staged after the state read stays
+    // live and applies to the new generation at serve — its as-of
+    // equals this snapshot's high-water, so the base-leg id-match kill
+    // stays sound.
+    writeLong(spark, s"$next/_tombs_applied",
+      (state.tombs :+ state.gen.tombsApplied).max)
+    publishFolded(spark, next, hw)
     // same one-generation grace policy as compaction — INCLUDING the
     // manifest-reference exception: after an incremental fold, the
     // retained prior generation may be a manifest whose untouched
     // clusters still point at an OLDER materialized generation, and
     // deleting that root would fail an in-flight reader that resolved
     // the prior generation before this publication
-    graceGc(spark, indexPath, staged, prior)
+    graceGc(spark, state)
   }
 
   /** Highest `codes_v<n>` suffix present, complete or not (a
@@ -3056,16 +3034,12 @@ object StreamingIngest {
     * must supersede it, never reuse it). 0 if none.
     */
   private def completeOrPartialVersionMax(
-      spark: SparkSession, indexPath: String): Long = {
-    val fs = hfs(spark, indexPath)
-    val root = new org.apache.hadoop.fs.Path(indexPath)
-    if (!fs.exists(root)) 0L
-    else listIndexDir(fs, root).toSeq.map(_.getPath.getName)
-      .flatMap(nm =>
-        if (nm.startsWith("codes_v")) nm.drop("codes_v".length).toLongOption
-        else None)
-      .foldLeft(0L)(math.max)
-  }
+      spark: SparkSession, indexPath: String): Long =
+    listIds(spark, indexPath, "codes_v").foldLeft(0L)(math.max)
+
+  /** The path the next publication writes, read right before the write. */
+  private def nextVersion(spark: SparkSession, indexPath: String): String =
+    s"$indexPath/codes_v${completeOrPartialVersionMax(spark, indexPath) + 1}"
 
   /** Explicit full GC of a streamed-into index: deletes every complete
     * version OLDER than the newest — except versions still
@@ -3082,21 +3056,20 @@ object StreamingIngest {
     */
   def gcStreamedIndex(spark: SparkSession, indexPath: String): Unit = {
     val fs = hfs(spark, indexPath)
-    val versions = completeVersions(spark, indexPath)
+    val state = readIndexState(spark, indexPath)
+    val versions = state.gen.versions
     if (versions.isEmpty) return // nothing published: staging is live
-    val newest = versions.max
-    val hw = resolveVersion(spark, indexPath).map(_._2).getOrElse(-1L)
-    val refs = referencedRoots(spark, indexPath, keep = 1)
+    val refs = referencedRoots(spark, indexPath, versions, keep = 1)
     versions
-      .filter(v => v < newest && !ownsReferencedRoot(indexPath, v, refs))
+      .filter(v => v < versions.max &&
+        !ownsReferencedRoot(indexPath, v, refs))
       .foreach(v => fs.delete(
         new org.apache.hadoop.fs.Path(s"$indexPath/codes_v$v"), true))
-    stagedBatches(spark, indexPath).filter(_ <= hw).foreach(b => fs.delete(
+    state.staged.filter(_ <= state.gen.folded).foreach(b => fs.delete(
       new org.apache.hadoop.fs.Path(s"$indexPath/stream/batch=$b"), true))
     // tombstones the newest generation has applied (no-readers GC:
     // nothing resolves an older generation, so no grace needed)
-    val applied = tombsApplied(spark, s"$indexPath/codes_v$newest")
-    tombSeqs(spark, indexPath).filter(_ <= applied).foreach(s => fs.delete(
+    state.tombs.filter(_ <= state.gen.tombsApplied).foreach(s => fs.delete(
       new org.apache.hadoop.fs.Path(s"$indexPath/tombs/tomb=$s"), true))
     // sweep the dir only when TRULY empty — a recursive delete on
     // "no published tombstones" could wipe a mid-stage .tomb_tmp_
@@ -3110,7 +3083,7 @@ object StreamingIngest {
     // then claim the staging area and interleave with the original
     // run. Index paths that only ever staged manually (no drain, no
     // marker) still get the full sweep.
-    if (stagedBatches(spark, indexPath).isEmpty &&
+    if (listIds(spark, s"$indexPath/stream", "batch=").isEmpty &&
         !fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/stream/_run")))
       fs.delete(new org.apache.hadoop.fs.Path(s"$indexPath/stream"), true)
     ()

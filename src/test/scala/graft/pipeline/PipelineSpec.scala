@@ -259,6 +259,24 @@ class PipelineSpec extends SparkSpec {
       retry.tables(child))
   }
 
+  test("E2 a nested catalog table that declares no recordid: the scan " +
+      "adds it, so relationalize keeps its key") {
+    val ds = "ProgressiveMatrices_v1"
+    val spec = TableCatalog.default(ds)
+    assert(!spec.schema.fieldNames.contains("recordid"))
+    val tmp = graft.EntryKit.scratchTracked("graft_e2_rid").toString
+    val dir = new java.io.File(
+      s"$tmp/raw_json/dataset=$ds/assessmentid=pm/year=2022/month=2/day=15")
+    assert(dir.mkdirs())
+    java.nio.file.Files.write(new java.io.File(dir, "r1.ndjson").toPath,
+      """{"recordid":"r1"}""".getBytes("UTF-8"))
+    val r = ParquetJob.run(spark, s"$tmp/raw_json", ds, spec,
+      s"$tmp/parquet", s"$tmp/manifests")
+    assert(r.tables(ds) == 1)
+    assert(ParquetDataset.read(spark, s"$tmp/parquet/$ds")
+      .select("recordid").as[String].collect().toSeq == Seq("r1"))
+  }
+
   test("schema evolution: incompatible change versions the dataset and " +
       "leaves the current table untouched (schema_change_protocol)") {
     import org.apache.spark.sql.functions.{col, lit}
