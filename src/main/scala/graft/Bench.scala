@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -14,15 +14,6 @@ import java.nio.file.{Files, Paths}
   * formatting. Failures are reported as null timings, not swallowed.
   */
 object Bench {
-  private def materialize(df: DataFrame): Unit = {
-    // xxhash64 over all columns touches every value; xor-folding the hashes
-    // forces the full pipeline without collecting rows to the driver
-    // (bit_xor can't overflow under ANSI mode, unlike sum of longs).
-    val h = xxhash64(df.columns.toIndexedSeq.map(col): _*)
-    df.select(h.as("h")).agg(bit_xor(col("h"))).collect()
-    ()
-  }
-
   /** Host-speed control probe: a fixed synthetic workload (100M-row
     * codegen'd hash projection + a 1M-key shuffle aggregate) that shares
     * NO code path or testdata with any entry, so its timing moves only
@@ -64,41 +55,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Size post-shuffle partitions by BYTES (advisoryPartitionSizeInBytes),
-      // not by the parallelism floor: with the default parallelism-first
-      // coalescing every tiny reduce stage keeps `defaultParallelism`
-      // near-empty tasks, and a 300-entry suite pays task-dispatch and
-      // per-partition constants everywhere. Spark's own docs recommend
-      // false once AQE is trusted; at scale it is the guide's "fewer,
-      // larger reduce partitions" (§2.2) — partition count then tracks
-      // data volume through the advisory size (the scale knob), not a
-      // static session constant. Measured full-surface A/B at sf0.1:
-      // 392.2 s -> 353.8 s (median per-entry 0.93×) at a WORSE host
-      // control. The host-control probe pins the old shape (see
-      // hostControl) so cross-round host normalization is unaffected.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // A/B hook for optimization experiments: extra runtime confs as
-    // "k=v;k=v". Absent (the driver's invocation) the session is
-    // exactly the contract above. Every applied conf is echoed so an
-    // A/B run is self-describing — a leaked env var can never alter
-    // results without a trace in the log.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';')
-      .filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-        System.err.println(s"[bench:conf] extra conf applied: " +
-          s"${k.trim}=${v.trim}")
-      })
+    val spark = GraftSession()
 
     // optional args restrict the run (local iteration aid); an unknown
     // name is a typo, and a silently-empty run would read as "fast"
@@ -138,7 +95,7 @@ object Bench {
           val t0 = System.nanoTime()
           PhaseTimer.drain() // clear anything a failed predecessor left
           try {
-            materialize(SparkEntry.queries(n)(spark, sfDir))
+            GraftSession.materialize(SparkEntry.queries(n)(spark, sfDir))
             val dt = (System.nanoTime() - t0) / 1e9
             val ph = PhaseTimer.drain()
             ph.foreach { case (p, v) =>
@@ -153,16 +110,6 @@ object Bench {
           }
         }
       }.toMap
-    // Release suite-accumulated executor state so an isolated re-run
-    // times the QUERY, not the session's debris: entries localCheckpoint
-    // intermediates, and 100 of them in one JVM leave blocks + GC debt
-    // that inflate whoever runs late in the pass.
-    def quiesce(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
     // Control probe brackets the suite: 3 runs up front (first absorbs
     // codegen warmup; best-of-2 warm = the host reading) and 1 after the
     // isolated pass (did the host drift DURING the bench?).
@@ -183,7 +130,9 @@ object Bench {
       .flatMap(n => p2.get(n).map(n -> _._1))
       .sortBy(-_._2).take(math.max(0, isoTop)).map(_._1)
     val p3 = slowest.flatMap { n =>
-      quiesce()
+      // release suite-accumulated state (entries localCheckpoint
+      // intermediates): the isolated re-run times the QUERY
+      GraftSession.quiesce(spark)
       onePass("iso", Seq(n)) // its own group: per-entry control
     }.toMap
     // min over passes by TIMING; the winning pass's group control AND

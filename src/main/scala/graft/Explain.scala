@@ -1,9 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Dev tool: print the formatted physical plan of registry entries —
-  * `runMain graft.Explain <sfDir> <query> [query...]`. The same session
-  * config as Verify, so the audited plan is the one the driver runs.
+  * `runMain graft.Explain [--exec] <sfDir> <query> [query...]`. The
+  * session is [[GraftSession]]'s, so the audited plan is the one Verify
+  * and Bench run. With `--exec` each entry also runs, and its job census
+  * (every Spark job it ran: id, wall time, description) is printed.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -16,27 +18,35 @@ object Explain {
     val names = rest.drop(1)
     val unknown = names.toSet.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Bench/Verify's session posture so audited plans are the
-      // ones the driver runs
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // same A/B hook as Bench: plan comparisons across session postures
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';')
-      .filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      })
+    val spark = GraftSession()
+    // (job id, wall ms, description) of every job that ENDED since the
+    // last census; starts are held until their end arrives
+    val started =
+      new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+    val ended =
+      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, String)]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        // the job's description (a streaming batch sets one), else the
+        // call site its result stage is named after
+        val desc = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .orElse(js.stageInfos.maxByOption(_.stageId).map(_.name))
+          .getOrElse("?")
+          .replaceAll("\\s+", " ").trim
+        started.put(js.jobId, (js.time, desc))
+      }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        Option(started.remove(je.jobId)).foreach { case (t0, desc) =>
+          ended.add((je.jobId, je.time - t0, desc))
+        }
+    })
     names.foreach { name =>
       println(s"==== $name ====")
+      GraftSession.drainListenerBus(spark)
+      ended.clear()
+      // built inside the census: entries that run jobs while building
+      // (localCheckpoint, driver-side collects) pay them here
       val df = SparkEntry.queries(name)(spark, sfDir)
       if (exec) {
         // run THIS Dataset's own query execution to completion (a write
@@ -45,6 +55,16 @@ object Explain {
         // isFinalPlan=true with AQEShuffleRead nodes visible. Dev tool:
         // entry results are bench-sized, the collect is driver-safe.
         df.collect()
+        // job events reach listeners asynchronously: read the census
+        // only once the bus has delivered the last job's end
+        GraftSession.drainListenerBus(spark)
+        val jobs =
+          ended.toArray(Array.empty[(Int, Long, String)]).sortBy(_._1)
+        println(f"-- jobs: ${jobs.length}, job wall sum " +
+          f"${jobs.map(_._2).sum / 1e3}%.3fs")
+        jobs.foreach { case (id, ms, desc) =>
+          println(f"  job $id%4d ${ms / 1e3}%7.3fs  ${desc.take(100)}")
+        }
         // the formatted plan labels AQEShuffleRead only "coalesced";
         // the COUNT is the evidence runtime-coalescing claims need
         println(s"-- final output partitions: ${df.rdd.getNumPartitions}")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
@@ -28,8 +28,9 @@ import java.nio.file.{Files, Paths}
   * the g×g bucket decomposition ([[graft.dedup.Dedup.saltedBandLegs]])
   * actually engages and preserves candidate parity when it does.
   *
-  * Emits one JSON line (mirrored to STRESS_r14*.json) with per-op
-  * per-factor seconds, output rows, exponents, and the guard census.
+  * Emits one JSON line (mirrored to `STRESS_f<factors>.json`, e.g.
+  * `STRESS_f1_3_10.json`) with the session's cores, per-op per-factor
+  * seconds, output rows, exponents, and the guard census.
   */
 object ScaleStress {
   private val Offset = 10000000L
@@ -116,30 +117,11 @@ object ScaleStress {
     require(factors.last <= 26, "replication factor must be <= 26")
     require(factors.distinct.size >= 2,
       "need at least two distinct factors to fit an exponent")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r21 re-baseline: the stress rungs run under the SHIPPING
-      // session posture (Bench/Verify set byte-sized post-shuffle
-      // coalescing in r20) — a ladder timed under the default posture
-      // no longer exercises the plan shapes the bench pays, so rung
-      // exponents from r19 and earlier are not directly comparable to
-      // r21+ (absolute times re-anchored this round)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def quiesce(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
+    // the stress rungs run under the SHIPPING session posture (r21
+    // re-baseline): rung exponents from r19 and earlier, timed under the
+    // default parallelism-first coalescing, are not directly comparable
+    val spark = GraftSession()
+    def quiesce(): Unit = GraftSession.quiesce(spark)
 
     // ---- build the replicated corpora (parquet, so every timed run
     // reads from disk like the bench does, not from a lineage replay)
@@ -1133,22 +1115,12 @@ object ScaleStress {
       case None => effectOps
     }
 
-    // full materialization, the Bench discipline: xxhash64 over every
-    // column, xor-folded — a bare count() lets Catalyst PRUNE unused
-    // aggregate expressions, so a rung ending in a groupBy-argmax
-    // (the assignment A/Bs) would never compute its dot products and
-    // the rung would measure empty-row iteration (caught in r15: the
-    // flat k-scaling rung read k-INVARIANT under count()). Absolute
-    // times re-baseline this round; exponents stay comparable.
-    def forced(df: DataFrame): (Long, Unit) = {
-      val h = xxhash64(df.columns.toIndexedSeq.map(col): _*)
-      val r = df.select(h.as("h"))
-        .agg(bit_xor(col("h")), count(lit(1))).collect()(0)
-      (r.getLong(1), ())
-    }
+    // full materialization, the Bench discipline (a bare count() would
+    // let Catalyst PRUNE unused aggregate expressions: caught in r15,
+    // the flat k-scaling rung read k-INVARIANT under count())
     def time(df: DataFrame): (Double, Long) = {
       val t0 = System.nanoTime()
-      val (n, _) = forced(df)
+      val n = GraftSession.materialize(df)
       ((System.nanoTime() - t0) / 1e9, n)
     }
     // by-name twin: plan CONSTRUCTION inside the timer, for operators
@@ -1157,12 +1129,14 @@ object ScaleStress {
     // exclude them
     def timeAll(mk: => DataFrame): (Double, Long) = {
       val t0 = System.nanoTime()
-      val (n, _) = forced(mk)
+      val n = GraftSession.materialize(mk)
       ((System.nanoTime() - t0) / 1e9, n)
     }
 
     // warmup: codegen compile + page cache on the smallest rung
-    selectedOps.foreach { case (_, mk) => forced(mk(factors.head)); quiesce() }
+    selectedOps.foreach { case (_, mk) =>
+      GraftSession.materialize(mk(factors.head)); quiesce()
+    }
 
     val results = scala.collection.mutable.LinkedHashMap[String,
       scala.collection.mutable.LinkedHashMap[Int, (Double, Long)]]()
@@ -1318,12 +1292,12 @@ object ScaleStress {
           s""""f$f":{"dl":${inv("dl")},"dp":${inv("dp")}}"""
         }.mkString(",")}}"""
     val json =
-      s"""{"base":"$baseDir","factors":[${factors.mkString(",")}],""" +
+      s"""{"base":"$baseDir",""" +
+        s""""cores":${spark.sparkContext.defaultParallelism},""" +
+        s""""factors":[${factors.mkString(",")}],""" +
         s""""ops":{$opsJson},$guardJson}"""
     println(json)
-    val outName =
-      if (factors == Seq(1, 3, 10)) "STRESS_r21.json"
-      else s"STRESS_r21_f${factors.last}.json"
+    val outName = s"STRESS_f${factors.mkString("_")}.json"
     Files.write(Paths.get(outName),
       json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()

@@ -4,34 +4,18 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for test suites. */
+/** Shared local SparkSession for test suites: [[GraftSession]]'s
+  * posture, the one the mains ship, on 4 cores. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = ()
 
   /** Drains the async listener bus, so every event of the jobs run so
-    * far has reached its listeners. LiveListenerBus.waitUntilEmpty is
-    * private[spark] — bytecode-public, reached via reflection.
-    */
-  protected def drainListenerBus(): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    val m = bus.getClass.getMethods
-      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount <= 1)
-      .get
-    if (m.getParameterCount == 0) m.invoke(bus)
-    else m.invoke(bus, java.lang.Long.valueOf(30000L))
-  }
+    * far has reached its listeners. */
+  protected def drainListenerBus(): Unit = GraftSession.drainListenerBus(spark)
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = GraftSession(cores = 4)
 }
