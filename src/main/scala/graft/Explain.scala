@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Dev tool: print the formatted physical plan of registry entries —
   * `runMain graft.Explain [--exec] <sfDir> <query> [query...]`. The
@@ -25,12 +27,24 @@ object Explain {
       new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val ended =
       new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, String)]()
+    // description of every SQL execution started, by execution id
+    val executions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          executions.put(s.executionId, s.description)
+        case _ =>
+      }
       override def onJobStart(js: SparkListenerJobStart): Unit = {
-        // the job's description (a streaming batch sets one), else the
-        // call site its result stage is named after
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
+        // the job's description (a streaming batch sets one), else its
+        // SQL execution's (jobs AQE submits from its own threads carry
+        // only a CompletableFuture call site), else the call site its
+        // result stage is named after
+        val prop = (k: String) =>
+          Option(js.properties).flatMap(p => Option(p.getProperty(k)))
+        val desc = prop("spark.job.description")
+          .orElse(prop("spark.sql.execution.id")
+            .flatMap(id => Option(executions.get(id.toLong))))
           .orElse(js.stageInfos.maxByOption(_.stageId).map(_.name))
           .getOrElse("?")
           .replaceAll("\\s+", " ").trim

@@ -30,7 +30,10 @@ import java.nio.file.{Files, Paths}
   *
   * Emits one JSON line (mirrored to `STRESS_f<factors>.json`, e.g.
   * `STRESS_f1_3_10.json`) with the session's cores, per-op per-factor
-  * seconds, output rows, exponents, and the guard census.
+  * seconds, output rows, exponents, and the guard census. A run filtered
+  * by `SPARK_GRAFT_STRESS_OPS` times only those ops, skips the sat10
+  * guard and parity and the df-cap and semantic censuses, lists the ops
+  * as `ops_filter` and writes `STRESS_f<factors>_ops-<op>[-<op>...].json`.
   */
 object ScaleStress {
   private val Offset = 10000000L
@@ -172,16 +175,6 @@ object ScaleStress {
         Files.createFile(Paths.get(s"$dir/_built_ng"))
       }
     }
-    val satDir = s"$workDir/sat10"
-    if (!Files.exists(Paths.get(s"$satDir/_built"))) {
-      // identical copies: every doc gains 9 exact twins → duplicate-
-      // saturated LSH buckets, the decomposition's target shape
-      replicate(Tables.load(spark, baseDir, "documents"), "doc_id",
-          Seq.empty, 10)
-        .write.mode("overwrite").parquet(s"$satDir/documents.parquet")
-      Files.createFile(Paths.get(s"$satDir/_built"))
-    }
-
     def docs(f: Int) = spark.read.parquet(s"$workDir/f$f/documents.parquet")
     def docsNg(f: Int) =
       spark.read.parquet(s"$workDir/f$f/documents_ng.parquet")
@@ -1184,81 +1177,83 @@ object ScaleStress {
       }
     }
 
-    // ---- guard engagement on the saturated corpus
-    val sat = spark.read.parquet(s"$satDir/documents.parquet")
-    val overDefault = Dedup.oversizedBandBuckets(sat, "doc_id", "text")
-      .agg(count(lit(1)).as("c"), max(col("n")).as("mx")).collect()(0)
-    val over16 = Dedup.oversizedBandBuckets(sat, "doc_id", "text",
-        maxBucketSize = 16)
-      .agg(count(lit(1)).as("c"), max(col("n")).as("mx"),
-        max(col("g")).as("mg")).collect()(0)
-    quiesce()
-    // candidate PARITY under forced decomposition: chunked cells must
-    // reproduce the undecomposed join's candidate set exactly
-    val (tSplit, nSplit) = time(Dedup.minhashCandidates(
-      sat, "doc_id", "text", maxBucketSize = 16))
-    quiesce()
-    val (tWhole, nWhole) = time(Dedup.minhashCandidates(
-      sat, "doc_id", "text", maxBucketSize = Int.MaxValue))
-    quiesce()
-    System.err.println(
-      f"[stress] sat10 candidates split=$nSplit ($tSplit%.2fs) " +
-        f"whole=$nWhole ($tWhole%.2fs) parity=${nSplit == nWhole}")
+    // the full ladder's own checks, which a filtered re-time skips:
+    // guard engagement and candidate parity on the saturated corpus,
+    // the df-cap census and the semantic census
+    val fullJson = if (opFilter.nonEmpty) "" else {
+      val satDir = s"$workDir/sat10"
+      if (!Files.exists(Paths.get(s"$satDir/_built"))) {
+        // identical copies: every doc gains 9 exact twins → duplicate-
+        // saturated LSH buckets, the decomposition's target shape
+        replicate(Tables.load(spark, baseDir, "documents"), "doc_id",
+            Seq.empty, 10)
+          .write.mode("overwrite").parquet(s"$satDir/documents.parquet")
+        Files.createFile(Paths.get(s"$satDir/_built"))
+      }
 
-    // df-cap census at EVERY factor (diagnostic tokenizer is a plain-HOF
-    // re-derivation of the char-3-gram shingler): the de-confounded
-    // rungs claim the fixed cap BINDS at every rung — grams_over_cap
-    // must be > 0 at each factor, or the rung is measuring an uncapped
-    // operator somewhere on the ladder (the r11 confound)
-    val FixedCap = 100L
-    val capCensus = factors.map { f =>
-      val grams = docsNg(f)
-        .where(pmod(col("doc_id"), lit(Offset)) < 500)
-        .select(explode(array_distinct(expr(
-          "transform(sequence(1, greatest(length(lower(text)) - 2, 1)), " +
-            "i -> substr(lower(text), i, 3))"))).as("w"))
-      val r = grams.groupBy(col("w")).agg(count(lit(1)).as("df"))
-        .agg(sum(when(col("df") > FixedCap, 1).otherwise(0)).as("over"),
-          max(col("df")).as("mx")).collect()(0)
+      // ---- guard engagement on the saturated corpus
+      val sat = spark.read.parquet(s"$satDir/documents.parquet")
+      val overDefault = Dedup.oversizedBandBuckets(sat, "doc_id", "text")
+        .agg(count(lit(1)).as("c"), max(col("n")).as("mx")).collect()(0)
+      val over16 = Dedup.oversizedBandBuckets(sat, "doc_id", "text",
+          maxBucketSize = 16)
+        .agg(count(lit(1)).as("c"), max(col("n")).as("mx"),
+          max(col("g")).as("mg")).collect()(0)
       quiesce()
-      (f, r.getLong(0), r.getLong(1))
-    }
-    capCensus.foreach { case (f, over, mx) =>
-      System.err.println(s"[stress] df-cap census f$f: over=$over max_df=$mx")
-    }
-
-    // semantic census at EVERY factor: the permuted-corpus de-confound
-    // (see replicaEmb) holds only if GEOMETRY-derived assignment keeps
-    // effective cluster sizes at the base corpus's (~N/10f per
-    // cluster), not f× them — on identical replicas the max effective
-    // cluster reads f·|c| and the semantic rungs measure the collapse,
-    // not the operator
-    val semCensus = factors.map { f =>
-      val e = withReplicaClusters(embP(f))
-      val eff = graft.ann.Ann.assignClusters(e, "vec_id", "embedding",
-          Ann.pivotCentroids(e, "cl", "vec_id", "embedding"), "cl")
-        .groupBy(col("cl")).count()
-        .agg(max(col("count")).as("mx"), count(lit(1)).as("k")).collect()(0)
+      // candidate PARITY under forced decomposition: chunked cells must
+      // reproduce the undecomposed join's candidate set exactly
+      val (tSplit, nSplit) = time(Dedup.minhashCandidates(
+        sat, "doc_id", "text", maxBucketSize = 16))
       quiesce()
-      (f, eff.getLong(0), eff.getLong(1))
-    }
-    semCensus.foreach { case (f, mx, k) =>
+      val (tWhole, nWhole) = time(Dedup.minhashCandidates(
+        sat, "doc_id", "text", maxBucketSize = Int.MaxValue))
+      quiesce()
       System.err.println(
-        s"[stress] semantic census f$f: effective_clusters=$k max_cluster=$mx")
-    }
+        f"[stress] sat10 candidates split=$nSplit ($tSplit%.2fs) " +
+          f"whole=$nWhole ($tWhole%.2fs) parity=${nSplit == nWhole}")
 
-    def expFit(name: String): Double = {
-      val r = results(name)
-      val (f1, fN) = (factors.head, factors.last)
-      math.log(r(fN)._1 / r(f1)._1) / math.log(fN.toDouble / f1)
-    }
-    val opsJson = results.map { case (name, byF) =>
-      val rungs = byF.map { case (f, (sec, rows)) =>
-        s""""f$f":{"sec":${f"$sec%.3f"},"rows":$rows}"""
-      }.mkString(",")
-      s""""$name":{$rungs,"exponent":${f"${expFit(name)}%.2f"}}"""
-    }.mkString(",")
-    val guardJson =
+      // df-cap census at EVERY factor (diagnostic tokenizer is a plain-HOF
+      // re-derivation of the char-3-gram shingler): the de-confounded
+      // rungs claim the fixed cap BINDS at every rung — grams_over_cap
+      // must be > 0 at each factor, or the rung is measuring an uncapped
+      // operator somewhere on the ladder (the r11 confound)
+      val FixedCap = 100L
+      val capCensus = factors.map { f =>
+        val grams = docsNg(f)
+          .where(pmod(col("doc_id"), lit(Offset)) < 500)
+          .select(explode(array_distinct(expr(
+            "transform(sequence(1, greatest(length(lower(text)) - 2, 1)), " +
+              "i -> substr(lower(text), i, 3))"))).as("w"))
+        val r = grams.groupBy(col("w")).agg(count(lit(1)).as("df"))
+          .agg(sum(when(col("df") > FixedCap, 1).otherwise(0)).as("over"),
+            max(col("df")).as("mx")).collect()(0)
+        quiesce()
+        (f, r.getLong(0), r.getLong(1))
+      }
+      capCensus.foreach { case (f, over, mx) =>
+        System.err.println(s"[stress] df-cap census f$f: over=$over max_df=$mx")
+      }
+
+      // semantic census at EVERY factor: the permuted-corpus de-confound
+      // (see replicaEmb) holds only if GEOMETRY-derived assignment keeps
+      // effective cluster sizes at the base corpus's (~N/10f per
+      // cluster), not f× them — on identical replicas the max effective
+      // cluster reads f·|c| and the semantic rungs measure the collapse,
+      // not the operator
+      val semCensus = factors.map { f =>
+        val e = withReplicaClusters(embP(f))
+        val eff = graft.ann.Ann.assignClusters(e, "vec_id", "embedding",
+            Ann.pivotCentroids(e, "cl", "vec_id", "embedding"), "cl")
+          .groupBy(col("cl")).count()
+          .agg(max(col("count")).as("mx"), count(lit(1)).as("k")).collect()(0)
+        quiesce()
+        (f, eff.getLong(0), eff.getLong(1))
+      }
+      semCensus.foreach { case (f, mx, k) =>
+        System.err.println(
+          s"[stress] semantic census f$f: effective_clusters=$k max_cluster=$mx")
+      }
+
       s""""sat10_guard":{"oversized_at_1024":${overDefault.getLong(0)},""" +
         s""""max_bucket_at_1024":${if (overDefault.isNullAt(1)) 0
         else overDefault.getLong(1)},""" +
@@ -1275,29 +1270,49 @@ object ScaleStress {
         }.mkString(",")}},""" +
         s""""semantic_census":{${semCensus.map { case (f, mx, k) =>
           s""""f$f":{"effective_clusters":$k,"max_cluster":$mx}"""
-        }.mkString(",")}},""" +
-        // fixture provenance: how many times the delete rungs have run
-        // against each factor's accumulated index — a future exponent
-        // bend is then attributable to fixture age vs code
-        s""""delete_live_invocations":{${factors.map { f =>
-          def inv(tag: String): Long = {
-            val p = Paths.get(s"$workDir/f$f/annidx_$tag/next_del")
-            // provenance metadata only — a truncated counter (crash
-            // mid-write) must not throw AFTER hours of rung timing
-            if (Files.exists(p))
-              new String(Files.readAllBytes(p)).trim.toLongOption
-                .getOrElse(0L)
-            else 0L
-          }
-          s""""f$f":{"dl":${inv("dl")},"dp":${inv("dp")}}"""
-        }.mkString(",")}}"""
+        }.mkString(",")}},"""
+    }
+
+    def expFit(name: String): Double = {
+      val r = results(name)
+      val (f1, fN) = (factors.head, factors.last)
+      math.log(r(fN)._1 / r(f1)._1) / math.log(fN.toDouble / f1)
+    }
+    val opsJson = results.map { case (name, byF) =>
+      val rungs = byF.map { case (f, (sec, rows)) =>
+        s""""f$f":{"sec":${f"$sec%.3f"},"rows":$rows}"""
+      }.mkString(",")
+      s""""$name":{$rungs,"exponent":${f"${expFit(name)}%.2f"}}"""
+    }.mkString(",")
+    val deleteJson =
+      // fixture provenance: how many times the delete rungs have run
+      // against each factor's accumulated index — a future exponent
+      // bend is then attributable to fixture age vs code
+      s""""delete_live_invocations":{${factors.map { f =>
+        def inv(tag: String): Long = {
+          val p = Paths.get(s"$workDir/f$f/annidx_$tag/next_del")
+          // provenance metadata only — a truncated counter (crash
+          // mid-write) must not throw AFTER hours of rung timing
+          if (Files.exists(p))
+            new String(Files.readAllBytes(p)).trim.toLongOption
+              .getOrElse(0L)
+          else 0L
+        }
+        s""""f$f":{"dl":${inv("dl")},"dp":${inv("dp")}}"""
+      }.mkString(",")}}"""
+    // a filtered run names its ops in the JSON and in the file name, so
+    // it never overwrites a full ladder's STRESS_f<factors>.json
+    val ran = results.keys.toSeq
     val json =
       s"""{"base":"$baseDir",""" +
         s""""cores":${spark.sparkContext.defaultParallelism},""" +
         s""""factors":[${factors.mkString(",")}],""" +
-        s""""ops":{$opsJson},$guardJson}"""
+        opFilter.fold("")(_ =>
+          s""""ops_filter":[${ran.map(n => s""""$n"""").mkString(",")}],""") +
+        s""""ops":{$opsJson},$fullJson$deleteJson}"""
     println(json)
-    val outName = s"STRESS_f${factors.mkString("_")}.json"
+    val outName = s"STRESS_f${factors.mkString("_")}" +
+      opFilter.fold("")(_ => s"_ops-${ran.mkString("-")}") + ".json"
     Files.write(Paths.get(outName),
       json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()
