@@ -260,15 +260,16 @@ private[graft] object EntriesSources {
       val tmp = scratchPath("graft_s15").toString
       val ev = t(s, dir, "events").select(col("event_id"), col("event_type"))
       ParquetDataset.write(ev, s"$tmp/data", Seq("event_type"))
-      val listed = FileListing.list(s, s"$tmp/data")
-        .where(col("path").endsWith(".parquet"))
-      Bookmark.commitFilesDF(s, s"$tmp/manifest",
-        listed.where(
-          regexp_extract(col("path"), "event_type=([^/]+)", 1) < "m")
-          .select(col("path")))
-      listed.join(
-          s.read.parquet(s"$tmp/manifest").select(col("path")),
-          Seq("path"), "left_anti")
+      val partition = "event_type=([^/]+)".r.unanchored
+      val b = Bookmark.batch(s, s"$tmp/data", s"$tmp/manifest")
+      Bookmark.commit(s, b.copy(files = b.files.filter {
+        case partition(v) => v < "m"
+        case _ => false
+      }))
+      // the manifest records normalized paths: list through the same
+      // normalizer, or every file reads as an orphan
+      Bookmark.listDataFiles(s, s"$tmp/data")
+        .join(s.read.parquet(s"$tmp/manifest"), Seq("path"), "left_anti")
         .withColumn("event_type",
           regexp_extract(col("path"), "event_type=([^/]+)", 1))
         .groupBy(col("event_type")).agg(count(lit(1)).as("n_orphans"))
@@ -560,9 +561,9 @@ private[graft] object EntriesSources {
     Some("WITH o AS (SELECT user_id, event_id, event_type, lag(event_id) OVER w AS pid, lag(event_type) OVER w AS ptype FROM events WINDOW w AS (PARTITION BY user_id ORDER BY event_id)), st AS (SELECT user_id, event_id, event_type FROM o WHERE pid IS NULL OR ptype IS DISTINCT FROM event_type) SELECT user_id, event_type, event_id AS valid_from, lead(event_id) OVER w2 AS valid_to, lead(event_id) OVER w2 IS NULL AS is_current FROM st WINDOW w2 AS (PARTITION BY user_id ORDER BY event_id)"))
 
   /** §2.8 — incremental bookmark: after batch 1 is committed to the
-    * manifest, a second run sees only batch 2's files (the Glue
-    * job-bookmark semantics as a manifest + anti-join on
-    * input_file_name()).
+    * manifest, a second run's batch holds only batch 2's files (the Glue
+    * job-bookmark semantics as a manifest diffed against the listing),
+    * and reading those files yields exactly batch 2's rows.
     */
   val bmIncremental = Q(
     (s, dir) => {
@@ -570,10 +571,11 @@ private[graft] object EntriesSources {
       val ev = t(s, dir, "events").select(col("event_id"), col("event_type"))
       ev.filter(col("event_id") % 2 === 0)
         .write.mode("append").parquet(s"$tmp/data")
-      Bookmark.commit(s, s"$tmp/data", s"$tmp/manifest")
+      Bookmark.commit(s, Bookmark.batch(s, s"$tmp/data", s"$tmp/manifest"))
       ev.filter(col("event_id") % 2 =!= 0)
         .write.mode("append").parquet(s"$tmp/data")
-      Bookmark.newData(s, s"$tmp/data", s"$tmp/manifest")
+      s.read.parquet(
+        Bookmark.batch(s, s"$tmp/data", s"$tmp/manifest").files: _*)
     },
     Some("SELECT event_id, event_type FROM events WHERE event_id % 2 <> 0"))
 
@@ -1114,6 +1116,8 @@ private[graft] object EntriesSources {
     * batch-1 rows with null quality (schema-evolved parquet) and batch-2
     * rows with the computed value — proving inference, merge, and the
     * merged-schema conversion all ran, not just the unit-level merge.
+    * Two runs, not one: batch 1 must be converted before the merge, so
+    * that its rows read back `quality = null`.
     */
   val e2SchemaEvolve = Q(
     (s, dir) => {

@@ -41,27 +41,11 @@ object ParquetJob {
   val CarryCols: Seq[String] =
     Seq("recordid", "assessmentid", "year", "month", "day")
 
-  /** Run one dataset. The batch is decided on the driver before any
-    * scan ([[Bookmark.batch]]: list the dataset, collect the manifest
-    * once, diff), so a run with nothing new returns an empty result after
-    * that one manifest-read job. Otherwise only the batch's files are
-    * read with the declared schema (plus `recordid` when the spec lacks
-    * it), relationalized if nested ([[tablesOf]]), every
-    * produced table is appended to its partitioned Parquet dataset
-    * (all tables at once, [[appendTables]]), and the manifest advances
-    * by exactly the files read — a file landing mid-run is left for the
-    * next run, and a failed table write leaves the manifest where it was.
-    * Returns per-table appended row counts (a batch of files holding no
-    * rows reports zero-row tables).
-    *
-    * @param outName output table name + bookmark identity when it differs
-    *                from the source dataset — the schema-versioning case
-    *                ([[SchemaEvolution]]): a `docs_v2` table draining the
-    *                `docs_v1` JSON layout under its own manifest
-    * @param newFiles normalized paths pinning the exact batch
-    *                ([[Bookmark.newFiles]]), e.g. the files schema
-    *                inference just examined; the run reads and commits
-    *                exactly those. None diffs against the manifest
+  /** Run one dataset: decide its batch on the driver before any scan
+    * ([[Bookmark.batch]]: list the dataset, collect the manifest
+    * `manifestRoot/<dataset>` once, diff), then [[convert]] it. A run
+    * with nothing new returns an empty result after that one
+    * manifest-read job.
     */
   def run(
       spark: SparkSession,
@@ -69,12 +53,31 @@ object ParquetJob {
       dataset: String,
       spec: TableSpec,
       parquetRoot: String,
-      manifestRoot: String,
-      outName: Option[String] = None,
-      newFiles: Option[Seq[String]] = None): Result = {
-    val table = outName.getOrElse(dataset)
-    val batch = Bookmark.batch(spark, s"$jsonRoot/dataset=$dataset",
-      s"$manifestRoot/$table", newFiles)
+      manifestRoot: String): Result =
+    convert(spark, Bookmark.batch(spark, s"$jsonRoot/dataset=$dataset",
+      s"$manifestRoot/$dataset"), jsonRoot, dataset, spec, dataset,
+      parquetRoot)
+
+  /** Convert one decided batch of `dataset`'s files into `table` and its
+    * children, the one place stage 2 consumes a [[Bookmark.Batch]]. Only
+    * the batch's files are read with `spec`'s schema (plus `recordid`
+    * when the spec lacks it), relationalized if nested ([[tablesOf]]),
+    * every produced table is appended to its partitioned Parquet dataset
+    * (all tables at once, [[appendTables]]), and the batch is committed
+    * — the manifest advances by exactly the files read, so a file landing
+    * mid-run is left for the next run, and a failed table write leaves
+    * the manifest where it was. Returns per-table appended row counts (a
+    * batch of files holding no rows reports zero-row tables; an empty
+    * batch, no tables).
+    */
+  private[pipeline] def convert(
+      spark: SparkSession,
+      batch: Bookmark.Batch,
+      jsonRoot: String,
+      dataset: String,
+      spec: TableSpec,
+      table: String,
+      parquetRoot: String): Result = {
     if (batch.isEmpty) return Result(Map.empty)
     // stage 1 writes recordid into every line; a catalog table that does
     // not declare it would drop relationalize's key column at the scan

@@ -19,15 +19,17 @@ import graft.streaming.Bookmark
   *    nulls for appended columns.
   *  - incompatible (e.g. a field changed string → long) → the current
   *    table is NOT touched: the run proceeds under a bumped dataset
-  *    version `…_v{n+1}` with the inferred schema, seeded with the old
-  *    table's bookmark so the new version picks up exactly the files the
-  *    old version never processed. The old table stops advancing — the
-  *    protocol's "create a versioned table and repoint" step, minus the
-  *    human notification.
+  *    version `…_v{n+1}` with the inferred schema, whose first commit
+  *    records the old table's manifest ∪ the batch, so the new version
+  *    picks up exactly the files the old version never processed. The
+  *    old table stops advancing — the protocol's "create a versioned
+  *    table and repoint" step, minus the human notification.
   *
-  * The file listing and manifests are driver-sized by the Bookmark
-  * budget argument (one row per FILE); inference reads only the NEW
-  * files' JSON.
+  * A run decides ONE [[Bookmark.Batch]]: inference reads only its files'
+  * JSON, and [[ParquetJob.convert]] converts and commits that same
+  * batch, so the dataset is listed and the manifest read once. The
+  * listing and manifests are driver-sized by the Bookmark budget
+  * argument (one row per FILE).
   */
 object SchemaEvolution {
 
@@ -59,12 +61,10 @@ object SchemaEvolution {
     // spec, the scan path follows the dataset
     val table = declared.name
     val dataPath = s"$jsonRoot/dataset=$dataset"
-    val manifestPath = s"$manifestRoot/$table"
-    val batch = Bookmark.batch(spark, dataPath, manifestPath)
+    val batch = Bookmark.batch(spark, dataPath, s"$manifestRoot/$table")
     if (batch.isEmpty)
       return Outcome(declared, table, versioned = false, Nil,
         ParquetJob.Result(Map.empty))
-    val newPaths = batch.paths
 
     // crawl ONLY the new files; partition-layout columns are directory
     // metadata, not data, and never participate in the merge
@@ -73,45 +73,36 @@ object SchemaEvolution {
     val inferred = StructType(inferredAll.fields.filterNot(f =>
       JsonDataset.PartitionCols.contains(f.name)))
 
+    // the conversion reads exactly the files inference saw — a file
+    // landing meanwhile waits for the next run
     SchemaMerge.merge(declared.schema, inferred) match {
       case Right(merged) =>
         val spec = declared.copy(columns =
           merged.fields.map(f => ColumnSpec(f.name, f.dataType.sql)).toSeq)
-        // the conversion is pinned to exactly the files inference saw —
-        // a file landing between the two calls waits for the next run
-        val res = ParquetJob.run(
-          spark, jsonRoot, dataset, spec, parquetRoot, manifestRoot,
-          outName = Some(table), newFiles = Some(newPaths))
+        val res = ParquetJob.convert(
+          spark, batch, jsonRoot, dataset, spec, table, parquetRoot)
         Outcome(spec, table, versioned = false, Nil, res)
       case Left(errs) =>
         val vName = bumpVersion(table)
         val vManifestPath = s"$manifestRoot/$vName"
-        // seed the versioned bookmark from the old table's manifest: the
-        // new version owns every file the old version never processed.
-        // Seed ONLY if the versioned manifest does not already exist — a
-        // re-run with the stale pre-version spec (driver crash losing the
-        // in-memory Outcome) must not clobber the advanced _v{n+1}
-        // manifest with the old table's stale one
-        val vExisted = Bookmark.manifestExists(spark, vManifestPath)
-        if (!vExisted && Bookmark.manifestExists(spark, manifestPath))
-          spark.read.parquet(manifestPath)
-            .write.mode("overwrite").parquet(vManifestPath)
-        // on that same stale re-run, `newPaths` was diffed against the
-        // OLD manifest and may include files the versioned table already
-        // converted; re-derive the pin against the versioned table's own
-        // manifest so the conversion is idempotent (no double-append)
-        val vPaths =
-          if (vExisted) Bookmark.newFiles(spark, dataPath, vManifestPath)
-            .filter(newPaths.toSet)
-          else newPaths
+        // the new version owns every file the old version never
+        // processed: its first commit records the old manifest ∪ the
+        // batch. A re-run with the stale pre-version spec (driver crash
+        // losing the in-memory Outcome) finds the versioned manifest and
+        // converts only the batch's files it lacks — no clobbered
+        // manifest, no double-append
+        val vBatch =
+          if (!Bookmark.manifestExists(spark, vManifestPath))
+            batch.copy(manifestPath = vManifestPath)
+          else {
+            val vb = Bookmark.batch(spark, dataPath, vManifestPath)
+            vb.copy(files = vb.files.filter(batch.files.toSet))
+          }
         val spec = TableSpec(vName,
           inferred.fields.map(f => ColumnSpec(f.name, f.dataType.sql)).toSeq,
           declared.partitionKeys)
-        val res =
-          if (vPaths.isEmpty) ParquetJob.Result(Map.empty)
-          else ParquetJob.run(
-            spark, jsonRoot, dataset, spec, parquetRoot, manifestRoot,
-            outName = Some(vName), newFiles = Some(vPaths))
+        val res = ParquetJob.convert(
+          spark, vBatch, jsonRoot, dataset, spec, vName, parquetRoot)
         Outcome(spec, vName, versioned = true, errs, res)
     }
   }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ingest.FileListing
 
@@ -17,26 +17,24 @@ import graft.ingest.FileListing
   * only those files, and `commit(spark, batch)` records manifest
   * ∪ batch — exactly what was read, so a file landing mid-run stays new
   * for the next run instead of being recorded unconverted. A run with
-  * nothing new costs one Spark job, the manifest read.
+  * nothing new costs one Spark job, the manifest read. [[batch]] and
+  * [[commit]] are the only way to read or advance a manifest.
   *
   * Scale design: the manifest holds one row per data FILE (not per
-  * record), so even a petabyte dataset yields a manifest of at most a few
-  * million short strings — driver-sized, and always broadcastable for
-  * the distributed forms ([[newFilesDF]], [[newDataFrom]]).
+  * record), and the driver holds all of it; each batch is capped by
+  * [[DefaultNewFilesBudget]]. Growth of the manifest's history is
+  * ROADMAP Direction 5's (an append-only manifest).
   */
 object Bookmark {
 
   private val SchemePrefix = "^[a-zA-Z0-9+.-]+:/+"
 
-  /** Normalize `file:`-style URIs from input_file_name() and Hadoop
-    * listings to a comparable plain path. Shared by every consumer that
-    * compares listings to manifests — a second normalizer that drifts
-    * from this one silently desynchronizes new-file detection.
+  /** Normalize `file:`-style URIs from Hadoop listings to a comparable
+    * plain path — the form the manifest records. Shared by every
+    * consumer that compares listings to manifests — a second normalizer
+    * that drifts from this one silently desynchronizes new-file
+    * detection.
     */
-  private[graft] def normalize(c: Column): Column =
-    regexp_replace(c, SchemePrefix, "/")
-
-  /** The driver-side twin of [[normalize(c:Column)*]], same pattern. */
   private[graft] def normalize(path: String): String =
     path.replaceFirst(SchemePrefix, "/")
 
@@ -60,31 +58,38 @@ object Bookmark {
     dataFiles(spark, dataPath).map(normalize).toDF("path")
   }
 
+  private def fs(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The hidden sibling `.<name>.next` a commit writes the new manifest
+    * to before swapping it in.
+    */
+  private def nextOf(manifest: Path): Path =
+    new Path(manifest.getParent, s".${manifest.getName}.next")
+
+  /** Whether a committed manifest exists: in place, or as the complete
+    * sibling of a commit interrupted before its swap.
+    */
   def manifestExists(spark: SparkSession, manifestPath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(manifestPath)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    val p = new Path(manifestPath)
+    val mfs = fs(spark, p)
+    mfs.exists(p) || mfs.exists(new Path(nextOf(p), "_SUCCESS"))
   }
 
-  /** Default cap on how many new files one driver-side [[Batch]] (and
-    * [[newFiles]]) may hold. One million short strings is ~100 MB of
-    * driver heap — past that the delta should stay distributed
-    * ([[newFilesDF]]) or the run split, not silently balloon driver state.
+  /** Replace the manifest with its written sibling: delete, then rename
+    * (a rename onto an existing directory would move the sibling into it).
+    */
+  private def swapIn(mfs: FileSystem, manifest: Path): Unit = {
+    mfs.delete(manifest, true)
+    if (!mfs.rename(nextOf(manifest), manifest)) throw new java.io.IOException(
+      s"bookmark: could not rename ${nextOf(manifest)} to $manifest")
+  }
+
+  /** Default cap on how many new files one driver-side [[Batch]] may
+    * hold. One million short strings is ~100 MB of driver heap — past
+    * that the run should be split, not silently balloon driver state.
     */
   val DefaultNewFilesBudget = 1000000
-
-  /** DISTRIBUTED new-file delta: normalized paths of data files not yet
-    * in the manifest, as a (path) DataFrame — the anti-join runs on the
-    * executors, so the manifest never has to fit the driver. The
-    * anti-join is file-sized on both sides; the planner (AQE) picks the
-    * join strategy from runtime stats.
-    */
-  def newFilesDF(
-      spark: SparkSession, dataPath: String, manifestPath: String): DataFrame = {
-    val listed = listDataFiles(spark, dataPath)
-    if (!manifestExists(spark, manifestPath)) listed
-    else listed.join(
-      spark.read.parquet(manifestPath).select("path"), Seq("path"), "left_anti")
-  }
 
   /** One run's work, decided on the driver before any scan.
     *
@@ -102,116 +107,54 @@ object Bookmark {
   }
 
   /** List `dataPath`, collect the manifest once (declared schema, one
-    * job; none without a manifest) and diff the two on the driver. With
-    * `pinned` (normalized paths, e.g. [[newFiles]] computed for schema
-    * inference) the batch is exactly the listed files among them,
-    * committed or not; otherwise it is every listed file the manifest
-    * lacks. FAILS FAST when the batch exceeds `maxFiles`
-    * ([[DefaultNewFilesBudget]]) — a delta past the budget means the
-    * driver-list pattern is mis-sized for the dataset; process the delta
-    * distributedly ([[newFilesDF]]/[[newDataFrom]]) or raise the budget
-    * deliberately.
+    * job; none without a manifest) and diff the two on the driver: the
+    * batch is every listed file the manifest lacks. A commit interrupted
+    * after its sibling was complete is finished first. FAILS FAST when
+    * the batch exceeds `maxFiles` ([[DefaultNewFilesBudget]]) — a delta
+    * past the budget means the run is mis-sized for the driver; split it
+    * or raise the budget deliberately.
     */
   def batch(
       spark: SparkSession, dataPath: String, manifestPath: String,
-      pinned: Option[Seq[String]] = None,
       maxFiles: Int = DefaultNewFilesBudget): Batch = {
     require(maxFiles > 0 && maxFiles < Int.MaxValue,
       s"maxFiles must be in (0, ${Int.MaxValue}), got $maxFiles")
+    val manifest = new Path(manifestPath)
+    val mfs = fs(spark, manifest)
+    if (mfs.exists(new Path(nextOf(manifest), "_SUCCESS")))
+      swapIn(mfs, manifest)
     val committed =
-      if (!manifestExists(spark, manifestPath)) Set.empty[String]
+      if (!mfs.exists(manifest)) Set.empty[String]
       else {
         import spark.implicits._
         spark.read.schema("path string").parquet(manifestPath)
           .as[String].collect().toSet
       }
-    val wanted: String => Boolean = pinned match {
-      case Some(ps) => ps.toSet
-      case None => p => !committed(p)
-    }
     val files = dataFiles(spark, dataPath)
       .map(f => normalize(f) -> f)
-      .filter(p => wanted(p._1))
+      .filterNot(p => committed(p._1))
       .sortBy(_._1)
       .map(_._2)
     if (files.length > maxFiles) throw new IllegalStateException(
       s"bookmark: more than $maxFiles new files under $dataPath — the " +
-        "driver-held file list would exceed its budget. Use newFilesDF/" +
-        "newDataFrom to keep the delta distributed, or raise maxFiles.")
+        "driver-held file list would exceed its budget. Split the run, " +
+        "or raise maxFiles.")
     Batch(manifestPath, committed, files)
   }
 
-  /** Driver-held new-file delta: the normalized, sorted paths of a
-    * [[batch]], under the same budget and fail-fast check.
-    */
-  def newFiles(
-      spark: SparkSession, dataPath: String, manifestPath: String,
-      maxFiles: Int = DefaultNewFilesBudget): Seq[String] =
-    batch(spark, dataPath, manifestPath, maxFiles = maxFiles).paths
-
-  /** Record `batch` as processed: overwrite the manifest with the
-    * committed set it was decided against ∪ its files, from the driver —
-    * no re-listing, so only what the run read is recorded. One writer per
-    * manifest, like a Glue job's bookmark.
+  /** Record `batch` as processed: the committed set it was decided
+    * against ∪ its files, from the driver — no re-listing, so only what
+    * the run read is recorded. One writer per manifest, like a Glue
+    * job's bookmark. The new manifest is written to a hidden sibling,
+    * then swapped in, so a crash at any point leaves the old manifest or
+    * a complete sibling that the next [[batch]] swaps in — never no
+    * manifest, which would re-convert the whole dataset.
     */
   def commit(spark: SparkSession, batch: Batch): Unit = {
     import spark.implicits._
+    val manifest = new Path(batch.manifestPath)
     (batch.committed ++ batch.paths).toSeq.sorted.toDF("path")
-      .write.mode("overwrite").parquet(batch.manifestPath)
+      .write.mode("overwrite").parquet(nextOf(manifest).toString)
+    swapIn(fs(spark, manifest), manifest)
   }
-
-  /** Record the CURRENT file set of `dataPath` as processed. Overwrites —
-    * the manifest is the full listing, which makes the commit idempotent.
-    * It re-lists, so a file that landed after the caller's scan is
-    * recorded unprocessed; a job that reads a batch commits that
-    * [[Batch]] instead.
-    */
-  def commit(spark: SparkSession, dataPath: String, manifestPath: String): Unit =
-    listDataFiles(spark, dataPath)
-      .write.mode("overwrite").parquet(manifestPath)
-
-  /** Record exactly `paths` (a (path) DataFrame, plus everything already
-    * committed) as processed — the DISTRIBUTED commit for an externally
-    * chosen set of files: union the previous manifest with `paths` and
-    * overwrite, without ever pulling the manifest to the driver. Reading
-    * and overwriting the same parquet path in one lazy plan would race
-    * the overwrite with the scan, so the union is materialized first
-    * (`localCheckpoint` — executor block storage, still distributed) to
-    * cut the scan dependency.
-    */
-  def commitFilesDF(
-      spark: SparkSession, manifestPath: String, paths: DataFrame): Unit = {
-    val prev =
-      if (!manifestExists(spark, manifestPath)) None
-      else Some(spark.read.parquet(manifestPath).select("path"))
-    val all = prev.fold(paths.select("path"))(
-        _.unionByName(paths.select("path")))
-      .distinct()
-      .localCheckpoint()
-    try all.write.mode("overwrite").parquet(manifestPath)
-    finally all.unpersist()
-  }
-
-  /** Keep only rows of `df` coming from files of `dataPath` NOT yet in
-    * the manifest — the distributed form, a broadcast `left_anti` join
-    * on `input_file_name()` after the scan. With no manifest yet,
-    * everything is new (first run). Works for any file-based source
-    * (`df` must originate from a scan so input_file_name() is
-    * populated).
-    */
-  def newDataFrom(
-      spark: SparkSession, df: DataFrame,
-      dataPath: String, manifestPath: String): DataFrame =
-    if (!manifestExists(spark, manifestPath)) df
-    else {
-      val withFile = df.withColumn("__file", normalize(input_file_name()))
-      withFile.join(
-          broadcast(spark.read.parquet(manifestPath)),
-          withFile("__file") === col("path"), "left_anti")
-        .drop("__file")
-    }
-
-  /** Parquet-dataset convenience wrapper over newDataFrom. */
-  def newData(spark: SparkSession, dataPath: String, manifestPath: String): DataFrame =
-    newDataFrom(spark, spark.read.parquet(dataPath), dataPath, manifestPath)
 }

@@ -89,12 +89,50 @@ class PipelineSpec extends SparkSpec {
     assert(all.select("recordid").distinct().count() == 2)
   }
 
-  test("E2 zero-work rerun: one Spark job per dataset (the manifest " +
-      "read) and no JSON scan") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  /** Jobs started, and every scan node (name, scanned location) of the
+    * SQL executions started, while it listens.
+    */
+  private class Census extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler.{SparkListenerEvent,
       SparkListenerJobStart}
     import org.apache.spark.sql.execution.SparkPlanInfo
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    private val scanned =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    def scans: Seq[String] = scanned.toArray(Array.empty[(String, String)])
+      .toSeq.map(_._1)
+    /** Parquet scans of a location under `root`. */
+    def parquetScansUnder(root: String): Int =
+      scanned.toArray(Array.empty[(String, String)]).count { case (n, loc) =>
+        n == "Scan parquet" && loc.contains(root)
+      }
+    private def walk(p: SparkPlanInfo): Unit = {
+      if (p.nodeName.startsWith("Scan "))
+        scanned.add(p.nodeName.trim -> p.metadata.getOrElse("Location", ""))
+      p.children.foreach(walk)
+    }
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => walk(s.sparkPlanInfo)
+      case _ =>
+    }
+  }
+
+  private def census[A](body: => A): (A, Census) = {
+    val c = new Census
+    drainListenerBus()
+    spark.sparkContext.addSparkListener(c)
+    try {
+      val r = body
+      drainListenerBus()
+      (r, c)
+    } finally spark.sparkContext.removeSparkListener(c)
+  }
+
+  test("E2 zero-work rerun: one Spark job per dataset (the manifest " +
+      "read) and no JSON scan") {
     val tmp = graft.EntryKit.scratchTracked("graft_e2_zero").toString
     val jsonRoot = s"$tmp/raw_json"
     IngestJob.run(spark, spark.createDataset(Seq(record("rec1"))), cfg,
@@ -103,40 +141,48 @@ class PipelineSpec extends SparkSpec {
     def stage2() = datasets.map(ds => ParquetJob.run(spark, jsonRoot, ds,
       TableCatalog.default(ds), s"$tmp/parquet", s"$tmp/manifests"))
 
-    class Census extends SparkListener {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val scans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      private def walk(p: SparkPlanInfo): Unit = {
-        if (p.nodeName.startsWith("Scan ")) scans.add(p.nodeName.trim)
-        p.children.foreach(walk)
-      }
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => walk(s.sparkPlanInfo)
-        case _ =>
-      }
-    }
-    def census(body: => Seq[ParquetJob.Result]) = {
-      val c = new Census
-      drainListenerBus()
-      spark.sparkContext.addSparkListener(c)
-      try {
-        val r = body
-        drainListenerBus()
-        (r, c)
-      } finally spark.sparkContext.removeSparkListener(c)
-    }
     val (first, c1) = census(stage2())
     assert(first.forall(_.tables.nonEmpty))
     // the census sees a JSON scan when there is one
-    assert(c1.scans.toArray.contains("Scan json"), c1.scans.toString)
+    assert(c1.scans.contains("Scan json"), c1.scans.toString)
 
     val (rerun, c2) = census(stage2())
     assert(rerun.forall(_.tables.isEmpty))
     assert(c2.jobs.get() == datasets.size,
       s"zero-work rerun ran ${c2.jobs.get()} jobs for ${datasets.size} datasets")
-    assert(!c2.scans.toArray.contains("Scan json"), c2.scans.toString)
+    assert(!c2.scans.contains("Scan json"), c2.scans.toString)
+  }
+
+  test("E2 bookmark commit: a run that fails as its manifest write starts " +
+      "keeps the old manifest, so the next run converts only new files") {
+    val tmp = graft.EntryKit.scratchTracked("graft_e2_crash").toString
+    val jsonRoot = s"$tmp/raw_json"
+    val ds = "WeatherResult_v1"
+    def ingest(rid: String) = IngestJob.run(spark,
+      spark.createDataset(Seq(record(rid))), cfg, jsonRoot, s"$tmp/q_$rid")
+    def runJob() = ParquetJob.run(spark, jsonRoot, ds,
+      TableCatalog.default(ds), s"$tmp/parquet", s"$tmp/manifests")
+    ingest("rec1")
+    assert(runJob().tables(ds) == 1)
+    ingest("rec2")
+
+    // run 2 appends its tables, then its manifest write fails at setup
+    val protocol = "spark.sql.sources.commitProtocolClass"
+    FailWritesUnder.root.set(s"$tmp/manifests")
+    spark.conf.set(protocol, classOf[FailWritesUnder].getName)
+    try intercept[Exception](runJob())
+    finally {
+      spark.conf.unset(protocol)
+      FailWritesUnder.root.set(null)
+    }
+
+    runJob()
+    val ids = ParquetDataset.read(spark, s"$tmp/parquet/$ds")
+      .select("recordid").as[String].collect().toSeq
+    assert(ids.count(_ == "rec1") == 1, s"rec1 re-converted: $ids")
+    // run 2 appended rec2 before its commit failed, and run 3 appends it
+    // again: the table append is at-least-once
+    assert(Set(1, 2).contains(ids.count(_ == "rec2")), ids.toString)
   }
 
   test("E2 bookmark: a file landing while the tables are written is " +
@@ -339,6 +385,49 @@ class PipelineSpec extends SparkSpec {
     assert(rNext.result.tables.isEmpty)
   }
 
+  test("schema evolution: a run reads its manifest once, and versioning " +
+      "copies no manifest") {
+    import org.apache.spark.sql.functions.lit
+    import graft.schema.{ColumnSpec, TableSpec}
+    val tmp = graft.EntryKit.scratchTracked("graft_se_census").toString
+    val manifests = s"$tmp/manifests"
+    def land(df: org.apache.spark.sql.DataFrame) = graft.sources.JsonDataset
+      .write(df.withColumn("assessmentid", lit("a"))
+        .withColumn("year", lit(2023))
+        .withColumn("month", lit(1)).withColumn("day", lit(15)),
+        s"$tmp/json", "docs_v1")
+    def run(spec: TableSpec) = SchemaEvolution.run(spark, s"$tmp/json",
+      "docs_v1", spec, s"$tmp/parquet", manifests)
+    land(Seq((1L, 10L, 1L)).toDF("doc_id", "size", "recordid"))
+    val r1 = run(TableSpec("docs_v1", Seq(ColumnSpec("doc_id", "bigint"),
+      ColumnSpec("size", "bigint"), ColumnSpec("recordid", "bigint")), Nil))
+
+    // merge path against an existing manifest: one manifest read
+    land(Seq((2L, 20L, 0.5, 2L)).toDF("doc_id", "size", "quality", "recordid"))
+    val (r2, merge) = census(run(r1.spec))
+    assert(!r2.versioned && r2.result.tables("docs_v1") == 1)
+    assert(merge.parquetScansUnder(manifests) == 1,
+      s"merge run scanned manifests ${merge.parquetScansUnder(manifests)}x")
+
+    // first versioning run: the same one read, no copy of docs_v1's
+    // manifest into docs_v2's
+    land(Seq((3L, "big", 3L)).toDF("doc_id", "size", "recordid"))
+    val (r3, version) = census(run(r2.spec))
+    assert(r3.versioned && r3.result.tables("docs_v2") == 1)
+    assert(version.parquetScansUnder(manifests) == 1,
+      s"versioning run scanned manifests " +
+        s"${version.parquetScansUnder(manifests)}x")
+    // docs_v2's manifest holds docs_v1's files and the batch's: every
+    // file of the dataset
+    def manifest(t: String) =
+      spark.read.parquet(s"$manifests/$t").as[String].collect().toSet
+    val listed = graft.streaming.Bookmark.listDataFiles(
+      spark, s"$tmp/json/dataset=docs_v1").as[String].collect().toSet
+    assert(manifest("docs_v2") == listed)
+    assert(manifest("docs_v1").subsetOf(listed) &&
+      manifest("docs_v1").size < listed.size)
+  }
+
   test("E3 BootstrapDriver: keep-latest, diff, batching, archive version") {
     val manifest = Seq(
       ("r1", 10L), ("r1", 20L), // r1 exported twice: keep ts 20
@@ -418,6 +507,25 @@ class WriteStartHook(jobId: String, path: String,
 
 object WriteStartHook {
   val action = new java.util.concurrent.atomic.AtomicReference[() => Unit]()
+}
+
+/** A file-format commit protocol whose write jobs fail at setup when
+  * their output path lies under [[FailWritesUnder.root]] — after the
+  * writer has cleared an overwritten path, before any task runs.
+  */
+class FailWritesUnder(jobId: String, path: String,
+    dynamicPartitionOverwrite: Boolean)
+    extends org.apache.spark.sql.execution.datasources
+      .SQLHadoopMapReduceCommitProtocol(jobId, path, dynamicPartitionOverwrite) {
+  override def setupJob(job: org.apache.hadoop.mapreduce.JobContext): Unit = {
+    Option(FailWritesUnder.root.get).filter(path.contains(_)).foreach(r =>
+      throw new java.io.IOException(s"injected: write under $r fails"))
+    super.setupJob(job)
+  }
+}
+
+object FailWritesUnder {
+  val root = new java.util.concurrent.atomic.AtomicReference[String]()
 }
 
 /** A file-format commit protocol whose write tasks each wait half a

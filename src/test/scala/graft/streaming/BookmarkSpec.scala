@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.SparkSpec
-import java.nio.file.Files
 
 class BookmarkSpec extends SparkSpec {
   import spark.implicits._
@@ -11,74 +10,68 @@ class BookmarkSpec extends SparkSpec {
     val tmp = graft.EntryKit.scratchTracked("graft_bm").toString
     val data = s"$tmp/data"
     val manifest = s"$tmp/manifest"
+    def read(b: Bookmark.Batch) = spark.read.parquet(b.files: _*)
 
     Seq(1, 2, 3).toDF("x").write.mode("append").parquet(data)
     // no manifest yet → everything is new
-    assert(Bookmark.newData(spark, data, manifest).count() == 3)
+    val first = Bookmark.batch(spark, data, manifest)
+    assert(read(first).count() == 3)
 
-    Bookmark.commit(spark, data, manifest)
-    assert(Bookmark.newData(spark, data, manifest).count() == 0)
+    Bookmark.commit(spark, first)
+    assert(Bookmark.batch(spark, data, manifest).isEmpty)
 
     Seq(4, 5).toDF("x").write.mode("append").parquet(data)
-    val second = Bookmark.newData(spark, data, manifest)
-    assert(second.as[Int].collect().sorted.sameElements(Array(4, 5)))
+    val second = Bookmark.batch(spark, data, manifest)
+    assert(read(second).as[Int].collect().sorted.sameElements(Array(4, 5)))
 
-    Bookmark.commit(spark, data, manifest)
-    assert(Bookmark.newData(spark, data, manifest).count() == 0)
+    Bookmark.commit(spark, second)
+    assert(Bookmark.batch(spark, data, manifest).isEmpty)
   }
 
-  test("newFiles fails fast past its driver budget; the distributed " +
-      "delta (newFilesDF) still serves the same listing") {
+  test("batch fails fast past its driver budget; at the budget it holds " +
+      "every new file") {
     val tmp = graft.EntryKit.scratchTracked("graft_bmb").toString
     val data = s"$tmp/data"
     val manifest = s"$tmp/manifest"
-    // 4 appends → at least 4 data files
+    // 4 appends → 4 data files
     (1 to 4).foreach(i => Seq(i).toDF("x")
       .coalesce(1).write.mode("append").parquet(data))
-    val nFiles = Bookmark.newFilesDF(spark, data, manifest).count()
-    assert(nFiles >= 4)
     val e = intercept[IllegalStateException] {
-      Bookmark.newFiles(spark, data, manifest, maxFiles = 2)
+      Bookmark.batch(spark, data, manifest, maxFiles = 2)
     }
     assert(e.getMessage.contains("budget"))
-    // at/under budget the driver list matches the distributed delta
-    val viaDriver = Bookmark.newFiles(spark, data, manifest,
-      maxFiles = nFiles.toInt)
-    assert(viaDriver.size.toLong == nFiles)
+    assert(Bookmark.batch(spark, data, manifest, maxFiles = 4).paths.size == 4)
   }
 
-  test("commitFilesDF unions distributedly: pinned files are skipped, " +
-      "unpinned files stay new, previous commits survive the overwrite") {
+  test("commit of a restricted batch: its files are skipped, the rest " +
+      "stay new, previous commits survive the rewrite") {
     val tmp = graft.EntryKit.scratchTracked("graft_bmd").toString
     val data = s"$tmp/data"
     val manifest = s"$tmp/manifest"
     Seq(1).toDF("x").coalesce(1).write.mode("append").parquet(data)
-    Bookmark.commit(spark, data, manifest) // first generation committed
+    Bookmark.commit(spark, Bookmark.batch(spark, data, manifest))
     Seq(2).toDF("x").coalesce(1).write.mode("append").parquet(data)
     Seq(3).toDF("x").coalesce(1).write.mode("append").parquet(data)
-    // pin only ONE of the two new files, commit it distributedly
-    val fresh = Bookmark.newFiles(spark, data, manifest)
-    assert(fresh.size == 2)
-    val pinned = fresh.take(1)
-    Bookmark.commitFilesDF(spark, manifest, pinned.toDF("path"))
-    // the unpinned file is still new; the pinned and gen-1 files are not
-    val after = Bookmark.newFiles(spark, data, manifest)
-    assert(after == fresh.drop(1))
+    // commit only ONE of the two new files
+    val fresh = Bookmark.batch(spark, data, manifest)
+    assert(fresh.paths.size == 2)
+    Bookmark.commit(spark, fresh.copy(files = fresh.files.take(1)))
+    // the other file is still new; the committed and gen-1 files are not
+    val after = Bookmark.batch(spark, data, manifest)
+    assert(after.paths == fresh.paths.drop(1))
     // round-trip: committing the rest drains the delta
-    Bookmark.commitFilesDF(spark, manifest, after.toDF("path"))
-    assert(Bookmark.newFiles(spark, data, manifest).isEmpty)
+    Bookmark.commit(spark, after)
+    assert(Bookmark.batch(spark, data, manifest).isEmpty)
   }
 
-  test("batch: the driver-side diff equals the distributed delta, reads " +
-      "raw listed paths, and its commit records only its own files") {
+  test("batch reads raw listed paths, and its commit records only its " +
+      "own files") {
     val tmp = graft.EntryKit.scratchTracked("graft_bmbatch").toString
     val data = s"$tmp/data"
     val manifest = s"$tmp/manifest"
     Seq(1).toDF("x").coalesce(1).write.mode("append").parquet(data)
     val b1 = Bookmark.batch(spark, data, manifest)
     assert(b1.committed.isEmpty && b1.paths.size == 1)
-    assert(b1.paths ==
-      Bookmark.newFilesDF(spark, data, manifest).as[String].collect().toSeq)
     // read paths keep their scheme; the manifest form drops it
     assert(b1.files.head.startsWith("file:") &&
       b1.paths.head == b1.files.head.stripPrefix("file:"))
@@ -88,14 +81,35 @@ class BookmarkSpec extends SparkSpec {
     val b2 = Bookmark.batch(spark, data, manifest)
     assert(b2.committed == b1.paths.toSet && b2.paths.size == 1)
     assert(!b1.paths.contains(b2.paths.head))
-    // pinned: exactly the listed pins, committed or not
-    assert(Bookmark.batch(spark, data, manifest, pinned = Some(b1.paths))
-      .paths == b1.paths)
-    assert(Bookmark.batch(spark, data, manifest,
-      pinned = Some(Seq(s"$tmp/absent.parquet"))).isEmpty)
     Bookmark.commit(spark, b2)
     assert(Bookmark.batch(spark, data, manifest).isEmpty)
     assert(spark.read.parquet(manifest).as[String].collect().sorted.toSeq ==
       (b1.paths ++ b2.paths).sorted)
+  }
+
+  test("commit swaps its manifest in whole: nothing beside it at rest, " +
+      "and batch finishes a swap interrupted after the sibling was written") {
+    import java.io.File
+    val tmp = graft.EntryKit.scratchTracked("graft_bmswap").toString
+    val data = s"$tmp/data"
+    val root = s"$tmp/manifests"
+    val manifest = s"$root/t"
+    Seq(1).toDF("x").coalesce(1).write.mode("append").parquet(data)
+    val b1 = Bookmark.batch(spark, data, manifest)
+    Bookmark.commit(spark, b1)
+    Seq(2).toDF("x").coalesce(1).write.mode("append").parquet(data)
+    val b2 = Bookmark.batch(spark, data, manifest)
+    Bookmark.commit(spark, b2)
+    assert(new File(root).list().toSeq == Seq("t"))
+
+    // the state a crash inside b2's swap leaves: its manifest written
+    // complete as the sibling, the old manifest already deleted
+    Seq(3).toDF("x").coalesce(1).write.mode("append").parquet(data)
+    spark.read.parquet(manifest).write.parquet(s"$root/.t.next")
+    graft.EntryKit.deleteRecursively(new File(manifest).toPath)
+    assert(Bookmark.manifestExists(spark, manifest))
+    val b3 = Bookmark.batch(spark, data, manifest)
+    assert(b3.committed == (b1.paths ++ b2.paths).toSet && b3.paths.size == 1)
+    assert(new File(root).list().toSeq == Seq("t"))
   }
 }
