@@ -1316,7 +1316,7 @@ private[graft] object EntriesAnn {
       "SELECT q_id, CAST(rank AS INT) AS rank, nid AS neighbor_id, adc FROM r WHERE rank <= 5"))
 
   /** STREAMING maintenance of the persisted IVF-PQ index ([[graft
-    * .streaming.StreamingIngest.annIndexUpsertDrain]]): the odd batch
+    * .streaming.IndexStore.annIndexUpsertDrain]]): the odd batch
     * arrives as a file STREAM in multiple micro-batches
     * (maxFilesPerTrigger = 1 over a 4-file input), each assigned +
     * encoded with the persisted models and staged to a batch-keyed
@@ -1350,7 +1350,7 @@ private[graft] object EntriesAnn {
       // the drain_stage/drain_models/drain_commit splits, and an outer
       // envelope would double-count them in the breakdown's sum (the
       // r19 close's 353% reading once cross-pass staleness was fixed)
-      graft.streaming.StreamingIngest.annIndexUpsertDrain(
+      graft.streaming.IndexStore.annIndexUpsertDrain(
           stream, path, s"$path/ckpt", "vec_id", "embedding",
           cents, "label")
         .awaitTermination()
@@ -1358,8 +1358,8 @@ private[graft] object EntriesAnn {
       // surface is oracle-carried on every read-path entry, not just
       // ann_index_delete
       PhaseTimer.phase("serve") {
-        val h = graft.streaming.StreamingIngest.refreshServeHandle(s,
-          graft.streaming.StreamingIngest.openServeHandle(
+        val h = graft.streaming.IndexStore.refreshServeHandle(s,
+          graft.streaming.IndexStore.openServeHandle(
             s, path, "vec_id", "label"))
         servedThenCleanup(
           Ann.ivfPqTopK(h.codes, "vec_id", "label", cents,
@@ -1370,12 +1370,12 @@ private[graft] object EntriesAnn {
     },
     annIndexUpsert.oracle)
 
-  /** Staged-index COMPACTION ([[graft.streaming.StreamingIngest
+  /** Staged-index COMPACTION ([[graft.streaming.IndexStore
     * .compactStreamedIndex]]): after the streamed upserts, the staging
     * partitions fold into a fresh compacted version published by its
     * `_folded` high-water marker — monotone publication, no live dir
     * ever renamed, a crash anywhere never double-counts (see the method
-    * doc) — and serving ([[graft.streaming.StreamingIngest
+    * doc) — and serving ([[graft.streaming.IndexStore
     * .loadStreamedCodes]]) resolves to that single version with zero
     * staging batches left to union. Serving results are INVARIANT under
     * compaction, which the entry proves by sharing the upsert oracle
@@ -1395,20 +1395,20 @@ private[graft] object EntriesAnn {
         .join(even.select(col("vec_id"), col("label")), "vec_id"),
         "label", cb, path)
       odd.repartition(4).write.parquet(s"$path/in")
-      graft.streaming.StreamingIngest.annIndexUpsertDrain(
+      graft.streaming.IndexStore.annIndexUpsertDrain(
           s.readStream.schema(odd.schema)
             .option("maxFilesPerTrigger", "1").parquet(s"$path/in"),
           path, s"$path/ckpt", "vec_id", "embedding", cents, "label")
         .awaitTermination()
       PhaseTimer.phase("compact") {
-        graft.streaming.StreamingIngest.compactStreamedIndex(
+        graft.streaming.IndexStore.compactStreamedIndex(
           s, path, "vec_id", "label")
       }
       // serve through the ≤1-listing-warm handle — the repeated-serve
       // surface is oracle-carried on every read-path entry, not just
       // ann_index_delete
-      val h = graft.streaming.StreamingIngest.refreshServeHandle(s,
-        graft.streaming.StreamingIngest.openServeHandle(
+      val h = graft.streaming.IndexStore.refreshServeHandle(s,
+        graft.streaming.IndexStore.openServeHandle(
           s, path, "vec_id", "label"))
       servedThenCleanup(
         Ann.ivfPqTopK(h.codes, "vec_id", "label", cents,
@@ -1419,7 +1419,7 @@ private[graft] object EntriesAnn {
     annIndexUpsert.oracle)
 
   /** INCREMENTAL staged-index compaction ([[graft.streaming
-    * .StreamingIngest.compactStreamedIncremental]]): the fold touches
+    * .IndexStore.compactStreamedIncremental]]): the fold touches
     * only the clusters the staging window lands in and publishes a
     * MANIFEST generation whose untouched clusters keep pointing at the
     * prior generation's files — fold cost ∝ touched clusters, never
@@ -1442,20 +1442,20 @@ private[graft] object EntriesAnn {
         .join(even.select(col("vec_id"), col("label")), "vec_id"),
         "label", cb, path)
       odd.repartition(4).write.parquet(s"$path/in")
-      graft.streaming.StreamingIngest.annIndexUpsertDrain(
+      graft.streaming.IndexStore.annIndexUpsertDrain(
           s.readStream.schema(odd.schema)
             .option("maxFilesPerTrigger", "1").parquet(s"$path/in"),
           path, s"$path/ckpt", "vec_id", "embedding", cents, "label")
         .awaitTermination()
       PhaseTimer.phase("compact_inc") {
-        graft.streaming.StreamingIngest.compactStreamedIncremental(
+        graft.streaming.IndexStore.compactStreamedIncremental(
           s, path, "vec_id", "label")
       }
       // serve through the ≤1-listing-warm handle — the repeated-serve
       // surface is oracle-carried on every read-path entry, not just
       // ann_index_delete
-      val h = graft.streaming.StreamingIngest.refreshServeHandle(s,
-        graft.streaming.StreamingIngest.openServeHandle(
+      val h = graft.streaming.IndexStore.refreshServeHandle(s,
+        graft.streaming.IndexStore.openServeHandle(
           s, path, "vec_id", "label"))
       servedThenCleanup(
         Ann.ivfPqTopK(h.codes, "vec_id", "label", cents,
@@ -1466,7 +1466,7 @@ private[graft] object EntriesAnn {
     annIndexUpsert.oracle)
 
   /** POLICY-driven staged-index compaction ([[graft.streaming
-    * .StreamingIngest.compactStreamedAuto]]): the fold-or-promote
+    * .IndexStore.compactStreamedAuto]]): the fold-or-promote
     * trigger run end-to-end — plan the incremental fold's metadata and
     * dispatch (chain width vs `maxRoots`, touched fraction vs
     * `maxTouchedFrac`) to one of the two proven folds. The streamed
@@ -1489,20 +1489,20 @@ private[graft] object EntriesAnn {
         .join(even.select(col("vec_id"), col("label")), "vec_id"),
         "label", cb, path)
       odd.repartition(4).write.parquet(s"$path/in")
-      graft.streaming.StreamingIngest.annIndexUpsertDrain(
+      graft.streaming.IndexStore.annIndexUpsertDrain(
           s.readStream.schema(odd.schema)
             .option("maxFilesPerTrigger", "1").parquet(s"$path/in"),
           path, s"$path/ckpt", "vec_id", "embedding", cents, "label")
         .awaitTermination()
       PhaseTimer.phase("compact_auto") {
-        graft.streaming.StreamingIngest.compactStreamedAuto(
+        graft.streaming.IndexStore.compactStreamedAuto(
           s, path, "vec_id", "label")
       }
       // serve through the ≤1-listing-warm handle — the repeated-serve
       // surface is oracle-carried on every read-path entry, not just
       // ann_index_delete
-      val h = graft.streaming.StreamingIngest.refreshServeHandle(s,
-        graft.streaming.StreamingIngest.openServeHandle(
+      val h = graft.streaming.IndexStore.refreshServeHandle(s,
+        graft.streaming.IndexStore.openServeHandle(
           s, path, "vec_id", "label"))
       servedThenCleanup(
         Ann.ivfPqTopK(h.codes, "vec_id", "label", cents,
@@ -1512,7 +1512,7 @@ private[graft] object EntriesAnn {
     },
     annIndexUpsert.oracle)
 
-  /** Index RE-TRAIN + migration ([[graft.streaming.StreamingIngest
+  /** Index RE-TRAIN + migration ([[graft.streaming.IndexStore
     * .retrainStreamedIndex]]) — the generation change the upsert path
     * deliberately defers: upsert freezes the codebook (re-training on
     * upsert would re-meaning every existing code), so a growing corpus
@@ -1533,7 +1533,7 @@ private[graft] object EntriesAnn {
     * pre-retrain history (which half was upserted when) must leave NO
     * trace in the result.
     */
-  /** Streamed-index DELETE ([[graft.streaming.StreamingIngest
+  /** Streamed-index DELETE ([[graft.streaming.IndexStore
     * .deleteStreamed]]) — the lifecycle's removal verb (takedown /
     * right-to-be-forgotten / contamination purge): a delete stages a
     * tiny tombstone batch and the serving view anti-joins it
@@ -1556,23 +1556,23 @@ private[graft] object EntriesAnn {
         .join(even.select(col("vec_id"), col("label")), "vec_id"),
         "label", cb, path)
       odd.repartition(2).write.parquet(s"$path/in")
-      graft.streaming.StreamingIngest.annIndexUpsertDrain(
+      graft.streaming.IndexStore.annIndexUpsertDrain(
           s.readStream.schema(odd.schema)
             .option("maxFilesPerTrigger", "1").parquet(s"$path/in"),
           path, s"$path/ckpt", "vec_id", "embedding", cents, "label")
         .awaitTermination()
       PhaseTimer.phase("delete") {
-        graft.streaming.StreamingIngest.deleteStreamed(s, path,
+        graft.streaming.IndexStore.deleteStreamed(s, path,
           emb.where(pmod(col("vec_id"), lit(5)) === 2)
             .select(col("vec_id")),
           "vec_id", "label")
       }
       // serve through the ≤1-listing-warm handle ([[graft.streaming
-      // .StreamingIngest.openServeHandle]]) — the oracle proves the
+      // .IndexStore.openServeHandle]]) — the oracle proves the
       // handle's snapshot equals the direct resolution, making the
       // repeated-serve surface oracle-executed, not just spec'd
-      val h = graft.streaming.StreamingIngest.refreshServeHandle(s,
-        graft.streaming.StreamingIngest.openServeHandle(
+      val h = graft.streaming.IndexStore.refreshServeHandle(s,
+        graft.streaming.IndexStore.openServeHandle(
           s, path, "vec_id", "label"))
       servedThenCleanup(
         Ann.ivfPqTopK(h.codes, "vec_id", "label", cents,
@@ -1585,7 +1585,7 @@ private[graft] object EntriesAnn {
       "WHERE asg.rn = 1 AND asg.vec_id % 5 <> 2)")))
 
   /** Streamed-index CLONE — the promotion verb ([[graft.streaming
-    * .StreamingIngest.cloneStreamedIndex]]): build, stage upserts,
+    * .IndexStore.cloneStreamedIndex]]): build, stage upserts,
     * DELETE ids, then clone the serving snapshot into a fresh
     * plain-layout index and serve FROM THE CLONE with the plain verbs
     * ([[Ann.loadIndex]] — legal there: the clone carries no
@@ -1614,11 +1614,11 @@ private[graft] object EntriesAnn {
           "label")
         .write.mode("overwrite").partitionBy("label")
         .parquet(s"$src/stream/batch=0")
-      graft.streaming.StreamingIngest.deleteStreamed(s, src,
+      graft.streaming.IndexStore.deleteStreamed(s, src,
         emb.where(pmod(col("vec_id"), lit(5)) === 2).select(col("vec_id")),
         "vec_id", "label")
       PhaseTimer.phase("clone") {
-        graft.streaming.StreamingIngest.cloneStreamedIndex(
+        graft.streaming.IndexStore.cloneStreamedIndex(
           s, src, dst, "vec_id", "label")
       }
       val (codes, cbLoaded) = Ann.loadIndex(s, dst)
@@ -1631,7 +1631,7 @@ private[graft] object EntriesAnn {
     annIndexDelete.oracle)
 
   /** Index observability — the per-cluster SERVING census behind
-    * [[graft.streaming.StreamingIngest.indexStatus]]'s metadata
+    * [[graft.streaming.IndexStore.indexStatus]]'s metadata
     * snapshot (the FS half is spec'd; the data half is oracle-pinned
     * here): after upserts and a delete, each cluster's live row count
     * must equal the replayed assignment chain with the deleted ids
@@ -1662,15 +1662,15 @@ private[graft] object EntriesAnn {
           .parquet(s"$path/stream/batch=0")
       }
       PhaseTimer.phase("delete") {
-        graft.streaming.StreamingIngest.deleteStreamed(s, path,
+        graft.streaming.IndexStore.deleteStreamed(s, path,
           emb.where(pmod(col("vec_id"), lit(5)) === 2).select(col("vec_id")),
           "vec_id", "label")
       }
       // the census reads off a warm serve handle — zero lifecycle
       // listings beyond the handle's own resolution (spec-counted)
       PhaseTimer.phase("census") {
-        val h = graft.streaming.StreamingIngest.refreshServeHandle(s,
-          graft.streaming.StreamingIngest.openServeHandle(
+        val h = graft.streaming.IndexStore.refreshServeHandle(s,
+          graft.streaming.IndexStore.openServeHandle(
             s, path, "vec_id", "label"))
         servedThenCleanup(
           h.codes
@@ -1710,7 +1710,7 @@ private[graft] object EntriesAnn {
         .join(even.select(col("vec_id"), col("label")), "vec_id"),
         "label", cb, path)
       odd.repartition(2).write.parquet(s"$path/in")
-      def drain(): Unit = graft.streaming.StreamingIngest
+      def drain(): Unit = graft.streaming.IndexStore
         .annIndexUpsertDrain(
           s.readStream.schema(odd.schema)
             .option("maxFilesPerTrigger", "1").parquet(s"$path/in"),
@@ -1718,7 +1718,7 @@ private[graft] object EntriesAnn {
         .awaitTermination()
       drain()
       PhaseTimer.phase("delete") {
-        graft.streaming.StreamingIngest.deleteStreamed(s, path,
+        graft.streaming.IndexStore.deleteStreamed(s, path,
           emb.where(pmod(col("vec_id"), lit(5)) === 2)
             .select(col("vec_id")),
           "vec_id", "label")
@@ -1730,14 +1730,14 @@ private[graft] object EntriesAnn {
         .repartition(1).write.mode("append").parquet(s"$path/in")
       PhaseTimer.phase("reinsert_drain") { drain() }
       PhaseTimer.phase("fold") {
-        graft.streaming.StreamingIngest.compactStreamedIndex(
+        graft.streaming.IndexStore.compactStreamedIndex(
           s, path, "vec_id", "label")
       }
       // serve through the ≤1-listing-warm handle — the repeated-serve
       // surface is oracle-carried on every read-path entry, not just
       // ann_index_delete
-      val h = graft.streaming.StreamingIngest.refreshServeHandle(s,
-        graft.streaming.StreamingIngest.openServeHandle(
+      val h = graft.streaming.IndexStore.refreshServeHandle(s,
+        graft.streaming.IndexStore.openServeHandle(
           s, path, "vec_id", "label"))
       servedThenCleanup(
         Ann.ivfPqTopK(h.codes, "vec_id", "label", cents,
@@ -1779,14 +1779,14 @@ private[graft] object EntriesAnn {
       }
       val centsFull = Ann.pivotCentroids(emb, "label", "vec_id", "embedding")
       PhaseTimer.phase("retrain") {
-        graft.streaming.StreamingIngest.retrainStreamedIndex(
+        graft.streaming.IndexStore.retrainStreamedIndex(
           s, path, emb, "vec_id", "embedding", centsFull, "label",
           m = 8, ksub = 16)
       }
       // serve through the ≤1-listing-warm handle (the adoption sweep:
       // every read-path entry carries the handle's snapshot contract)
-      val h = graft.streaming.StreamingIngest.refreshServeHandle(s,
-        graft.streaming.StreamingIngest.openServeHandle(
+      val h = graft.streaming.IndexStore.refreshServeHandle(s,
+        graft.streaming.IndexStore.openServeHandle(
           s, path, "vec_id", "label"))
       servedThenCleanup(
         Ann.ivfPqTopK(h.codes, "vec_id", "label",
@@ -1818,7 +1818,7 @@ private[graft] object EntriesAnn {
       "r AS (SELECT q_id, nid, adc, row_number() OVER (PARTITION BY q_id ORDER BY adc, nid) AS rank FROM adc0 WHERE q_id <> nid) " +
       "SELECT q_id, CAST(rank AS INT) AS rank, nid AS neighbor_id, adc FROM r WHERE rank <= 5"))
 
-  /** Drift-TRIGGERED retrain ([[graft.streaming.StreamingIngest
+  /** Drift-TRIGGERED retrain ([[graft.streaming.IndexStore
     * .retrainOnDrift]]): the policy loop closed end-to-end — the same
     * even-build/odd-upsert drifted state as `ann_index_retrain`, but
     * the retrain fires through the measured trigger (worst-cluster
@@ -1859,21 +1859,21 @@ private[graft] object EntriesAnn {
       // retrain it gates (the pre-r16 probe re-assigned and re-joined
       // the full corpus per tick)
       val probeFired = PhaseTimer.phase("drift_probe_nofire") {
-        graft.streaming.StreamingIngest.retrainOnDrift(
+        graft.streaming.IndexStore.retrainOnDrift(
           s, path, emb, "vec_id", "embedding", cents0, centsFull, "label",
           m = 8, ksub = 16, minCosine = -1.0, probeFraction = 0.25)
       }
       require(!probeFired, "the no-fire probe must leave the index alone")
       val fired = PhaseTimer.phase("drift_retrain") {
-        graft.streaming.StreamingIngest.retrainOnDrift(
+        graft.streaming.IndexStore.retrainOnDrift(
           s, path, emb, "vec_id", "embedding", cents0, centsFull, "label",
           m = 8, ksub = 16, minCosine = 0.9999)
       }
       require(fired, "drift trigger must fire on the drifted corpus")
       // serve through the ≤1-listing-warm handle (the adoption sweep:
       // every read-path entry carries the handle's snapshot contract)
-      val h = graft.streaming.StreamingIngest.refreshServeHandle(s,
-        graft.streaming.StreamingIngest.openServeHandle(
+      val h = graft.streaming.IndexStore.refreshServeHandle(s,
+        graft.streaming.IndexStore.openServeHandle(
           s, path, "vec_id", "label"))
       servedThenCleanup(
         Ann.ivfPqTopK(h.codes, "vec_id", "label",
@@ -1884,7 +1884,7 @@ private[graft] object EntriesAnn {
     },
     annIndexRetrain.oracle)
 
-  /** Routed retrain ([[graft.streaming.StreamingIngest
+  /** Routed retrain ([[graft.streaming.IndexStore
     * .retrainStreamedIndex]] with `router = (superCount, nprobe)`):
     * the rebuild path for the nlist ∝ N regime, where even the
     * projection kernel's flat N·k dot stream is quadratic in corpus
@@ -1916,14 +1916,14 @@ private[graft] object EntriesAnn {
       }
       val centsFull = Ann.pivotCentroids(emb, "label", "vec_id", "embedding")
       PhaseTimer.phase("retrain_routed") {
-        graft.streaming.StreamingIngest.retrainStreamedIndex(
+        graft.streaming.IndexStore.retrainStreamedIndex(
           s, path, emb, "vec_id", "embedding", centsFull, "label",
           m = 8, ksub = 16, router = Some((3, 3)))
       }
       // serve through the ≤1-listing-warm handle (the adoption sweep:
       // every read-path entry carries the handle's snapshot contract)
-      val h = graft.streaming.StreamingIngest.refreshServeHandle(s,
-        graft.streaming.StreamingIngest.openServeHandle(
+      val h = graft.streaming.IndexStore.refreshServeHandle(s,
+        graft.streaming.IndexStore.openServeHandle(
           s, path, "vec_id", "label"))
       servedThenCleanup(
         Ann.ivfPqTopK(h.codes, "vec_id", "label",
@@ -1935,7 +1935,7 @@ private[graft] object EntriesAnn {
     annIndexRetrain.oracle)
 
   /** The index MAINTENANCE policy verb ([[graft.streaming
-    * .StreamingIngest.maintainStreamedIndex]]): the even-build /
+    * .IndexStore.maintainStreamedIndex]]): the even-build /
     * odd-staged fixture of the retrain entries, but every lifecycle
     * verb fires through the DECISION TABLE instead of operator glue —
     * tick 1 (fold-only policy: drift trigger disabled, fold threshold
@@ -1955,8 +1955,8 @@ private[graft] object EntriesAnn {
     */
   val annIndexMaintain = Q(
     (s, dir) => {
-      import graft.streaming.StreamingIngest
-      import graft.streaming.StreamingIngest.{MaintenanceAction => MA}
+      import graft.streaming.IndexStore
+      import graft.streaming.IndexStore.{MaintenanceAction => MA}
       val emb = t(s, dir, "embeddings")
       val even = emb.where(pmod(col("vec_id"), lit(2)) === 0)
       val odd = emb.where(pmod(col("vec_id"), lit(2)) === 1)
@@ -1982,32 +1982,32 @@ private[graft] object EntriesAnn {
       }
       val centsFull = Ann.pivotCentroids(emb, "label", "vec_id", "embedding")
         .localCheckpoint()
-      val foldOnly = StreamingIngest.MaintenancePolicy(
+      val foldOnly = IndexStore.MaintenancePolicy(
         foldMinStaged = 1, driftMinCosine = -1.0)
       val m1 = PhaseTimer.phase("policy_fold") {
-        StreamingIngest.maintainStreamedIndex(s, path, emb,
+        IndexStore.maintainStreamedIndex(s, path, emb,
           "vec_id", "embedding", cents0, centsFull, "label",
           m = 8, ksub = 16, policy = foldOnly)
       }
       require(m1.isInstanceOf[MA.Folded],
         s"tick 1 must fold the staged window, got $m1")
       val m2 = PhaseTimer.phase("policy_retrain") {
-        StreamingIngest.maintainStreamedIndex(s, path, emb,
+        IndexStore.maintainStreamedIndex(s, path, emb,
           "vec_id", "embedding", cents0, centsFull, "label",
           m = 8, ksub = 16,
-          policy = StreamingIngest.MaintenancePolicy(
+          policy = IndexStore.MaintenancePolicy(
             foldMinStaged = 1, driftMinCosine = 0.9999))
       }
       require(m2 == MA.Retrained,
         s"tick 2 must fire the drift retrain, got $m2")
       val m3 = PhaseTimer.phase("policy_noop") {
-        StreamingIngest.maintainStreamedIndex(s, path, emb,
+        IndexStore.maintainStreamedIndex(s, path, emb,
           "vec_id", "embedding", cents0, centsFull, "label",
           m = 8, ksub = 16, policy = foldOnly)
       }
       require(m3 == MA.NoOp, s"tick 3 must no-op, got $m3")
-      val h = StreamingIngest.refreshServeHandle(s,
-        StreamingIngest.openServeHandle(s, path, "vec_id", "label"))
+      val h = IndexStore.refreshServeHandle(s,
+        IndexStore.openServeHandle(s, path, "vec_id", "label"))
       servedThenCleanup(
         Ann.ivfPqTopK(h.codes, "vec_id", "label",
           h.cents.getOrElse(centsFull),
@@ -2017,7 +2017,7 @@ private[graft] object EntriesAnn {
     },
     annIndexRetrain.oracle)
 
-  /** FLEET maintenance sweep ([[graft.streaming.StreamingIngest
+  /** FLEET maintenance sweep ([[graft.streaming.IndexStore
     * .maintainIndexes]]): three indexes, ONE scheduler tick — A
     * (pivot-row corpus, one staged batch → fold pressure), B (the
     * `ann_index_retrain` even-build with the full corpus drifted off
@@ -2036,8 +2036,8 @@ private[graft] object EntriesAnn {
     */
   val annIndexMaintainSweep = Q(
     (s, dir) => {
-      import graft.streaming.StreamingIngest
-      import graft.streaming.StreamingIngest.{IndexFleetMember, MaintenanceAction => MA}
+      import graft.streaming.IndexStore
+      import graft.streaming.IndexStore.{IndexFleetMember, MaintenanceAction => MA}
       val emb = t(s, dir, "embeddings")
       val even = emb.where(pmod(col("vec_id"), lit(2)) === 0)
       val scratch = scratchPath("graft_ann_sweep")
@@ -2083,8 +2083,8 @@ private[graft] object EntriesAnn {
         IndexFleetMember(pc, piv, "vec_id", "embedding",
           centsP, centsP, "label", m = 8, ksub = 4))
       val res = PhaseTimer.phase("sweep") {
-        StreamingIngest.maintainIndexes(s, fleet,
-          StreamingIngest.MaintenancePolicy(
+        IndexStore.maintainIndexes(s, fleet,
+          IndexStore.MaintenancePolicy(
             foldMinStaged = 1, driftMinCosine = 0.9999),
           tickBudget = 2).toMap
       }
@@ -2093,8 +2093,8 @@ private[graft] object EntriesAnn {
       require(res(pb) == MA.Retrained,
         s"B must fire the drift retrain, got ${res(pb)}")
       require(res(pc) == MA.NoOp, s"C must no-op, got ${res(pc)}")
-      val h = StreamingIngest.refreshServeHandle(s,
-        StreamingIngest.openServeHandle(s, pb, "vec_id", "label"))
+      val h = IndexStore.refreshServeHandle(s,
+        IndexStore.openServeHandle(s, pb, "vec_id", "label"))
       servedThenCleanup(
         Ann.ivfPqTopK(h.codes, "vec_id", "label",
           h.cents.getOrElse(centsFull),
@@ -2104,7 +2104,7 @@ private[graft] object EntriesAnn {
     },
     annIndexRetrain.oracle)
 
-  /** The maintenance AUDIT TRAIL ([[graft.streaming.StreamingIngest
+  /** The maintenance AUDIT TRAIL ([[graft.streaming.IndexStore
     * .maintenanceLog]]): the `ann_index_maintain` decision cycle on a
     * 100-row slice — fold tick, drift-retrain tick, no-op tick — then
     * the `_maintenance_log` rows themselves ARE the output: decision,
@@ -2116,7 +2116,7 @@ private[graft] object EntriesAnn {
     */
   val annMaintenanceLog = Q(
     (s, dir) => {
-      import graft.streaming.StreamingIngest
+      import graft.streaming.IndexStore
       val emb = t(s, dir, "embeddings").where(col("vec_id") < 100)
       val even = emb.where(pmod(col("vec_id"), lit(2)) === 0)
       val odd = emb.where(pmod(col("vec_id"), lit(2)) === 1)
@@ -2139,23 +2139,23 @@ private[graft] object EntriesAnn {
       }
       val centsFull = Ann.pivotCentroids(emb, "label", "vec_id", "embedding")
         .localCheckpoint()
-      val foldOnly = StreamingIngest.MaintenancePolicy(
+      val foldOnly = IndexStore.MaintenancePolicy(
         foldMinStaged = 1, driftMinCosine = -1.0)
       PhaseTimer.phase("ticks") {
-        StreamingIngest.maintainStreamedIndex(s, path, emb,
+        IndexStore.maintainStreamedIndex(s, path, emb,
           "vec_id", "embedding", cents0, centsFull, "label",
           m = 8, ksub = 16, policy = foldOnly)
-        StreamingIngest.maintainStreamedIndex(s, path, emb,
+        IndexStore.maintainStreamedIndex(s, path, emb,
           "vec_id", "embedding", cents0, centsFull, "label",
           m = 8, ksub = 16,
-          policy = StreamingIngest.MaintenancePolicy(
+          policy = IndexStore.MaintenancePolicy(
             foldMinStaged = 1, driftMinCosine = 0.9999))
-        StreamingIngest.maintainStreamedIndex(s, path, emb,
+        IndexStore.maintainStreamedIndex(s, path, emb,
           "vec_id", "embedding", cents0, centsFull, "label",
           m = 8, ksub = 16, policy = foldOnly)
       }
       servedThenCleanup(
-        StreamingIngest.maintenanceLog(s, path).orderBy(col("tick")),
+        IndexStore.maintenanceLog(s, path).orderBy(col("tick")),
         scratch)
     },
     Some("SELECT CAST(tick AS BIGINT) AS tick, decision, \"trigger\", " +

@@ -1,8 +1,12 @@
 package graft
 
+import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** The `file:` file system of every session on this classpath, selected
@@ -13,7 +17,9 @@ import org.apache.hadoop.fs.permission.FsPermission
   * process, and Hadoop calls it once for every file it creates and every
   * directory it makes (part files, `.crc` sidecars, partition and
   * `_temporary` directories). `Raw` sets the same bits in-process instead;
-  * files, bytes and modes written are unchanged.
+  * files, bytes and modes written are unchanged. [[GraftLocalFileSystem.Fs]]
+  * does the same for `FileContext` writers, such as Structured
+  * Streaming's checkpoint and file-sink logs.
   */
 class GraftLocalFileSystem extends LocalFileSystem(new GraftLocalFileSystem.Raw)
 
@@ -34,5 +40,26 @@ object GraftLocalFileSystem {
           case _: UnsupportedOperationException =>
             super.setPermission(p, permission)
         }
+  }
+
+  /** The `file:` `AbstractFileSystem` (`fs.AbstractFileSystem.file.impl`
+    * in `core-site.xml`), which `FileContext` writes through: Hadoop's
+    * `LocalFs`, a `ChecksumFs` over a `RawLocalFs`, with [[Raw]] in
+    * place of the stock `RawLocalFileSystem`. Like `LocalFs`, it serves
+    * `file:///` whatever URI it is created for. */
+  class Fs(uri: URI, conf: Configuration) extends ChecksumFs(new RawFs(conf))
+
+  /** Hadoop's `RawLocalFs` over [[Raw]]: the same port, server defaults
+    * and name check. */
+  private class RawFs(conf: Configuration) extends DelegateToFileSystem(
+      FsConstants.LOCAL_FS_URI, new Raw, conf,
+      FsConstants.LOCAL_FS_URI.getScheme, false) {
+    override def getUriDefaultPort: Int = -1
+    override def getServerDefaults(f: Path): FsServerDefaults =
+      LocalConfigKeys.getServerDefaults()
+    override def getServerDefaults(): FsServerDefaults =
+      LocalConfigKeys.getServerDefaults()
+    // local file systems differ in their name rules: let the OS decide
+    override def isValidName(src: String): Boolean = true
   }
 }

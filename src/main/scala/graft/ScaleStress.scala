@@ -678,7 +678,7 @@ object ScaleStress {
         // base codes (1000 clusters) plus f incremental folds each
         // touching a DISTINCT cluster, so the live manifest references
         // f + 1 materialized roots and a serve pays one pruned scan per
-        // root ([[StreamingIngest.readVersion]]). Data is constant
+        // root ([[IndexStore.readVersion]]). Data is constant
         // across rungs — the exponent is pure fan-out slope, the
         // number that makes compactStreamedAuto's maxRoots a measured
         // bound (on local disk the per-root cost is listing + scan
@@ -701,12 +701,12 @@ object ScaleStress {
                 lit(j.toLong).as("cl"))
               .write.mode("overwrite").partitionBy("cl")
               .parquet(s"$dir/stream/batch=$j")
-            graft.streaming.StreamingIngest.compactStreamedIncremental(
+            graft.streaming.IndexStore.compactStreamedIncremental(
               spark, dir, "vec_id", "cl")
           }
           Files.createFile(Paths.get(s"$dir/_chain_built"))
         }
-        graft.streaming.StreamingIngest.loadStreamedCodes(
+        graft.streaming.IndexStore.loadStreamedCodes(
           spark, dir, "vec_id", "cl")
       }),
       "corpus_d4_sample" -> (f => {
@@ -736,7 +736,7 @@ object ScaleStress {
     // run mutates its index a little (upsert appends its 200-row
     // batch, compact folds 200 staged rows), a drift that is ≤20% of
     // the f1 index and ≤1% at f25 — noted, not corrected.
-    import graft.streaming.StreamingIngest
+    import graft.streaming.IndexStore
     def lifecycleIndex(f: Int, tag: String): String = {
       val dir = s"$workDir/f$f/annidx_$tag"
       if (!Files.exists(Paths.get(s"$dir/_built_idx"))) {
@@ -840,12 +840,12 @@ object ScaleStress {
             .write.mode("overwrite").partitionBy("cl")
             .parquet(s"$dir/stream/batch=$b")
         }
-        val pre = StreamingIngest.loadStreamedCodes(
+        val pre = IndexStore.loadStreamedCodes(
           spark, dir, "vec_id", "cl").count()
-        (() => StreamingIngest.compactStreamedIncremental(
+        (() => IndexStore.compactStreamedIncremental(
             spark, dir, "vec_id", "cl"),
           () => {
-            val post = StreamingIngest.loadStreamedCodes(
+            val post = IndexStore.loadStreamedCodes(
               spark, dir, "vec_id", "cl").count()
             require(post == pre,
               s"serve not invariant under incremental fold: $pre -> $post")
@@ -873,7 +873,7 @@ object ScaleStress {
           // delete id would kill the replica original too
           9000000000L + n0 * 1000L
         }
-        val pre = StreamingIngest.loadStreamedCodes(
+        val pre = IndexStore.loadStreamedCodes(
           spark, dir, "vec_id", "cl").count()
         val batch = emb(f).where(col("vec_id") < 200)
           .withColumn("vec_id", col("vec_id") + lit(shift))
@@ -884,10 +884,10 @@ object ScaleStress {
             batch, "vec_id", "embedding", cbDl, cents, "cl")
           .write.mode("overwrite").partitionBy("cl")
           .parquet(s"$dir/stream/batch=$b")
-        (() => { StreamingIngest.deleteStreamed(spark, dir,
+        (() => { IndexStore.deleteStreamed(spark, dir,
             batch.select(col("vec_id")), "vec_id", "cl"); () },
           () => {
-            val post = StreamingIngest.loadStreamedCodes(
+            val post = IndexStore.loadStreamedCodes(
               spark, dir, "vec_id", "cl").count()
             require(post == pre,
               s"delete did not restore the serve: $pre -> $post")
@@ -900,7 +900,7 @@ object ScaleStress {
             // not code). The invocation count still lands in the
             // artifact (delete_live_invocations) so cross-round
             // comparisons stay attributable.
-            StreamingIngest.compactStreamedIndex(spark, dir, "vec_id", "cl")
+            IndexStore.compactStreamedIndex(spark, dir, "vec_id", "cl")
             post
           })
       }),
@@ -924,7 +924,7 @@ object ScaleStress {
           Files.write(p, (n0 + 1).toString.getBytes)
           9000000000L + n0 * 1000L
         }
-        val pre = StreamingIngest.loadStreamedCodes(
+        val pre = IndexStore.loadStreamedCodes(
           spark, dir, "vec_id", "cl").count()
         val batch = emb(f).where(col("vec_id") < 10)
           .withColumn("vec_id", col("vec_id") + lit(shift))
@@ -937,13 +937,13 @@ object ScaleStress {
           .parquet(s"$dir/stream/batch=$b")
         val ids = batch.select(col("vec_id")).collect().map(_.getLong(0))
         (() => ids.foreach { i =>
-            StreamingIngest.deleteStreamed(spark, dir,
+            IndexStore.deleteStreamed(spark, dir,
               batch.where(col("vec_id") === i).select(col("vec_id")),
               "vec_id", "cl")
             ()
           },
           () => {
-            val post = StreamingIngest.loadStreamedCodes(
+            val post = IndexStore.loadStreamedCodes(
               spark, dir, "vec_id", "cl").count()
             require(post == pre,
               s"per-call deletes did not restore the serve: $pre -> $post")
@@ -952,7 +952,7 @@ object ScaleStress {
             // apply an ever-growing live-tombstone set — without this
             // the rung measures tombstone accumulation, not the
             // per-call probe
-            StreamingIngest.compactStreamedIndex(spark, dir, "vec_id", "cl")
+            IndexStore.compactStreamedIndex(spark, dir, "vec_id", "cl")
             post
           })
       }),
@@ -1004,16 +1004,16 @@ object ScaleStress {
           else 0
         while (grownCycles() < 8) {
           stageN(4)
-          StreamingIngest.compactStreamedIndex(spark, dir, "vec_id", "cl")
+          IndexStore.compactStreamedIndex(spark, dir, "vec_id", "cl")
           writeCycles(grownCycles() + 1)
         }
         stageN(4)
-        val pre = StreamingIngest.loadStreamedCodes(
+        val pre = IndexStore.loadStreamedCodes(
           spark, dir, "vec_id", "cl").count()
-        (() => StreamingIngest.compactStreamedIndex(
+        (() => IndexStore.compactStreamedIndex(
             spark, dir, "vec_id", "cl"),
           () => {
-            val post = StreamingIngest.loadStreamedCodes(
+            val post = IndexStore.loadStreamedCodes(
               spark, dir, "vec_id", "cl").count()
             require(post == pre,
               s"serve not invariant under grown fold: $pre -> $post")
@@ -1032,7 +1032,7 @@ object ScaleStress {
         // job round-trip per member, so its tick latency was member ×
         // job-overhead before any dispatch). Sub-linear latency in
         // member count is the batching's measured claim.
-        import graft.streaming.StreamingIngest.{IndexFleetMember,
+        import graft.streaming.IndexStore.{IndexFleetMember,
           MaintenancePolicy}
         val e0 = emb(factors.head)
         val cents = graft.ann.Ann.pivotCentroids(
@@ -1056,7 +1056,7 @@ object ScaleStress {
         val policy = MaintenancePolicy(
           foldMinStaged = 1000, foldMinTombstones = 1000,
           driftMinCosine = 0.5)
-        (() => { StreamingIngest.maintainIndexes(
+        (() => { IndexStore.maintainIndexes(
             spark, members, policy); () },
           () => members.size.toLong)
       }),
@@ -1078,12 +1078,12 @@ object ScaleStress {
             .write.mode("overwrite").partitionBy("cl")
             .parquet(s"$dir/stream/batch=$b")
         }
-        val pre = StreamingIngest.loadStreamedCodes(
+        val pre = IndexStore.loadStreamedCodes(
           spark, dir, "vec_id", "cl").count()
-        (() => StreamingIngest.compactStreamedIndex(
+        (() => IndexStore.compactStreamedIndex(
             spark, dir, "vec_id", "cl"),
           () => {
-            val post = StreamingIngest.loadStreamedCodes(
+            val post = IndexStore.loadStreamedCodes(
               spark, dir, "vec_id", "cl").count()
             require(post == pre,
               s"serve not invariant under compaction: $pre -> $post")

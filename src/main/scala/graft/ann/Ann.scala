@@ -1972,7 +1972,7 @@ object Ann {
     * pruning intact) and the reconstructed codebook. NOTE: this reads
     * the BASE generation only; an index maintained through the
     * streamed lifecycle should load through [[graft.streaming
-    * .StreamingIngest.loadStreamedIndex]], which resolves the newest
+    * .IndexStore.openServeHandle]], which resolves the newest
     * published generation's codebook (a retrain re-means every code —
     * pairing new codes with the base codebook would score garbage).
     */
@@ -2006,7 +2006,7 @@ object Ann {
       s"$verb($path) — this index is stream-maintained " +
         s"(${managed.sorted.mkString(", ")} present): the base codes " +
         "table is not the serving truth. Read through " +
-        "StreamingIngest.loadStreamedCodes/loadStreamedIndex and write " +
+        "IndexStore.loadStreamedCodes/openServeHandle and write " +
         "through the drain (annIndexUpsertDrain) or deleteStreamed.")
   }
 

@@ -116,16 +116,12 @@ object ParquetDataset {
       .join(updates.select(keyCols.map(updates.col): _*), keyCols, "left_anti")
       .select(updates.columns.toIndexedSeq.map(existing.col): _*)
     val merged = survivors.union(updates).localCheckpoint()
-    val prevMode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      merged
-        .repartition(partitionCols.map(merged.col): _*)
-        .write.mode("overwrite")
-        .partitionBy(partitionCols: _*)
-        .parquet(path)
-    } finally
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
+    merged
+      .repartition(partitionCols.map(merged.col): _*)
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*)
+      .parquet(path)
   }
 
   /** Hive/Spark partition-path unescape: only `%XX` sequences decode
@@ -187,16 +183,12 @@ object ParquetDataset {
     val selected = spark.read.parquet(path)
       .where(predicates.reduce(_ || _))
       .localCheckpoint() // cut the file-source dependency before overwrite
-    val prevMode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      selected
-        .repartition(partitionCols.map(selected.col): _*)
-        .write.mode("overwrite")
-        .partitionBy(partitionCols: _*)
-        .parquet(path)
-    } finally
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
+    selected
+      .repartition(partitionCols.map(selected.col): _*)
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*)
+      .parquet(path)
     (overFull.size.toLong, overFull.map(_._2.length.toLong).sum)
   }
 }

@@ -7,11 +7,14 @@ import scala.jdk.CollectionConverters._
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Path,
+  RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
-/** [[GraftLocalFileSystem]]: `core-site.xml` makes it the `file:` file
+/** [[GraftLocalFileSystem]]: `core-site.xml` makes it (and its
+  * `AbstractFileSystem`, [[GraftLocalFileSystem.Fs]]) the `file:` file
   * system of every session, writes start no `chmod` process, and the
   * modes it sets are the ones Hadoop's own `setPermission` sets. */
 class GraftLocalFileSystemSpec extends SparkSpec {
@@ -28,39 +31,66 @@ class GraftLocalFileSystemSpec extends SparkSpec {
   private def perms(p: JPath): String =
     PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
 
+  /** The commands of the processes `body` starts whose command line names
+    * a path under `dir` (JFR records the whole JVM). */
+  private def processStarts(dir: JPath)(body: => Unit): Seq[String] = {
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try {
+      body
+      // a process the recording must see, so an empty census means
+      // no process started rather than nothing recorded
+      new ProcessBuilder("true").start().waitFor()
+    } finally rec.stop()
+    val jfr = dir.resolve("rec.jfr")
+    rec.dump(jfr)
+    rec.close()
+    val commands = RecordingFile.readAllEvents(jfr).asScala
+      .filter(_.getEventType.getName == "jdk.ProcessStart")
+      .map(_.getString("command")).toSeq
+    assert(commands.contains("true"), commands)
+    commands.filter(_.contains(dir.toString))
+  }
+
   test("core-site.xml selects it for file: in any new Configuration") {
     val fs = FileSystem.get(URI.create("file:///"), new Configuration())
     assert(fs.getClass == classOf[GraftLocalFileSystem])
     assert(spark.sparkContext.hadoopConfiguration.get("fs.file.impl") ==
       classOf[GraftLocalFileSystem].getName)
+    assert(FileContext.getLocalFSFileContext(new Configuration())
+      .getDefaultFileSystem.getClass == classOf[GraftLocalFileSystem.Fs])
   }
 
   test("partitioned parquet and text writes start no chmod process") {
     withTempDir { dir =>
       val df = spark.range(0, 40)
         .select(col("id").cast("string").as("v"), (col("id") % 4).as("p"))
-      val rec = new Recording()
-      rec.enable("jdk.ProcessStart")
-      rec.start()
-      try {
+      val commands = processStarts(dir) {
         df.write.partitionBy("p").parquet(dir.resolve("pq").toString)
         df.write.partitionBy("p").text(dir.resolve("txt").toString)
-        // a process the recording must see, so an empty census means
-        // no process started rather than nothing recorded
-        new ProcessBuilder("true").start().waitFor()
-      } finally rec.stop()
-      val jfr = dir.resolve("rec.jfr")
-      rec.dump(jfr)
-      rec.close()
-      val commands = RecordingFile.readAllEvents(jfr).asScala
-        .filter(_.getEventType.getName == "jdk.ProcessStart")
-        .map(_.getString("command")).toSeq
-      assert(commands.contains("true"), commands)
-      // JFR records the whole JVM: judge only this write's own paths
-      assert(!commands.exists(c =>
-        c.contains("chmod") && c.contains(dir.toString)), commands)
+      }
+      assert(!commands.exists(_.contains("chmod")), commands)
       assert(spark.read.parquet(dir.resolve("pq").toString).count() == 40)
       assert(spark.read.text(dir.resolve("txt").toString).count() == 40)
+    }
+  }
+
+  test("a streaming batch writes its checkpoint and sink log with no " +
+      "chmod process") {
+    withTempDir { dir =>
+      val in = dir.resolve("in").toString
+      spark.range(0, 10).write.parquet(in)
+      val stream = spark.readStream.schema("id long").parquet(in)
+      val commands = processStarts(dir) {
+        stream.writeStream.trigger(Trigger.AvailableNow()).format("parquet")
+          .option("checkpointLocation", dir.resolve("ckpt").toString)
+          .start(dir.resolve("out").toString)
+          .awaitTermination()
+      }
+      assert(!commands.exists(_.contains("chmod")), commands)
+      info(s"readlink processes: ${commands.count(_.contains("readlink"))}")
+      assert(spark.read.parquet(dir.resolve("out").toString).count() == 10)
     }
   }
 

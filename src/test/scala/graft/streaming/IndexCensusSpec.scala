@@ -14,7 +14,7 @@ import graft.ann.Ann
   * as a count change, not as noise in a timing.
   *
   * Fixture: a 6-row base index in 3 clusters with two staged batches in
-  * cluster 0; "+tomb" runs one [[StreamingIngest.deleteStreamed]] of a
+  * cluster 0; "+tomb" runs one [[IndexStore.deleteStreamed]] of a
   * cluster-0 id before the counted verb.
   */
 class IndexCensusSpec extends SparkSpec {
@@ -44,7 +44,7 @@ class IndexCensusSpec extends SparkSpec {
     }
     stage(0L, Seq((1L, unit(0), 0)))
     stage(1L, Seq((3L, unit(0), 0)))
-    if (tomb) assert(StreamingIngest.deleteStreamed(spark, st,
+    if (tomb) assert(IndexStore.deleteStreamed(spark, st,
       Seq(2L).toDF("vec_id"), "vec_id", "label") == 0L)
     st
   }
@@ -59,29 +59,37 @@ class IndexCensusSpec extends SparkSpec {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    val l0 = StreamingIngest.indexListings.get()
+    val l0 = IndexStore.indexListings.get()
     try {
       body
       drainListenerBus()
     } finally spark.sparkContext.removeSparkListener(listener)
-    (StreamingIngest.indexListings.get() - l0, jobs.get())
+    (IndexStore.indexListings.get() - l0, jobs.get())
   }
 
   private def cases: Seq[(String, Boolean, String => Unit)] = {
     def serve(st: String): Unit = {
-      StreamingIngest.openServeHandle(spark, st, "vec_id", "label"); ()
+      IndexStore.openServeHandle(spark, st, "vec_id", "label"); ()
     }
     def delete(st: String): Unit =
-      assert(StreamingIngest.deleteStreamed(spark, st,
+      assert(IndexStore.deleteStreamed(spark, st,
         Seq(4L).toDF("vec_id"), "vec_id", "label") >= 0L)
     def incremental(st: String): Unit =
-      StreamingIngest.compactStreamedIncremental(spark, st, "vec_id", "label")
-    def auto(expect: StreamingIngest.FoldDispatch, frac: Double)(
+      IndexStore.compactStreamedIncremental(spark, st, "vec_id", "label")
+    def full(st: String): Unit =
+      IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    def clone(st: String): Unit = IndexStore.cloneStreamedIndex(spark, st,
+      s"${graft.EntryKit.scratchTracked("graft_census_clone")}/idx",
+      "vec_id", "label")
+    def codes(st: String): Unit = {
+      IndexStore.loadStreamedCodes(spark, st, "vec_id", "label"); ()
+    }
+    def auto(expect: IndexStore.FoldDispatch, frac: Double)(
         st: String): Unit =
-      assert(StreamingIngest.compactStreamedAuto(spark, st, "vec_id",
+      assert(IndexStore.compactStreamedAuto(spark, st, "vec_id",
         "label", maxTouchedFrac = frac) == expect)
-    val inc = auto(StreamingIngest.FoldDispatch.Incremental, 0.5) _
-    val full = auto(StreamingIngest.FoldDispatch.Full, 0.2) _
+    val inc = auto(IndexStore.FoldDispatch.Incremental, 0.5) _
+    val fullAuto = auto(IndexStore.FoldDispatch.Full, 0.2) _
     Seq(
       ("openServeHandle", false, serve _),
       ("openServeHandle", true, serve _),
@@ -90,14 +98,20 @@ class IndexCensusSpec extends SparkSpec {
       ("compactStreamedIncremental", true, incremental _),
       ("compactStreamedAuto -> Incremental", false, inc),
       ("compactStreamedAuto -> Incremental", true, inc),
-      ("compactStreamedAuto -> Full", false, full),
-      ("compactStreamedAuto -> Full", true, full))
+      ("compactStreamedAuto -> Full", false, fullAuto),
+      ("compactStreamedAuto -> Full", true, fullAuto),
+      ("compactStreamedIndex", false, full _),
+      ("compactStreamedIndex", true, full _),
+      ("cloneStreamedIndex", false, clone _),
+      ("loadStreamedCodes", false, codes _))
   }
 
   // (listings, jobs) per verb. One state read lists staging, the root
   // and, once a delete has made it, `tombs/`; the serve adds its
-  // fingerprint listing. compactStreamedAuto costs exactly the fold it
-  // chose, because that fold writes from the plan the decision read.
+  // fingerprint listing. compactStreamedAuto writes from the plan its
+  // decision read: -> Full costs compactStreamedIndex plus the
+  // decision's own reads (the prior generation's and the window's
+  // clusters, and with a tombstone the jobs that read its clusters).
   private val expected: Map[String, (Long, Int)] = Map(
     "openServeHandle" -> (3L, 4),
     "openServeHandle +tomb" -> (4L, 5),
@@ -107,7 +121,11 @@ class IndexCensusSpec extends SparkSpec {
     "compactStreamedAuto -> Incremental" -> (7L, 6),
     "compactStreamedAuto -> Incremental +tomb" -> (8L, 13),
     "compactStreamedAuto -> Full" -> (7L, 4),
-    "compactStreamedAuto -> Full +tomb" -> (8L, 10))
+    "compactStreamedAuto -> Full +tomb" -> (8L, 10),
+    "compactStreamedIndex" -> (4L, 4),
+    "compactStreamedIndex +tomb" -> (5L, 7),
+    "cloneStreamedIndex" -> (4L, 8),
+    "loadStreamedCodes" -> (2L, 2))
 
   test("index verbs: each reads the index state once (listing and job " +
       "census)") {

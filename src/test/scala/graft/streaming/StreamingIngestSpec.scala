@@ -11,6 +11,12 @@ import java.sql.Timestamp
 class StreamingIngestSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The (codes, codebook, centroids) a serve of `st` resolves. */
+  private def resolve(st: String) = {
+    val h = IndexStore.openServeHandle(spark, st, "vec_id", "label")
+    (h.codes, h.codebook, h.cents)
+  }
+
   test("AvailableNow drain: first run takes everything, second run only " +
       "new files (checkpoint = bookmark)") {
     val tmp = graft.EntryKit.scratchTracked("graft_stream").toString
@@ -598,7 +604,7 @@ class StreamingIngestSpec extends SparkSpec {
     val st = graft.EntryKit.scratchTracked("graft_st_ann").toString
     build(st)
     odd.repartition(3).write.parquet(s"$st/in")
-    def drain(): Unit = StreamingIngest.annIndexUpsertDrain(
+    def drain(): Unit = IndexStore.annIndexUpsertDrain(
       spark.readStream.schema(odd.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$st/in"),
       st, s"$st/ckpt", "vec_id", "embedding", cents, "label")
@@ -611,35 +617,35 @@ class StreamingIngestSpec extends SparkSpec {
     def rows(codes: org.apache.spark.sql.DataFrame) = codes
       .select($"vec_id", col("label").cast("int"), $"codes")
       .as[(Long, Int, Seq[Int])].collect().sortBy(_._1).toSeq
-    val streamed = rows(StreamingIngest.loadStreamedCodes(
+    val streamed = rows(IndexStore.loadStreamedCodes(
       spark, st, "vec_id", "label"))
     val oneShot = rows(Ann.loadIndex(spark, os)._1)
     assert(streamed == oneShot && streamed.size == 8)
     // replay guard: draining again with a committed checkpoint (and
     // nothing new) must leave the index byte-equal, not double-upsert
     drain()
-    assert(rows(StreamingIngest.loadStreamedCodes(
+    assert(rows(IndexStore.loadStreamedCodes(
       spark, st, "vec_id", "label")) == streamed)
     // a half-written compacted version (crash before the _folded
     // marker) is invisible to readers
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$st/codes_v9"))
-    assert(rows(StreamingIngest.loadStreamedCodes(
+    assert(rows(IndexStore.loadStreamedCodes(
       spark, st, "vec_id", "label")) == streamed)
     // compaction folds staging into a published version: same serving
     // rows, and a second compaction is a no-op. The folded staging is
     // RETAINED one generation (a reader that resolved the pre-compact
     // view may still be scanning it) — only the NEXT compaction or an
     // explicit gc reclaims it
-    StreamingIngest.compactStreamedIndex(spark, st, "vec_id", "label")
-    assert(rows(StreamingIngest.loadStreamedCodes(
+    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    assert(rows(IndexStore.loadStreamedCodes(
       spark, st, "vec_id", "label")) == streamed)
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/stream")))
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/codes_v10/_folded")))
-    StreamingIngest.compactStreamedIndex(spark, st, "vec_id", "label")
-    assert(rows(StreamingIngest.loadStreamedCodes(
+    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    assert(rows(IndexStore.loadStreamedCodes(
       spark, st, "vec_id", "label")) == streamed)
     // crash window AFTER publication, BEFORE staging cleanup: a staged
     // batch at-or-below the folded high-water must be SKIPPED (it is
@@ -654,7 +660,7 @@ class StreamingIngestSpec extends SparkSpec {
         "vec_id")
       .write.mode("overwrite").partitionBy("label")
       .parquet(s"$st/stream/batch=$hw")
-    assert(rows(StreamingIngest.loadStreamedCodes(
+    assert(rows(IndexStore.loadStreamedCodes(
       spark, st, "vec_id", "label")) == streamed) // no double-count
     val fresh = Seq((9L, unit(6), 0)).toDF("vec_id", "embedding", "label")
     Ann.pqEncode(fresh, "vec_id", "embedding", cb)
@@ -662,13 +668,13 @@ class StreamingIngestSpec extends SparkSpec {
         "vec_id")
       .write.mode("overwrite").partitionBy("label")
       .parquet(s"$st/stream/batch=${hw + 5}")
-    val withFresh = rows(StreamingIngest.loadStreamedCodes(
+    val withFresh = rows(IndexStore.loadStreamedCodes(
       spark, st, "vec_id", "label"))
     assert(withFresh.size == 9 && withFresh.map(_._1).contains(9L))
     // ... and the next compaction folds exactly the unfolded tail,
     // reclaiming the staging the PRIOR version had folded (grace over)
-    StreamingIngest.compactStreamedIndex(spark, st, "vec_id", "label")
-    assert(rows(StreamingIngest.loadStreamedCodes(
+    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    assert(rows(IndexStore.loadStreamedCodes(
       spark, st, "vec_id", "label")) == withFresh)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/stream/batch=0")))
@@ -680,7 +686,7 @@ class StreamingIngestSpec extends SparkSpec {
     // one-checkpoint-per-index guarantee for the index's lifetime;
     // deleting it would let a different checkpoint claim the staging
     // area)
-    StreamingIngest.gcStreamedIndex(spark, st)
+    IndexStore.gcStreamedIndex(spark, st)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/codes_v10")))
     assert(java.nio.file.Files.exists(
@@ -692,7 +698,7 @@ class StreamingIngestSpec extends SparkSpec {
       .toArray
     assert(leftover.isEmpty,
       s"staging sweep left batches: ${leftover.mkString(",")}")
-    assert(rows(StreamingIngest.loadStreamedCodes(
+    assert(rows(IndexStore.loadStreamedCodes(
       spark, st, "vec_id", "label")) == withFresh)
   }
 
@@ -716,7 +722,7 @@ class StreamingIngestSpec extends SparkSpec {
     Ann.saveIndex(Ann.pqEncode(even, "vec_id", "embedding", cb)
       .join(even.select($"vec_id", $"label"), "vec_id"), "label", cb, st)
     odd.repartition(3).write.parquet(s"$st/in")
-    StreamingIngest.annIndexUpsertDrain(
+    IndexStore.annIndexUpsertDrain(
       spark.readStream.schema(odd.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$st/in"),
       st, s"$st/ckpt", "vec_id", "embedding", cents, "label")
@@ -731,7 +737,7 @@ class StreamingIngestSpec extends SparkSpec {
         "vec_id")
       .write.mode("overwrite").partitionBy("label")
       .parquet(s"$st/stream/batch=3")
-    StreamingIngest.compactStreamedIndex(spark, st, "vec_id", "label",
+    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label",
       upTo = Some(2L))
     // the published marker and the folded set must agree: marker = 2,
     // version holds exactly the 8 base+drained ids (NOT 9)
@@ -745,13 +751,13 @@ class StreamingIngestSpec extends SparkSpec {
     assert(folded == (0L to 7L))
     // serve: every id exactly once — the late batch via the staging
     // leg, never ALSO from the folded version (the pre-fix defect)
-    val served = StreamingIngest.loadStreamedCodes(
+    val served = IndexStore.loadStreamedCodes(
         spark, st, "vec_id", "label")
       .select($"vec_id").as[Long].collect().sorted.toSeq
     assert(served == (0L to 7L) :+ 9L)
     // the next compaction folds the late batch; serve invariant
-    StreamingIngest.compactStreamedIndex(spark, st, "vec_id", "label")
-    assert(StreamingIngest.loadStreamedCodes(spark, st, "vec_id", "label")
+    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    assert(IndexStore.loadStreamedCodes(spark, st, "vec_id", "label")
       .select($"vec_id").as[Long].collect().sorted.toSeq ==
       (0L to 7L) :+ 9L)
   }
@@ -775,7 +781,7 @@ class StreamingIngestSpec extends SparkSpec {
     Ann.saveIndex(Ann.pqEncode(even, "vec_id", "embedding", cb)
       .join(even.select($"vec_id", $"label"), "vec_id"), "label", cb, st)
     odd.coalesce(1).write.parquet(s"$st/in")
-    def drain(ckpt: String): Unit = StreamingIngest.annIndexUpsertDrain(
+    def drain(ckpt: String): Unit = IndexStore.annIndexUpsertDrain(
       spark.readStream.schema(odd.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$st/in"),
       st, ckpt, "vec_id", "embedding", cents, "label")
@@ -792,8 +798,8 @@ class StreamingIngestSpec extends SparkSpec {
     // high-water now guards: a fresh checkpoint restarts batchId at 0,
     // which the serving view would skip and the next compaction would
     // delete — fail fast instead
-    StreamingIngest.compactStreamedIndex(spark, st, "vec_id", "label")
-    StreamingIngest.gcStreamedIndex(spark, st)
+    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    IndexStore.gcStreamedIndex(spark, st)
     val stale = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       drain(s"$st/ckpt3")
     }
@@ -802,7 +808,7 @@ class StreamingIngestSpec extends SparkSpec {
         _.getMessage.contains("at-or-below the published")))
     // the ORIGINAL checkpoint continues fine (nothing new: no-op)
     drain(s"$st/ckpt")
-    assert(StreamingIngest.loadStreamedCodes(spark, st, "vec_id", "label")
+    assert(IndexStore.loadStreamedCodes(spark, st, "vec_id", "label")
       .count() == 6)
   }
 
@@ -831,14 +837,14 @@ class StreamingIngestSpec extends SparkSpec {
         .write.mode("overwrite").partitionBy("label")
         .parquet(s"$st/stream/batch=$b")
     }
-    def served() = StreamingIngest.loadStreamedCodes(
+    def served() = IndexStore.loadStreamedCodes(
         spark, st, "vec_id", "label")
       .select($"vec_id", col("label").cast("int"), $"codes")
       .as[(Long, Int, Seq[Int])].collect().sortBy(_._1).toSeq
     // batch 0 lands only in cluster 0
     stage(0L, Seq((1L, unit(0), 0), (3L, unit(0), 0)))
     val pre1 = served()
-    StreamingIngest.compactStreamedIncremental(spark, st, "vec_id", "label")
+    IndexStore.compactStreamedIncremental(spark, st, "vec_id", "label")
     assert(served() == pre1 && pre1.size == 8)
     // v1 is a MANIFEST generation: only cluster 0 materialized in its
     // data/; clusters 1/2 still point at the base codes
@@ -855,7 +861,7 @@ class StreamingIngestSpec extends SparkSpec {
     // 0), base (cluster 2), and its own data (cluster 1)
     stage(1L, Seq((5L, unit(2), 1)))
     val pre2 = served()
-    StreamingIngest.compactStreamedIncremental(spark, st, "vec_id", "label")
+    IndexStore.compactStreamedIncremental(spark, st, "vec_id", "label")
     assert(served() == pre2 && pre2.size == 9)
     val m2 = spark.read.parquet(s"$st/codes_v2/_manifest")
       .as[(String, String)].collect().toMap
@@ -867,12 +873,12 @@ class StreamingIngestSpec extends SparkSpec {
     // 0 never touched again), so it must survive
     stage(2L, Seq((7L, unit(2), 1)))
     val pre3 = served()
-    StreamingIngest.compactStreamedIncremental(spark, st, "vec_id", "label")
+    IndexStore.compactStreamedIncremental(spark, st, "vec_id", "label")
     assert(served() == pre3 && pre3.size == 10)
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/codes_v1/data/label=0")))
     // explicit gc keeps referenced history too
-    StreamingIngest.gcStreamedIndex(spark, st)
+    IndexStore.gcStreamedIndex(spark, st)
     assert(served() == pre3)
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/codes_v1/data/label=0")))
@@ -880,9 +886,9 @@ class StreamingIngestSpec extends SparkSpec {
     // after the next gc the referenced history is reclaimable
     stage(3L, Seq((9L, unit(4), 2)))
     val pre4 = served()
-    StreamingIngest.compactStreamedIndex(spark, st, "vec_id", "label")
+    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
     assert(served() == pre4 && pre4.size == 11)
-    StreamingIngest.gcStreamedIndex(spark, st)
+    IndexStore.gcStreamedIndex(spark, st)
     assert(served() == pre4)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/codes_v1")))
@@ -912,10 +918,9 @@ class StreamingIngestSpec extends SparkSpec {
     Ann.upsertIndex(spark, st, odd, "vec_id", "embedding", cents0, "label")
     // retrain on the full current corpus with full-corpus models
     val centsFull = Ann.pivotCentroids(emb, "label", "vec_id", "embedding")
-    StreamingIngest.retrainStreamedIndex(spark, st, emb,
+    IndexStore.retrainStreamedIndex(spark, st, emb,
       "vec_id", "embedding", centsFull, "label", m = 4, ksub = 4)
-    val (codes, cb2, cents2) = StreamingIngest.loadStreamedIndex(
-      spark, st, "vec_id", "label")
+    val (codes, cb2, cents2) = resolve(st)
     // from-scratch twin: same corpus, same seed rule, same assignment
     val os = graft.EntryKit.scratchTracked("graft_rt_twin").toString
     val cbF = Ann.pqSeedCodebook(emb, "vec_id", "embedding", m = 4, ksub = 4)
@@ -944,12 +949,12 @@ class StreamingIngestSpec extends SparkSpec {
     val lockP = java.nio.file.Paths.get(s"$st/_retrain_lock")
     java.nio.file.Files.createFile(lockP)
     intercept[IllegalStateException] {
-      StreamingIngest.retrainStreamedIndex(spark, st, emb,
+      IndexStore.retrainStreamedIndex(spark, st, emb,
         "vec_id", "embedding", centsFull, "label", m = 4, ksub = 4)
     }
     val fresh = Seq((9L, unit(6), 0)).toDF("vec_id", "embedding", "label")
     fresh.coalesce(1).write.parquet(s"$st/in")
-    def drainFresh(): Unit = StreamingIngest.annIndexUpsertDrain(
+    def drainFresh(): Unit = IndexStore.annIndexUpsertDrain(
       spark.readStream.schema(fresh.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$st/in"),
       st, s"$st/ckpt", "vec_id", "embedding", cents0, "label")
@@ -966,7 +971,7 @@ class StreamingIngestSpec extends SparkSpec {
     // generation's models, not the base ones the index was born with;
     // the lock-failed batch replays here off the same checkpoint
     drainFresh()
-    val served = StreamingIngest.loadStreamedCodes(
+    val served = IndexStore.loadStreamedCodes(
       spark, st, "vec_id", "label")
     assert(served.count() == 9)
     val newCodes = served.where($"vec_id" === 9L)
@@ -978,9 +983,8 @@ class StreamingIngestSpec extends SparkSpec {
     // into its generation — versionedModels resolves the newest
     // generation only, and falling back to the base codebook would
     // pair post-retrain codes with pre-retrain models
-    StreamingIngest.compactStreamedIndex(spark, st, "vec_id", "label")
-    val (_, cbAfter, centsAfter) = StreamingIngest.loadStreamedIndex(
-      spark, st, "vec_id", "label")
+    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    val (_, cbAfter, centsAfter) = resolve(st)
     assert(cbAfter.cents.map(_.map(_.toSeq).toSeq).toSeq ==
       cbF.cents.map(_.map(_.toSeq).toSeq).toSeq)
     assert(centsAfter.isDefined)
@@ -1012,25 +1016,23 @@ class StreamingIngestSpec extends SparkSpec {
     val centsFull = Ann.pivotCentroids(emb, "label", "vec_id", "embedding")
     // below threshold: nothing can sit under cos -1 — no retrain, no
     // new generation, the base models keep serving
-    assert(!StreamingIngest.retrainOnDrift(spark, st, emb,
+    assert(!IndexStore.retrainOnDrift(spark, st, emb,
       "vec_id", "embedding", cents0, centsFull, "label",
       m = 4, ksub = 4, minCosine = -1.0))
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/codes_v1")))
-    val (_, cbBefore, centsBefore) = StreamingIngest.loadStreamedIndex(
-      spark, st, "vec_id", "label")
+    val (_, cbBefore, centsBefore) = resolve(st)
     assert(centsBefore.isEmpty)
     assert(cbBefore.cents.map(_.map(_.toSeq).toSeq).toSeq ==
       cb0.cents.map(_.map(_.toSeq).toSeq).toSeq)
     // the drifted state crosses a 0.999 worst-cluster threshold — the
     // retrain fires and publishes the next generation atomically
-    assert(StreamingIngest.retrainOnDrift(spark, st, emb,
+    assert(IndexStore.retrainOnDrift(spark, st, emb,
       "vec_id", "embedding", cents0, centsFull, "label",
       m = 4, ksub = 4, minCosine = 0.999))
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/codes_v1/_folded")))
-    val (codes, cb2, cents2) = StreamingIngest.loadStreamedIndex(
-      spark, st, "vec_id", "label")
+    val (codes, cb2, cents2) = resolve(st)
     val cbF = Ann.pqSeedCodebook(emb, "vec_id", "embedding", m = 4, ksub = 4)
     assert(cb2.cents.map(_.map(_.toSeq).toSeq).toSeq ==
       cbF.cents.map(_.map(_.toSeq).toSeq).toSeq)
@@ -1042,11 +1044,10 @@ class StreamingIngestSpec extends SparkSpec {
     // policy is re-entrant, so a second call may fire again on a
     // corpus whose per-cluster spread keeps the worst cosine low; what
     // must hold is that serving stays from-scratch-equivalent
-    StreamingIngest.retrainOnDrift(spark, st, emb,
+    IndexStore.retrainOnDrift(spark, st, emb,
       "vec_id", "embedding", cents0, centsFull, "label",
       m = 4, ksub = 4, minCosine = 0.999)
-    val (codesAfter, cbAfter, _) = StreamingIngest.loadStreamedIndex(
-      spark, st, "vec_id", "label")
+    val (codesAfter, cbAfter, _) = resolve(st)
     assert(cbAfter.cents.map(_.map(_.toSeq).toSeq).toSeq ==
       cbF.cents.map(_.map(_.toSeq).toSeq).toSeq)
     assert(codesAfter.count() == 8)
@@ -1076,7 +1077,7 @@ class StreamingIngestSpec extends SparkSpec {
         .write.mode("overwrite").partitionBy("label")
         .parquet(s"$st/stream/batch=$b")
     }
-    def served() = StreamingIngest.loadStreamedCodes(
+    def served() = IndexStore.loadStreamedCodes(
         spark, st, "vec_id", "label")
       .select($"vec_id").as[Long].collect().sorted.toSeq
     def hasManifest(v: Long) = java.nio.file.Files.exists(
@@ -1085,7 +1086,7 @@ class StreamingIngestSpec extends SparkSpec {
     // data = 2 ≤ maxRoots → INCREMENTAL (manifest generation)
     stage(0L, Seq((1L, unit(0), 0)))
     val preA = served()
-    StreamingIngest.compactStreamedAuto(spark, st, "vec_id", "label",
+    IndexStore.compactStreamedAuto(spark, st, "vec_id", "label",
       maxRoots = 2, maxTouchedFrac = 0.5)
     assert(served() == preA && hasManifest(1L))
     // fold B: touches 1/3 again, but untouched clusters now live on
@@ -1093,7 +1094,7 @@ class StreamingIngestSpec extends SparkSpec {
     // 3 > maxRoots — PROMOTED to a full fold (chain width resets)
     stage(1L, Seq((5L, unit(2), 1)))
     val preB = served()
-    StreamingIngest.compactStreamedAuto(spark, st, "vec_id", "label",
+    IndexStore.compactStreamedAuto(spark, st, "vec_id", "label",
       maxRoots = 2, maxTouchedFrac = 0.5)
     assert(served() == preB)
     assert(!hasManifest(2L) && java.nio.file.Files.exists(
@@ -1103,13 +1104,13 @@ class StreamingIngestSpec extends SparkSpec {
     // rewrite most of the index anyway)
     stage(2L, Seq((3L, unit(0), 0), (7L, unit(2), 1)))
     val preC = served()
-    StreamingIngest.compactStreamedAuto(spark, st, "vec_id", "label",
+    IndexStore.compactStreamedAuto(spark, st, "vec_id", "label",
       maxRoots = 100, maxTouchedFrac = 0.5)
     assert(served() == preC && preC.size == 10)
     assert(!hasManifest(3L) && java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/codes_v3/_folded")))
     // nothing unfolded: a no-op
-    StreamingIngest.compactStreamedAuto(spark, st, "vec_id", "label")
+    IndexStore.compactStreamedAuto(spark, st, "vec_id", "label")
     assert(served() == preC)
   }
 
@@ -1138,29 +1139,29 @@ class StreamingIngestSpec extends SparkSpec {
         .parquet(s"$st/stream/batch=$b")
     }
     stage(0L, Seq((1L, unit(0), 0)))
-    StreamingIngest.compactStreamedIncremental(spark, st, "vec_id", "label")
+    IndexStore.compactStreamedIncremental(spark, st, "vec_id", "label")
     // v1 is a manifest generation with one entry per cluster (3); a
     // budget of 2 must fail fast — cap+1 probe, never the full map
     val read = intercept[IllegalStateException] {
-      StreamingIngest.loadStreamedCodes(spark, st, "vec_id", "label",
+      IndexStore.loadStreamedCodes(spark, st, "vec_id", "label",
         manifestBudget = 2)
     }
     assert(read.getMessage.contains("more than 2 entries"))
     // the default budget serves fine
-    assert(StreamingIngest.loadStreamedCodes(spark, st, "vec_id", "label")
+    assert(IndexStore.loadStreamedCodes(spark, st, "vec_id", "label")
       .count() == 7)
     // an incremental fold resolving an over-budget PRIOR manifest
     // fails the same way
     stage(1L, Seq((3L, unit(0), 0)))
     val fold = intercept[IllegalStateException] {
-      StreamingIngest.compactStreamedIncremental(
+      IndexStore.compactStreamedIncremental(
         spark, st, "vec_id", "label", manifestBudget = 2)
     }
     assert(fold.getMessage.contains("more than 2 entries"))
     // the advertised remedy: a FULL fold materializes one generation
     // with no manifest — any budget reads it
-    StreamingIngest.compactStreamedIndex(spark, st, "vec_id", "label")
-    assert(StreamingIngest.loadStreamedCodes(spark, st, "vec_id", "label",
+    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    assert(IndexStore.loadStreamedCodes(spark, st, "vec_id", "label",
       manifestBudget = 1).count() == 8)
   }
 
@@ -1185,7 +1186,7 @@ class StreamingIngestSpec extends SparkSpec {
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$st/stream/.batch_tmp_7"))
     val blocked = intercept[IllegalStateException] {
-      StreamingIngest.retrainStreamedIndex(spark, st, emb,
+      IndexStore.retrainStreamedIndex(spark, st, emb,
         "vec_id", "embedding", cents, "label", m = 4, ksub = 4)
     }
     assert(blocked.getMessage.contains("mid-stage"))
@@ -1193,7 +1194,7 @@ class StreamingIngestSpec extends SparkSpec {
     // crashed-drain manual remedy) lets the retrain proceed
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(s"$st/stream/.batch_tmp_7"))
-    StreamingIngest.retrainStreamedIndex(spark, st, emb,
+    IndexStore.retrainStreamedIndex(spark, st, emb,
       "vec_id", "embedding", cents, "label", m = 4, ksub = 4)
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/codes_v1/_folded")))
@@ -1211,7 +1212,7 @@ class StreamingIngestSpec extends SparkSpec {
     val lockP = java.nio.file.Paths.get(s"$st/_retrain_lock")
     java.nio.file.Files.createFile(lockP)
     val aborted = intercept[IllegalStateException] {
-      StreamingIngest.commitStagedBatch(spark, st, 9L)
+      IndexStore.commitStagedBatch(spark, st, 9L)
     }
     assert(aborted.getMessage.contains("retrain in progress"))
     assert(!java.nio.file.Files.exists(
@@ -1221,10 +1222,10 @@ class StreamingIngestSpec extends SparkSpec {
     // lock cleared: the replayed publish (tmp rewritten, commit) lands
     java.nio.file.Files.delete(lockP)
     writeTmp()
-    StreamingIngest.commitStagedBatch(spark, st, 9L)
+    IndexStore.commitStagedBatch(spark, st, 9L)
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/stream/batch=9")))
-    assert(StreamingIngest.loadStreamedCodes(spark, st, "vec_id", "label")
+    assert(IndexStore.loadStreamedCodes(spark, st, "vec_id", "label")
       .count() == 5)
   }
 
@@ -1251,7 +1252,7 @@ class StreamingIngestSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$st/stream/_run"))
     val fresh = Seq((1L, unit(4), 2)).toDF("vec_id", "embedding", "label")
     fresh.coalesce(1).write.parquet(s"$st/in")
-    StreamingIngest.annIndexUpsertDrain(
+    IndexStore.annIndexUpsertDrain(
       spark.readStream.schema(fresh.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$st/in"),
       st, s"$st/ckpt", "vec_id", "embedding", cents, "label")
@@ -1263,7 +1264,7 @@ class StreamingIngestSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$st/stream/_run")), "UTF-8").trim
     assert(owner.startsWith(s"$st/ckpt#") &&
       owner.length > s"$st/ckpt#".length, owner)
-    assert(StreamingIngest.loadStreamedCodes(spark, st, "vec_id", "label")
+    assert(IndexStore.loadStreamedCodes(spark, st, "vec_id", "label")
       .count() == 6)
     // a LEGACY path-only marker (pre-instance-token run) with the
     // SAME checkpoint upgrades in place and the drain proceeds —
@@ -1277,7 +1278,7 @@ class StreamingIngestSpec extends SparkSpec {
     try lo.write(s"$st/ckpt".getBytes("UTF-8")) finally lo.close()
     val fresh2 = Seq((3L, unit(4), 2)).toDF("vec_id", "embedding", "label")
     fresh2.coalesce(1).write.mode("append").parquet(s"$st/in")
-    StreamingIngest.annIndexUpsertDrain(
+    IndexStore.annIndexUpsertDrain(
       spark.readStream.schema(fresh2.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$st/in"),
       st, s"$st/ckpt", "vec_id", "embedding", cents, "label")
@@ -1285,7 +1286,7 @@ class StreamingIngestSpec extends SparkSpec {
     val owner2 = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$st/stream/_run")), "UTF-8").trim
     assert(owner2 == owner, s"legacy claim not upgraded: $owner2")
-    assert(StreamingIngest.loadStreamedCodes(spark, st, "vec_id", "label")
+    assert(IndexStore.loadStreamedCodes(spark, st, "vec_id", "label")
       .count() == 7)
   }
 
@@ -1315,11 +1316,11 @@ class StreamingIngestSpec extends SparkSpec {
     }
     // v1: a FULL fold materializes everything
     stage(0L, Seq((1L, unit(0), 0)))
-    StreamingIngest.compactStreamedIndex(spark, st, "vec_id", "label")
+    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
     // v2: an INCREMENTAL fold touching only cluster 0 — its manifest
     // points clusters 1/2 at the materialized codes_v1
     stage(1L, Seq((3L, unit(0), 0)))
-    StreamingIngest.compactStreamedIncremental(spark, st, "vec_id", "label")
+    IndexStore.compactStreamedIncremental(spark, st, "vec_id", "label")
     val m2 = spark.read.parquet(s"$st/codes_v2/_manifest")
       .as[(String, String)].collect().toMap
     assert(m2("1") == s"$st/codes_v1" && m2("2") == s"$st/codes_v1")
@@ -1331,7 +1332,7 @@ class StreamingIngestSpec extends SparkSpec {
     // even though v2's live manifest still materializes clusters 1/2
     // from it — an in-flight reader that resolved v2 before the publish
     // would die with FileNotFound. The grace exception must keep v1.
-    StreamingIngest.retrainStreamedIndex(spark, st, corpus,
+    IndexStore.retrainStreamedIndex(spark, st, corpus,
       "vec_id", "embedding", centsFull, "label", m = 4, ksub = 4)
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/codes_v3/_folded")))
@@ -1347,8 +1348,7 @@ class StreamingIngestSpec extends SparkSpec {
         java.nio.file.Paths.get(s"$root/label=$v")), s"$v -> $root")
     }
     // serving on v3 equals a from-scratch build on the corpus
-    val (codes, cb2, _) = StreamingIngest.loadStreamedIndex(
-      spark, st, "vec_id", "label")
+    val (codes, cb2, _) = resolve(st)
     val cbF = Ann.pqSeedCodebook(corpus, "vec_id", "embedding", m = 4, ksub = 4)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select($"vec_id", col("label").cast("int"), $"codes")
@@ -1363,7 +1363,7 @@ class StreamingIngestSpec extends SparkSpec {
     // once v3 (materialized) is itself superseded, v1 leaves the grace
     // window and the next publication's GC reclaims it with v2
     stage(9L, Seq((5L, unit(2), 1)))
-    StreamingIngest.compactStreamedIndex(spark, st, "vec_id", "label")
+    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/codes_v1")))
     assert(!java.nio.file.Files.exists(
@@ -1387,7 +1387,7 @@ class StreamingIngestSpec extends SparkSpec {
     val st = graft.EntryKit.scratchTracked("graft_epoch").toString
     Ann.saveIndex(Ann.pqEncode(emb, "vec_id", "embedding", cb)
       .join(emb.select($"vec_id", $"label"), "vec_id"), "label", cb, st)
-    assert(StreamingIngest.modelEpoch(spark, st) == 0L)
+    assert(IndexStore.modelEpoch(spark, st) == 0L)
     val batch = Seq((9L, unit(6), 0)).toDF("vec_id", "embedding", "label")
     def writeTmp(b: Long): Unit =
       Ann.encodeAssign(batch, "vec_id", "embedding", cb, cents, "label")
@@ -1399,13 +1399,13 @@ class StreamingIngestSpec extends SparkSpec {
     // the retrain saw no tmp (this is exactly the interleaving the
     // tmp-before-lock-recheck protocol cannot observe), but the epoch
     // moved
-    val epochAtResolve = StreamingIngest.modelEpoch(spark, st)
-    StreamingIngest.retrainStreamedIndex(spark, st, emb,
+    val epochAtResolve = IndexStore.modelEpoch(spark, st)
+    IndexStore.retrainStreamedIndex(spark, st, emb,
       "vec_id", "embedding", cents, "label", m = 4, ksub = 4)
-    assert(StreamingIngest.modelEpoch(spark, st) == 1L)
+    assert(IndexStore.modelEpoch(spark, st) == 1L)
     writeTmp(9L)
     val aborted = intercept[IllegalStateException] {
-      StreamingIngest.commitStagedBatch(spark, st, 9L, epochAtResolve)
+      IndexStore.commitStagedBatch(spark, st, 9L, epochAtResolve)
     }
     assert(aborted.getMessage.contains("model epoch moved"))
     assert(!java.nio.file.Files.exists(
@@ -1414,17 +1414,17 @@ class StreamingIngestSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$st/stream/batch=9")))
     // the replay resolves the NEW models and lands
     writeTmp(9L)
-    StreamingIngest.commitStagedBatch(spark, st, 9L,
-      StreamingIngest.modelEpoch(spark, st))
+    IndexStore.commitStagedBatch(spark, st, 9L,
+      IndexStore.modelEpoch(spark, st))
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/stream/batch=9")))
     // a compaction publishes a new generation but CARRIES the model
     // epoch — a batch staged across it must NOT abort
-    val epochPreFold = StreamingIngest.modelEpoch(spark, st)
+    val epochPreFold = IndexStore.modelEpoch(spark, st)
     writeTmp(10L)
-    StreamingIngest.compactStreamedIndex(spark, st, "vec_id", "label")
-    assert(StreamingIngest.modelEpoch(spark, st) == epochPreFold)
-    StreamingIngest.commitStagedBatch(spark, st, 10L, epochPreFold)
+    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    assert(IndexStore.modelEpoch(spark, st) == epochPreFold)
+    IndexStore.commitStagedBatch(spark, st, 10L, epochPreFold)
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/stream/batch=10")))
   }
@@ -1452,7 +1452,7 @@ class StreamingIngestSpec extends SparkSpec {
     val fresh = Seq((1L, unit(4), 1)).toDF("vec_id", "embedding", "label")
     fresh.coalesce(1).write.parquet(s"$st/in")
     val failed = intercept[Exception] {
-      StreamingIngest.annIndexUpsertDrain(
+      IndexStore.annIndexUpsertDrain(
         spark.readStream.schema(fresh.schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$st/in"),
         st, s"$st/ckpt", "vec_id", "embedding", cents, "label")
@@ -1491,19 +1491,19 @@ class StreamingIngestSpec extends SparkSpec {
     // deterministically as an explicit bound: the policy evaluated
     // batches ≤ 1, so the dispatched fold must cover exactly ≤ 1
     stage(2L, Seq((5L, unit(2), 1)))
-    StreamingIngest.compactStreamedAuto(spark, st, "vec_id", "label",
+    IndexStore.compactStreamedAuto(spark, st, "vec_id", "label",
       upTo = Some(1L))
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/stream/batch=2")))
-    val served = StreamingIngest.loadStreamedCodes(
+    val served = IndexStore.loadStreamedCodes(
         spark, st, "vec_id", "label")
       .select($"vec_id").as[Long].collect().sorted.toSeq
     assert(served == Seq(0L, 1L, 2L, 3L, 4L, 5L, 6L)) // overlay serves 5
     val hw1 = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$st/codes_v1/_folded")), "UTF-8").trim
     assert(hw1 == "1") // the fold's snapshot is the policy's window
-    StreamingIngest.compactStreamedAuto(spark, st, "vec_id", "label")
-    val served2 = StreamingIngest.loadStreamedCodes(
+    IndexStore.compactStreamedAuto(spark, st, "vec_id", "label")
+    val served2 = IndexStore.loadStreamedCodes(
         spark, st, "vec_id", "label")
       .select($"vec_id").as[Long].collect().sorted.toSeq
     assert(served2 == Seq(0L, 1L, 2L, 3L, 4L, 5L, 6L))
@@ -1530,16 +1530,15 @@ class StreamingIngestSpec extends SparkSpec {
     }
     val flatIdx = build("flat")
     val routedIdx = build("routed")
-    StreamingIngest.retrainStreamedIndex(spark, flatIdx, emb,
+    IndexStore.retrainStreamedIndex(spark, flatIdx, emb,
       "vec_id", "embedding", cents, "label", m = 4, ksub = 4)
     // superCount = 2 of 3 centroids, probe-all: candidates = probed
     // supers' members ∪ supers = the full table — provably exact
-    StreamingIngest.retrainStreamedIndex(spark, routedIdx, emb,
+    IndexStore.retrainStreamedIndex(spark, routedIdx, emb,
       "vec_id", "embedding", cents, "label", m = 4, ksub = 4,
       router = Some((2, 2)))
     def serve(st: String) = {
-      val (codes, cbv, _) = StreamingIngest.loadStreamedIndex(
-        spark, st, "vec_id", "label")
+      val (codes, cbv, _) = resolve(st)
       (codes.select($"vec_id", $"label".cast("long"), $"codes")
         .as[(Long, Long, Seq[Int])].collect().sortBy(_._1).toSeq,
         cbv.cents.map(_.map(_.toSeq).toSeq).toSeq)
@@ -1576,17 +1575,17 @@ class StreamingIngestSpec extends SparkSpec {
       .join(emb.select($"vec_id", $"label"), "vec_id"), "label", cb, st)
     // minCosine = -1 still never fires (cos = -1 is not < -1): the
     // no-fire pin holds even for the missing-cluster signal
-    assert(!StreamingIngest.retrainOnDrift(spark, st, emb,
+    assert(!IndexStore.retrainOnDrift(spark, st, emb,
       "vec_id", "embedding", baseCents, newCents, "label",
       m = 4, ksub = 4, minCosine = -1.0))
     // an empty corpus has nothing to retrain on: no fire, even though
     // every serving cluster is "missing"
-    assert(!StreamingIngest.retrainOnDrift(spark, st, emb.limit(0),
+    assert(!IndexStore.retrainOnDrift(spark, st, emb.limit(0),
       "vec_id", "embedding", baseCents, newCents, "label",
       m = 4, ksub = 4, minCosine = 0.999))
     // the orphaned serving cluster fires the trigger at a threshold
     // the present clusters' cos = 1.0 would never cross
-    assert(StreamingIngest.retrainOnDrift(spark, st, emb,
+    assert(IndexStore.retrainOnDrift(spark, st, emb,
       "vec_id", "embedding", baseCents, newCents, "label",
       m = 4, ksub = 4, minCosine = 0.999))
     assert(java.nio.file.Files.exists(
@@ -1604,11 +1603,11 @@ class StreamingIngestSpec extends SparkSpec {
         Ann.pqSeedCodebook(emb2, "vec_id", "embedding", m = 4, ksub = 4))
       .join(emb2.select($"vec_id", $"label"), "vec_id"), "label",
       Ann.pqSeedCodebook(emb2, "vec_id", "embedding", m = 4, ksub = 4), st2)
-    assert(StreamingIngest.retrainOnDrift(spark, st2, emb2,
+    assert(IndexStore.retrainOnDrift(spark, st2, emb2,
       "vec_id", "embedding", cents2,
       Ann.pivotCentroids(emb2, "label", "vec_id", "embedding"), "label",
       m = 4, ksub = 4, minCosine = 0.999, probeFraction = 0.5))
-    assert(StreamingIngest.loadStreamedCodes(spark, st2, "vec_id", "label")
+    assert(IndexStore.loadStreamedCodes(spark, st2, "vec_id", "label")
       .count() == 4) // retrain covered the FULL corpus, not the sample
   }
 
@@ -1636,7 +1635,7 @@ class StreamingIngestSpec extends SparkSpec {
         .write.mode("overwrite").partitionBy("label")
         .parquet(s"$st/stream/batch=$b")
     }
-    def servedIds() = StreamingIngest.loadStreamedCodes(
+    def servedIds() = IndexStore.loadStreamedCodes(
         spark, st, "vec_id", "label")
       .select($"vec_id").as[Long].collect().sorted.toSeq
     stage(0L, Seq((1L, unit(0), 0), (3L, unit(0), 0)))
@@ -1644,29 +1643,29 @@ class StreamingIngestSpec extends SparkSpec {
     assert(servedIds() == Seq(0L, 1L, 2L, 3L, 4L, 5L, 6L, 8L, 10L))
     // delete one base row and one staged row: both vanish from the
     // serve at once, nothing else moves
-    val seq0 = StreamingIngest.deleteStreamed(spark, st,
+    val seq0 = IndexStore.deleteStreamed(spark, st,
       Seq(2L, 5L).toDF("vec_id"), "vec_id", "label")
     assert(seq0 == 0L)
     assert(servedIds() == Seq(0L, 1L, 3L, 4L, 6L, 8L, 10L))
     // the serve plan stays shuffle-free: the kill is a broadcast
     // anti-join (a BroadcastExchange of the delete-sized tombstones is
     // the ONLY exchange), never a keyed exchange of the corpus
-    val plan = StreamingIngest.loadStreamedCodes(
+    val plan = IndexStore.loadStreamedCodes(
       spark, st, "vec_id", "label").queryExecution.executedPlan.toString
     assert(!plan.contains("hashpartitioning") &&
       !plan.contains("rangepartitioning"), s"unexpected shuffle:\n$plan")
     assert(plan.contains("BroadcastExchange"), s"kill not broadcast:\n$plan")
     // deleting an absent id (or one already dead) stages nothing
-    assert(StreamingIngest.deleteStreamed(spark, st,
+    assert(IndexStore.deleteStreamed(spark, st,
       Seq(99L).toDF("vec_id"), "vec_id", "label") == -1L)
-    assert(StreamingIngest.deleteStreamed(spark, st,
+    assert(IndexStore.deleteStreamed(spark, st,
       Seq(2L).toDF("vec_id"), "vec_id", "label") == -1L)
     // a re-insert staged ABOVE the tombstone's as-of survives it
     stage(2L, Seq((5L, unit(2), 1)))
     assert(servedIds() == Seq(0L, 1L, 3L, 4L, 5L, 6L, 8L, 10L))
     // the fold consumes the tombstone: same serve, physically absent,
     // applied marker recorded, tombstone retained ONE generation
-    StreamingIngest.compactStreamedIndex(spark, st, "vec_id", "label")
+    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
     assert(servedIds() == Seq(0L, 1L, 3L, 4L, 5L, 6L, 8L, 10L))
     val v1 = spark.read.parquet(s"$st/codes_v1")
       .select($"vec_id").as[Long].collect().sorted.toSeq
@@ -1678,10 +1677,10 @@ class StreamingIngestSpec extends SparkSpec {
     // next fold reclaims the consumed tombstone (grace expired); a
     // fresh delete allocates ABOVE the applied high-water
     stage(3L, Seq((7L, unit(4), 2)))
-    StreamingIngest.compactStreamedIndex(spark, st, "vec_id", "label")
+    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/tombs/tomb=0")))
-    assert(StreamingIngest.deleteStreamed(spark, st,
+    assert(IndexStore.deleteStreamed(spark, st,
       Seq(7L).toDF("vec_id"), "vec_id", "label") == 1L)
     assert(servedIds() == Seq(0L, 1L, 3L, 4L, 5L, 6L, 8L, 10L))
   }
@@ -1702,9 +1701,9 @@ class StreamingIngestSpec extends SparkSpec {
     val st = graft.EntryKit.scratchTracked("graft_del_base").toString
     Ann.saveIndex(Ann.pqEncode(base, "vec_id", "embedding", cb)
       .join(base.select($"vec_id", $"label"), "vec_id"), "label", cb, st)
-    assert(StreamingIngest.deleteStreamed(spark, st,
+    assert(IndexStore.deleteStreamed(spark, st,
       Seq(0L).toDF("vec_id"), "vec_id", "label") == 0L)
-    def servedIds() = StreamingIngest.loadStreamedCodes(
+    def servedIds() = IndexStore.loadStreamedCodes(
         spark, st, "vec_id", "label")
       .select($"vec_id").as[Long].collect().sorted.toSeq
     assert(servedIds() == Seq(2L, 4L, 6L))
@@ -1750,16 +1749,16 @@ class StreamingIngestSpec extends SparkSpec {
         .write.mode("overwrite").partitionBy("label")
         .parquet(s"$st/stream/batch=$b")
     }
-    def servedIds() = StreamingIngest.loadStreamedCodes(
+    def servedIds() = IndexStore.loadStreamedCodes(
         spark, st, "vec_id", "label")
       .select($"vec_id").as[Long].collect().sorted.toSeq
     // staging touches only cluster 0; the delete hits cluster 2
     stage(0L, Seq((1L, unit(0), 0)))
-    assert(StreamingIngest.deleteStreamed(spark, st,
+    assert(IndexStore.deleteStreamed(spark, st,
       Seq(8L).toDF("vec_id"), "vec_id", "label") == 0L)
     val pre = servedIds()
     assert(pre == Seq(0L, 1L, 2L, 4L, 6L, 10L))
-    StreamingIngest.compactStreamedIncremental(spark, st, "vec_id", "label")
+    IndexStore.compactStreamedIncremental(spark, st, "vec_id", "label")
     assert(servedIds() == pre)
     val m1 = spark.read.parquet(s"$st/codes_v1/_manifest")
       .as[(String, String)].collect().toMap
@@ -1771,9 +1770,9 @@ class StreamingIngestSpec extends SparkSpec {
     assert(spark.read.parquet(s"$st/codes_v1/data/label=2")
       .select($"vec_id").as[Long].collect().toSeq == Seq(10L))
     // kill ALL of cluster 1: its manifest entry disappears entirely
-    assert(StreamingIngest.deleteStreamed(spark, st,
+    assert(IndexStore.deleteStreamed(spark, st,
       Seq(4L, 6L).toDF("vec_id"), "vec_id", "label") == 1L)
-    StreamingIngest.compactStreamedIncremental(spark, st, "vec_id", "label")
+    IndexStore.compactStreamedIncremental(spark, st, "vec_id", "label")
     assert(servedIds() == Seq(0L, 1L, 2L, 10L))
     val m2 = spark.read.parquet(s"$st/codes_v2/_manifest")
       .as[(String, String)].collect().toMap
@@ -1798,13 +1797,13 @@ class StreamingIngestSpec extends SparkSpec {
     val st = graft.EntryKit.scratchTracked("graft_del_onlyt").toString
     Ann.saveIndex(Ann.pqEncode(base, "vec_id", "embedding", cb)
       .join(base.select($"vec_id", $"label"), "vec_id"), "label", cb, st)
-    def servedIds() = StreamingIngest.loadStreamedCodes(
+    def servedIds() = IndexStore.loadStreamedCodes(
         spark, st, "vec_id", "label")
       .select($"vec_id").as[Long].collect().sorted.toSeq
-    assert(StreamingIngest.deleteStreamed(spark, st,
+    assert(IndexStore.deleteStreamed(spark, st,
       Seq(0L).toDF("vec_id"), "vec_id", "label") == 0L)
     // pre-fix: AnalysisException (Path does not exist: .../stream)
-    StreamingIngest.compactStreamedIncremental(spark, st, "vec_id", "label")
+    IndexStore.compactStreamedIncremental(spark, st, "vec_id", "label")
     assert(servedIds() == Seq(2L, 4L, 6L))
     // physically gone from the published generation, tombstone consumed
     assert(spark.read.parquet(s"$st/codes_v1/data/label=0")
@@ -1812,9 +1811,9 @@ class StreamingIngestSpec extends SparkSpec {
     assert(scala.io.Source.fromFile(s"$st/codes_v1/_tombs_applied")
       .mkString.trim == "0")
     // the auto policy walks the same guard on the same shape
-    assert(StreamingIngest.deleteStreamed(spark, st,
+    assert(IndexStore.deleteStreamed(spark, st,
       Seq(2L).toDF("vec_id"), "vec_id", "label") == 1L)
-    StreamingIngest.compactStreamedAuto(spark, st, "vec_id", "label")
+    IndexStore.compactStreamedAuto(spark, st, "vec_id", "label")
     assert(servedIds() == Seq(4L, 6L))
   }
 
@@ -1835,11 +1834,11 @@ class StreamingIngestSpec extends SparkSpec {
     val st = graft.EntryKit.scratchTracked("graft_rt_stale").toString
     Ann.saveIndex(Ann.pqEncode(base, "vec_id", "embedding", cb)
       .join(base.select($"vec_id", $"label"), "vec_id"), "label", cb, st)
-    def servedIds() = StreamingIngest.loadStreamedCodes(
+    def servedIds() = IndexStore.loadStreamedCodes(
         spark, st, "vec_id", "label")
       .select($"vec_id").as[Long].collect().sorted.toSeq
     // delete 4, then RE-INSERT it via a staged batch above the as-of
-    assert(StreamingIngest.deleteStreamed(spark, st,
+    assert(IndexStore.deleteStreamed(spark, st,
       Seq(4L).toDF("vec_id"), "vec_id", "label") == 0L)
     val reins = Seq((4L, unit(2), 1)).toDF("vec_id", "embedding", "label")
     Ann.pqEncode(reins, "vec_id", "embedding", cb)
@@ -1848,12 +1847,12 @@ class StreamingIngestSpec extends SparkSpec {
       .write.mode("overwrite").partitionBy("label")
       .parquet(s"$st/stream/batch=0")
     // delete 6 — never re-inserted: its id must stay dead
-    assert(StreamingIngest.deleteStreamed(spark, st,
+    assert(IndexStore.deleteStreamed(spark, st,
       Seq(6L).toDF("vec_id"), "vec_id", "label") == 1L)
     assert(servedIds() == Seq(0L, 2L, 4L, 8L, 10L))
     // retrain with a STALE corpus: still carries the dead 6 (and the
     // legitimately-live re-inserted 4)
-    StreamingIngest.retrainStreamedIndex(spark, st, base,
+    IndexStore.retrainStreamedIndex(spark, st, base,
       "vec_id", "embedding", cents, "label", m = 4, ksub = 4)
     assert(servedIds() == Seq(0L, 2L, 4L, 8L, 10L))
     // 6 is physically absent from the published generation (not just
@@ -1884,7 +1883,7 @@ class StreamingIngestSpec extends SparkSpec {
     val ups = Seq((1L, unit(0), 0), (3L, unit(2), 1), (5L, unit(2), 1))
       .toDF("vec_id", "embedding", "label")
     ups.repartition(3).write.parquet(s"$st/in")
-    def drain(): Unit = StreamingIngest.annIndexUpsertDrain(
+    def drain(): Unit = IndexStore.annIndexUpsertDrain(
       spark.readStream.schema(ups.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$st/in"),
       st, s"$st/ckpt", "vec_id", "embedding", cents, "label")
@@ -1893,7 +1892,7 @@ class StreamingIngestSpec extends SparkSpec {
       Option(Ann.codebookReads.get(dir)).map(_.longValue).getOrElse(0L)
     val before = reads(s"$st/codebook")
     drain()
-    assert(StreamingIngest.loadStreamedCodes(spark, st, "vec_id", "label")
+    assert(IndexStore.loadStreamedCodes(spark, st, "vec_id", "label")
       .count() == 7)
     assert(reads(s"$st/codebook") - before == 1,
       "a 3-micro-batch drain must resolve the base codebook exactly once")
@@ -1901,7 +1900,7 @@ class StreamingIngestSpec extends SparkSpec {
     // costing exactly one read of the NEW codebook for the next window
     val all = base.unionByName(ups)
     val centsFull = Ann.pivotCentroids(all, "label", "vec_id", "embedding")
-    StreamingIngest.retrainStreamedIndex(spark, st, all,
+    IndexStore.retrainStreamedIndex(spark, st, all,
       "vec_id", "embedding", centsFull, "label", m = 4, ksub = 4)
     val more = Seq((9L, unit(1), 0), (11L, unit(3), 1))
       .toDF("vec_id", "embedding", "label")
@@ -1914,7 +1913,7 @@ class StreamingIngestSpec extends SparkSpec {
     assert(reads(s"$st/codes_v1/_codebook") - beforeGen == 1,
       "the 2-batch post-retrain drain must read the new codebook once")
     val cbNew = Ann.pqSeedCodebook(all, "vec_id", "embedding", m = 4, ksub = 4)
-    val got = StreamingIngest.loadStreamedCodes(spark, st, "vec_id", "label")
+    val got = IndexStore.loadStreamedCodes(spark, st, "vec_id", "label")
       .where($"vec_id" === 9L).select($"codes").as[Seq[Int]].collect().head
     val expected = Ann.pqEncode(
         Seq((9L, unit(1), 0)).toDF("vec_id", "embedding", "label"),
@@ -1953,18 +1952,18 @@ class StreamingIngestSpec extends SparkSpec {
       .toDF("vec_id", "embedding", "label")
     upA.repartition(2).write.parquet(s"$stA/in")
     upB.repartition(2).write.parquet(s"$stB/in")
-    val qA = StreamingIngest.annIndexUpsertDrain(
+    val qA = IndexStore.annIndexUpsertDrain(
       spark.readStream.schema(upA.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$stA/in"),
       stA, s"$stA/ckpt", "vec_id", "embedding", centsA, "label")
-    val qB = StreamingIngest.annIndexUpsertDrain(
+    val qB = IndexStore.annIndexUpsertDrain(
       spark.readStream.schema(upB.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$stB/in"),
       stB, s"$stB/ckpt", "vec_id", "embedding", centsB, "label")
     qA.awaitTermination()
     qB.awaitTermination()
     def codesOf(st: String, idv: Long): Seq[Int] =
-      StreamingIngest.loadStreamedCodes(spark, st, "vec_id", "label")
+      IndexStore.loadStreamedCodes(spark, st, "vec_id", "label")
         .where($"vec_id" === idv)
         .select($"codes").as[Seq[Int]].collect().head
     def enc(row: (Long, Seq[Float], Int), cb: Ann.PqCodebook): Seq[Int] =
@@ -2009,72 +2008,71 @@ class StreamingIngestSpec extends SparkSpec {
     // MtimeGuardMs of the last mutation deliberately re-opens on
     // refresh instead of trusting the fingerprint
     Thread.sleep(30)
-    val h0 = StreamingIngest.openServeHandle(spark, st, "vec_id", "label")
+    val h0 = IndexStore.openServeHandle(spark, st, "vec_id", "label")
     assert(ids(h0.codes) ==
-      ids(StreamingIngest.loadStreamedCodes(spark, st, "vec_id", "label")))
+      ids(IndexStore.loadStreamedCodes(spark, st, "vec_id", "label")))
     // warm refresh: ONE listing, same handle instance (view + models
     // reused — no re-resolution)
-    val c0 = StreamingIngest.indexListings.get()
-    val h1 = StreamingIngest.refreshServeHandle(spark, h0)
+    val c0 = IndexStore.indexListings.get()
+    val h1 = IndexStore.refreshServeHandle(spark, h0)
     assert(h1 eq h0)
-    assert(StreamingIngest.indexListings.get() - c0 == 1,
+    assert(IndexStore.indexListings.get() - c0 == 1,
       "a warm refresh must cost exactly one lifecycle listing")
     // and twice more — the cost is per-refresh, not amortized-once
-    val c1 = StreamingIngest.indexListings.get()
-    assert(StreamingIngest.refreshServeHandle(spark, h1) eq h0)
-    assert(StreamingIngest.refreshServeHandle(spark, h1) eq h0)
-    assert(StreamingIngest.indexListings.get() - c1 == 2)
+    val c1 = IndexStore.indexListings.get()
+    assert(IndexStore.refreshServeHandle(spark, h1) eq h0)
+    assert(IndexStore.refreshServeHandle(spark, h1) eq h0)
+    assert(IndexStore.indexListings.get() - c1 == 2)
     // the same-millisecond guard: a handle whose resolution stamp sits
     // inside the guard window of its newest fingerprinted mtime
     // re-opens on refresh even though the fingerprint MATCHES (a
     // colliding same-ms mutation could hide behind the match); the
     // replacement serves the same rows
     val hIn = h1.copy(openedAtMs = h1.fingerprint.map(_._2).max)
-    val hOut = StreamingIngest.refreshServeHandle(spark, hIn)
+    val hOut = IndexStore.refreshServeHandle(spark, hIn)
     assert(hOut ne hIn)
     assert(ids(hOut.codes) == ids(h1.codes))
     // mutation class 1: a staged batch flips the handle stale
     stage(1L, Seq((3L, unit(2), 1)))
-    val h2 = StreamingIngest.refreshServeHandle(spark, h1)
+    val h2 = IndexStore.refreshServeHandle(spark, h1)
     assert(h2 ne h1)
     assert(ids(h2.codes) == Seq(0L, 1L, 2L, 3L, 4L, 6L))
     // mutation class 2: a tombstone flips it stale
-    assert(StreamingIngest.deleteStreamed(spark, st,
+    assert(IndexStore.deleteStreamed(spark, st,
       Seq(4L).toDF("vec_id"), "vec_id", "label") == 0L)
-    val h3 = StreamingIngest.refreshServeHandle(spark, h2)
+    val h3 = IndexStore.refreshServeHandle(spark, h2)
     assert(h3 ne h2)
     assert(ids(h3.codes) == Seq(0L, 1L, 2L, 3L, 6L))
     // mutation class 3: a fold publishes a generation — stale again,
-    // rows invariant, and the handle models stay coherent with
-    // loadStreamedIndex
-    StreamingIngest.compactStreamedIndex(spark, st, "vec_id", "label")
-    val h4 = StreamingIngest.refreshServeHandle(spark, h3)
+    // rows invariant, and the handle models stay coherent with a fresh
+    // resolve
+    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    val h4 = IndexStore.refreshServeHandle(spark, h3)
     assert(h4 ne h3)
     assert(ids(h4.codes) == Seq(0L, 1L, 2L, 3L, 6L))
-    val (_, cbRef, centsRef) = StreamingIngest.loadStreamedIndex(
-      spark, st, "vec_id", "label")
+    val (_, cbRef, centsRef) = resolve(st)
     assert(h4.codebook.cents.map(_.map(_.toSeq).toSeq).toSeq ==
       cbRef.cents.map(_.map(_.toSeq).toSeq).toSeq)
     assert(h4.cents.isDefined == centsRef.isDefined)
     // TTL refresh (the object-store policy): within the TTL the held
     // snapshot serves with ZERO FS ops; past it the handle re-resolves
     // unconditionally — no fingerprint trust
-    val c2 = StreamingIngest.indexListings.get()
-    assert(StreamingIngest.refreshServeHandleTtl(spark, h4, 3600000L) eq h4)
-    assert(StreamingIngest.indexListings.get() == c2,
+    val c2 = IndexStore.indexListings.get()
+    assert(IndexStore.refreshServeHandleTtl(spark, h4, 3600000L) eq h4)
+    assert(IndexStore.indexListings.get() == c2,
       "a within-TTL refresh must cost zero lifecycle FS ops")
     Thread.sleep(5)
-    val h5 = StreamingIngest.refreshServeHandleTtl(spark, h4, 0L)
+    val h5 = IndexStore.refreshServeHandleTtl(spark, h4, 0L)
     assert(h5 ne h4)
     assert(ids(h5.codes) == ids(h4.codes))
     // the adoption contract the read-path entries (describe census,
     // compact serve checks) rely on: downstream reads off a warm
     // handle pay ZERO further lifecycle listings — resolution cost
     // lives entirely in open/refresh
-    val c3 = StreamingIngest.indexListings.get()
+    val c3 = IndexStore.indexListings.get()
     val census = h5.codes.groupBy($"label").count().collect()
     assert(census.map(_.getLong(1)).sum == 5)
-    assert(StreamingIngest.indexListings.get() == c3,
+    assert(IndexStore.indexListings.get() == c3,
       "a census off a warm handle must cost zero lifecycle listings")
   }
 
@@ -2093,26 +2091,26 @@ class StreamingIngestSpec extends SparkSpec {
     val st = graft.EntryKit.scratchTracked("graft_status").toString
     Ann.saveIndex(Ann.pqEncode(base, "vec_id", "embedding", cb)
       .join(base.select($"vec_id", $"label"), "vec_id"), "label", cb, st)
-    def status() = StreamingIngest.indexStatus(spark, st)
+    def status() = IndexStore.indexStatus(spark, st)
     val s0 = status()
-    assert(s0 == StreamingIngest.IndexStatus(
+    assert(s0 == IndexStore.IndexStatus(
       None, -1L, Seq.empty, Seq.empty, 0L, false, false))
     val ups = Seq((1L, unit(0), 0), (3L, unit(2), 1))
       .toDF("vec_id", "embedding", "label")
     Ann.encodeAssign(ups, "vec_id", "embedding", cb, cents, "label")
       .write.mode("overwrite").partitionBy("label")
       .parquet(s"$st/stream/batch=0")
-    assert(StreamingIngest.deleteStreamed(spark, st,
+    assert(IndexStore.deleteStreamed(spark, st,
       Seq(4L).toDF("vec_id"), "vec_id", "label") == 0L)
     val s1 = status()
     assert(s1.stagedBatches == Seq(0L) && s1.pendingTombstones == Seq(0L))
-    StreamingIngest.compactStreamedIndex(spark, st, "vec_id", "label")
+    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
     val s2 = status()
     assert(s2.generation == Some(1L) && s2.foldedHighWater == 0L)
     assert(s2.pendingTombstones.isEmpty && !s2.hasVersionedModels)
     val all = base.unionByName(ups)
       .where($"vec_id" =!= 4L)
-    StreamingIngest.retrainStreamedIndex(spark, st, all,
+    IndexStore.retrainStreamedIndex(spark, st, all,
       "vec_id", "embedding",
       Ann.pivotCentroids(all, "label", "vec_id", "embedding"), "label",
       m = 4, ksub = 4)
@@ -2148,9 +2146,9 @@ class StreamingIngestSpec extends SparkSpec {
     Ann.encodeAssign(ups, "vec_id", "embedding", cb, cents, "label")
       .write.mode("overwrite").partitionBy("label")
       .parquet(s"$src/stream/batch=0")
-    assert(StreamingIngest.deleteStreamed(spark, src,
+    assert(IndexStore.deleteStreamed(spark, src,
       Seq(4L).toDF("vec_id"), "vec_id", "label") == 0L)
-    StreamingIngest.cloneStreamedIndex(spark, src, s"$root/d1",
+    IndexStore.cloneStreamedIndex(spark, src, s"$root/d1",
       "vec_id", "label")
     // plain verbs are LEGAL on the clone (no lifecycle state), the
     // serve equals the source snapshot, and the kill is physical
@@ -2164,13 +2162,13 @@ class StreamingIngestSpec extends SparkSpec {
       Seq(0L, 1L, 2L, 3L, 6L))
     // fences: never clobber; never clone mid-retrain
     intercept[IllegalArgumentException] {
-      StreamingIngest.cloneStreamedIndex(spark, src, s"$root/d1",
+      IndexStore.cloneStreamedIndex(spark, src, s"$root/d1",
         "vec_id", "label")
     }
     val lock = java.nio.file.Paths.get(s"$src/_retrain_lock")
     java.nio.file.Files.createFile(lock)
     intercept[IllegalStateException] {
-      StreamingIngest.cloneStreamedIndex(spark, src, s"$root/d2",
+      IndexStore.cloneStreamedIndex(spark, src, s"$root/d2",
         "vec_id", "label")
     }
     java.nio.file.Files.delete(lock)
@@ -2179,9 +2177,9 @@ class StreamingIngestSpec extends SparkSpec {
     // centroids ride along
     val all = base.unionByName(ups)
     val centsFull = Ann.pivotCentroids(all, "label", "vec_id", "embedding")
-    StreamingIngest.retrainStreamedIndex(spark, src, all,
+    IndexStore.retrainStreamedIndex(spark, src, all,
       "vec_id", "embedding", centsFull, "label", m = 4, ksub = 4)
-    StreamingIngest.cloneStreamedIndex(spark, src, s"$root/d3",
+    IndexStore.cloneStreamedIndex(spark, src, s"$root/d3",
       "vec_id", "label")
     val (codes3, cb3) = Ann.loadIndex(spark, s"$root/d3")
     val cbNew = Ann.pqSeedCodebook(all, "vec_id", "embedding", m = 4, ksub = 4)
@@ -2192,10 +2190,10 @@ class StreamingIngestSpec extends SparkSpec {
     assert(spark.read.parquet(s"$root/d3/centroids").count() == 2)
     // a fully-killed serving view refuses to clone (a file-less codes
     // dir would fail at first load) and leaves no destination behind
-    assert(StreamingIngest.deleteStreamed(spark, src,
+    assert(IndexStore.deleteStreamed(spark, src,
       Seq(0L, 1L, 2L, 3L, 6L).toDF("vec_id"), "vec_id", "label") >= 0L)
     val eEmpty = intercept[IllegalStateException] {
-      StreamingIngest.cloneStreamedIndex(spark, src, s"$root/d4",
+      IndexStore.cloneStreamedIndex(spark, src, s"$root/d4",
         "vec_id", "label")
     }
     assert(eEmpty.getMessage.contains("nothing to clone"))
@@ -2265,7 +2263,7 @@ class StreamingIngestSpec extends SparkSpec {
     java.nio.file.Files.createFile(
       java.nio.file.Paths.get(s"$st/_retrain_lock"))
     val e1 = intercept[IllegalStateException] {
-      StreamingIngest.deleteStreamed(spark, st,
+      IndexStore.deleteStreamed(spark, st,
         Seq(0L).toDF("vec_id"), "vec_id", "label")
     }
     assert(e1.getMessage.contains("retrain in progress"))
@@ -2275,19 +2273,19 @@ class StreamingIngestSpec extends SparkSpec {
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$st/tombs/.tomb_tmp_x"))
     val e2 = intercept[IllegalStateException] {
-      StreamingIngest.retrainStreamedIndex(spark, st, base,
+      IndexStore.retrainStreamedIndex(spark, st, base,
         "vec_id", "embedding", cents, "label", m = 4, ksub = 4)
     }
     assert(e2.getMessage.contains("deletes mid-stage"))
     EntryKitDeleteHelper.rm(s"$st/tombs")
     // with the tmp settled, the retrain runs and marks the pending
     // tombstone CONSUMED (corpus authority) without replaying it
-    assert(StreamingIngest.deleteStreamed(spark, st,
+    assert(IndexStore.deleteStreamed(spark, st,
       Seq(2L).toDF("vec_id"), "vec_id", "label") == 0L)
-    StreamingIngest.retrainStreamedIndex(spark, st,
+    IndexStore.retrainStreamedIndex(spark, st,
       base.where($"vec_id" =!= 2L), "vec_id", "embedding",
       cents, "label", m = 4, ksub = 4)
-    assert(StreamingIngest.loadStreamedCodes(spark, st, "vec_id", "label")
+    assert(IndexStore.loadStreamedCodes(spark, st, "vec_id", "label")
       .select($"vec_id").as[Long].collect().sorted.toSeq ==
       Seq(0L, 4L, 6L, 8L))
     assert(scala.io.Source.fromFile(s"$st/codes_v1/_tombs_applied")
@@ -2555,20 +2553,20 @@ class StreamingIngestSpec extends SparkSpec {
     // current coordinates: base generation (None), epoch 0 — pass
     val dst = s"$root/dst"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
-    StreamingIngest.cloneGenerationFence(spark, src, dst, None, 0L)
+    IndexStore.cloneGenerationFence(spark, src, dst, None, 0L)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dst)))
     // a retrain publishes codes_v1: coordinates captured BEFORE it
     // (None, 0) now fail the fence and the destination is deleted
-    StreamingIngest.retrainStreamedIndex(spark, src, base,
+    IndexStore.retrainStreamedIndex(spark, src, base,
       "vec_id", "embedding", cents, "label", m = 4, ksub = 4)
     val e = intercept[IllegalStateException] {
-      StreamingIngest.cloneGenerationFence(spark, src, dst, None, 0L)
+      IndexStore.cloneGenerationFence(spark, src, dst, None, 0L)
     }
     assert(e.getMessage.contains("new generation"))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dst)))
     // the post-retrain coordinates pass again
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
-    StreamingIngest.cloneGenerationFence(
+    IndexStore.cloneGenerationFence(
       spark, src, dst, Some(s"$src/codes_v1"), 1L)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dst)))
   }
@@ -2578,7 +2576,7 @@ class StreamingIngestSpec extends SparkSpec {
       "threshold AND at the tombstone threshold; Retrained on drift " +
       "(which outranks a simultaneous fold); policy knobs validate") {
     import graft.ann.Ann
-    import StreamingIngest.{MaintenanceAction => MA, MaintenancePolicy}
+    import IndexStore.{MaintenanceAction => MA, MaintenancePolicy}
     val dim = 8
     def unit(hot: Int) =
       (0 until dim).map(d => if (d == hot) 1.0f else 0.0f)
@@ -2594,7 +2592,7 @@ class StreamingIngestSpec extends SparkSpec {
       Ann.saveIndex(Ann.pqEncode(base, "vec_id", "embedding", cb)
         .join(base.select($"vec_id", $"label"), "vec_id"), "label", cb, path)
     def tick(policy: MaintenancePolicy, corpus: org.apache.spark.sql.DataFrame = base) =
-      StreamingIngest.maintainStreamedIndex(spark, path, corpus,
+      IndexStore.maintainStreamedIndex(spark, path, corpus,
         "vec_id", "embedding", cents, cents, "label",
         m = 4, ksub = 4, policy = policy)
     val foldOnly = MaintenancePolicy(
@@ -2625,23 +2623,23 @@ class StreamingIngestSpec extends SparkSpec {
       .parquet(s"$path/stream/batch=1")
     tick(twoStaged) match {
       case MA.Folded(d) =>
-        assert(d != StreamingIngest.FoldDispatch.NothingToFold)
+        assert(d != IndexStore.FoldDispatch.NothingToFold)
       case other => fail(s"expected Folded, got $other")
     }
     // the fold consumed the window: serving holds all six, next tick
     // no-ops
-    assert(StreamingIngest.loadStreamedCodes(spark, path, "vec_id", "label")
+    assert(IndexStore.loadStreamedCodes(spark, path, "vec_id", "label")
       .count() == 6)
     assert(tick(twoStaged) == MA.NoOp)
     // tombstone threshold: one pending tombstone trips
     // foldMinTombstones = 1 even with nothing staged
-    assert(StreamingIngest.deleteStreamed(spark, path,
+    assert(IndexStore.deleteStreamed(spark, path,
       Seq(1L).toDF("vec_id"), "vec_id", "label") == 0L)
     tick(foldOnly) match {
       case MA.Folded(_) => ()
       case other => fail(s"expected tombstone-triggered fold, got $other")
     }
-    assert(StreamingIngest.loadStreamedCodes(spark, path, "vec_id", "label")
+    assert(IndexStore.loadStreamedCodes(spark, path, "vec_id", "label")
       .select($"vec_id").as[Long].collect().sorted.toSeq ==
       Seq(0L, 2L, 3L, 4L, 6L))
     // Retrained: a blended vector moves cluster 0's corpus mean off
@@ -2662,7 +2660,7 @@ class StreamingIngestSpec extends SparkSpec {
     // the retrain snapshotted the corpus: staging superseded, serving
     // equals it exactly (the tombstoned id 1 stays out — it is not in
     // corpusNow)
-    assert(StreamingIngest.loadStreamedCodes(spark, path, "vec_id", "label")
+    assert(IndexStore.loadStreamedCodes(spark, path, "vec_id", "label")
       .select($"vec_id").as[Long].collect().sorted.toSeq ==
       Seq(0L, 2L, 3L, 4L, 5L, 6L))
     assert(tick(foldOnly, corpusNow) == MA.NoOp)
@@ -2694,7 +2692,7 @@ class StreamingIngestSpec extends SparkSpec {
       "dispatches both); a verb's own failure with no lock present " +
       "still rethrows") {
     import graft.ann.Ann
-    import StreamingIngest.{MaintenanceAction => MA, MaintenancePolicy}
+    import IndexStore.{MaintenanceAction => MA, MaintenancePolicy}
     val dim = 8
     def unit(hot: Int) =
       (0 until dim).map(d => if (d == hot) 1.0f else 0.0f)
@@ -2715,16 +2713,16 @@ class StreamingIngestSpec extends SparkSpec {
     val foldOnly = MaintenancePolicy(
       foldMinStaged = 1, driftMinCosine = -1.0)
     def tick(policy: MaintenancePolicy,
-        status: StreamingIngest.IndexStatus,
+        status: IndexStore.IndexStatus,
         firedPre: Option[Boolean] = None) =
-      StreamingIngest.maintainTick(spark, path, base,
+      IndexStore.maintainTick(spark, path, base,
         "vec_id", "embedding", cents, cents, "label",
         m = 4, ksub = 4, iters = 0, policy = policy,
-        router = None, autoRoute = true,
-        manifestBudget = StreamingIngest.DefaultManifestBudget,
+        router = None,
+        manifestBudget = IndexStore.DefaultManifestBudget,
         status = status, firedPre = firedPre)._1
     // the race: status read with no lock, lock appears, THEN dispatch
-    val staleStatus = StreamingIngest.indexStatus(spark, path)
+    val staleStatus = IndexStore.indexStatus(spark, path)
     assert(!staleStatus.retrainInProgress)
     val lock = java.nio.file.Paths.get(s"$path/_retrain_lock")
     java.nio.file.Files.createFile(lock)
@@ -2750,11 +2748,88 @@ class StreamingIngestSpec extends SparkSpec {
       "the crashed retrain must have released its own lock")
   }
 
+  test("a live _retrain_lock: every index verb that would race the " +
+      "retrain refuses with RetrainInProgress; a retrain that finds a " +
+      "staged tmp fails with a plain IllegalStateException, which " +
+      "maintainTick rethrows") {
+    import graft.ann.Ann
+    import IndexStore.{MaintenancePolicy, RetrainInProgress}
+    val dim = 8
+    def unit(hot: Int) =
+      (0 until dim).map(d => if (d == hot) 1.0f else 0.0f)
+    val base = Seq(
+      (0L, unit(0), 0), (2L, unit(0), 0), (4L, unit(2), 1),
+      (6L, unit(2), 1))
+      .toDF("vec_id", "embedding", "label")
+    val cb = Ann.pqSeedCodebook(base, "vec_id", "embedding", m = 4, ksub = 4)
+    val cents = Ann.pivotCentroids(base, "label", "vec_id", "embedding")
+    val root = graft.EntryKit.scratchTracked("graft_lockrefuse").toString
+    val path = s"$root/idx"
+    Ann.saveIndex(Ann.pqEncode(base, "vec_id", "embedding", cb)
+      .join(base.select($"vec_id", $"label"), "vec_id"), "label", cb, path)
+    val ups = Seq((1L, unit(0), 0)).toDF("vec_id", "embedding", "label")
+    Ann.encodeAssign(ups, "vec_id", "embedding", cb, cents, "label")
+      .write.mode("overwrite").partitionBy("label")
+      .parquet(s"$path/stream/batch=0")
+    ups.coalesce(1).write.parquet(s"$root/in")
+    val lock = java.nio.file.Paths.get(s"$path/_retrain_lock")
+    java.nio.file.Files.createFile(lock)
+    def retrain(): Unit = IndexStore.retrainStreamedIndex(spark, path, base,
+      "vec_id", "embedding", cents, "label", m = 4, ksub = 4)
+    val verbs: Seq[(String, () => Any)] = Seq(
+      "annIndexUpsertDrain batch" -> (() => IndexStore.annIndexUpsertDrain(
+        spark.readStream.schema(ups.schema).parquet(s"$root/in"), path,
+        s"$root/ckpt", "vec_id", "embedding", cents, "label")
+        .awaitTermination()),
+      "commitStagedBatch" -> (() =>
+        IndexStore.commitStagedBatch(spark, path, 1L)),
+      "deleteStreamed" -> (() => IndexStore.deleteStreamed(spark, path,
+        Seq(0L).toDF("vec_id"), "vec_id", "label")),
+      "compactStreamedIndex" -> (() =>
+        IndexStore.compactStreamedIndex(spark, path, "vec_id", "label")),
+      "compactStreamedIncremental" -> (() => IndexStore
+        .compactStreamedIncremental(spark, path, "vec_id", "label")),
+      "compactStreamedAuto" -> (() =>
+        IndexStore.compactStreamedAuto(spark, path, "vec_id", "label")),
+      "cloneStreamedIndex" -> (() => IndexStore.cloneStreamedIndex(
+        spark, path, s"$root/clone", "vec_id", "label")),
+      "retrainStreamedIndex" -> (() => retrain()))
+    verbs.foreach { case (verb, run) =>
+      val e = intercept[Exception](run())
+      // the drain's refusal reaches the caller as the query's cause
+      val chain = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).toSeq
+      assert(chain.exists(_.isInstanceOf[RetrainInProgress]), s"$verb: $e")
+    }
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$path/codes_v1")))
+    assert(java.nio.file.Files.exists(lock),
+      "a refused retrain must not release the holder's lock")
+    java.nio.file.Files.delete(lock)
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"$path/stream/.batch_tmp_99"))
+    val plain = intercept[IllegalStateException](retrain())
+    assert(!plain.isInstanceOf[RetrainInProgress])
+    assert(plain.getMessage.contains("mid-stage"))
+    val status = IndexStore.indexStatus(spark, path)
+    val viaTick = intercept[IllegalStateException] {
+      IndexStore.maintainTick(spark, path, base,
+        "vec_id", "embedding", cents, cents, "label",
+        m = 4, ksub = 4, iters = 0,
+        policy = MaintenancePolicy(foldMinStaged = 1, driftMinCosine = 1.0),
+        router = None, manifestBudget = IndexStore.DefaultManifestBudget,
+        status = status, firedPre = Some(true))
+    }
+    assert(!viaTick.isInstanceOf[RetrainInProgress])
+    assert(viaTick.getMessage.contains("mid-stage"))
+    assert(!java.nio.file.Files.exists(lock))
+  }
+
   test("maintainIndexes: urgency order is drift > tombstones > staged; " +
       "the tick budget defers the least urgent; Blocked members cost " +
       "no budget; duplicate paths refuse; every decision is logged") {
     import graft.ann.Ann
-    import StreamingIngest.{IndexFleetMember, MaintenanceAction => MA,
+    import IndexStore.{IndexFleetMember, MaintenanceAction => MA,
       MaintenancePolicy}
     val dim = 8
     def unit(hot: Int) =
@@ -2783,7 +2858,7 @@ class StreamingIngestSpec extends SparkSpec {
     val blend = (Seq(0.8f, 0.0f, 0.6f) ++ Seq.fill(dim - 3)(0.0f))
     val driftCorpus = base.unionByName(
       Seq((5L, blend, 0)).toDF("vec_id", "embedding", "label"))
-    assert(StreamingIngest.deleteStreamed(spark, pc,
+    assert(IndexStore.deleteStreamed(spark, pc,
       Seq(0L).toDF("vec_id"), "vec_id", "label") == 0L)
     java.nio.file.Files.createFile(
       java.nio.file.Paths.get(s"$pe/_retrain_lock"))
@@ -2795,7 +2870,7 @@ class StreamingIngestSpec extends SparkSpec {
     val policy = MaintenancePolicy(foldMinStaged = 1, driftMinCosine = 1.0)
     // budget 2: B (drift) and C (tombstones) dispatch; A (staged)
     // defers; D no-ops; E blocked — input order preserved
-    val r1 = StreamingIngest.maintainIndexes(spark, fleet, policy,
+    val r1 = IndexStore.maintainIndexes(spark, fleet, policy,
       tickBudget = 2).toMap
     assert(r1(pb) == MA.Retrained, s"B: ${r1(pb)}")
     assert(r1(pc).isInstanceOf[MA.Folded], s"C: ${r1(pc)}")
@@ -2804,42 +2879,42 @@ class StreamingIngestSpec extends SparkSpec {
     assert(r1(pe) == MA.Blocked, s"E: ${r1(pe)}")
     // budget 1 re-defers A (B's drift still outranks it) and proves
     // results come back in input order
-    assert(StreamingIngest.maintainIndexes(spark, fleet, policy,
+    assert(IndexStore.maintainIndexes(spark, fleet, policy,
       tickBudget = 1).map(_._1) == fleet.map(_.indexPath),
       "results come back in input order")
     // next tick (budget default): A's deferred fold lands; B folded
     // NOTHING new (retrain consumed its state) so it no-ops or
     // re-fires drift only if the corpus still disagrees
-    val r2 = StreamingIngest.maintainIndexes(spark,
+    val r2 = IndexStore.maintainIndexes(spark,
       Seq(member(pa)), MaintenancePolicy(
         foldMinStaged = 1, driftMinCosine = -1.0)).toMap
     assert(r2(pa).isInstanceOf[MA.Folded], s"A tick2: ${r2(pa)}")
     // every decision logged, including Deferred and Blocked
-    val logA = StreamingIngest.maintenanceLog(spark, pa)
+    val logA = IndexStore.maintenanceLog(spark, pa)
       .orderBy($"tick").select($"decision", $"trigger")
       .as[(String, String)].collect().toSeq
     assert(logA.take(2) == Seq(("deferred", "budget"),
       ("deferred", "budget")) &&
       logA(2)._1.startsWith("folded_"), s"A log: $logA")
-    val logE = StreamingIngest.maintenanceLog(spark, pe)
+    val logE = IndexStore.maintenanceLog(spark, pe)
       .select($"decision", $"trigger").as[(String, String)]
       .collect().toSeq
     assert(logE.forall(_ == ("blocked", "lock")), s"E log: $logE")
-    val logB = StreamingIngest.maintenanceLog(spark, pb)
+    val logB = IndexStore.maintenanceLog(spark, pb)
       .orderBy($"tick")
       .select($"decision", $"gen_before", $"gen_after")
       .as[(String, Long, Long)].collect().toSeq
     assert(logB.head == (("retrained", -1L, 1L)), s"B log: $logB")
     // an unmaintained index reads as an empty log with the full schema
-    assert(StreamingIngest.maintenanceLog(spark, pd + "_never")
+    assert(IndexStore.maintenanceLog(spark, pd + "_never")
       .columns.toSeq == Seq("tick", "decision", "trigger", "gen_before",
         "gen_after", "staged_unfolded", "pending_tombstones"))
     // duplicate members refuse at the boundary
     intercept[IllegalArgumentException] {
-      StreamingIngest.maintainIndexes(spark, Seq(member(pa), member(pa)))
+      IndexStore.maintainIndexes(spark, Seq(member(pa), member(pa)))
     }
     intercept[IllegalArgumentException] {
-      StreamingIngest.maintainIndexes(spark, Seq(member(pa)),
+      IndexStore.maintainIndexes(spark, Seq(member(pa)),
         tickBudget = 0)
     }
   }
@@ -2848,7 +2923,7 @@ class StreamingIngestSpec extends SparkSpec {
       "maps the raced member to Blocked WITHOUT spending its budget " +
       "slot — the slot promotes to the next ranked member") {
     import graft.ann.Ann
-    import StreamingIngest.{IndexFleetMember, MaintenanceAction => MA,
+    import IndexStore.{IndexFleetMember, MaintenanceAction => MA,
       MaintenancePolicy}
     val dim = 8
     def unit(hot: Int) =
@@ -2881,9 +2956,9 @@ class StreamingIngestSpec extends SparkSpec {
         cents, cents, "label", m = 4, ksub = 4)
     val policy = MaintenancePolicy(foldMinStaged = 1, driftMinCosine = -1.0)
     val lock = java.nio.file.Paths.get(s"$pa/_retrain_lock")
-    val r = StreamingIngest.maintainIndexesHooked(spark,
+    val r = IndexStore.maintainIndexesHooked(spark,
       Seq(member(pa), member(pb)), policy, tickBudget = 1,
-      manifestBudget = StreamingIngest.DefaultManifestBudget,
+      manifestBudget = IndexStore.DefaultManifestBudget,
       // the race: another scheduler's lock lands between observation
       // (which saw A unlocked and actionable) and A's dispatch
       afterObserve = () => { java.nio.file.Files.createFile(lock); () })
@@ -2893,10 +2968,10 @@ class StreamingIngestSpec extends SparkSpec {
       s"B must take the raced slot, got ${r(pb)}")
     java.nio.file.Files.delete(lock)
     // the audit trail records the race verbatim: A blocked, B folded
-    val logA = StreamingIngest.maintenanceLog(spark, pa)
+    val logA = IndexStore.maintenanceLog(spark, pa)
       .select($"decision").as[String].collect().toSeq
     assert(logA == Seq("blocked"), s"A log: $logA")
-    val logB = StreamingIngest.maintenanceLog(spark, pb)
+    val logB = IndexStore.maintenanceLog(spark, pb)
       .select($"decision").as[String].collect().toSeq
     assert(logB.size == 1 && logB.head.startsWith("folded_"),
       s"B log: $logB")
@@ -2908,14 +2983,14 @@ class StreamingIngestSpec extends SparkSpec {
     for (p <- Seq("s3a://bucket/index", "s3://b/i", "gs://b/i",
         "abfss://c@a.dfs.core.windows.net/i", "wasb://c@a/i")) {
       val e = intercept[IllegalArgumentException] {
-        StreamingIngest.requireDirMtimes(p)
+        IndexStore.requireDirMtimes(p)
       }
       assert(e.getMessage.contains("refreshServeHandleTtl"), p)
     }
     // local and HDFS-semantics schemes pass
-    StreamingIngest.requireDirMtimes("/tmp/idx")
-    StreamingIngest.requireDirMtimes("file:///tmp/idx")
-    StreamingIngest.requireDirMtimes("hdfs://nn/idx")
+    IndexStore.requireDirMtimes("/tmp/idx")
+    IndexStore.requireDirMtimes("file:///tmp/idx")
+    IndexStore.requireDirMtimes("hdfs://nn/idx")
   }
 }
 

@@ -197,7 +197,7 @@ def phase_check(prev, cur, min_ratio, floor=0.2):
     n_mr = sum(1 for r in rows if r[4] == "MODEL-RESOLVE-SUSPECT")
     if n_mr:
         print(f"{n_mr} drain model-resolution suspect(s) — the per-batch "
-              "re-read class; see StreamingIngest.annIndexUpsertDrain")
+              "re-read class; see IndexStore.annIndexUpsertDrain")
 
 
 if __name__ == "__main__":
