@@ -1370,145 +1370,123 @@ private[graft] object EntriesAnn {
     },
     annIndexUpsert.oracle)
 
-  /** Staged-index COMPACTION ([[graft.streaming.IndexStore
-    * .compactStreamedIndex]]): after the streamed upserts, the staging
-    * partitions fold into a fresh compacted version published by its
-    * `_folded` high-water marker — monotone publication, no live dir
-    * ever renamed, a crash anywhere never double-counts (see the method
-    * doc) — and serving ([[graft.streaming.IndexStore
-    * .loadStreamedCodes]]) resolves to that single version with zero
-    * staging batches left to union. Serving results are INVARIANT under
-    * compaction, which the entry proves by sharing the upsert oracle
-    * VERBATIM a third time: one-shot upsert, streamed upsert, and
-    * compacted stream must all serve identically.
+  /** The fixture the three `ann_index_compact*` entries share: an
+    * index built on the even half, the odd half streamed in through the
+    * drain with one [[graft.streaming.IndexStore.compact]] after each
+    * drain, then the top-k served through the ≤1-listing-warm handle.
+    * `clusterFolds = 0` drains the whole odd half into one fold;
+    * `n > 0` drains, one fold each, the odd rows of the n lowest
+    * clusters the odd half is assigned to, over a base that already
+    * holds the rest of the odd half (a one-shot upsert). Assignment is
+    * a pure function of the row and the centroids, so either way the
+    * served corpus is the even half plus the odd half, and every entry
+    * shares the upsert oracle. `expect` pins the writer each fold ran.
     */
-  val annIndexCompact = Q(
-    (s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val even = emb.where(pmod(col("vec_id"), lit(2)) === 0)
-      val odd = emb.where(pmod(col("vec_id"), lit(2)) === 1)
-      val cb = Ann.pqSeedCodebook(even, "vec_id", "embedding", m = 8, ksub = 16)
-      val cents = Ann.pivotCentroids(even, "label", "vec_id", "embedding")
-      val scratch = scratchPath("graft_ann_cmp")
-      val path = scratch.toString
-      Ann.saveIndex(Ann.pqEncode(even, "vec_id", "embedding", cb)
-        .join(even.select(col("vec_id"), col("label")), "vec_id"),
-        "label", cb, path)
-      odd.repartition(4).write.parquet(s"$path/in")
-      graft.streaming.IndexStore.annIndexUpsertDrain(
+  private def compactAndServe(
+      s: SparkSession, dir: String, tag: String, clusterFolds: Int,
+      expect: Seq[graft.streaming.IndexStore.FoldDispatch]): DataFrame = {
+    import graft.streaming.IndexStore
+    val emb = t(s, dir, "embeddings")
+    val even = emb.where(pmod(col("vec_id"), lit(2)) === 0)
+    val odd = emb.where(pmod(col("vec_id"), lit(2)) === 1)
+    val cb = Ann.pqSeedCodebook(even, "vec_id", "embedding", m = 8, ksub = 16)
+    val cents = Ann.pivotCentroids(even, "label", "vec_id", "embedding")
+    val scratch = scratchPath(tag)
+    val path = scratch.toString
+    Ann.saveIndex(Ann.pqEncode(even, "vec_id", "embedding", cb)
+      .join(even.select(col("vec_id"), col("label")), "vec_id"),
+      "label", cb, path)
+    val oddCols = odd.columns.map(col).toIndexedSeq
+    val folds =
+      if (clusterFolds == 0) Seq(odd)
+      else {
+        val assigned = odd.join(Ann.assignClusters(
+            odd, "vec_id", "embedding", cents, "label")
+          .withColumnRenamed("label", "__cl"), "vec_id")
+        val picked = assigned.select(col("__cl")).distinct()
+          .orderBy(col("__cl")).limit(clusterFolds)
+          .collect().map(_.get(0)).toSeq
+        require(picked.size == clusterFolds,
+          s"$tag: the odd half lands in ${picked.size} clusters, " +
+            s"$clusterFolds needed")
+        Ann.upsertIndex(s, path,
+          assigned.where(!col("__cl").isin(picked: _*)).select(oddCols: _*),
+          "vec_id", "embedding", cents, "label")
+        picked.map(c => assigned.where(col("__cl") === lit(c))
+          .select(oddCols: _*))
+      }
+    // the whole odd half arrives in 4 micro-batches, a one-cluster
+    // fold's rows in one
+    val files = if (clusterFolds == 0) 4 else 1
+    val ran = folds.map { rows =>
+      rows.repartition(files).write.mode("append").parquet(s"$path/in")
+      IndexStore.annIndexUpsertDrain(
           s.readStream.schema(odd.schema)
             .option("maxFilesPerTrigger", "1").parquet(s"$path/in"),
           path, s"$path/ckpt", "vec_id", "embedding", cents, "label")
         .awaitTermination()
       PhaseTimer.phase("compact") {
-        graft.streaming.IndexStore.compactStreamedIndex(
-          s, path, "vec_id", "label")
+        IndexStore.compact(s, path, "vec_id", "label")
       }
-      // serve through the ≤1-listing-warm handle — the repeated-serve
-      // surface is oracle-carried on every read-path entry, not just
-      // ann_index_delete
-      val h = graft.streaming.IndexStore.refreshServeHandle(s,
-        graft.streaming.IndexStore.openServeHandle(
-          s, path, "vec_id", "label"))
-      servedThenCleanup(
-        Ann.ivfPqTopK(h.codes, "vec_id", "label", cents,
-          emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-          h.codebook, k = 5, nprobe = 3),
-        scratch)
-    },
+    }
+    require(ran == expect, s"$tag: folds ran $ran, expected $expect")
+    val h = IndexStore.refreshServeHandle(s,
+      IndexStore.openServeHandle(s, path, "vec_id", "label"))
+    servedThenCleanup(
+      Ann.ivfPqTopK(h.codes, "vec_id", "label", cents,
+        emb.filter(col("vec_id") < 10), "vec_id", "embedding",
+        h.codebook, k = 5, nprobe = 3),
+      scratch)
+  }
+
+  /** Staged-index COMPACTION ([[graft.streaming.IndexStore.compact]]):
+    * after the streamed upserts, the staging partitions fold into a
+    * fresh generation published by its `_folded` high-water marker —
+    * monotone publication, no live dir ever renamed, a crash anywhere
+    * never double-counts (see the method doc). The odd half lands in
+    * every cluster, so the touched-fraction promotion picks the FULL
+    * writer and serving resolves to one materialized generation with
+    * zero staging batches left to union. Serving results are INVARIANT
+    * under compaction, which the entry proves by sharing the upsert
+    * oracle VERBATIM a third time: one-shot upsert, streamed upsert,
+    * and compacted stream must all serve identically.
+    */
+  val annIndexCompact = Q(
+    (s, dir) => compactAndServe(s, dir, "graft_ann_cmp", clusterFolds = 0,
+      Seq(graft.streaming.IndexStore.FoldDispatch.Full)),
     annIndexUpsert.oracle)
 
-  /** INCREMENTAL staged-index compaction ([[graft.streaming
-    * .IndexStore.compactStreamedIncremental]]): the fold touches
-    * only the clusters the staging window lands in and publishes a
-    * MANIFEST generation whose untouched clusters keep pointing at the
-    * prior generation's files — fold cost ∝ touched clusters, never
-    * the index (the full fold's ∝-index rewrite is the shape that
-    * cannot run per-fold at 100 TB). Serving is INVARIANT across full
-    * and incremental folds, proven by sharing the upsert oracle a
-    * fourth time; the manifest read resolves to one pruned scan per
-    * referenced generation.
+  /** INCREMENTAL staged-index compaction ([[graft.streaming.IndexStore
+    * .compact]]): only one cluster's odd rows stream in, over a base
+    * that already holds the rest of the odd half, so the fold touches
+    * one cluster in ten and [[graft.streaming.IndexStore.compact]] picks
+    * the INCREMENTAL writer — it publishes a MANIFEST generation whose
+    * untouched clusters keep pointing at the base files. Fold cost ∝
+    * touched clusters, never the index (the full writer's ∝-index
+    * rewrite is the shape that cannot run per-fold at 100 TB). Serving
+    * is INVARIANT across full and incremental folds, proven by sharing
+    * the upsert oracle a fourth time; the manifest read resolves to one
+    * pruned scan per referenced generation.
     */
   val annIndexCompactInc = Q(
-    (s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val even = emb.where(pmod(col("vec_id"), lit(2)) === 0)
-      val odd = emb.where(pmod(col("vec_id"), lit(2)) === 1)
-      val cb = Ann.pqSeedCodebook(even, "vec_id", "embedding", m = 8, ksub = 16)
-      val cents = Ann.pivotCentroids(even, "label", "vec_id", "embedding")
-      val scratch = scratchPath("graft_ann_inc")
-      val path = scratch.toString
-      Ann.saveIndex(Ann.pqEncode(even, "vec_id", "embedding", cb)
-        .join(even.select(col("vec_id"), col("label")), "vec_id"),
-        "label", cb, path)
-      odd.repartition(4).write.parquet(s"$path/in")
-      graft.streaming.IndexStore.annIndexUpsertDrain(
-          s.readStream.schema(odd.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$path/in"),
-          path, s"$path/ckpt", "vec_id", "embedding", cents, "label")
-        .awaitTermination()
-      PhaseTimer.phase("compact_inc") {
-        graft.streaming.IndexStore.compactStreamedIncremental(
-          s, path, "vec_id", "label")
-      }
-      // serve through the ≤1-listing-warm handle — the repeated-serve
-      // surface is oracle-carried on every read-path entry, not just
-      // ann_index_delete
-      val h = graft.streaming.IndexStore.refreshServeHandle(s,
-        graft.streaming.IndexStore.openServeHandle(
-          s, path, "vec_id", "label"))
-      servedThenCleanup(
-        Ann.ivfPqTopK(h.codes, "vec_id", "label", cents,
-          emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-          h.codebook, k = 5, nprobe = 3),
-        scratch)
-    },
+    (s, dir) => compactAndServe(s, dir, "graft_ann_inc", clusterFolds = 1,
+      Seq(graft.streaming.IndexStore.FoldDispatch.Incremental)),
     annIndexUpsert.oracle)
 
-  /** POLICY-driven staged-index compaction ([[graft.streaming
-    * .IndexStore.compactStreamedAuto]]): the fold-or-promote
-    * trigger run end-to-end — plan the incremental fold's metadata and
-    * dispatch (chain width vs `maxRoots`, touched fraction vs
-    * `maxTouchedFrac`) to one of the two proven folds. The streamed
-    * odd batch lands across ALL clusters, so the touched-fraction
-    * trigger promotes to the FULL fold here (the incremental branch
-    * and both thresholds are spec-pinned with surgical staging);
-    * serving is INVARIANT whichever branch fires, proven by sharing
-    * the upsert oracle a fifth time.
+  /** The fold DECISION over a growing manifest chain ([[graft.streaming
+    * .IndexStore.compact]]): four single-cluster folds, each touching a
+    * cluster no earlier fold touched. The first three stay INCREMENTAL
+    * — each adds one materialized root to the chain (2, 3, then 4
+    * roots) — and the fourth would reference 5 > 4 roots, so the chain
+    * width promotes it to the FULL writer, which resets the chain to
+    * one generation. Serving is INVARIANT whichever writer runs, proven
+    * by sharing the upsert oracle a fifth time.
     */
   val annIndexCompactAuto = Q(
     (s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val even = emb.where(pmod(col("vec_id"), lit(2)) === 0)
-      val odd = emb.where(pmod(col("vec_id"), lit(2)) === 1)
-      val cb = Ann.pqSeedCodebook(even, "vec_id", "embedding", m = 8, ksub = 16)
-      val cents = Ann.pivotCentroids(even, "label", "vec_id", "embedding")
-      val scratch = scratchPath("graft_ann_auto")
-      val path = scratch.toString
-      Ann.saveIndex(Ann.pqEncode(even, "vec_id", "embedding", cb)
-        .join(even.select(col("vec_id"), col("label")), "vec_id"),
-        "label", cb, path)
-      odd.repartition(4).write.parquet(s"$path/in")
-      graft.streaming.IndexStore.annIndexUpsertDrain(
-          s.readStream.schema(odd.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$path/in"),
-          path, s"$path/ckpt", "vec_id", "embedding", cents, "label")
-        .awaitTermination()
-      PhaseTimer.phase("compact_auto") {
-        graft.streaming.IndexStore.compactStreamedAuto(
-          s, path, "vec_id", "label")
-      }
-      // serve through the ≤1-listing-warm handle — the repeated-serve
-      // surface is oracle-carried on every read-path entry, not just
-      // ann_index_delete
-      val h = graft.streaming.IndexStore.refreshServeHandle(s,
-        graft.streaming.IndexStore.openServeHandle(
-          s, path, "vec_id", "label"))
-      servedThenCleanup(
-        Ann.ivfPqTopK(h.codes, "vec_id", "label", cents,
-          emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-          h.codebook, k = 5, nprobe = 3),
-        scratch)
+      import graft.streaming.IndexStore.FoldDispatch.{Full, Incremental}
+      compactAndServe(s, dir, "graft_ann_auto", clusterFolds = 4,
+        Seq(Incremental, Incremental, Incremental, Full))
     },
     annIndexUpsert.oracle)
 
@@ -1730,8 +1708,7 @@ private[graft] object EntriesAnn {
         .repartition(1).write.mode("append").parquet(s"$path/in")
       PhaseTimer.phase("reinsert_drain") { drain() }
       PhaseTimer.phase("fold") {
-        graft.streaming.IndexStore.compactStreamedIndex(
-          s, path, "vec_id", "label")
+        graft.streaming.IndexStore.compact(s, path, "vec_id", "label")
       }
       // serve through the ≤1-listing-warm handle — the repeated-serve
       // surface is oracle-carried on every read-path entry, not just
@@ -1940,7 +1917,7 @@ private[graft] object EntriesAnn {
     * verb fires through the DECISION TABLE instead of operator glue —
     * tick 1 (fold-only policy: drift trigger disabled, fold threshold
     * 1 staged batch) reads the staged window and FOLDS via
-    * `compactStreamedAuto`; tick 2 (drift threshold 0.9999, the
+    * `compact`; tick 2 (drift threshold 0.9999, the
     * deterministic-fire bar `ann_retrain_on_drift` established) fires
     * the drift trigger and RETRAINS onto the full-corpus centroids;
     * tick 3 (the fold-only policy again) finds nothing staged,

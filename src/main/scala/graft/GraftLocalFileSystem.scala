@@ -4,8 +4,8 @@ import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants,
-  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
+  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -17,9 +17,12 @@ import org.apache.hadoop.fs.permission.FsPermission
   * process, and Hadoop calls it once for every file it creates and every
   * directory it makes (part files, `.crc` sidecars, partition and
   * `_temporary` directories). `Raw` sets the same bits in-process instead;
-  * files, bytes and modes written are unchanged. [[GraftLocalFileSystem.Fs]]
-  * does the same for `FileContext` writers, such as Structured
-  * Streaming's checkpoint and file-sink logs.
+  * files, bytes and modes written are unchanged. Likewise
+  * `RawLocalFileSystem.getFileLinkStatus` starts a `readlink` process per
+  * call, and a `FileContext` rename makes two; `Raw` asks the JDK whether
+  * the path is a link first. [[GraftLocalFileSystem.Fs]] serves both to
+  * `FileContext` writers, such as Structured Streaming's checkpoint and
+  * file-sink logs.
   */
 class GraftLocalFileSystem extends LocalFileSystem(new GraftLocalFileSystem.Raw)
 
@@ -27,8 +30,14 @@ object GraftLocalFileSystem {
   /** `RawLocalFileSystem` with an in-process `setPermission`. The mode
     * arrives with the umask already applied, as in the stock class. A
     * sticky-bit mode, which `PosixFilePermission` cannot express, or a
-    * store without a POSIX attribute view takes Hadoop's own path. */
+    * store without a POSIX attribute view takes Hadoop's own path. A
+    * link status of a path that is not a symlink is its plain status,
+    * as in the stock class; a symlink takes Hadoop's own path. */
   class Raw extends RawLocalFileSystem {
+    override def getFileLinkStatus(f: Path): FileStatus =
+      if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
+      else getFileStatus(f)
+
     override def setPermission(p: Path, permission: FsPermission): Unit =
       if (permission.getStickyBit) super.setPermission(p, permission)
       else

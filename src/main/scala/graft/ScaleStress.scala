@@ -675,17 +675,19 @@ object ScaleStress {
       }),
       "ann_index_chain_read" -> (f => {
         // manifest-CHAIN read cost at FIXED data: one index per factor,
-        // base codes (1000 clusters) plus f incremental folds each
-        // touching a DISTINCT cluster, so the live manifest references
-        // f + 1 materialized roots and a serve pays one pruned scan per
-        // root ([[IndexStore.readVersion]]). Data is constant
-        // across rungs — the exponent is pure fan-out slope, the
-        // number that makes compactStreamedAuto's maxRoots a measured
-        // bound (on local disk the per-root cost is listing + scan
-        // setup; an object store's listing latency multiplies it).
-        // Timed portion = the fan-out SCAN; manifest resolution (one
-        // driver-side budget-guarded parquet read) sits at plan
-        // construction, outside the timer, like every model collect
+        // base codes (1000 clusters) plus f folds each touching a
+        // DISTINCT cluster. IndexStore.compact folds incrementally until
+        // the next manifest would reference more than 4 materialized
+        // roots, then promotes to a full fold that resets the chain, so
+        // the live manifest references at most 4 roots at any f: the
+        // rung measures the bounded read cost the promotion ships (one
+        // pruned scan per root, [[IndexStore.readVersion]]; on local
+        // disk the per-root cost is listing + scan setup, an object
+        // store's listing latency multiplies it). Data is constant
+        // across rungs. Timed portion = the fan-out SCAN; manifest
+        // resolution (one driver-side budget-guarded parquet read) sits
+        // at plan construction, outside the timer, like every model
+        // collect
         val dir = s"$workDir/chain_f$f"
         if (!Files.exists(Paths.get(s"$dir/_chain_built"))) {
           val base = embP(factors.head).select(col("vec_id"),
@@ -693,7 +695,7 @@ object ScaleStress {
             pmod(col("vec_id"), lit(1000)).cast("long").as("cl"))
           base.write.mode("overwrite").partitionBy("cl")
             .parquet(s"$dir/codes")
-          (0 until f).foreach { j =>
+          val ran = (0 until f).map { j =>
             embP(factors.head).where(col("vec_id") < 50)
               .select((col("vec_id") + lit(80000000L + j * 1000L))
                 .as("vec_id"),
@@ -701,9 +703,10 @@ object ScaleStress {
                 lit(j.toLong).as("cl"))
               .write.mode("overwrite").partitionBy("cl")
               .parquet(s"$dir/stream/batch=$j")
-            graft.streaming.IndexStore.compactStreamedIncremental(
-              spark, dir, "vec_id", "cl")
+            graft.streaming.IndexStore.compact(spark, dir, "vec_id", "cl")
           }
+          System.err.println(
+            s"[stress] ann_index_chain_read f$f folds ran: ${ran.mkString(",")}")
           Files.createFile(Paths.get(s"$dir/_chain_built"))
         }
         graft.streaming.IndexStore.loadStreamedCodes(
@@ -764,6 +767,12 @@ object ScaleStress {
       Files.write(p, (n0 + n).toString.getBytes)
       n0 until (n0 + n)
     }
+    // a timed fold: the stress log records which writer compact ran,
+    // since the decision depends on the rung's factor
+    def timedFold(op: String, f: Int, dir: String): () => Unit = () => {
+      val ran = IndexStore.compact(spark, dir, "vec_id", "cl")
+      System.err.println(s"[stress] $op f$f fold ran: $ran")
+    }
     val effectOps: Seq[(String, Int => (() => Unit, () => Long))] = Seq(
       "ann_write_hot_cluster" -> (f => {
         // HOT-CLUSTER write-path rung (r21): half the corpus lands in
@@ -822,10 +831,11 @@ object ScaleStress {
           () => batch.count())
       }),
       "ann_index_compact_inc_touched" -> (f => {
-        // INCREMENTAL fold with staging confined to ~one cluster
-        // (label-0 rows only): fold cost must track touched clusters ×
-        // cluster size + staging — FLAT as the index grows — where the
-        // full fold below tracks the whole index
+        // fold with staging confined to label-0 rows: once the index
+        // has enough clusters that they touch under half of them,
+        // compact folds INCREMENTALLY and the cost must track touched
+        // clusters × cluster size + staging — FLAT as the index grows —
+        // where a full fold tracks the whole index
         val dir = lifecycleIndex(f, "ci")
         val cents = spark.read.parquet(s"$dir/cents_ext")
         val cb = graft.ann.Ann.readCodebook(spark, s"$dir/codebook")
@@ -842,13 +852,12 @@ object ScaleStress {
         }
         val pre = IndexStore.loadStreamedCodes(
           spark, dir, "vec_id", "cl").count()
-        (() => IndexStore.compactStreamedIncremental(
-            spark, dir, "vec_id", "cl"),
+        (timedFold("ann_index_compact_inc_touched", f, dir),
           () => {
             val post = IndexStore.loadStreamedCodes(
               spark, dir, "vec_id", "cl").count()
             require(post == pre,
-              s"serve not invariant under incremental fold: $pre -> $post")
+              s"serve not invariant under fold: $pre -> $post")
             post
           })
       }),
@@ -900,7 +909,7 @@ object ScaleStress {
             // not code). The invocation count still lands in the
             // artifact (delete_live_invocations) so cross-round
             // comparisons stay attributable.
-            IndexStore.compactStreamedIndex(spark, dir, "vec_id", "cl")
+            IndexStore.compact(spark, dir, "vec_id", "cl")
             post
           })
       }),
@@ -952,7 +961,7 @@ object ScaleStress {
             // apply an ever-growing live-tombstone set — without this
             // the rung measures tombstone accumulation, not the
             // per-call probe
-            IndexStore.compactStreamedIndex(spark, dir, "vec_id", "cl")
+            IndexStore.compact(spark, dir, "vec_id", "cl")
             post
           })
       }),
@@ -964,9 +973,12 @@ object ScaleStress {
         // steady-state shape a long-lived index folds under —
         // grace-retained prior generation, carried model tables,
         // applied-tombstone markers, a longer root listing, and the
-        // accumulated rows of every prior cycle. Quote ∝-index fold
-        // slopes from THIS rung; the fresh rung stays for cross-round
-        // comparability.
+        // accumulated rows of every prior cycle. compact picks the
+        // writer by the fixed staging's touched fraction, so a full fold
+        // at small f can turn incremental as f adds clusters; the log
+        // line of each timed fold says which ran. Quote ∝-index fold
+        // slopes from THIS rung's full folds; the fresh rung stays for
+        // cross-round comparability.
         val dir = lifecycleIndex(f, "cg")
         val cents = spark.read.parquet(s"$dir/cents_ext")
         val cb = graft.ann.Ann.readCodebook(spark, s"$dir/codebook")
@@ -1004,14 +1016,13 @@ object ScaleStress {
           else 0
         while (grownCycles() < 8) {
           stageN(4)
-          IndexStore.compactStreamedIndex(spark, dir, "vec_id", "cl")
+          IndexStore.compact(spark, dir, "vec_id", "cl")
           writeCycles(grownCycles() + 1)
         }
         stageN(4)
         val pre = IndexStore.loadStreamedCodes(
           spark, dir, "vec_id", "cl").count()
-        (() => IndexStore.compactStreamedIndex(
-            spark, dir, "vec_id", "cl"),
+        (timedFold("ann_index_compact_full_grown", f, dir),
           () => {
             val post = IndexStore.loadStreamedCodes(
               spark, dir, "vec_id", "cl").count()
@@ -1061,10 +1072,12 @@ object ScaleStress {
           () => members.size.toLong)
       }),
       "ann_index_compact_fixed_staging" -> (f => {
-        // FIXED staging (4 batches × 50 rows) over the f× index: the
-        // fold rewrites the serving view, so the rung must track the
-        // INDEX. Serving row count is asserted invariant across the
-        // fold (the entry's oracle-parity claim, measured per rung).
+        // FIXED staging (4 batches × 50 rows) over the f× index: a full
+        // fold rewrites the serving view and tracks the INDEX, an
+        // incremental one the touched clusters; compact picks by the
+        // touched fraction and the log line says which ran. Serving row
+        // count is asserted invariant across the fold (the entry's
+        // oracle-parity claim, measured per rung).
         val dir = lifecycleIndex(f, "cp")
         val cents = spark.read.parquet(s"$dir/cents_ext")
         val cb = graft.ann.Ann.readCodebook(spark, s"$dir/codebook")
@@ -1080,8 +1093,7 @@ object ScaleStress {
         }
         val pre = IndexStore.loadStreamedCodes(
           spark, dir, "vec_id", "cl").count()
-        (() => IndexStore.compactStreamedIndex(
-            spark, dir, "vec_id", "cl"),
+        (timedFold("ann_index_compact_fixed_staging", f, dir),
           () => {
             val post = IndexStore.loadStreamedCodes(
               spark, dir, "vec_id", "cl").count()

@@ -433,9 +433,9 @@ object IndexStore {
     * heap — the [[Bookmark.DefaultNewFilesBudget]] discipline. The
     * repo's honest-IVF doctrine is nlist ∝ N, so at web scale the
     * manifest CAN grow past any fixed driver budget: the guard fails
-    * fast with the remedy (fold fully — one materialized generation
-    * has no manifest — or raise the budget deliberately) instead of
-    * silently ballooning driver state.
+    * fast with the remedy (a fold that promotes to full, or a retrain —
+    * one materialized generation has no manifest — or a deliberately
+    * raised budget) instead of silently ballooning driver state.
     */
   val DefaultManifestBudget = 1000000
 
@@ -453,10 +453,10 @@ object IndexStore {
       .limit(budget + 1).collect()
     if (rows.length > budget) throw new IllegalStateException(
       s"manifest at $versionPath holds more than $budget entries — the " +
-        "driver-held cluster→root map would exceed its budget. Fold " +
-        "fully (compactStreamedIndex / retrain materializes one " +
-        "generation with no manifest), or raise manifestBudget " +
-        "deliberately.")
+        "driver-held cluster→root map would exceed its budget. Retrain " +
+        "(one materialized generation, no manifest), run compact under " +
+        "a raised manifestBudget until a fold promotes to full, or " +
+        "raise manifestBudget deliberately.")
     rows.toSeq
   }
 
@@ -681,130 +681,77 @@ object IndexStore {
     applyTombstones(spark, state.indexPath, view, id, state.pendingTombs)
   }
 
-  /** Fold the staged micro-batch partitions into a compacted codes
-    * table — the periodic half of the stream-upsert lifecycle: staging
-    * accumulates one directory per micro-batch, and a serve that unions
-    * hundreds of them pays file-listing and small-file costs the
-    * compacted table doesn't. Serving results are INVARIANT under
-    * compaction (same rows, same cluster partitioning — the entry
-    * proves it by sharing the upsert oracle).
+  /** Fold the staged micro-batch partitions (and the pending
+    * tombstones) into the next generation — the periodic half of the
+    * stream-upsert lifecycle: staging accumulates one directory per
+    * micro-batch, and a serve that unions hundreds of them pays
+    * file-listing and small-file costs a folded generation doesn't.
+    * Serving results are INVARIANT under the fold, whichever writer
+    * runs (the `ann_index_compact*` entries prove it by sharing the
+    * upsert oracle).
+    *
+    * Two writers, one decision. The fold plans from ONE index state
+    * ([[FoldPlan]]: the staged window, the tombstones it consumes, the
+    * prior generation's cluster → root map and the clusters the fold
+    * touches) and reads only listings, the pending tombstones and the
+    * budget-guarded prior manifest to decide — no index data files:
+    *
+    *  - INCREMENTAL ([[foldIncremental]]): rewrite only the touched
+    *    clusters and publish a MANIFEST generation whose untouched
+    *    clusters keep pointing at their prior materialized roots. Fold
+    *    cost tracks `touched clusters × cluster size + staging`,
+    *    invariant in the index; the price is a reference layer (one
+    *    pruned scan per referenced root on read, [[readVersion]]; GC
+    *    keeps every root a live manifest references,
+    *    [[referencedRoots]]).
+    *  - FULL ([[foldFull]]): rewrite the serving view whole into one
+    *    materialized generation — cost ∝ index, chain width back to 1,
+    *    referenced history reclaimable. Chosen when the new manifest
+    *    would reference more than [[MaxRoots]] roots (chain width is
+    *    read fan-out, and without a bound it grows by up to one root
+    *    per fold) or the window touches at least [[MaxTouchedFrac]] of
+    *    the clusters (the incremental fold would rewrite most of the
+    *    index anyway). Pending tombstones' recorded clusters count as
+    *    touched for both triggers — the fold rewrites them.
     *
     * Crash-safe by monotone publication — no live directory is ever
-    * renamed or rewritten (an earlier design swapped `codes` via two
-    * renames, which leaves a window with NO live index at all):
-    * (1) snapshot the staged batch ids ([[FoldPlan]]) and take their
-    * max as the fold's high-water `hw`, (2) write the serving view
-    * BOUNDED AT `hw` to a fresh `codes_v<n>` (n = highest existing suffix + 1; a
-    * half-written dir from a crash is invisible and simply superseded)
-    * — the bound matters: a micro-batch landing between the snapshot
+    * renamed or rewritten: (1) snapshot the staged batch ids and take
+    * their max as the fold's high-water `hw`, (2) write the serving view
+    * BOUNDED AT `hw` to a fresh `codes_v<n>` (n = highest existing
+    * suffix + 1; a half-written dir from a crash is invisible and
+    * simply superseded) — a micro-batch landing between the snapshot
     * and the fold's scan would otherwise be folded in while sitting
     * ABOVE the published marker, and every later serve would union it
-    * a second time, (3) publish by writing the `_folded` marker — `hw`
-    * — via tmp + atomic rename-to-fresh, (4) only then garbage-collect
-    * ONE GENERATION BEHIND: versions older than the prior complete
-    * version, and staged batches the PRIOR version had already folded.
-    * The just-superseded version and its staging tail survive until
-    * the NEXT compaction (or an explicit [[gcStreamedIndex]]), so a
-    * reader that resolved the prior version before this publication
-    * can still finish its scan — deleting inline at publish time would
-    * fail it with FileNotFound mid-query. A crash before (3) changes
-    * nothing for readers; after (3), [[loadStreamedCodes]] unions only
-    * batches ABOVE the marker's high-water, so not-yet-deleted staging
-    * is skipped, never double-counted. New stream batches keep landing
-    * with monotonically increasing ids (the checkpoint's batchId —
-    * [[annIndexUpsertDrain]]'s run marker + high-water guard enforce
-    * the monotonicity), so upserts may continue across compactions.
+    * a second time, (3) carry the models and publish by writing the
+    * `_folded` marker — `hw` — via tmp + atomic rename-to-fresh, (4)
+    * only then garbage-collect ONE GENERATION BEHIND ([[graceGc]]), so
+    * a reader that resolved the prior generation can still finish its
+    * scan. A crash before (3) changes nothing for readers; after (3),
+    * [[loadStreamedCodes]] unions only batches ABOVE the marker, so
+    * not-yet-deleted staging is skipped, never double-counted. New
+    * stream batches keep landing with monotonically increasing ids
+    * ([[annIndexUpsertDrain]]'s run marker + high-water guard), so
+    * upserts may continue across folds.
     *
-    * `upTo` bounds which staged batches this compaction folds
-    * (inclusive); the default folds everything staged at snapshot
-    * time. It doubles as the deterministic harness for the
-    * mid-compaction race: folding `upTo = k` with batches above `k`
-    * already staged is observationally identical to a batch landing
-    * after the snapshot.
-    */
-  def compactStreamedIndex(
-      spark: SparkSession, indexPath: String,
-      id: String, cluster: String,
-      upTo: Option[Long] = None,
-      manifestBudget: Int = DefaultManifestBudget): Unit = {
-    val plan = planFold(spark, indexPath, cluster, upTo, manifestBudget)
-    if (!plan.isEmpty) foldFull(spark, plan, id, cluster)
-  }
-
-  /** Incremental compaction: fold ONLY the clusters the unfolded
-    * staging window touches, and publish a MANIFEST generation whose
-    * untouched clusters keep pointing at the prior generation's
-    * materialized files. [[compactStreamedIndex]] rewrites the whole
-    * serving view — honest, but ∝ index (the stress rung measures
-    * exponent ≈ 1), which at 100 TB means rewriting 100 TB per fold;
-    * here the fold cost tracks `touched clusters × cluster size +
-    * staging`, invariant in the index. The price is a reference
-    * layer: reads resolve the manifest ([[readVersion]] — one pruned
-    * scan per referenced generation), and GC must keep every
-    * generation a LIVE manifest references ([[referencedRoots]]).
-    * Publication remains monotone and atomic: data, manifest, and the
-    * carried model tables all land before the `_folded` marker. Same
-    * snapshot-bounded fold and `upTo` harness as the full compaction.
-    *
-    * Serving results are INVARIANT across full and incremental
-    * compaction (the entry proves it by sharing the upsert oracle);
-    * choosing between them is a cost policy — fold incrementally while
-    * the touched fraction is small, fold fully (or retrain) when the
-    * reference chains or the touched fraction grow.
-    */
-  def compactStreamedIncremental(
-      spark: SparkSession, indexPath: String,
-      id: String, cluster: String,
-      upTo: Option[Long] = None,
-      manifestBudget: Int = DefaultManifestBudget): Unit = {
-    val plan = planFold(spark, indexPath, cluster, upTo, manifestBudget)
-    if (!plan.isEmpty) foldIncremental(spark, plan, id, cluster)
-  }
-
-  /** The fold-or-promote POLICY the incremental doc defers to the
-    * caller ("fold fully when the reference chains or the touched
-    * fraction grow"), made a measured trigger: plan the incremental
-    * fold's metadata (staged window, touched clusters, prior manifest)
-    * and promote to a FULL fold when either
-    *
-    *  - the NEW generation's manifest would reference more than
-    *    `maxRoots` distinct materialized roots — every manifest read
-    *    costs one pruned scan PER referenced root
-    *    ([[readVersion]]), so chain width is scan fan-out, and
-    *    without a bound it grows by up to one root per fold; or
-    *  - the staging window touches at least `maxTouchedFrac` of the
-    *    clusters — the incremental fold would rewrite most of the
-    *    index anyway, so the manifest indirection buys little and the
-    *    full fold resets chain width to 1 and makes referenced
-    *    history reclaimable.
-    *
-    * Cost shape: the decision reads only listings and the
-    * budget-guarded prior manifest — no data files — and the chosen
-    * fold writes from the same [[FoldPlan]] (no second listing), so
-    * the policy costs what the fold it chose costs alone, and serving
-    * stays invariant by the folds' shared contract. The chain-depth stress
-    * rung measures the read-cost-vs-roots slope that makes `maxRoots`
-    * a real bound, not prose. Returns WHICH fold it dispatched
-    * ([[FoldDispatch]]) so a policy caller
+    * `upTo` bounds which staged batches this fold takes (inclusive);
+    * the default folds everything staged at snapshot time. It doubles
+    * as the deterministic harness for the mid-fold race: folding
+    * `upTo = k` with batches above `k` already staged is
+    * observationally identical to a batch landing after the snapshot.
+    * Returns which writer ran ([[FoldDispatch]]), so a policy caller
     * ([[maintainStreamedIndex]]) can report the decision.
     */
-  def compactStreamedAuto(
+  def compact(
       spark: SparkSession, indexPath: String,
       id: String, cluster: String,
       upTo: Option[Long] = None,
-      maxRoots: Int = 4, maxTouchedFrac: Double = 0.5,
       manifestBudget: Int = DefaultManifestBudget): FoldDispatch = {
-    require(maxRoots >= 1, s"maxRoots must be >= 1, got $maxRoots")
-    require(maxTouchedFrac > 0.0 && maxTouchedFrac <= 1.0,
-      s"maxTouchedFrac must be in (0, 1], got $maxTouchedFrac")
     // the plan refuses BEFORE the decision: a retrain racing this fold
     // is consuming the very staging window the decision is about to
     // read — the NothingToFold early return must not let a policy tick
     // log "folded_nothing" while a retrain held the index
     val plan = planFold(spark, indexPath, cluster, upTo, manifestBudget)
     if (plan.isEmpty) return FoldDispatch.NothingToFold
-    // pending tombstones' recorded clusters are in `touched`, so they
-    // count for BOTH triggers — the chosen fold rewrites them
     val touched = plan.touched
     val untouchedRoots = plan.priorEntries.collect {
       case (v, root) if !touched(v) => root
@@ -815,9 +762,9 @@ object IndexStore {
     val touchedFrac =
       if (allClusters == 0) 1.0
       else touched.size.toDouble / allClusters
-    // the chosen fold writes exactly the window the policy costed; a
+    // the chosen writer folds exactly the window the decision costed; a
     // batch staged after the plan's listing folds next cycle
-    if (prospectiveRoots > maxRoots || touchedFrac >= maxTouchedFrac) {
+    if (prospectiveRoots > MaxRoots || touchedFrac >= MaxTouchedFrac) {
       foldFull(spark, plan, id, cluster)
       FoldDispatch.Full
     } else {
@@ -826,8 +773,18 @@ object IndexStore {
     }
   }
 
-  /** Which fold [[compactStreamedAuto]] dispatched — the policy
-    * caller's decision record.
+  /** [[compact]] promotes to a full fold when the new manifest would
+    * reference more than this many materialized roots.
+    */
+  private val MaxRoots = 4
+
+  /** [[compact]] promotes to a full fold when the window touches at
+    * least this fraction of the clusters.
+    */
+  private val MaxTouchedFrac = 0.5
+
+  /** Which writer [[compact]] ran — the policy caller's decision
+    * record.
     */
   sealed trait FoldDispatch
   object FoldDispatch {
@@ -840,10 +797,10 @@ object IndexStore {
   }
 
   /** One fold's plan, decided from ONE [[IndexState]] before anything
-    * is written, and shared by both folds and [[compactStreamedAuto]]'s
+    * is written, and shared by both writers and [[compact]]'s
     * decision: the staged batches up to `upTo` and their high-water
     * `hw`, the pending tombstones and their high-water `tombHw`, and —
-    * read only when first needed — the prior
+    * read only when the plan is not empty — the prior
     * generation's manifest entries and the clusters the fold touches.
     */
   private final class FoldPlan(
@@ -907,7 +864,7 @@ object IndexStore {
       manifestBudget, upTo)
   }
 
-  /** [[compactStreamedIndex]]'s write: the serving view bounded at the
+  /** [[compact]]'s full writer: the serving view bounded at the
     * plan's high-waters, rewritten whole.
     */
   private def foldFull(
@@ -929,7 +886,7 @@ object IndexStore {
     ()
   }
 
-  /** [[compactStreamedIncremental]]'s write: the touched clusters'
+  /** [[compact]]'s incremental writer: the touched clusters'
     * prior rows and the staging window, plus a manifest pointing the
     * untouched clusters at their prior roots.
     */
@@ -1549,9 +1506,6 @@ object IndexStore {
     *    folding every tiny batch wastes generations; letting the
     *    window grow unboundedly makes every serve pay the staging
     *    union).
-    *  - `maxRoots` / `maxTouchedFrac`: passed through to
-    *    [[compactStreamedAuto]] — the measured incremental-vs-full
-    *    promotion.
     *  - `driftMinCosine` / `driftProbeFraction`: the retrain trigger
     *    ([[retrainOnDrift]] — worst serving-cluster cosine on a
     *    deterministic id-hash sample); `driftMinCosine = -1` DISABLES
@@ -1561,11 +1515,9 @@ object IndexStore {
   final case class MaintenancePolicy(
       foldMinStaged: Int = 4,
       foldMinTombstones: Int = 1,
-      maxRoots: Int = 4,
-      maxTouchedFrac: Double = 0.5,
       driftMinCosine: Double = 0.999,
       driftProbeFraction: Double = 1.0) {
-    // all six knobs validate at CONSTRUCTION — a policy is configured
+    // all four knobs validate at CONSTRUCTION — a policy is configured
     // once per index class, so a bad knob must fail there, not days
     // later on the first tick whose threshold trips (or, worse,
     // silently: a sub- -1 driftMinCosine typo would disable the
@@ -1574,9 +1526,6 @@ object IndexStore {
       s"foldMinStaged must be >= 1, got $foldMinStaged")
     require(foldMinTombstones >= 1,
       s"foldMinTombstones must be >= 1, got $foldMinTombstones")
-    require(maxRoots >= 1, s"maxRoots must be >= 1, got $maxRoots")
-    require(maxTouchedFrac > 0.0 && maxTouchedFrac <= 1.0,
-      s"maxTouchedFrac must be in (0, 1], got $maxTouchedFrac")
     require(driftMinCosine >= -1.0 && driftMinCosine <= 1.0,
       s"driftMinCosine must be in [-1, 1] (-1 disables the trigger), " +
         s"got $driftMinCosine")
@@ -1596,7 +1545,7 @@ object IndexStore {
       */
     case object NoOp extends MaintenanceAction
     /** The fold threshold tripped; `dispatch` records which fold
-      * [[compactStreamedAuto]] chose.
+      * [[compact]] ran.
       */
     final case class Folded(dispatch: FoldDispatch)
       extends MaintenanceAction
@@ -1742,7 +1691,7 @@ object IndexStore {
     * its own fences and serving invariants; this verb only decides,
     * so a scheduler can run it per index per tick instead of an
     * operator hand-sequencing `indexStatus` → `centroidDrift` →
-    * `compactStreamedAuto` / `retrainOnDrift` — at fleet scale the
+    * `compact` / `retrainOnDrift` — at fleet scale the
     * policy IS the operator story.
     *
     * Decision table, first match wins:
@@ -1759,9 +1708,8 @@ object IndexStore {
     *     immediately obsoletes.
     *  3. Unfolded staged batches ≥ `foldMinStaged` OR pending
     *     tombstone batches ≥ `foldMinTombstones` →
-    *     [[MaintenanceAction.Folded]] via [[compactStreamedAuto]]
-    *     (its measured incremental-vs-full promotion, with the
-    *     policy's `maxRoots` / `maxTouchedFrac`).
+    *     [[MaintenanceAction.Folded]] via [[compact]] (which picks
+    *     the incremental or the full writer itself).
     *  4. Otherwise [[MaintenanceAction.NoOp]].
     *
     * Tick cost: listings ([[indexStatus]]) + one linear drift probe
@@ -1828,18 +1776,15 @@ object IndexStore {
     val staged = unfolded >= policy.foldMinStaged
     val tombs = status.pendingTombstones.size >= policy.foldMinTombstones
     if (staged || tombs) {
-      // the status only decides that a fold is due: compactStreamedAuto
+      // the status only decides that a fold is due: compact
       // reads the index state again and folds what that read lists, so
       // a batch staged since indexStatus folds in this tick too
       val trig =
         if (staged && tombs) "staged+tombstones"
         else if (staged) "staged" else "tombstones"
       (blockedOnLockRace(spark, indexPath) {
-        MaintenanceAction.Folded(compactStreamedAuto(
-          spark, indexPath, id, cluster,
-          maxRoots = policy.maxRoots,
-          maxTouchedFrac = policy.maxTouchedFrac,
-          manifestBudget = manifestBudget))
+        MaintenanceAction.Folded(compact(
+          spark, indexPath, id, cluster, manifestBudget = manifestBudget))
       }, trig)
     } else (MaintenanceAction.NoOp, "none")
   }
@@ -2143,13 +2088,14 @@ object IndexStore {
     * materializing clusters for the NEWEST generation's manifest —
     * plus every staged batch the newest version already folded, and
     * the staging dir itself once empty — unless the `stream/_run`
-    * checkpoint-ownership marker pins it. [[compactStreamedIndex]]
+    * checkpoint-ownership marker pins it. [[compact]]
     * deliberately retains one superseded generation for in-flight
     * readers; call this only from a point where no reader can hold a
     * pre-publication view (maintenance window, end of a batch job) to
     * reclaim that last generation. To reclaim manifest-referenced
-    * history too, run a FULL [[compactStreamedIndex]] (or a retrain)
-    * first — it materializes everything into one generation.
+    * history too, let a fold [[compact]] promotes to full (or a
+    * retrain) run first — it materializes everything into one
+    * generation.
     */
   def gcStreamedIndex(spark: SparkSession, indexPath: String): Unit = {
     val fs = hfs(spark, indexPath)

@@ -609,23 +609,20 @@ object StreamingIngest {
         // pin the state tree to this checkpoint PATH for its lifetime
         // (a DIFFERENT checkpoint restarts batch ids at 0, skips the
         // drained history in the `_ < batchId` state read, and
-        // overwrites live out/seen dirs); the high-water check below
+        // overwrites live seen dirs); the high-water check below
         // covers what a path claim cannot — the same path deleted and
         // recreated
         DrainState.claimRun(spark, statePath, checkpoint)
-        def batchIdsUnder(sub: String): Seq[Long] =
-          IndexStore.listIds(spark, s"$statePath/$sub", "batch=")
-        val seenIds = batchIdsUnder("seen")
+        val seenIds = IndexStore.listIds(spark, s"$statePath/seen", "batch=")
         // the path-keyed claim cannot see a checkpoint DELETED and
         // recreated at the same path — batch ids restart at 0, pass
-        // the claim, and would overwrite out/batch=0 while the
+        // the claim, and would overwrite seen/batch=0 while the
         // `_ < batchId` state read skips all drained history. A batch
         // id strictly below the drained high-water mark is that replay
         // -from-zero (a crash-replay of the CURRENT batch re-lands at
         // its own id, which is never strictly below) — fail loudly,
         // mirroring the index drain's epoch/high-water discipline
-        val highWater = (seenIds ++ batchIdsUnder("out")).maxOption
-        highWater.filter(batchId < _).foreach { hw =>
+        seenIds.maxOption.filter(batchId < _).foreach { hw =>
           throw new IllegalStateException(
             s"semantic-dedup state at $statePath has drained through " +
               s"batch $hw but this stream presented batch $batchId — " +

@@ -78,6 +78,8 @@ class GraftLocalFileSystemSpec extends SparkSpec {
 
   test("a streaming batch writes its checkpoint and sink log with no " +
       "chmod process") {
+    // and no readlink: each checkpoint rename reads the link status of
+    // its source and destination
     withTempDir { dir =>
       val in = dir.resolve("in").toString
       spark.range(0, 10).write.parquet(in)
@@ -89,7 +91,7 @@ class GraftLocalFileSystemSpec extends SparkSpec {
           .awaitTermination()
       }
       assert(!commands.exists(_.contains("chmod")), commands)
-      info(s"readlink processes: ${commands.count(_.contains("readlink"))}")
+      assert(!commands.exists(_.contains("readlink")), commands)
       assert(spark.read.parquet(dir.resolve("out").toString).count() == 10)
     }
   }
@@ -126,6 +128,37 @@ class GraftLocalFileSystemSpec extends SparkSpec {
         assert(perms(dir.resolve(s"$name.txt")) == "rw-------", name)
         assert(perms(dir.resolve(s".$name.txt.crc")) == "rw-------", name)
         assert(perms(dir.resolve(s"${name}_dir")) == "rwx------", name)
+      }
+    }
+  }
+
+  test("link status: a file, a directory, a symlink and a missing path " +
+      "read as the stock RawLocalFileSystem reads them") {
+    withTempDir { dir =>
+      val conf = new Configuration()
+      val ours = initialized(new GraftLocalFileSystem.Raw, conf)
+      val stock = initialized(new RawLocalFileSystem, conf)
+      val file = Files.write(dir.resolve("file"), "abc".getBytes("UTF-8"))
+      val sub = Files.createDirectory(dir.resolve("dir"))
+      val link = Files.createSymbolicLink(dir.resolve("link"), file)
+      def fields(fs: FileSystem, p: Path) = {
+        val st = fs.getFileLinkStatus(p)
+        (st.getPath, st.isFile, st.isDirectory, st.isSymlink,
+          if (st.isSymlink) Some(st.getSymlink) else None, st.getLen,
+          st.getModificationTime, st.getPermission, st.getOwner,
+          st.getGroup)
+      }
+      // both the qualified form and the scheme-less one: the stock class
+      // runs `readlink` on the path's string, so it sees a link only
+      // through the scheme-less form
+      def forms(p: JPath) = Seq(new Path(p.toUri), new Path(p.toString))
+      for (p <- Seq(file, sub, link); f <- forms(p))
+        assert(fields(ours, f) == fields(stock, f), f)
+      assert(fields(ours, new Path(link.toString))._4,
+        "the scheme-less symlink reads as a symlink")
+      for (f <- forms(dir.resolve("missing"))) {
+        intercept[java.io.FileNotFoundException](fields(ours, f))
+        intercept[java.io.FileNotFoundException](fields(stock, f))
       }
     }
   }

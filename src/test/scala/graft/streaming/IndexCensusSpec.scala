@@ -14,8 +14,10 @@ import graft.ann.Ann
   * as a count change, not as noise in a timing.
   *
   * Fixture: a 6-row base index in 3 clusters with two staged batches in
-  * cluster 0; "+tomb" runs one [[IndexStore.deleteStreamed]] of a
-  * cluster-0 id before the counted verb.
+  * cluster 0 (the "wide" variant stages the second batch in cluster 1,
+  * so a fold touches 2 of the 3 clusters); "+tomb" runs one
+  * [[IndexStore.deleteStreamed]] of a cluster-0 id before the counted
+  * verb.
   */
 class IndexCensusSpec extends SparkSpec {
   import spark.implicits._
@@ -24,7 +26,7 @@ class IndexCensusSpec extends SparkSpec {
   private def unit(hot: Int) =
     (0 until dim).map(d => if (d == hot) 1.0f else 0.0f)
 
-  private def fixture(tomb: Boolean): String = {
+  private def fixture(tomb: Boolean, wide: Boolean): String = {
     val base = Seq(
       (0L, unit(0), 0), (2L, unit(0), 0), (4L, unit(2), 1),
       (6L, unit(2), 1), (8L, unit(4), 2), (10L, unit(4), 2))
@@ -43,7 +45,7 @@ class IndexCensusSpec extends SparkSpec {
         .parquet(s"$st/stream/batch=$b")
     }
     stage(0L, Seq((1L, unit(0), 0)))
-    stage(1L, Seq((3L, unit(0), 0)))
+    stage(1L, Seq(if (wide) (3L, unit(2), 1) else (3L, unit(0), 0)))
     if (tomb) assert(IndexStore.deleteStreamed(spark, st,
       Seq(2L).toDF("vec_id"), "vec_id", "label") == 0L)
     st
@@ -67,70 +69,57 @@ class IndexCensusSpec extends SparkSpec {
     (IndexStore.indexListings.get() - l0, jobs.get())
   }
 
-  private def cases: Seq[(String, Boolean, String => Unit)] = {
+  /** (verb, +tomb, wide fixture, body) */
+  private def cases: Seq[(String, Boolean, Boolean, String => Unit)] = {
     def serve(st: String): Unit = {
       IndexStore.openServeHandle(spark, st, "vec_id", "label"); ()
     }
     def delete(st: String): Unit =
       assert(IndexStore.deleteStreamed(spark, st,
         Seq(4L).toDF("vec_id"), "vec_id", "label") >= 0L)
-    def incremental(st: String): Unit =
-      IndexStore.compactStreamedIncremental(spark, st, "vec_id", "label")
-    def full(st: String): Unit =
-      IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
     def clone(st: String): Unit = IndexStore.cloneStreamedIndex(spark, st,
       s"${graft.EntryKit.scratchTracked("graft_census_clone")}/idx",
       "vec_id", "label")
     def codes(st: String): Unit = {
       IndexStore.loadStreamedCodes(spark, st, "vec_id", "label"); ()
     }
-    def auto(expect: IndexStore.FoldDispatch, frac: Double)(
-        st: String): Unit =
-      assert(IndexStore.compactStreamedAuto(spark, st, "vec_id",
-        "label", maxTouchedFrac = frac) == expect)
-    val inc = auto(IndexStore.FoldDispatch.Incremental, 0.5) _
-    val fullAuto = auto(IndexStore.FoldDispatch.Full, 0.2) _
+    def compact(expect: IndexStore.FoldDispatch)(st: String): Unit =
+      assert(IndexStore.compact(spark, st, "vec_id", "label") == expect)
+    val inc = compact(IndexStore.FoldDispatch.Incremental) _
+    val full = compact(IndexStore.FoldDispatch.Full) _
     Seq(
-      ("openServeHandle", false, serve _),
-      ("openServeHandle", true, serve _),
-      ("deleteStreamed", false, delete _),
-      ("compactStreamedIncremental", false, incremental _),
-      ("compactStreamedIncremental", true, incremental _),
-      ("compactStreamedAuto -> Incremental", false, inc),
-      ("compactStreamedAuto -> Incremental", true, inc),
-      ("compactStreamedAuto -> Full", false, fullAuto),
-      ("compactStreamedAuto -> Full", true, fullAuto),
-      ("compactStreamedIndex", false, full _),
-      ("compactStreamedIndex", true, full _),
-      ("cloneStreamedIndex", false, clone _),
-      ("loadStreamedCodes", false, codes _))
+      ("openServeHandle", false, false, serve _),
+      ("openServeHandle", true, false, serve _),
+      ("deleteStreamed", false, false, delete _),
+      ("compact -> Incremental", false, false, inc),
+      ("compact -> Incremental", true, false, inc),
+      ("compact -> Full", false, true, full),
+      ("compact -> Full", true, true, full),
+      ("cloneStreamedIndex", false, false, clone _),
+      ("loadStreamedCodes", false, false, codes _))
   }
 
   // (listings, jobs) per verb. One state read lists staging, the root
   // and, once a delete has made it, `tombs/`; the serve adds its
-  // fingerprint listing. compactStreamedAuto writes from the plan its
-  // decision read: -> Full costs compactStreamedIndex plus the
-  // decision's own reads (the prior generation's and the window's
-  // clusters, and with a tombstone the jobs that read its clusters).
+  // fingerprint listing. compact writes from the plan its decision
+  // read: the decision's own reads (the prior generation's and the
+  // window's clusters, and with a tombstone the jobs that read its
+  // clusters) come on top of the chosen writer's.
   private val expected: Map[String, (Long, Int)] = Map(
     "openServeHandle" -> (3L, 4),
     "openServeHandle +tomb" -> (4L, 5),
     "deleteStreamed" -> (4L, 8),
-    "compactStreamedIncremental" -> (7L, 6),
-    "compactStreamedIncremental +tomb" -> (8L, 13),
-    "compactStreamedAuto -> Incremental" -> (7L, 6),
-    "compactStreamedAuto -> Incremental +tomb" -> (8L, 13),
-    "compactStreamedAuto -> Full" -> (7L, 4),
-    "compactStreamedAuto -> Full +tomb" -> (8L, 10),
-    "compactStreamedIndex" -> (4L, 4),
-    "compactStreamedIndex +tomb" -> (5L, 7),
+    "compact -> Incremental" -> (7L, 6),
+    "compact -> Incremental +tomb" -> (8L, 13),
+    "compact -> Full" -> (7L, 4),
+    "compact -> Full +tomb" -> (8L, 10),
     "cloneStreamedIndex" -> (4L, 8),
     "loadStreamedCodes" -> (2L, 2))
 
   test("index verbs: each reads the index state once (listing and job " +
       "census)") {
-    val got = cases.map { case (verb, tomb, body) =>
-      val st = fixture(tomb)
+    val got = cases.map { case (verb, tomb, wide, body) =>
+      val st = fixture(tomb, wide)
       (if (tomb) s"$verb +tomb" else verb) -> census(body(st))
     }.toMap
     assert(got == expected,

@@ -636,15 +636,18 @@ class StreamingIngestSpec extends SparkSpec {
     // rows, and a second compaction is a no-op. The folded staging is
     // RETAINED one generation (a reader that resolved the pre-compact
     // view may still be scanning it) — only the NEXT compaction or an
-    // explicit gc reclaims it
-    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    // explicit gc reclaims it. The odd half lands in every cluster, so
+    // the fold is full
+    assert(IndexStore.compact(spark, st, "vec_id", "label") ==
+      IndexStore.FoldDispatch.Full)
     assert(rows(IndexStore.loadStreamedCodes(
       spark, st, "vec_id", "label")) == streamed)
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/stream")))
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/codes_v10/_folded")))
-    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    assert(IndexStore.compact(spark, st, "vec_id", "label") ==
+      IndexStore.FoldDispatch.NothingToFold)
     assert(rows(IndexStore.loadStreamedCodes(
       spark, st, "vec_id", "label")) == streamed)
     // crash window AFTER publication, BEFORE staging cleanup: a staged
@@ -662,7 +665,10 @@ class StreamingIngestSpec extends SparkSpec {
       .parquet(s"$st/stream/batch=$hw")
     assert(rows(IndexStore.loadStreamedCodes(
       spark, st, "vec_id", "label")) == streamed) // no double-count
-    val fresh = Seq((9L, unit(6), 0)).toDF("vec_id", "embedding", "label")
+    // (the fresh batch lands in clusters 0 and 1: 2 of 3 touched, so
+    // its fold is full too and leaves no manifest referencing codes_v10)
+    val fresh = Seq((9L, unit(6), 0), (11L, unit(2), 1))
+      .toDF("vec_id", "embedding", "label")
     Ann.pqEncode(fresh, "vec_id", "embedding", cb)
       .join(Ann.assignClusters(fresh, "vec_id", "embedding", cents, "label"),
         "vec_id")
@@ -670,10 +676,11 @@ class StreamingIngestSpec extends SparkSpec {
       .parquet(s"$st/stream/batch=${hw + 5}")
     val withFresh = rows(IndexStore.loadStreamedCodes(
       spark, st, "vec_id", "label"))
-    assert(withFresh.size == 9 && withFresh.map(_._1).contains(9L))
+    assert(withFresh.size == 10 && withFresh.map(_._1).contains(9L))
     // ... and the next compaction folds exactly the unfolded tail,
     // reclaiming the staging the PRIOR version had folded (grace over)
-    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    assert(IndexStore.compact(spark, st, "vec_id", "label") ==
+      IndexStore.FoldDispatch.Full)
     assert(rows(IndexStore.loadStreamedCodes(
       spark, st, "vec_id", "label")) == withFresh)
     assert(!java.nio.file.Files.exists(
@@ -702,7 +709,7 @@ class StreamingIngestSpec extends SparkSpec {
       spark, st, "vec_id", "label")) == withFresh)
   }
 
-  test("compactStreamedIndex: a staged batch above the fold's " +
+  test("compact: a staged batch above the fold's " +
       "snapshotted high-water is excluded from the folded set and " +
       "served exactly once (the mid-compaction landing race)") {
     import graft.ann.Ann
@@ -737,8 +744,9 @@ class StreamingIngestSpec extends SparkSpec {
         "vec_id")
       .write.mode("overwrite").partitionBy("label")
       .parquet(s"$st/stream/batch=3")
-    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label",
-      upTo = Some(2L))
+    // batches 0..2 touch all 3 clusters: a full fold
+    assert(IndexStore.compact(spark, st, "vec_id", "label",
+      upTo = Some(2L)) == IndexStore.FoldDispatch.Full)
     // the published marker and the folded set must agree: marker = 2,
     // version holds exactly the 8 base+drained ids (NOT 9)
     val hw = {
@@ -756,7 +764,7 @@ class StreamingIngestSpec extends SparkSpec {
       .select($"vec_id").as[Long].collect().sorted.toSeq
     assert(served == (0L to 7L) :+ 9L)
     // the next compaction folds the late batch; serve invariant
-    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    IndexStore.compact(spark, st, "vec_id", "label")
     assert(IndexStore.loadStreamedCodes(spark, st, "vec_id", "label")
       .select($"vec_id").as[Long].collect().sorted.toSeq ==
       (0L to 7L) :+ 9L)
@@ -798,7 +806,7 @@ class StreamingIngestSpec extends SparkSpec {
     // high-water now guards: a fresh checkpoint restarts batchId at 0,
     // which the serving view would skip and the next compaction would
     // delete — fail fast instead
-    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    IndexStore.compact(spark, st, "vec_id", "label")
     IndexStore.gcStreamedIndex(spark, st)
     val stale = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       drain(s"$st/ckpt3")
@@ -812,7 +820,7 @@ class StreamingIngestSpec extends SparkSpec {
       .count() == 6)
   }
 
-  test("compactStreamedIncremental: folds only the touched clusters, " +
+  test("compact below both thresholds folds only the touched clusters, " +
       "serves identically, and GC never deletes a generation a live " +
       "manifest references") {
     import graft.ann.Ann
@@ -844,7 +852,8 @@ class StreamingIngestSpec extends SparkSpec {
     // batch 0 lands only in cluster 0
     stage(0L, Seq((1L, unit(0), 0), (3L, unit(0), 0)))
     val pre1 = served()
-    IndexStore.compactStreamedIncremental(spark, st, "vec_id", "label")
+    assert(IndexStore.compact(spark, st, "vec_id", "label") ==
+      IndexStore.FoldDispatch.Incremental)
     assert(served() == pre1 && pre1.size == 8)
     // v1 is a MANIFEST generation: only cluster 0 materialized in its
     // data/; clusters 1/2 still point at the base codes
@@ -861,7 +870,8 @@ class StreamingIngestSpec extends SparkSpec {
     // 0), base (cluster 2), and its own data (cluster 1)
     stage(1L, Seq((5L, unit(2), 1)))
     val pre2 = served()
-    IndexStore.compactStreamedIncremental(spark, st, "vec_id", "label")
+    assert(IndexStore.compact(spark, st, "vec_id", "label") ==
+      IndexStore.FoldDispatch.Incremental)
     assert(served() == pre2 && pre2.size == 9)
     val m2 = spark.read.parquet(s"$st/codes_v2/_manifest")
       .as[(String, String)].collect().toMap
@@ -873,7 +883,8 @@ class StreamingIngestSpec extends SparkSpec {
     // 0 never touched again), so it must survive
     stage(2L, Seq((7L, unit(2), 1)))
     val pre3 = served()
-    IndexStore.compactStreamedIncremental(spark, st, "vec_id", "label")
+    assert(IndexStore.compact(spark, st, "vec_id", "label") ==
+      IndexStore.FoldDispatch.Incremental)
     assert(served() == pre3 && pre3.size == 10)
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/codes_v1/data/label=0")))
@@ -882,12 +893,14 @@ class StreamingIngestSpec extends SparkSpec {
     assert(served() == pre3)
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/codes_v1/data/label=0")))
-    // a FULL compaction materializes everything into one generation;
-    // after the next gc the referenced history is reclaimable
-    stage(3L, Seq((9L, unit(4), 2)))
+    // a batch touching 2 of the 3 clusters promotes to a FULL fold,
+    // which materializes everything into one generation; after the
+    // next gc the referenced history is reclaimable
+    stage(3L, Seq((9L, unit(4), 2), (11L, unit(0), 0)))
     val pre4 = served()
-    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
-    assert(served() == pre4 && pre4.size == 11)
+    assert(IndexStore.compact(spark, st, "vec_id", "label") ==
+      IndexStore.FoldDispatch.Full)
+    assert(served() == pre4 && pre4.size == 12)
     IndexStore.gcStreamedIndex(spark, st)
     assert(served() == pre4)
     assert(!java.nio.file.Files.exists(
@@ -983,7 +996,7 @@ class StreamingIngestSpec extends SparkSpec {
     // into its generation — versionedModels resolves the newest
     // generation only, and falling back to the base codebook would
     // pair post-retrain codes with pre-retrain models
-    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    IndexStore.compact(spark, st, "vec_id", "label")
     val (_, cbAfter, centsAfter) = resolve(st)
     assert(cbAfter.cents.map(_.map(_.toSeq).toSeq).toSeq ==
       cbF.cents.map(_.map(_.toSeq).toSeq).toSeq)
@@ -1053,24 +1066,26 @@ class StreamingIngestSpec extends SparkSpec {
     assert(codesAfter.count() == 8)
   }
 
-  test("compactStreamedAuto: incremental while chain width and touched " +
+  test("compact: incremental while chain width and touched " +
       "fraction stay under the thresholds; full fold when either " +
       "crosses — serving invariant throughout") {
     import graft.ann.Ann
+    import IndexStore.FoldDispatch.{Full, Incremental}
     val dim = 8
     def unit(hot: Int) =
       (0 until dim).map(d => if (d == hot) 1.0f else 0.0f)
-    val base = Seq(
-      (0L, unit(0), 0), (2L, unit(0), 0), (4L, unit(2), 1),
-      (6L, unit(2), 1), (8L, unit(4), 2), (10L, unit(4), 2))
+    // six clusters, cluster c pivoting on unit(c)
+    val base = (0 until 6).flatMap(c => Seq(
+        (4L * c, unit(c), c), (4L * c + 2, unit(c), c)))
       .toDF("vec_id", "embedding", "label")
     val cb = Ann.pqSeedCodebook(base, "vec_id", "embedding", m = 4, ksub = 4)
     val cents = Ann.pivotCentroids(base, "label", "vec_id", "embedding")
     val st = graft.EntryKit.scratchTracked("graft_auto_ann").toString
     Ann.saveIndex(Ann.pqEncode(base, "vec_id", "embedding", cb)
       .join(base.select($"vec_id", $"label"), "vec_id"), "label", cb, st)
-    def stage(b: Long, rows: Seq[(Long, Seq[Float], Int)]): Unit = {
-      val df = rows.toDF("vec_id", "embedding", "label")
+    def stage(b: Long, clusters: Int*): Unit = {
+      val df = clusters.map(c => (1000L * (b + 1) + c, unit(c), c))
+        .toDF("vec_id", "embedding", "label")
       Ann.pqEncode(df, "vec_id", "embedding", cb)
         .join(Ann.assignClusters(df, "vec_id", "embedding", cents, "label"),
           "vec_id")
@@ -1082,36 +1097,34 @@ class StreamingIngestSpec extends SparkSpec {
       .select($"vec_id").as[Long].collect().sorted.toSeq
     def hasManifest(v: Long) = java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/codes_v$v/_manifest"))
-    // fold A: touches 1/3 clusters, prospective roots = base + own
-    // data = 2 ≤ maxRoots → INCREMENTAL (manifest generation)
-    stage(0L, Seq((1L, unit(0), 0)))
-    val preA = served()
-    IndexStore.compactStreamedAuto(spark, st, "vec_id", "label",
-      maxRoots = 2, maxTouchedFrac = 0.5)
-    assert(served() == preA && hasManifest(1L))
-    // fold B: touches 1/3 again, but untouched clusters now live on
-    // TWO roots (v1/data + base), so the new manifest would reference
-    // 3 > maxRoots — PROMOTED to a full fold (chain width resets)
-    stage(1L, Seq((5L, unit(2), 1)))
-    val preB = served()
-    IndexStore.compactStreamedAuto(spark, st, "vec_id", "label",
-      maxRoots = 2, maxTouchedFrac = 0.5)
-    assert(served() == preB)
-    assert(!hasManifest(2L) && java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$st/codes_v2/_folded")))
-    // fold C: touches 2/3 clusters ≥ maxTouchedFrac — promoted even
-    // with chain width unconstrained (the incremental fold would
-    // rewrite most of the index anyway)
-    stage(2L, Seq((3L, unit(0), 0), (7L, unit(2), 1)))
-    val preC = served()
-    IndexStore.compactStreamedAuto(spark, st, "vec_id", "label",
-      maxRoots = 100, maxTouchedFrac = 0.5)
-    assert(served() == preC && preC.size == 10)
-    assert(!hasManifest(3L) && java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$st/codes_v3/_folded")))
+    def roots(v: Long) = spark.read.parquet(s"$st/codes_v$v/_manifest")
+      .select($"root").distinct().count()
+    def fold(b: Long, clusters: Int*) = {
+      stage(b, clusters: _*)
+      val pre = served()
+      val ran = IndexStore.compact(spark, st, "vec_id", "label")
+      assert(served() == pre)
+      ran
+    }
+    // folds 1-3 each touch 1/6 clusters, a cluster no earlier fold
+    // touched: the manifest grows to 2, 3, then 4 roots — INCREMENTAL
+    assert(fold(0L, 0) == Incremental && roots(1L) == 2)
+    assert(fold(1L, 1) == Incremental && roots(2L) == 3)
+    assert(fold(2L, 2) == Incremental && roots(3L) == 4)
+    // fold 4 would reference 5 > 4 roots — PROMOTED to a full fold
+    // (chain width resets)
+    assert(fold(3L, 3) == Full)
+    assert(!hasManifest(4L) && java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$st/codes_v4/_folded")))
+    // fold 5 touches 3/6 clusters — at the touched-fraction bound:
+    // promoted even with a chain of one root
+    assert(fold(4L, 0, 1, 2) == Full && !hasManifest(5L))
+    // fold 6 touches 2/6 — under it: incremental again
+    assert(fold(5L, 4, 5) == Incremental && hasManifest(6L))
+    assert(served().size == 12 + 4 + 3 + 2)
     // nothing unfolded: a no-op
-    IndexStore.compactStreamedAuto(spark, st, "vec_id", "label")
-    assert(served() == preC)
+    assert(IndexStore.compact(spark, st, "vec_id", "label") ==
+      IndexStore.FoldDispatch.NothingToFold)
   }
 
   test("driver-held manifests are budget-guarded: an over-budget " +
@@ -1139,7 +1152,8 @@ class StreamingIngestSpec extends SparkSpec {
         .parquet(s"$st/stream/batch=$b")
     }
     stage(0L, Seq((1L, unit(0), 0)))
-    IndexStore.compactStreamedIncremental(spark, st, "vec_id", "label")
+    assert(IndexStore.compact(spark, st, "vec_id", "label") ==
+      IndexStore.FoldDispatch.Incremental)
     // v1 is a manifest generation with one entry per cluster (3); a
     // budget of 2 must fail fast — cap+1 probe, never the full map
     val read = intercept[IllegalStateException] {
@@ -1154,15 +1168,19 @@ class StreamingIngestSpec extends SparkSpec {
     // fails the same way
     stage(1L, Seq((3L, unit(0), 0)))
     val fold = intercept[IllegalStateException] {
-      IndexStore.compactStreamedIncremental(
+      IndexStore.compact(
         spark, st, "vec_id", "label", manifestBudget = 2)
     }
     assert(fold.getMessage.contains("more than 2 entries"))
-    // the advertised remedy: a FULL fold materializes one generation
-    // with no manifest — any budget reads it
-    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    // the advertised remedy: a fold under a budget that reads the prior
+    // manifest, promoted to FULL (the window now touches 2 of 3
+    // clusters), materializes one generation with no manifest — any
+    // budget reads it
+    stage(2L, Seq((5L, unit(2), 1)))
+    assert(IndexStore.compact(spark, st, "vec_id", "label") ==
+      IndexStore.FoldDispatch.Full)
     assert(IndexStore.loadStreamedCodes(spark, st, "vec_id", "label",
-      manifestBudget = 1).count() == 8)
+      manifestBudget = 1).count() == 9)
   }
 
   test("retrain-under-load protocol: a mid-stage tmp fails the retrain " +
@@ -1314,19 +1332,22 @@ class StreamingIngestSpec extends SparkSpec {
         .write.mode("overwrite").partitionBy("label")
         .parquet(s"$st/stream/batch=$b")
     }
-    // v1: a FULL fold materializes everything
-    stage(0L, Seq((1L, unit(0), 0)))
-    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    // v1: a FULL fold (2 of 3 clusters touched) materializes everything
+    stage(0L, Seq((1L, unit(0), 0), (7L, unit(2), 1)))
+    assert(IndexStore.compact(spark, st, "vec_id", "label") ==
+      IndexStore.FoldDispatch.Full)
     // v2: an INCREMENTAL fold touching only cluster 0 — its manifest
     // points clusters 1/2 at the materialized codes_v1
     stage(1L, Seq((3L, unit(0), 0)))
-    IndexStore.compactStreamedIncremental(spark, st, "vec_id", "label")
+    assert(IndexStore.compact(spark, st, "vec_id", "label") ==
+      IndexStore.FoldDispatch.Incremental)
     val m2 = spark.read.parquet(s"$st/codes_v2/_manifest")
       .as[(String, String)].collect().toMap
     assert(m2("1") == s"$st/codes_v1" && m2("2") == s"$st/codes_v1")
     // the full current corpus (base + both staged batches)
-    val corpus = base.unionByName(Seq((1L, unit(0), 0), (3L, unit(0), 0))
-      .toDF("vec_id", "embedding", "label"))
+    val corpus = base.unionByName(
+      Seq((1L, unit(0), 0), (7L, unit(2), 1), (3L, unit(0), 0))
+        .toDF("vec_id", "embedding", "label"))
     val centsFull = Ann.pivotCentroids(corpus, "label", "vec_id", "embedding")
     // v3: the retrain. Pre-fix, its GC deleted codes_v1 (v1 < priorV=2)
     // even though v2's live manifest still materializes clusters 1/2
@@ -1363,7 +1384,7 @@ class StreamingIngestSpec extends SparkSpec {
     // once v3 (materialized) is itself superseded, v1 leaves the grace
     // window and the next publication's GC reclaims it with v2
     stage(9L, Seq((5L, unit(2), 1)))
-    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    IndexStore.compact(spark, st, "vec_id", "label")
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/codes_v1")))
     assert(!java.nio.file.Files.exists(
@@ -1422,7 +1443,7 @@ class StreamingIngestSpec extends SparkSpec {
     // epoch — a batch staged across it must NOT abort
     val epochPreFold = IndexStore.modelEpoch(spark, st)
     writeTmp(10L)
-    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    IndexStore.compact(spark, st, "vec_id", "label")
     assert(IndexStore.modelEpoch(spark, st) == epochPreFold)
     IndexStore.commitStagedBatch(spark, st, 10L, epochPreFold)
     assert(java.nio.file.Files.exists(
@@ -1464,7 +1485,7 @@ class StreamingIngestSpec extends SparkSpec {
     assert(owner == "/somewhere/else/ckpt")
   }
 
-  test("compactStreamedAuto folds exactly the window its policy " +
+  test("compact folds exactly the window its decision " +
       "evaluated: a batch above the decision bound stays staged and " +
       "serves through the overlay until the next cycle folds it") {
     import graft.ann.Ann
@@ -1491,8 +1512,7 @@ class StreamingIngestSpec extends SparkSpec {
     // deterministically as an explicit bound: the policy evaluated
     // batches ≤ 1, so the dispatched fold must cover exactly ≤ 1
     stage(2L, Seq((5L, unit(2), 1)))
-    IndexStore.compactStreamedAuto(spark, st, "vec_id", "label",
-      upTo = Some(1L))
+    IndexStore.compact(spark, st, "vec_id", "label", upTo = Some(1L))
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/stream/batch=2")))
     val served = IndexStore.loadStreamedCodes(
@@ -1501,8 +1521,8 @@ class StreamingIngestSpec extends SparkSpec {
     assert(served == Seq(0L, 1L, 2L, 3L, 4L, 5L, 6L)) // overlay serves 5
     val hw1 = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$st/codes_v1/_folded")), "UTF-8").trim
-    assert(hw1 == "1") // the fold's snapshot is the policy's window
-    IndexStore.compactStreamedAuto(spark, st, "vec_id", "label")
+    assert(hw1 == "1") // the fold's snapshot is the decision's window
+    IndexStore.compact(spark, st, "vec_id", "label")
     val served2 = IndexStore.loadStreamedCodes(
         spark, st, "vec_id", "label")
       .select($"vec_id").as[Long].collect().sorted.toSeq
@@ -1664,8 +1684,10 @@ class StreamingIngestSpec extends SparkSpec {
     stage(2L, Seq((5L, unit(2), 1)))
     assert(servedIds() == Seq(0L, 1L, 3L, 4L, 5L, 6L, 8L, 10L))
     // the fold consumes the tombstone: same serve, physically absent,
-    // applied marker recorded, tombstone retained ONE generation
-    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    // applied marker recorded, tombstone retained ONE generation (the
+    // window and the tombstone touch 2 of 3 clusters: a full fold)
+    assert(IndexStore.compact(spark, st, "vec_id", "label") ==
+      IndexStore.FoldDispatch.Full)
     assert(servedIds() == Seq(0L, 1L, 3L, 4L, 5L, 6L, 8L, 10L))
     val v1 = spark.read.parquet(s"$st/codes_v1")
       .select($"vec_id").as[Long].collect().sorted.toSeq
@@ -1677,7 +1699,7 @@ class StreamingIngestSpec extends SparkSpec {
     // next fold reclaims the consumed tombstone (grace expired); a
     // fresh delete allocates ABOVE the applied high-water
     stage(3L, Seq((7L, unit(4), 2)))
-    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    IndexStore.compact(spark, st, "vec_id", "label")
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$st/tombs/tomb=0")))
     assert(IndexStore.deleteStreamed(spark, st,
@@ -1724,7 +1746,7 @@ class StreamingIngestSpec extends SparkSpec {
     assert(servedIds() == Seq(2L, 4L, 6L))
   }
 
-  test("deleteStreamed + compactStreamedIncremental: a tombstoned " +
+  test("deleteStreamed + incremental compact: a tombstoned " +
       "cluster is touched (rewritten without the row), untouched " +
       "clusters keep their references, and a fully-killed cluster " +
       "drops out of the manifest") {
@@ -1732,9 +1754,11 @@ class StreamingIngestSpec extends SparkSpec {
     val dim = 8
     def unit(hot: Int) =
       (0 until dim).map(d => if (d == hot) 1.0f else 0.0f)
+    // five clusters, so a fold touching two of them stays incremental
     val base = Seq(
       (0L, unit(0), 0), (2L, unit(0), 0), (4L, unit(2), 1),
-      (6L, unit(2), 1), (8L, unit(4), 2), (10L, unit(4), 2))
+      (6L, unit(2), 1), (8L, unit(4), 2), (10L, unit(4), 2),
+      (12L, unit(6), 3), (14L, unit(7), 4))
       .toDF("vec_id", "embedding", "label")
     val cb = Ann.pqSeedCodebook(base, "vec_id", "embedding", m = 4, ksub = 4)
     val cents = Ann.pivotCentroids(base, "label", "vec_id", "embedding")
@@ -1757,23 +1781,26 @@ class StreamingIngestSpec extends SparkSpec {
     assert(IndexStore.deleteStreamed(spark, st,
       Seq(8L).toDF("vec_id"), "vec_id", "label") == 0L)
     val pre = servedIds()
-    assert(pre == Seq(0L, 1L, 2L, 4L, 6L, 10L))
-    IndexStore.compactStreamedIncremental(spark, st, "vec_id", "label")
+    assert(pre == Seq(0L, 1L, 2L, 4L, 6L, 10L, 12L, 14L))
+    assert(IndexStore.compact(spark, st, "vec_id", "label") ==
+      IndexStore.FoldDispatch.Incremental)
     assert(servedIds() == pre)
     val m1 = spark.read.parquet(s"$st/codes_v1/_manifest")
       .as[(String, String)].collect().toMap
-    // cluster 2 was REWRITTEN (tombstone made it touched); cluster 1
-    // still references the base
+    // cluster 2 was REWRITTEN (tombstone made it touched); clusters 1,
+    // 3 and 4 still reference the base
     assert(m1("0") == s"$st/codes_v1/data")
     assert(m1("2") == s"$st/codes_v1/data")
-    assert(m1("1") == s"$st/codes")
+    assert(m1("1") == s"$st/codes" && m1("3") == s"$st/codes" &&
+      m1("4") == s"$st/codes")
     assert(spark.read.parquet(s"$st/codes_v1/data/label=2")
       .select($"vec_id").as[Long].collect().toSeq == Seq(10L))
     // kill ALL of cluster 1: its manifest entry disappears entirely
     assert(IndexStore.deleteStreamed(spark, st,
       Seq(4L, 6L).toDF("vec_id"), "vec_id", "label") == 1L)
-    IndexStore.compactStreamedIncremental(spark, st, "vec_id", "label")
-    assert(servedIds() == Seq(0L, 1L, 2L, 10L))
+    assert(IndexStore.compact(spark, st, "vec_id", "label") ==
+      IndexStore.FoldDispatch.Incremental)
+    assert(servedIds() == Seq(0L, 1L, 2L, 10L, 12L, 14L))
     val m2 = spark.read.parquet(s"$st/codes_v2/_manifest")
       .as[(String, String)].collect().toMap
     assert(!m2.contains("1"))
@@ -1791,7 +1818,7 @@ class StreamingIngestSpec extends SparkSpec {
       (0 until dim).map(d => if (d == hot) 1.0f else 0.0f)
     val base = Seq(
       (0L, unit(0), 0), (2L, unit(0), 0), (4L, unit(2), 1),
-      (6L, unit(2), 1))
+      (6L, unit(2), 1), (8L, unit(4), 2))
       .toDF("vec_id", "embedding", "label")
     val cb = Ann.pqSeedCodebook(base, "vec_id", "embedding", m = 4, ksub = 4)
     val st = graft.EntryKit.scratchTracked("graft_del_onlyt").toString
@@ -1802,19 +1829,23 @@ class StreamingIngestSpec extends SparkSpec {
       .select($"vec_id").as[Long].collect().sorted.toSeq
     assert(IndexStore.deleteStreamed(spark, st,
       Seq(0L).toDF("vec_id"), "vec_id", "label") == 0L)
-    // pre-fix: AnalysisException (Path does not exist: .../stream)
-    IndexStore.compactStreamedIncremental(spark, st, "vec_id", "label")
-    assert(servedIds() == Seq(2L, 4L, 6L))
+    // pre-fix: AnalysisException (Path does not exist: .../stream).
+    // The tombstone touches 1 of 3 clusters: incremental
+    assert(IndexStore.compact(spark, st, "vec_id", "label") ==
+      IndexStore.FoldDispatch.Incremental)
+    assert(servedIds() == Seq(2L, 4L, 6L, 8L))
     // physically gone from the published generation, tombstone consumed
     assert(spark.read.parquet(s"$st/codes_v1/data/label=0")
       .select($"vec_id").as[Long].collect().toSeq == Seq(2L))
     assert(scala.io.Source.fromFile(s"$st/codes_v1/_tombs_applied")
       .mkString.trim == "0")
-    // the auto policy walks the same guard on the same shape
+    // the full writer walks the same shape: tombstones in 2 of 3
+    // clusters promote the fold
     assert(IndexStore.deleteStreamed(spark, st,
-      Seq(2L).toDF("vec_id"), "vec_id", "label") == 1L)
-    IndexStore.compactStreamedAuto(spark, st, "vec_id", "label")
-    assert(servedIds() == Seq(4L, 6L))
+      Seq(2L, 4L).toDF("vec_id"), "vec_id", "label") == 1L)
+    assert(IndexStore.compact(spark, st, "vec_id", "label") ==
+      IndexStore.FoldDispatch.Full)
+    assert(servedIds() == Seq(6L, 8L))
   }
 
   test("retrainStreamedIndex enforces the delete-membership contract: " +
@@ -2046,7 +2077,7 @@ class StreamingIngestSpec extends SparkSpec {
     // mutation class 3: a fold publishes a generation — stale again,
     // rows invariant, and the handle models stay coherent with a fresh
     // resolve
-    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    IndexStore.compact(spark, st, "vec_id", "label")
     val h4 = IndexStore.refreshServeHandle(spark, h3)
     assert(h4 ne h3)
     assert(ids(h4.codes) == Seq(0L, 1L, 2L, 3L, 6L))
@@ -2104,7 +2135,7 @@ class StreamingIngestSpec extends SparkSpec {
       Seq(4L).toDF("vec_id"), "vec_id", "label") == 0L)
     val s1 = status()
     assert(s1.stagedBatches == Seq(0L) && s1.pendingTombstones == Seq(0L))
-    IndexStore.compactStreamedIndex(spark, st, "vec_id", "label")
+    IndexStore.compact(spark, st, "vec_id", "label")
     val s2 = status()
     assert(s2.generation == Some(1L) && s2.foldedHighWater == 0L)
     assert(s2.pendingTombstones.isEmpty && !s2.hasVersionedModels)
@@ -2477,7 +2508,7 @@ class StreamingIngestSpec extends SparkSpec {
     assert(before == Map(0L -> true, 1L -> false, 2L -> false))
     // simulate the silent-restart hazard: the SAME checkpoint path,
     // recreated — the path-keyed _run claim passes, but batch ids
-    // restart at 0 and would overwrite out/batch=0 while the
+    // restart at 0 and would overwrite seen/batch=0 while the
     // `< batchId` state read skips all drained history
     graft.EntryKit.deleteRecursively(java.nio.file.Paths.get(s"$st/ckpt"))
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -2517,8 +2548,8 @@ class StreamingIngestSpec extends SparkSpec {
     assert(before == Map(0L -> true, 1L -> false))
     // recreate the checkpoint: the new stream's first batch id is 0,
     // NOT strictly below the drained high water (0) — the pre-fix
-    // guard passed and silently overwrote out/batch=0 and
-    // seen/batch=0; the instance token must refuse before any write
+    // guard passed and silently overwrote seen/batch=0; the instance
+    // token must refuse before any write
     graft.EntryKit.deleteRecursively(java.nio.file.Paths.get(s"$st/ckpt"))
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       drain().awaitTermination()
@@ -2672,13 +2703,8 @@ class StreamingIngestSpec extends SparkSpec {
       MaintenancePolicy(foldMinTombstones = 0)
     }
     // every knob validates at construction — a policy is configured
-    // once per index class and must not fail days later on the first
-    // tripped threshold (maxRoots/maxTouchedFrac) or silently disable
-    // the drift trigger (a sub- -1 typo)
-    intercept[IllegalArgumentException] { MaintenancePolicy(maxRoots = 0) }
-    intercept[IllegalArgumentException] {
-      MaintenancePolicy(maxTouchedFrac = 0.0)
-    }
+    // once per index class and must not silently disable the drift
+    // trigger (a sub- -1 typo)
     intercept[IllegalArgumentException] {
       MaintenancePolicy(driftMinCosine = -2.0)
     }
@@ -2785,12 +2811,8 @@ class StreamingIngestSpec extends SparkSpec {
         IndexStore.commitStagedBatch(spark, path, 1L)),
       "deleteStreamed" -> (() => IndexStore.deleteStreamed(spark, path,
         Seq(0L).toDF("vec_id"), "vec_id", "label")),
-      "compactStreamedIndex" -> (() =>
-        IndexStore.compactStreamedIndex(spark, path, "vec_id", "label")),
-      "compactStreamedIncremental" -> (() => IndexStore
-        .compactStreamedIncremental(spark, path, "vec_id", "label")),
-      "compactStreamedAuto" -> (() =>
-        IndexStore.compactStreamedAuto(spark, path, "vec_id", "label")),
+      "compact" -> (() =>
+        IndexStore.compact(spark, path, "vec_id", "label")),
       "cloneStreamedIndex" -> (() => IndexStore.cloneStreamedIndex(
         spark, path, s"$root/clone", "vec_id", "label")),
       "retrainStreamedIndex" -> (() => retrain()))
