@@ -42,10 +42,11 @@ object ParquetJob {
     Seq("recordid", "assessmentid", "year", "month", "day")
 
   /** Run one dataset: decide its batch on the driver before any scan
-    * ([[Bookmark.batch]]: list the dataset, collect the manifest
-    * `manifestRoot/<dataset>` once, diff), then [[convert]] it. A run
-    * with nothing new returns an empty result after that one
-    * manifest-read job.
+    * ([[Bookmark.batch]]: list the dataset, read the manifest
+    * `manifestRoot/<dataset>` once on the driver, diff), then
+    * [[convert]] it. A run with nothing new returns an empty result
+    * after that listing and manifest read, without starting a Spark
+    * job.
     */
   def run(
       spark: SparkSession,

@@ -1,6 +1,17 @@
 package graft.streaming
 
+import java.util.concurrent.atomic.AtomicLong
+
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter,
+  GroupReadSupport}
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type,
+  Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BINARY
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ingest.FileListing
@@ -13,12 +24,19 @@ import graft.ingest.FileListing
   *
   * Like a Glue bookmark, a stage-2 [[Batch]] is decided on the driver
   * BEFORE anything is scanned: the dataset is listed, the manifest is
-  * collected once, and the difference is the batch. The job then reads
+  * read once, and the difference is the batch. The job then reads
   * only those files, and `commit(spark, batch)` records manifest
   * ∪ batch — exactly what was read, so a file landing mid-run stays new
-  * for the next run instead of being recorded unconverted. A run with
-  * nothing new costs one Spark job, the manifest read. [[batch]] and
-  * [[commit]] are the only way to read or advance a manifest.
+  * for the next run instead of being recorded unconverted. The manifest
+  * is read and written on the driver with parquet-hadoop, as a Glue
+  * bookmark is service state outside the job's Spark work: a run with
+  * nothing new costs the dataset listing and one driver-side manifest
+  * read, and no Spark job. [[batch]] and [[commit]] are the only way to
+  * read or advance a manifest.
+  *
+  * On disk a manifest is a Parquet directory with one `path` string
+  * column, so `spark.read.parquet` reads it, and a manifest Spark wrote
+  * (several part files) reads here unchanged.
   *
   * Scale design: the manifest holds one row per data FILE (not per
   * record), and the driver holds all of it; each batch is capped by
@@ -76,6 +94,64 @@ object Bookmark {
     mfs.exists(p) || mfs.exists(new Path(nextOf(p), "_SUCCESS"))
   }
 
+  /** The schema Spark writes for a nullable `path` string column. */
+  private val ManifestSchema: MessageType = Types.buildMessage()
+    .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("path")
+    .named("spark_schema")
+
+  private def isString(t: Type): Boolean =
+    t.isPrimitive && !t.isRepetition(Type.Repetition.REPEATED) &&
+      t.asPrimitiveType.getPrimitiveTypeName == BINARY &&
+      t.getLogicalTypeAnnotation == LogicalTypeAnnotation.stringType()
+
+  /** Reads of a bookmark manifest by [[batch]] — at most one per run. */
+  private[graft] val manifestReads = new AtomicLong()
+
+  /** Visit the `columns` of every row of every data file (hidden names
+    * skipped, as [[dataFiles]] skips them) of the Parquet directory
+    * `dir`, on the driver — a footer and the columns' pages per file, no
+    * Spark job — until `visit` returns false. Every column must be a
+    * string column with no null; a file that breaks that fails with
+    * `IllegalStateException` naming it, not with an empty result.
+    */
+  private[streaming] def readStrings(
+      spark: SparkSession, dir: String, columns: Seq[String])(
+      visit: Array[String] => Boolean): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val d = new Path(dir)
+    val files = fs(spark, d).listStatus(d).toSeq
+      .filter(s => s.isFile && !hidden(s.getPath.getName))
+      .map(_.getPath).sortBy(_.getName)
+    var more = true
+    files.iterator.takeWhile(_ => more).foreach { file =>
+      def broken(why: String) =
+        new IllegalStateException(s"parquet file $file: $why")
+      val support = new GroupReadSupport {
+        override def init(context: InitContext): ReadSupport.ReadContext = {
+          val schema = context.getFileSchema
+          val fields = columns.map(c => Some(c).filter(schema.containsField)
+            .map(f => schema.getType(schema.getFieldIndex(f)))
+            .filter(isString)
+            .getOrElse(throw broken(s"no string column `$c` in $schema")))
+          new ReadSupport.ReadContext(
+            new MessageType(schema.getName, fields: _*))
+        }
+      }
+      val reader = ParquetReader.builder(support, file).withConf(conf).build()
+      try {
+        var row = reader.read()
+        while (more && row != null) {
+          more = visit(columns.indices.map { i =>
+            if (row.getFieldRepetitionCount(i) == 0)
+              throw broken(s"null `${columns(i)}`")
+            row.getString(i, 0)
+          }.toArray)
+          row = reader.read()
+        }
+      } finally reader.close()
+    }
+  }
+
   /** Replace the manifest with its written sibling: delete, then rename
     * (a rename onto an existing directory would move the sibling into it).
     */
@@ -106,8 +182,8 @@ object Bookmark {
     def paths: Seq[String] = files.map(normalize)
   }
 
-  /** List `dataPath`, collect the manifest once (declared schema, one
-    * job; none without a manifest) and diff the two on the driver: the
+  /** List `dataPath`, read the manifest once on the driver (no Spark
+    * job; no read without a manifest) and diff the two: the
     * batch is every listed file the manifest lacks. A commit interrupted
     * after its sibling was complete is finished first. FAILS FAST when
     * the batch exceeds `maxFiles` ([[DefaultNewFilesBudget]]) — a delta
@@ -126,9 +202,12 @@ object Bookmark {
     val committed =
       if (!mfs.exists(manifest)) Set.empty[String]
       else {
-        import spark.implicits._
-        spark.read.schema("path string").parquet(manifestPath)
-          .as[String].collect().toSet
+        manifestReads.incrementAndGet()
+        val paths = Set.newBuilder[String]
+        readStrings(spark, manifestPath, Seq("path")) { r =>
+          paths += r(0); true
+        }
+        paths.result()
       }
     val files = dataFiles(spark, dataPath)
       .map(f => normalize(f) -> f)
@@ -145,16 +224,29 @@ object Bookmark {
   /** Record `batch` as processed: the committed set it was decided
     * against ∪ its files, from the driver — no re-listing, so only what
     * the run read is recorded. One writer per manifest, like a Glue
-    * job's bookmark. The new manifest is written to a hidden sibling,
-    * then swapped in, so a crash at any point leaves the old manifest or
-    * a complete sibling that the next [[batch]] swaps in — never no
+    * job's bookmark. The new manifest is written on the driver, no
+    * Spark job: one snappy part file into the hidden sibling (a leftover
+    * sibling of a crashed commit is cleared first), then its `_SUCCESS`,
+    * then it is swapped in. A crash at any point leaves the old manifest
+    * or a complete sibling that the next [[batch]] swaps in — never no
     * manifest, which would re-convert the whole dataset.
     */
   def commit(spark: SparkSession, batch: Batch): Unit = {
-    import spark.implicits._
     val manifest = new Path(batch.manifestPath)
-    (batch.committed ++ batch.paths).toSeq.sorted.toDF("path")
-      .write.mode("overwrite").parquet(nextOf(manifest).toString)
-    swapIn(fs(spark, manifest), manifest)
+    val next = nextOf(manifest)
+    val mfs = fs(spark, manifest)
+    mfs.delete(next, true)
+    val rows = new SimpleGroupFactory(ManifestSchema)
+    val writer = ExampleParquetWriter
+      .builder(new Path(next, "part-00000.snappy.parquet"))
+      .withConf(spark.sparkContext.hadoopConfiguration)
+      .withType(ManifestSchema)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .build()
+    try (batch.committed ++ batch.paths).toSeq.sorted.foreach(p =>
+      writer.write(rows.newGroup().append("path", p)))
+    finally writer.close()
+    mfs.create(new Path(next, "_SUCCESS")).close()
+    swapIn(mfs, manifest)
   }
 }

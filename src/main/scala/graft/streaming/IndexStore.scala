@@ -440,17 +440,20 @@ object IndexStore {
   val DefaultManifestBudget = 1000000
 
   /** Driver-held manifest of one generation, budget-guarded: reads at
-    * most `budget + 1` rows, never the full oversized map.
+    * most `budget + 1` rows, never the full oversized map. Read on the
+    * driver ([[Bookmark.readStrings]]), no Spark job.
     */
   private def manifestEntries(
       spark: SparkSession, versionPath: String,
       budget: Int): Seq[(String, String)] = {
     require(budget > 0 && budget < Int.MaxValue,
       s"manifest budget must be in (0, ${Int.MaxValue}), got $budget")
-    import spark.implicits._
-    val rows = spark.read.parquet(s"$versionPath/_manifest")
-      .select(col("value"), col("root")).as[(String, String)]
-      .limit(budget + 1).collect()
+    val rows = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    Bookmark.readStrings(spark, s"$versionPath/_manifest",
+        Seq("value", "root")) { r =>
+      rows += r(0) -> r(1)
+      rows.length <= budget
+    }
     if (rows.length > budget) throw new IllegalStateException(
       s"manifest at $versionPath holds more than $budget entries — the " +
         "driver-held cluster→root map would exceed its budget. Retrain " +
@@ -1037,10 +1040,12 @@ object IndexStore {
         // not a working limit — hitting it means the manifest layer
         // itself is broken
         val cap = 100000
-        val roots = spark.read.parquet(s"$p/_manifest")
-          .select(col("root")).distinct().limit(cap + 1)
-          .collect().map(_.getString(0)).toSeq
-        if (roots.length > cap) throw new IllegalStateException(
+        val roots = scala.collection.mutable.Set.empty[String]
+        Bookmark.readStrings(spark, s"$p/_manifest", Seq("root")) { r =>
+          roots += r(0)
+          roots.size <= cap
+        }
+        if (roots.size > cap) throw new IllegalStateException(
           s"manifest at $p references more than $cap distinct roots — " +
             "the one-hop manifest contract is broken")
         roots

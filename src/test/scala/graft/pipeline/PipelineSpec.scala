@@ -131,8 +131,7 @@ class PipelineSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(c)
   }
 
-  test("E2 zero-work rerun: one Spark job per dataset (the manifest " +
-      "read) and no JSON scan") {
+  test("E2 zero-work rerun: no Spark job and no JSON scan") {
     val tmp = graft.EntryKit.scratchTracked("graft_e2_zero").toString
     val jsonRoot = s"$tmp/raw_json"
     IngestJob.run(spark, spark.createDataset(Seq(record("rec1"))), cfg,
@@ -148,41 +147,95 @@ class PipelineSpec extends SparkSpec {
 
     val (rerun, c2) = census(stage2())
     assert(rerun.forall(_.tables.isEmpty))
-    assert(c2.jobs.get() == datasets.size,
+    assert(c2.jobs.get() == 0,
       s"zero-work rerun ran ${c2.jobs.get()} jobs for ${datasets.size} datasets")
     assert(!c2.scans.contains("Scan json"), c2.scans.toString)
   }
 
-  test("E2 bookmark commit: a run that fails as its manifest write starts " +
-      "keeps the old manifest, so the next run converts only new files") {
-    val tmp = graft.EntryKit.scratchTracked("graft_e2_crash").toString
+  /** A copy of the directory tree `from` at `to`. */
+  private def copyTree(from: String, to: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val src = Paths.get(from)
+    Files.walk(src).iterator().asScala.toList.foreach { p =>
+      val dst = Paths.get(to).resolve(src.relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(dst)
+      else Files.copy(p, dst)
+    }
+  }
+
+  /** A dataset converted for rec1, then rec2 landed and a second run
+    * done; `crash(manifests, manifest, old)` then turns the manifest
+    * directory into the state a crash of that second run's commit left,
+    * given `old`, a copy of the manifest from before it.
+    */
+  private def crashedCommit(tag: String)(
+      crash: (String, String, String) => Unit)
+      : (() => ParquetJob.Result, () => Seq[String], String) = {
+    val tmp = graft.EntryKit.scratchTracked(s"graft_e2_$tag").toString
     val jsonRoot = s"$tmp/raw_json"
     val ds = "WeatherResult_v1"
     def ingest(rid: String) = IngestJob.run(spark,
       spark.createDataset(Seq(record(rid))), cfg, jsonRoot, s"$tmp/q_$rid")
     def runJob() = ParquetJob.run(spark, jsonRoot, ds,
       TableCatalog.default(ds), s"$tmp/parquet", s"$tmp/manifests")
+    def ids() = ParquetDataset.read(spark, s"$tmp/parquet/$ds")
+      .select("recordid").as[String].collect().toSeq
     ingest("rec1")
     assert(runJob().tables(ds) == 1)
+    copyTree(s"$tmp/manifests/$ds", s"$tmp/old_manifest")
     ingest("rec2")
+    assert(runJob().tables(ds) == 1)
+    crash(s"$tmp/manifests", s"$tmp/manifests/$ds", s"$tmp/old_manifest")
+    (() => runJob(), () => ids(), s"$tmp/manifests")
+  }
 
-    // run 2 appends its tables, then its manifest write fails at setup
-    val protocol = "spark.sql.sources.commitProtocolClass"
-    FailWritesUnder.root.set(s"$tmp/manifests")
-    spark.conf.set(protocol, classOf[FailWritesUnder].getName)
-    try intercept[Exception](runJob())
-    finally {
-      spark.conf.unset(protocol)
-      FailWritesUnder.root.set(null)
+  test("E2 bookmark commit: a run that fails as its manifest write starts " +
+      "keeps the old manifest, so the next run converts only new files") {
+    import java.nio.file.{Files, Paths}
+    // the run appended its tables, then crashed while writing its new
+    // manifest: the old manifest is in place, and the sibling holds a
+    // part file (here a stale one, naming a file that never existed) but
+    // no _SUCCESS
+    val (runJob, ids, manifests) = crashedCommit("crash") {
+      (root, manifest, old) =>
+        graft.EntryKit.deleteRecursively(Paths.get(manifest))
+        copyTree(old, manifest)
+        val next = s"$root/.WeatherResult_v1.next"
+        Seq("/stale/never-landed.ndjson").toDF("path").coalesce(1)
+          .write.parquet(next)
+        Files.delete(Paths.get(s"$next/_SUCCESS"))
     }
+    assert(runJob().tables("WeatherResult_v1") == 1)
+    val after = ids()
+    assert(after.count(_ == "rec1") == 1, s"rec1 re-converted: $after")
+    // the crashed run appended rec2 before its commit failed, and this
+    // run appends it again: the table append is at-least-once
+    assert(Set(1, 2).contains(after.count(_ == "rec2")), after.toString)
+    // the commit replaced the leftover sibling: nothing beside the
+    // manifest, and no stale row in it
+    assert(new java.io.File(manifests).list().toSeq == Seq("WeatherResult_v1"))
+    assert(!spark.read.parquet(s"$manifests/WeatherResult_v1")
+      .as[String].collect().exists(_.startsWith("/stale/")))
+    assert(runJob().tables.isEmpty)
+  }
 
-    runJob()
-    val ids = ParquetDataset.read(spark, s"$tmp/parquet/$ds")
-      .select("recordid").as[String].collect().toSeq
-    assert(ids.count(_ == "rec1") == 1, s"rec1 re-converted: $ids")
-    // run 2 appended rec2 before its commit failed, and run 3 appends it
-    // again: the table append is at-least-once
-    assert(Set(1, 2).contains(ids.count(_ == "rec2")), ids.toString)
+  test("E2 bookmark commit: a run that crashed inside its swap is " +
+      "finished by the next run, which converts nothing again") {
+    import java.nio.file.{Files, Paths}
+    // the new manifest was written complete as the sibling and the old
+    // one already deleted when the run crashed
+    val (runJob, ids, manifests) = crashedCommit("swap") {
+      (root, manifest, _) =>
+        Files.move(Paths.get(manifest),
+          Paths.get(s"$root/.WeatherResult_v1.next"))
+        assert(Files.exists(Paths.get(s"$root/.WeatherResult_v1.next/_SUCCESS")))
+    }
+    assert(runJob().tables.isEmpty)
+    val after = ids()
+    assert(after.count(_ == "rec1") == 1 && after.count(_ == "rec2") == 1,
+      after.toString)
+    assert(new java.io.File(manifests).list().toSeq == Seq("WeatherResult_v1"))
   }
 
   test("E2 bookmark: a file landing while the tables are written is " +
@@ -402,19 +455,29 @@ class PipelineSpec extends SparkSpec {
     val r1 = run(TableSpec("docs_v1", Seq(ColumnSpec("doc_id", "bigint"),
       ColumnSpec("size", "bigint"), ColumnSpec("recordid", "bigint")), Nil))
 
+    // one driver-side manifest read per run, and no Spark scan of one
+    def reads[A](body: => A): (A, Long, Census) = {
+      val before = graft.streaming.Bookmark.manifestReads.get()
+      val (r, c) = census(body)
+      (r, graft.streaming.Bookmark.manifestReads.get() - before, c)
+    }
+
     // merge path against an existing manifest: one manifest read
     land(Seq((2L, 20L, 0.5, 2L)).toDF("doc_id", "size", "quality", "recordid"))
-    val (r2, merge) = census(run(r1.spec))
+    val (r2, mergeReads, merge) = reads(run(r1.spec))
     assert(!r2.versioned && r2.result.tables("docs_v1") == 1)
-    assert(merge.parquetScansUnder(manifests) == 1,
+    assert(mergeReads == 1, s"merge run read manifests ${mergeReads}x")
+    assert(merge.parquetScansUnder(manifests) == 0,
       s"merge run scanned manifests ${merge.parquetScansUnder(manifests)}x")
 
     // first versioning run: the same one read, no copy of docs_v1's
     // manifest into docs_v2's
     land(Seq((3L, "big", 3L)).toDF("doc_id", "size", "recordid"))
-    val (r3, version) = census(run(r2.spec))
+    val (r3, versionReads, version) = reads(run(r2.spec))
     assert(r3.versioned && r3.result.tables("docs_v2") == 1)
-    assert(version.parquetScansUnder(manifests) == 1,
+    assert(versionReads == 1,
+      s"versioning run read manifests ${versionReads}x")
+    assert(version.parquetScansUnder(manifests) == 0,
       s"versioning run scanned manifests " +
         s"${version.parquetScansUnder(manifests)}x")
     // docs_v2's manifest holds docs_v1's files and the batch's: every
@@ -507,25 +570,6 @@ class WriteStartHook(jobId: String, path: String,
 
 object WriteStartHook {
   val action = new java.util.concurrent.atomic.AtomicReference[() => Unit]()
-}
-
-/** A file-format commit protocol whose write jobs fail at setup when
-  * their output path lies under [[FailWritesUnder.root]] — after the
-  * writer has cleared an overwritten path, before any task runs.
-  */
-class FailWritesUnder(jobId: String, path: String,
-    dynamicPartitionOverwrite: Boolean)
-    extends org.apache.spark.sql.execution.datasources
-      .SQLHadoopMapReduceCommitProtocol(jobId, path, dynamicPartitionOverwrite) {
-  override def setupJob(job: org.apache.hadoop.mapreduce.JobContext): Unit = {
-    Option(FailWritesUnder.root.get).filter(path.contains(_)).foreach(r =>
-      throw new java.io.IOException(s"injected: write under $r fails"))
-    super.setupJob(job)
-  }
-}
-
-object FailWritesUnder {
-  val root = new java.util.concurrent.atomic.AtomicReference[String]()
 }
 
 /** A file-format commit protocol whose write tasks each wait half a

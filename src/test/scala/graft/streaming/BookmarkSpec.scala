@@ -112,4 +112,85 @@ class BookmarkSpec extends SparkSpec {
     assert(b3.committed == (b1.paths ++ b2.paths).toSet && b3.paths.size == 1)
     assert(new File(root).list().toSeq == Seq("t"))
   }
+
+  /** Spark jobs `body` starts. */
+  private def jobs[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    drainListenerBus()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      drainListenerBus()
+      (r, n.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("batch against an existing manifest and commit start no Spark " +
+      "job, and batch reads the manifest once") {
+    val tmp = graft.EntryKit.scratchTracked("graft_bmjobs").toString
+    val data = s"$tmp/data"
+    val manifest = s"$tmp/manifest"
+    Seq(1).toDF("x").coalesce(1).write.mode("append").parquet(data)
+    Bookmark.commit(spark, Bookmark.batch(spark, data, manifest))
+    Seq(2).toDF("x").coalesce(1).write.mode("append").parquet(data)
+    val reads = Bookmark.manifestReads.get()
+    val (b, batchJobs) = jobs(Bookmark.batch(spark, data, manifest))
+    assert(Bookmark.manifestReads.get() - reads == 1)
+    assert(b.committed.size == 1 && b.paths.size == 1)
+    assert(batchJobs == 0, s"batch ran $batchJobs Spark jobs")
+    val (_, commitJobs) = jobs(Bookmark.commit(spark, b))
+    assert(commitJobs == 0, s"commit ran $commitJobs Spark jobs")
+    assert(Bookmark.batch(spark, data, manifest).isEmpty)
+  }
+
+  test("a manifest Spark wrote in several part files reads unchanged, and " +
+      "a committed manifest reads back through spark.read.parquet") {
+    val tmp = graft.EntryKit.scratchTracked("graft_bmfmt").toString
+    val data = s"$tmp/data"
+    (1 to 4).foreach(i => Seq(i).toDF("x")
+      .coalesce(1).write.mode("append").parquet(data))
+    val all = Bookmark.batch(spark, data, s"$tmp/probe").paths
+    // a manifest of three of the four files, written as Spark wrote it
+    all.take(3).toDF("path").repartition(3)
+      .write.parquet(s"$tmp/legacy")
+    assert(new java.io.File(s"$tmp/legacy").list()
+      .count(_.startsWith("part-")) > 1)
+    val legacy = Bookmark.batch(spark, data, s"$tmp/legacy")
+    assert(legacy.committed == all.take(3).toSet)
+    assert(legacy.paths == all.drop(3))
+
+    Bookmark.commit(spark, legacy)
+    val read = spark.read.parquet(s"$tmp/legacy")
+    assert(read.schema.fieldNames.toSeq == Seq("path"))
+    assert(read.as[String].collect().sorted.toSeq == all.sorted)
+    assert(Bookmark.batch(spark, data, s"$tmp/legacy").committed == all.toSet)
+  }
+
+  test("a manifest without a string path column, or with a null path, " +
+      "fails naming its file") {
+    val tmp = graft.EntryKit.scratchTracked("graft_bmbad").toString
+    val data = s"$tmp/data"
+    Seq(1).toDF("x").coalesce(1).write.mode("append").parquet(data)
+    def fails(manifest: String, why: String): Unit = {
+      val part = new java.io.File(manifest).list()
+        .filter(_.startsWith("part-")).head
+      val e = intercept[IllegalStateException](
+        Bookmark.batch(spark, data, manifest))
+      assert(e.getMessage.contains(part) && e.getMessage.contains(why),
+        e.getMessage)
+    }
+    Seq("/a").toDF("file").coalesce(1).write.parquet(s"$tmp/no_path")
+    fails(s"$tmp/no_path", "no string column `path`")
+    Seq(1L).toDF("path").coalesce(1).write.parquet(s"$tmp/long_path")
+    fails(s"$tmp/long_path", "no string column `path`")
+    Seq(Some("/a"), None).toDF("path").coalesce(1)
+      .write.parquet(s"$tmp/null_path")
+    fails(s"$tmp/null_path", "null `path`")
+  }
 }

@@ -17,7 +17,8 @@ import graft.ann.Ann
   * cluster 0 (the "wide" variant stages the second batch in cluster 1,
   * so a fold touches 2 of the 3 clusters); "+tomb" runs one
   * [[IndexStore.deleteStreamed]] of a cluster-0 id before the counted
-  * verb.
+  * verb; "manifest-backed" folds the staged batches incrementally
+  * before it, so the verb reads a generation through its `_manifest`.
   */
 class IndexCensusSpec extends SparkSpec {
   import spark.implicits._
@@ -26,7 +27,8 @@ class IndexCensusSpec extends SparkSpec {
   private def unit(hot: Int) =
     (0 until dim).map(d => if (d == hot) 1.0f else 0.0f)
 
-  private def fixture(tomb: Boolean, wide: Boolean): String = {
+  private def fixture(
+      tomb: Boolean, wide: Boolean, folded: Boolean): String = {
     val base = Seq(
       (0L, unit(0), 0), (2L, unit(0), 0), (4L, unit(2), 1),
       (6L, unit(2), 1), (8L, unit(4), 2), (10L, unit(4), 2))
@@ -48,6 +50,8 @@ class IndexCensusSpec extends SparkSpec {
     stage(1L, Seq(if (wide) (3L, unit(2), 1) else (3L, unit(0), 0)))
     if (tomb) assert(IndexStore.deleteStreamed(spark, st,
       Seq(2L).toDF("vec_id"), "vec_id", "label") == 0L)
+    if (folded) assert(IndexStore.compact(spark, st, "vec_id", "label") ==
+      IndexStore.FoldDispatch.Incremental)
     st
   }
 
@@ -69,8 +73,9 @@ class IndexCensusSpec extends SparkSpec {
     (IndexStore.indexListings.get() - l0, jobs.get())
   }
 
-  /** (verb, +tomb, wide fixture, body) */
-  private def cases: Seq[(String, Boolean, Boolean, String => Unit)] = {
+  /** (verb, +tomb, wide fixture, manifest-backed fixture, body) */
+  private def cases
+      : Seq[(String, Boolean, Boolean, Boolean, String => Unit)] = {
     def serve(st: String): Unit = {
       IndexStore.openServeHandle(spark, st, "vec_id", "label"); ()
     }
@@ -88,15 +93,16 @@ class IndexCensusSpec extends SparkSpec {
     val inc = compact(IndexStore.FoldDispatch.Incremental) _
     val full = compact(IndexStore.FoldDispatch.Full) _
     Seq(
-      ("openServeHandle", false, false, serve _),
-      ("openServeHandle", true, false, serve _),
-      ("deleteStreamed", false, false, delete _),
-      ("compact -> Incremental", false, false, inc),
-      ("compact -> Incremental", true, false, inc),
-      ("compact -> Full", false, true, full),
-      ("compact -> Full", true, true, full),
-      ("cloneStreamedIndex", false, false, clone _),
-      ("loadStreamedCodes", false, false, codes _))
+      ("openServeHandle", false, false, false, serve _),
+      ("openServeHandle", true, false, false, serve _),
+      ("deleteStreamed", false, false, false, delete _),
+      ("compact -> Incremental", false, false, false, inc),
+      ("compact -> Incremental", true, false, false, inc),
+      ("compact -> Full", false, true, false, full),
+      ("compact -> Full", true, true, false, full),
+      ("cloneStreamedIndex", false, false, false, clone _),
+      ("loadStreamedCodes", false, false, false, codes _),
+      ("loadStreamedCodes, manifest-backed", false, false, true, codes _))
   }
 
   // (listings, jobs) per verb. One state read lists staging, the root
@@ -104,7 +110,9 @@ class IndexCensusSpec extends SparkSpec {
   // fingerprint listing. compact writes from the plan its decision
   // read: the decision's own reads (the prior generation's and the
   // window's clusters, and with a tombstone the jobs that read its
-  // clusters) come on top of the chosen writer's.
+  // clusters) come on top of the chosen writer's. A `_manifest` is read
+  // on the driver, so a manifest-backed generation costs no more jobs
+  // than a materialized one.
   private val expected: Map[String, (Long, Int)] = Map(
     "openServeHandle" -> (3L, 4),
     "openServeHandle +tomb" -> (4L, 5),
@@ -114,12 +122,13 @@ class IndexCensusSpec extends SparkSpec {
     "compact -> Full" -> (7L, 4),
     "compact -> Full +tomb" -> (8L, 10),
     "cloneStreamedIndex" -> (4L, 8),
-    "loadStreamedCodes" -> (2L, 2))
+    "loadStreamedCodes" -> (2L, 2),
+    "loadStreamedCodes, manifest-backed" -> (2L, 2))
 
   test("index verbs: each reads the index state once (listing and job " +
       "census)") {
-    val got = cases.map { case (verb, tomb, wide, body) =>
-      val st = fixture(tomb, wide)
+    val got = cases.map { case (verb, tomb, wide, folded, body) =>
+      val st = fixture(tomb, wide, folded)
       (if (tomb) s"$verb +tomb" else verb) -> census(body(st))
     }.toMap
     assert(got == expected,
